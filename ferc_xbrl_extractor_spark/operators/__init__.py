@@ -34,12 +34,7 @@ from ferc_xbrl_extractor_spark.operators.fact_table import (
     construct_table,
     construct_table_with_errors,
 )
-from ferc_xbrl_extractor_spark.operators.filters import (
-    at_least_one_non_null,
-    dims_fit_table,
-    for_period,
-    with_concepts,
-)
+from ferc_xbrl_extractor_spark.operators.filters import at_least_one_non_null
 
 __all__ = [
     "analytics",
@@ -55,7 +50,4 @@ __all__ = [
     "construct_table",
     "construct_table_with_errors",
     "at_least_one_non_null",
-    "dims_fit_table",
-    "for_period",
-    "with_concepts",
 ]

@@ -47,6 +47,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ferc_xbrl_extractor_spark.operators.sqltext import bq, raw_col
+
 # Seed for the second hash; any constant works, it just has to be the same
 # at build and probe time.
 _H2_SEED = 0x9E3779B9
@@ -57,13 +59,6 @@ _H2_SEED = 0x9E3779B9
 # while it still wins below the broadcast ceiling. 2M keys ≈ a ~2.9 MB
 # bitmap at 1% fpp — comfortably inside the closure-broadcast regime.
 UDF_MODE_KEY_CEILING = 2_000_000
-
-
-def _q(name: str) -> Column:
-    """Resolve a column by its RAW name — ``F.col``/``select(str)``
-    parse backticks as quoting, so a name containing one needs the
-    escaped-quoted form (r9 ADVICE)."""
-    return F.expr("`" + name.replace("`", "``") + "`")
 
 
 @dataclass
@@ -245,8 +240,8 @@ def _blocked_word_mask(key_col: str, w: int, k: int) -> tuple[Column, Column]:
     literal shift count — the SQL form accepts a per-row one. The
     column name is backtick-escaped before interpolation (r9 ADVICE:
     a name containing a backtick parsed wrong or mis-bound)."""
-    quoted = "`" + key_col.replace("`", "``") + "`"
-    word = F.pmod(F.xxhash64(F.expr(quoted)), F.lit(w))
+    quoted = bq(key_col)
+    word = F.pmod(F.xxhash64(raw_col(key_col)), F.lit(w))
     lanes = [
         f"cast((shiftrightunsigned(xxhash64({quoted}, {_H2_SEED}L), "
         f"{6 * j}) & 63) AS int)"
@@ -316,12 +311,12 @@ def bloom_join(
         raise ValueError(f"mode must be 'blocked' or 'udf', got {mode!r}")
     if mode == "udf":
         if n_keys is None:
-            n_keys = dim.select(_q(on)).count()
+            n_keys = dim.select(raw_col(on)).count()
         if n_keys <= UDF_MODE_KEY_CEILING:
             bloom = bloom_build(
-                dim.select(_q(on).alias(on)), on, fpp=fpp, n_keys=n_keys
+                dim.select(raw_col(on).alias(on)), on, fpp=fpp, n_keys=n_keys
             )
-            pre = fact.filter(might_contain(bloom, _q(on)))
+            pre = fact.filter(might_contain(bloom, raw_col(on)))
             return pre.join(dim, on)
         # fall through to blocked — the G13b probe-then-dispatch shape
     clash = {"__bw", "__bm", "__bits"} & (set(fact.columns) | set(dim.columns))
@@ -333,7 +328,7 @@ def bloom_join(
             "on an input; rename them first"
         )
     words, w, k = blocked_bloom_words(
-        dim.select(_q(on).alias(on)), on, fpp=fpp, n_keys=n_keys
+        dim.select(raw_col(on).alias(on)), on, fpp=fpp, n_keys=n_keys
     )
     word, mask = _blocked_word_mask(on, w, k)
     pre = (

@@ -19,7 +19,7 @@ default here is a quarantine channel — conflicted keys are routed to an
 ``errors`` DataFrame and strict mode turns them into a driver-side raise.
 
 Two deliberate refinements over the reference (per round-1 advice):
-- ``numeric_predicate`` restricts precision-resolution to groups whose
+- ``numeric_names`` restricts precision-resolution to groups whose
   declared column type is numeric — the reference applies float probing to
   any value that happens to parse, silently "resolving" string-typed
   conflicts it should raise on.
@@ -35,6 +35,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ferc_xbrl_extractor_spark.operators.sqltext import bq, in_list, temp_view
 
 
 def _row_digest(df: DataFrame, cols: list[str], salt: int) -> Column:
@@ -161,9 +163,7 @@ def dedup_exact_keep(
 def _ndigits_sql(col_sql: str, max_precision: int = 6) -> str:
     """Decimal-digit count of a double as ONE flat SQL CASE, probed like the
     reference's loop: smallest p with round(v, p) == v, else
-    max_precision + 1. Built as a SQL string (a single parse) rather than a
-    chain of Column calls — the nested-when construction costs a Py4J round
-    trip per probe and measurably inflates plan-build time on the driver."""
+    max_precision + 1."""
     probes = " ".join(
         f"WHEN round({col_sql}, {p}) = {col_sql} THEN {p}"
         for p in range(max_precision + 1)
@@ -180,21 +180,19 @@ def _ndigits(col, max_precision: int = 6):
     return expr
 
 
-@dataclass
-class FuzzyDedupResult:
-    resolved: DataFrame  # one row per key: original columns, winning value
-    errors: DataFrame  # conflicted keys + collected values
-
-
-def fuzzy_dedup(
-    df: DataFrame,
+def fuzzy_dedup_sql(
+    src: str,
+    columns: list[str],
     keys: list[str],
     value_col: str = "value",
     max_precision: int = 6,
-    numeric_predicate: Column | None = None,
-) -> FuzzyDedupResult:
-    """A3: resolve near-duplicate numeric facts to the uniquely-most-precise
-    value; non-resolvable groups go to ``errors``.
+    numeric_names: list[str] | None = None,
+) -> tuple[str, str]:
+    """A3 as SQL text over the relation ``src`` (a view name or a
+    parenthesized, aliased subquery whose columns are ``columns``):
+    returns ``(resolved_sql, errors_sql)``. The single definition of the
+    fuzzy-dedup rule — :func:`fuzzy_dedup` and ``operators.fact_table``
+    both splice it into their statements.
 
     Single-aggregate, narrow-buffer formulation: ONE pass per group
     computes everything from SIX aggregate buffers —
@@ -211,12 +209,10 @@ def fuzzy_dedup(
     - ``min(parses-as-number)``, ``min(allow)``: group gates.
     - ``max_by(struct(row), struct(nd, num, value))``: the winner row.
 
-    The previous formulation carried 2×(max_precision+2) per-precision
-    string min/max buffers (~20 aggregates); the wide SortAggregate rows
-    regressed the composed fact pipeline ~50% at sf0.1. This keeps the
-    same single keyed shuffle (reusing an existing clustering on any
-    prefix of ``keys``) and the same one grouping-key sort, with a buffer
-    row ~3× narrower.
+    Per-precision string min/max buffers instead (~20 aggregates) made
+    the aggregate rows ~3× wider and the composed fact pipeline ~50%
+    slower at sf0.1. The aggregate reuses an existing clustering on any
+    prefix of ``keys``.
 
     Distinctness is tested with min==max within the top bucket and a
     presence *bitmask* (never counts), so the aggregate is
@@ -224,81 +220,95 @@ def fuzzy_dedup(
     collapse for free and a separate A2 pass is NOT required for
     correctness (construct_table drops a full-relation HashAggregate on
     the strength of this). On exact-deduped input the semantics are
-    bit-identical to the reference's post-drop_duplicates resolve.
+    bit-identical to the reference's post-drop_duplicates resolve. The
+    resolved relation holds exactly one row per key.
 
-    ``numeric_predicate``: column expression true for rows whose *declared*
-    type is numeric (e.g. ``F.col("name").isin(numeric_names)``); precision
-    resolution only applies to those groups. Default: all groups.
+    ``numeric_names``: values of the ``name`` column whose *declared* type
+    is numeric; precision resolution only applies to those groups.
+    Default (None): all groups.
 
-    The ``errors`` channel is a separate consumer (semi-join of conflicted
+    The errors relation is a separate consumer (semi-join of conflicted
     keys back onto the input, then ``collect_set``): conflicts are the
     cold path, and keeping collection out of the hot aggregate keeps the
     resolved plan free of ObjectHashAggregate.
     """
-    allow_numeric = (
-        numeric_predicate if numeric_predicate is not None else F.lit(True)
-    )
-    overflow = max_precision + 1  # nd for "rounds exactly nowhere" + strings
-    # Compute the parsed double and its digit count ONCE in a projection —
-    # ``_ndigits`` is a 7-deep CASE of round() probes, and referencing the
-    # raw expression from every bucket aggregate would re-evaluate it per
+    key_sql = ", ".join(bq(k) for k in keys)
+    value = bq(value_col)
+    allow = "TRUE" if numeric_names is None else in_list("`name`", numeric_names)
+    # The parsed double and its digit count are computed ONCE in a
+    # projection: ``_ndigits_sql`` is a 7-deep CASE of round() probes, and
+    # referencing it from every aggregate would re-evaluate it per
     # aggregate per row (measured 1.4× slower on the fact pipeline).
-    num_sql = f"try_cast(`{value_col}` as double)"
-    staged = df.select(
-        "*",
-        F.expr(num_sql).alias("__num"),
-        F.expr(_ndigits_sql(num_sql, max_precision)).alias("__nd"),
-        allow_numeric.alias("__allow"),
+    num_sql = f"try_cast({value} AS double)"
+    staged = (
+        f"SELECT *, {num_sql} AS __num, "
+        f"{_ndigits_sql(num_sql, max_precision)} AS __nd, {allow} AS __allow "
+        f"FROM {src}"
     )
-    num, nd, value = F.col("__num"), F.col("__nd"), F.col(value_col)
-
-    stats = staged.groupBy(*keys).agg(
-        F.min(num.isNotNull()).alias("__all_num"),
-        F.min(F.col("__allow")).alias("__allow_all"),
-        F.bit_or(F.expr("shiftleft(1L, __nd)")).alias("__ndmask"),
-        F.max_by(value, F.struct(nd, value)).alias("__hi_max"),
-        F.min_by(value, F.struct((-nd).alias("neg_nd"), value)).alias("__hi_min"),
-        F.max_by(
-            F.struct(*[F.col(c) for c in df.columns if c not in keys]),
-            F.struct(nd, num, value),
-        ).alias("__row"),
+    payload = ", ".join(bq(c) for c in columns if c not in keys)
+    agg = (
+        f"SELECT {key_sql}, "
+        "min(__num IS NOT NULL) AS __all_num, "
+        "min(__allow) AS __allow_all, "
+        "bit_or(shiftleft(1L, __nd)) AS __ndmask, "
+        f"max_by({value}, struct(__nd, {value})) AS __hi_max, "
+        f"min_by({value}, struct(-__nd, {value})) AS __hi_min, "
+        f"max_by(struct({payload}), struct(__nd, __num, {value})) AS __row "
+        f"FROM ({staged}) AS __staged GROUP BY {key_sql}"
     )
-
-    # Post-aggregation bit arithmetic (one codegen'd projection, built as
-    # one SQL parse). The mask is nonzero by construction (every row sets
-    # a bit), its highest set bit is the group's max precision, and
-    # clearing that bit leaves the runner-up buckets. Resolvability
-    # (reference datapackage.py:563-572): a p in 0..max_precision-1 must
-    # isolate exactly one value with round(v,p) != v ⇔ the top bucket
-    # holds one distinct value AND a runner-up bucket exists at precision
-    # ≤ max_precision-1 (no second bucket ⇒ either a single value, the
-    # first disjunct, or an unresolvable tie).
-    hi_bit_sql = "CASE " + " ".join(
-        f"WHEN (__ndmask & {1 << p}) != 0 THEN {1 << p}"
-        for p in range(overflow, 0, -1)
-    ) + " ELSE 1 END"
-    stats = stats.withColumn("__low", F.expr(f"__ndmask - ({hi_bit_sql})"))
-    resolvable = F.expr(
-        "(__hi_max = __hi_min) AND (__low = 0 OR "
-        f"(__allow_all AND __all_num AND __low < {1 << max_precision}))"
+    # Post-aggregation bit arithmetic on the bucket mask (nonzero by
+    # construction: every row sets a bit; its highest set bit is the
+    # group's max precision, the others are the runner-up buckets).
+    # Resolvability (reference datapackage.py:563-572): a p in
+    # 0..max_precision-1 must isolate exactly one value with
+    # round(v,p) != v ⇔ the top bucket holds one distinct value AND either
+    # there is no runner-up (the mask is a power of two: a single value)
+    # or every runner-up is at precision ≤ max_precision-1 — false exactly
+    # when buckets max_precision and max_precision+1 are both present.
+    top_two = 3 << max_precision
+    stats = (
+        "SELECT *, (__hi_max = __hi_min) AND ((__ndmask & (__ndmask - 1)) = 0 OR "
+        f"(__allow_all AND __all_num AND (__ndmask & {top_two}) != {top_two})) "
+        f"AS __ok FROM ({agg}) AS __agg"
     )
-
     # Key columns come from the grouping attributes (preserves the output
     # partitioning/ordering for downstream prefix-keyed operators — see
     # dedup_exact_keep); only non-key columns come out of the struct.
-    winners = stats.filter(resolvable).select(
-        *[
-            F.col(c) if c in keys else F.col(f"__row.{c}").alias(c)
-            for c in df.columns
-        ]
+    winner_cols = ", ".join(
+        bq(c) if c in keys else f"__row.{bq(c)} AS {bq(c)}" for c in columns
     )
-    conflicted = stats.filter(~resolvable).select(*keys)
+    resolved = f"SELECT {winner_cols} FROM ({stats}) AS __stats WHERE __ok"
     errors = (
-        df.join(conflicted, keys, "left_semi")
-        .groupBy(*keys)
-        .agg(F.sort_array(F.collect_set(value_col)).alias("values"))
+        f"SELECT {key_sql}, sort_array(collect_set({value})) AS `values` "
+        f"FROM {src} LEFT SEMI JOIN "
+        f"(SELECT {key_sql} FROM ({stats}) AS __stats WHERE NOT __ok) AS __bad "
+        f"USING ({key_sql}) GROUP BY {key_sql}"
     )
-    return FuzzyDedupResult(resolved=winners, errors=errors)
+    return resolved, errors
+
+
+@dataclass
+class FuzzyDedupResult:
+    resolved: DataFrame  # one row per key: original columns, winning value
+    errors: DataFrame  # conflicted keys + collected values
+
+
+def fuzzy_dedup(
+    df: DataFrame,
+    keys: list[str],
+    value_col: str = "value",
+    max_precision: int = 6,
+    numeric_names: list[str] | None = None,
+) -> FuzzyDedupResult:
+    """A3: resolve near-duplicate numeric facts to the uniquely-most-precise
+    value; non-resolvable groups go to ``errors``. The rule and its
+    arguments are :func:`fuzzy_dedup_sql`'s, run over ``df``."""
+    spark = df.sparkSession
+    with temp_view(df) as view:
+        resolved, errors = fuzzy_dedup_sql(
+            bq(view), df.columns, keys, value_col, max_precision, numeric_names
+        )
+        return FuzzyDedupResult(resolved=spark.sql(resolved), errors=spark.sql(errors))
 
 
 def fuzzy_dedup_strict(

@@ -2,27 +2,35 @@
 (/root/reference/src/ferc_xbrl_extractor/datapackage.py:411-459) as one
 declarative Spark plan.
 
-Stage order matters for determinism (SURVEY.md §7.4): exact dedup runs
-*before* fuzzy dedup, and the pivot's ``first()`` only ever sees singleton
-(key, name) groups, so it is deterministic without a sort.
+Construction: the whole per-table program is rendered as SQL text over the
+facts relation (exposed as a uniquely named temp view) and handed to the
+JVM in ONE ``spark.sql`` call, plus one more for the quarantine (errors)
+relation. The Column-API form of the same program cost a py4j round trip
+per call, per column argument and per list element — 1,100-2,100
+driver⇄JVM crossings per table, whatever its width. The SQL-text form
+costs a few dozen per table (pinned by
+tests/test_fact_table.py::test_construction_py4j_budget); the executed
+plan keeps its shape.
+
+Stage order matters for determinism (SURVEY.md §7.4): fuzzy dedup leaves
+exactly one row per (filing, c_id, name), so the pivot never sees a
+duplicate key.
 
 Shuffle budget per table: exactly ONE. The shredder already denormalized the
 context PK onto every fact row (see sources.shredder), and the plan opens
-with an explicit ``repartition(filing_name, c_id)``. Every downstream
+with an explicit ``DISTRIBUTE BY filing_name, c_id``. Every downstream
 stateful operator's required clustering is a *superset* of those two keys —
-exact dedup groups on the full row, the fuzzy-dedup aggregate groups on
-(filing, c_id, name), the pivot groups on (filing, c_id) — and Spark's
-HashPartitioning(subset) satisfies ClusteredDistribution(superset), so
-Catalyst plans them all over the single exchange. Sort budget: exactly ONE —
-the fuzzy aggregate's key sort; the pivot aggregate consumes a *prefix* of
-that order, so its Sort node is elided (pinned by tests/test_plans.py).
+the fuzzy-dedup aggregate groups on (filing, c_id, name), the pivot groups
+on (filing, c_id) — and Spark's HashPartitioning(subset) satisfies
+ClusteredDistribution(superset), so Catalyst plans them all over the single
+exchange (pinned by tests/test_plans.py).
 
-    filter (period ∧ concept-set ∧ dims-fit)       — map-side, pushed down
-    -> repartition(filing_name, c_id)              — THE shuffle
-    -> exact dedup (grouping-only HashAggregate)   — no exchange, no sort
-    -> fuzzy dedup (one agg, sort by fact key)     — no exchange, THE sort
-    -> pivot groupBy(filing, c_id) max(when)       — no exchange, no sort
-    -> cast / reindex / null-prune                 — map-side
+    filter (P2 period ∧ P3 concept set ∧ P4 dims-fit)  — map-side, pushed down
+    -> per-type value normalisation + P7 axis backfill — map-side
+    -> DISTRIBUTE BY filing_name, c_id                 — THE shuffle
+    -> fuzzy dedup (one agg; exact dups collapse)      — no exchange
+    -> map pivot groupBy(filing, c_id)                 — no exchange
+    -> TRY_CAST / reindex / P6 non-null filter         — map-side
 
 The reference instead joins facts to contexts per table (J1); our J1
 equivalent is the map-side denormalization, with the standalone broadcast
@@ -34,25 +42,16 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ferc_xbrl_extractor_spark.catalog.tablespec import TableSpec
 from ferc_xbrl_extractor_spark.functions.casts import spark_type_for
 from ferc_xbrl_extractor_spark.operators import filters
-from ferc_xbrl_extractor_spark.operators.dedup import fuzzy_dedup
+from ferc_xbrl_extractor_spark.operators.dedup import fuzzy_dedup_sql
+from ferc_xbrl_extractor_spark.operators.sqltext import bq, in_list, sq, temp_view
 
 NUMBER_TYPES = {"number"}
 INTEGER_TYPES = {"integer", "year"}
-
-
-def _bq(name: str) -> str:
-    """Backtick-quote an identifier for SQL text (`` escapes a backtick)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sq(s: str) -> str:
-    """Escape a string literal's single quotes for SQL text."""
-    return s.replace("\\", "\\\\").replace("'", "\\'")
+FACT_KEY = ["filing_name", "c_id", "name"]
 
 
 @dataclass
@@ -65,7 +64,7 @@ class TableResult:
     errors: DataFrame
 
 
-def _normalize_values(selected: DataFrame, spec: TableSpec) -> DataFrame:
+def _normalized_value_sql(spec: TableSpec) -> str:
     """Normalize raw fact strings per the column's *declared* type before
     dedup, like the reference's CONVERT_DTYPES-before-drop_duplicates
     (datapackage.py:430-437): '1.0' and '1.00' must be exact duplicates of
@@ -74,19 +73,111 @@ def _normalize_values(selected: DataFrame, spec: TableSpec) -> DataFrame:
     """
     num_names = [c for c, t in spec.columns.items() if t in NUMBER_TYPES]
     int_names = [c for c, t in spec.columns.items() if t in INTEGER_TYPES]
-    value = F.col("value")
-    norm = (
-        F.when(
-            F.col("name").isin(num_names),
-            F.coalesce(value.try_cast("double").cast("string"), value),
-        )
-        .when(
-            F.col("name").isin(int_names),
-            F.coalesce(value.try_cast("bigint").cast("string"), value),
-        )
-        .otherwise(value)
+    return (
+        f"CASE WHEN {in_list('`name`', num_names)} "
+        "THEN coalesce(CAST(try_cast(`value` AS double) AS string), `value`) "
+        f"WHEN {in_list('`name`', int_names)} "
+        "THEN coalesce(CAST(try_cast(`value` AS bigint) AS string), `value`) "
+        "ELSE `value` END"
     )
-    return selected.withColumn("value", norm)
+
+
+def _table_sql(
+    src: str,
+    spec: TableSpec,
+    typed_dates: bool = False,
+    deterministic_order: bool = False,
+    skew_safe: bool = False,
+    input_clustered: bool = False,
+) -> tuple[str, str]:
+    """The table's program as SQL text over the facts relation ``src``:
+    returns ``(data_sql, errors_sql)``. Arguments as for
+    :func:`construct_table_with_errors`."""
+    date_cols = ["date"] if spec.instant else ["start_date", "end_date"]
+    date_sql = ["`end_date` AS `date`"] if spec.instant else ["`start_date`", "`end_date`"]
+    # Shrink the shuffle payload map-side BEFORE the exchange: resolve the
+    # dims map into the table's axis string columns (P7 backfill) and keep
+    # only the columns the rest of the plan reads. Shipping the map through
+    # the shuffle measures ~4× slower than shipping flat strings.
+    select_sql = [
+        "`filing_name`",
+        "`c_id`",
+        "`entity_id`",
+        "`publication_time`",
+        *date_sql,
+        *[filters.axis_with_total_sql(axis) for axis in spec.axes],
+        "`name`",
+        f"{_normalized_value_sql(spec)} AS `value`",
+    ]
+    where_sql = " AND ".join(
+        f"({p})"
+        for p in (
+            filters.for_period_sql(spec.instant),
+            filters.with_concepts_sql(spec.data_columns),
+            filters.dims_fit_sql(filters.axes_array_sql(spec.axes)),
+        )
+    )
+    selected = f"SELECT {', '.join(select_sql)} FROM {src} WHERE {where_sql}"
+    # The single shuffle: every grouping key below is a superset of
+    # (filing_name, c_id), so this one clustering serves them all. In
+    # skew_safe mode the aggregates own their exchanges instead (partial
+    # aggregation before each shuffle — see construct_table_with_errors).
+    if not (skew_safe or input_clustered):
+        selected += " DISTRIBUTE BY `filing_name`, `c_id`"
+
+    # A2+A3 in ONE aggregate: fuzzy dedup is multiplicity-insensitive, so
+    # exact duplicates collapse inside the same pass that resolves
+    # precision conflicts — no separate full-relation distinct. Precision
+    # resolution only for columns whose declared type is numeric.
+    pk_cols = ["entity_id", "publication_time", *date_cols, *spec.axes]
+    numeric_names = [
+        c for c, t in spec.columns.items() if t in NUMBER_TYPES | INTEGER_TYPES
+    ]
+    resolved, errors = fuzzy_dedup_sql(
+        f"({selected}) AS __sel",
+        ["filing_name", "c_id", *pk_cols, "name", "value"],
+        FACT_KEY,
+        numeric_names=numeric_names,
+    )
+
+    # A1: long -> wide, grouped on (filing, c_id) exactly like the
+    # reference's unstack-on-c_id (datapackage.py:427-441). Context PK
+    # fields are functions of the context, so first() is constant per
+    # group. The map pivot collects each context's (name, value) pairs into
+    # one map and looks every data column up in it: it RELIES on fuzzy
+    # dedup's one-row-per-(filing, c_id, name) output — a duplicate name
+    # would raise DUPLICATE_MAP_KEY (pinned by
+    # tests/test_fact_table.py::test_pivot_after_duplicate_fact_keys).
+    pivot = (
+        "SELECT `filing_name`, `c_id`, "
+        + "".join(f"first({bq(c)}) AS {bq(c)}, " for c in pk_cols)
+        + "map_from_entries(collect_list(struct(`name`, `value`))) AS __m "
+        f"FROM ({resolved}) AS __res GROUP BY `filing_name`, `c_id`"
+    )
+
+    # F9 casts + P5 reindex to the declared column order.
+    out_sql = []
+    for pk in spec.primary_key:
+        if typed_dates and pk in ("date", "start_date", "end_date"):
+            out_sql.append(f"CAST({bq(pk)} AS DATE) AS {bq(pk)}")
+        else:
+            out_sql.append(bq(pk))
+    for name in spec.data_columns:
+        target = spark_type_for(spec.columns[name], typed_dates)
+        out_sql.append(
+            f"TRY_CAST(__m[{sq(name)}] AS {target.simpleString()}) AS {bq(name)}"
+        )
+    wide = f"SELECT {', '.join(out_sql)} FROM ({pivot}) AS __piv"
+
+    # P6 over the CAST columns (a WHERE beside the casts would read the raw
+    # map lookups): drop rows where every data column is null.
+    data = (
+        f"SELECT * FROM ({wide}) AS __wide "
+        f"WHERE {filters.at_least_one_non_null_sql(spec.data_columns)}"
+    )
+    if deterministic_order:
+        data += " ORDER BY " + ", ".join(bq(pk) for pk in spec.primary_key)
+    return data, errors
 
 
 def construct_table_with_errors(
@@ -104,7 +195,7 @@ def construct_table_with_errors(
         spec: the table's schema contract.
         typed_dates: cast date PK columns to DateType (Spark-native surface)
             instead of the reference's ISO strings.
-        deterministic_order: end with orderBy(PK) — needed only for golden
+        deterministic_order: end with ORDER BY PK — needed only for golden
             comparisons / single-file sinks; a cluster sink should stay
             unordered and let the writer bucket it.
         skew_safe: hot-key fallback (the G13 two-phase shape). The default
@@ -128,104 +219,17 @@ def construct_table_with_errors(
             is satisfied by the input partitioning, so the whole table
             plan runs with ZERO exchanges.
     """
-    fact_key = ["filing_name", "c_id", "name"]
-
-    selected = filters.with_concepts(
-        filters.for_period(facts, spec.instant), spec.data_columns
-    )
-    selected = filters.dims_fit_table(selected, spec.axes)
-    selected = _normalize_values(selected, spec)
-
-    # Shrink the shuffle payload map-side BEFORE the exchange: resolve the
-    # dims map into the table's axis string columns (P7 backfill) and keep
-    # only the columns the rest of the plan reads. Shipping the map through
-    # the shuffle measures ~4× slower than shipping flat strings.
-    if spec.instant:
-        date_cols = [F.col("end_date").alias("date")]
-    else:
-        date_cols = [F.col("start_date"), F.col("end_date")]
-    selected = selected.select(
-        "filing_name",
-        "c_id",
-        "entity_id",
-        "publication_time",
-        *date_cols,
-        *[filters.axis_with_total("dims", axis) for axis in spec.axes],
-        "name",
-        "value",
-    )
-
-    # The single shuffle: every grouping key below is a superset of
-    # (filing_name, c_id), so this one clustering serves them all. In
-    # skew_safe mode the aggregates own their exchanges instead (partial
-    # aggregation before each shuffle — see docstring).
-    if not (skew_safe or input_clustered):
-        selected = selected.repartition(F.col("filing_name"), F.col("c_id"))
-
-    # A2+A3 in ONE aggregate: fuzzy_dedup is multiplicity-insensitive
-    # (per-bucket min==max distinctness), so exact duplicates collapse
-    # inside the same pass that resolves precision conflicts — no separate
-    # dropDuplicates aggregate over the full relation (measured ~1.4s of
-    # the sf0.1 pipeline). Precision resolution only for columns whose
-    # declared type is numeric.
-    numeric_names = [
-        c for c, t in spec.columns.items() if t in NUMBER_TYPES | INTEGER_TYPES
-    ]
-    dedup = fuzzy_dedup(
-        selected,
-        fact_key,
-        numeric_predicate=F.col("name").isin(numeric_names),
-    )
-    resolved = dedup.resolved
-
-    # A1: long -> wide, grouped on (filing, c_id) exactly like the
-    # reference's unstack-on-c_id (datapackage.py:427-441) — context PK
-    # fields are functions of the context, so first() is constant per
-    # group, and max(CASE WHEN name=c) sees at most one non-null value per
-    # group post-fuzzy (deterministic). Narrow grouping key = reuses the
-    # pipeline's one clustering, no extra sort columns.
-    #
-    # The per-column expressions are built as SQL TEXT, one F.expr per
-    # aggregate column and ONE selectExpr for the cast/reindex projection:
-    # the Column-API form (max(when(..)).alias(..) etc.) cost ~6 py4j
-    # round-trips per data column — ~2,400 driver⇄JVM socket crossings
-    # (~1.1s, cProfile'd in r10) to CONSTRUCT a 255-column table plan.
-    # The parsed expression trees are identical (same plan, pinned by
-    # tests/test_plans.py), only the construction path changes.
-    keyed = resolved
-    pk_cols = [c for c in keyed.columns if c not in ("filing_name", "c_id", "name", "value")]
-    wide = keyed.groupBy("filing_name", "c_id").agg(
-        *[F.expr(f"first({_bq(c)}) AS {_bq(c)}") for c in pk_cols],
-        F.expr(
-            "map_from_entries(collect_list(struct(name, value))) AS __m"
-        ),
-    ).selectExpr(
-        "filing_name",
-        "c_id",
-        *[_bq(c) for c in pk_cols],
-        *[f"__m['{_sq(c)}'] AS {_bq(c)}" for c in spec.data_columns],
-    )
-
-    # F9 casts + P5 reindex to the declared column order (one selectExpr).
-    out_exprs = []
-    for pk in spec.primary_key:
-        if typed_dates and pk in ("date", "start_date", "end_date"):
-            out_exprs.append(f"CAST({_bq(pk)} AS DATE) AS {_bq(pk)}")
-        else:
-            out_exprs.append(_bq(pk))
-    for name in spec.data_columns:
-        target = spark_type_for(spec.columns[name], typed_dates)
-        out_exprs.append(
-            f"TRY_CAST({_bq(name)} AS {target.simpleString()}) AS {_bq(name)}"
+    spark = facts.sparkSession
+    with temp_view(facts) as view:
+        data_sql, errors_sql = _table_sql(
+            bq(view),
+            spec,
+            typed_dates=typed_dates,
+            deterministic_order=deterministic_order,
+            skew_safe=skew_safe,
+            input_clustered=input_clustered,
         )
-    result = wide.selectExpr(*out_exprs)
-
-    # P6: drop rows where every data column is null.
-    result = filters.at_least_one_non_null(result, spec.data_columns)
-
-    if deterministic_order:
-        result = result.orderBy(*spec.primary_key)
-    return TableResult(data=result, errors=dedup.errors)
+        return TableResult(data=spark.sql(data_sql), errors=spark.sql(errors_sql))
 
 
 def construct_table(

@@ -1,62 +1,68 @@
-"""Predicates P1-P7 (SURVEY.md §2.2) as Catalyst expressions.
+"""Predicates P2-P7 (SURVEY.md §2.2) as SQL text.
 
-All of these are pure column expressions — no joins, no UDFs — so they
-vectorize in whole-stage codegen and push down through the plan.
+Each predicate has ONE definition: a function returning a SQL expression.
+``operators.fact_table`` splices them into a table's single SQL statement;
+the few DataFrame callers wrap the same text in ``filter``/``F.expr``. All
+are pure expressions — no joins, no UDFs — so they vectorize in
+whole-stage codegen and push down through the plan. P1 (null fact values)
+is applied at parse time by ``sources.shredder``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from ferc_xbrl_extractor_spark.operators.sqltext import bq, in_list, sq
 
 
-def non_null_value(df: DataFrame, col: str = "value") -> DataFrame:
-    """P1: drop facts whose raw value is null (reference instance.py:395)."""
-    return df.filter(F.col(col).isNotNull())
-
-
-def for_period(df: DataFrame, instant: bool) -> DataFrame:
+def for_period_sql(instant: bool) -> str:
     """P2: route facts to instant vs duration tables (instance.py:316)."""
-    return df.filter(F.col("instant") == F.lit(instant))
+    return f"`instant` = {'TRUE' if instant else 'FALSE'}"
 
 
-def with_concepts(df: DataFrame, concept_names: list[str]) -> DataFrame:
+def with_concepts_sql(concept_names: list[str]) -> str:
     """P3: semi-filter facts to a table's data columns (instance.py:318-320).
 
-    ``isin`` over a driver-known list compiles to an in-set predicate that
-    Catalyst can push to the scan; no join needed.
-    """
-    return df.filter(F.col("name").isin(list(concept_names)))
+    An in-set predicate over a driver-known list, which Catalyst can push
+    to the scan; no join needed."""
+    return in_list("`name`", list(concept_names))
 
 
-def dims_fit_predicate(pk_axes: list[str], dims_col: str = "dims") -> Column:
+def axes_array_sql(pk_axes: list[str]) -> str:
+    """A table's PK axes as an ``array<string>`` literal for P4."""
+    if not pk_axes:
+        return "CAST(array() AS array<string>)"
+    return f"array({', '.join(sq(a) for a in pk_axes)})"
+
+
+def dims_fit_sql(axes_sql: str, dims_col: str = "dims") -> str:
     """P4: a context fits a table iff its dim keys ⊆ the table's PK axes
-    (instance.py:159-169). Facts *missing* an axis still fit — they are the
-    'total' slice (the backfill happens in the PK projection, P7)."""
-    axes = F.array(*[F.lit(a) for a in pk_axes]) if pk_axes else F.array()
-    return F.forall(
-        F.map_keys(F.coalesce(F.col(dims_col), F.create_map())),
-        lambda k: F.array_contains(axes, k) if pk_axes else F.lit(False),
+    (instance.py:159-169). ``axes_sql`` is an ``array<string>`` expression:
+    :func:`axes_array_sql` for one table, or a column holding each row's
+    axes. Facts *missing* an axis still fit — they are the 'total' slice
+    (the backfill happens in the PK projection, P7)."""
+    return (
+        f"forall(map_keys(coalesce({bq(dims_col)}, map())), "
+        f"k -> array_contains({axes_sql}, k))"
     )
 
 
-def dims_fit_table(df: DataFrame, pk_axes: list[str]) -> DataFrame:
-    return df.filter(dims_fit_predicate(pk_axes))
+def at_least_one_non_null_sql(data_columns: list[str]) -> str:
+    """P6: keep rows where some data column is non-null
+    (datapackage.py:458); ``TRUE`` when there are no data columns."""
+    if not data_columns:
+        return "TRUE"
+    return " OR ".join(f"{bq(c)} IS NOT NULL" for c in data_columns)
 
 
 def at_least_one_non_null(df: DataFrame, data_columns: list[str]) -> DataFrame:
-    """P6: drop rows where every data column is null (datapackage.py:458).
-
-    Built as ONE SQL text filter, not a Column-API OR fold: the fold cost
-    2 py4j round-trips per column (~500 driver⇄JVM crossings on a
-    255-column table) to construct the same expression tree."""
+    """P6 over a DataFrame: drop rows where every data column is null."""
     if not data_columns:
         return df
-    quoted = ("`" + c.replace("`", "``") + "`" for c in data_columns)
-    return df.filter(" OR ".join(f"{q} IS NOT NULL" for q in quoted))
+    return df.filter(at_least_one_non_null_sql(data_columns))
 
 
-def axis_with_total(dims_col: str, axis: str) -> Column:
+def axis_with_total_sql(axis: str, dims_col: str = "dims") -> str:
     """P7 axis backfill: a context lacking an axis represents the total
-    slice (instance.py:178) — ``coalesce(dims[axis], 'total')``."""
-    return F.coalesce(F.col(dims_col).getItem(axis), F.lit("total")).alias(axis)
+    slice (instance.py:178) — ``coalesce(dims[axis], 'total') AS axis``."""
+    return f"coalesce({bq(dims_col)}[{sq(axis)}], 'total') AS {bq(axis)}"

@@ -30,6 +30,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ferc_xbrl_extractor_spark.operators.sqltext import bq, raw_col
 from ferc_xbrl_extractor_spark.operators.text import tokens
 
 
@@ -69,9 +70,9 @@ def doc_shingle_arrays(
     from the token attribute — so the split runs once per document.
     CollapseProject leaves this alone (the token alias is referenced more
     than once), preserving the linear cost."""
-    toked = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
+    toked = df.select(raw_col(id_col), tokens(text_col).alias("__toks"))
     return toked.select(
-        F.col(id_col), shingles_from_tokens("__toks", n).alias("__sh")
+        raw_col(id_col), shingles_from_tokens("__toks", n).alias("__sh")
     )
 
 
@@ -89,7 +90,7 @@ def shingle_table(
     null-shingle row dropped right here, above the Generate."""
     return (
         doc_shingle_arrays(df, id_col, text_col, n)
-        .select(F.col(id_col), F.explode_outer("__sh").alias("shingle"))
+        .select(raw_col(id_col), F.explode_outer("__sh").alias("shingle"))
         .filter(F.col("shingle").isNotNull())
     )
 
@@ -1729,7 +1730,7 @@ def corpus_similarity(
     # sum cost ~10,600 py4j round-trips (~2.7s of driver-side
     # construction per invocation, cProfiled at sf0.1). Identical parsed
     # expressions, identical plan.
-    sig = st.groupBy(stratum_col).agg(
+    sig = st.groupBy(raw_col(stratum_col)).agg(
         *[
             F.expr(
                 f"min(md5(concat('{i}:', shingle))) AS `__mh{i}`"
@@ -1741,7 +1742,7 @@ def corpus_similarity(
     # subtrees, healed by runtime exchange reuse like `sig`.
     # NOT derivable from sig: an all-empty-text stratum has no shingles,
     # hence no sig row, but must still appear in the report as NULLs.
-    strata = df.select(F.col(stratum_col).alias("__st")).distinct()
+    strata = df.select(raw_col(stratum_col).alias("__st")).distinct()
     pairs = (
         strata.select(F.col("__st").alias("stratum_a"))
         .join(
@@ -1750,11 +1751,11 @@ def corpus_similarity(
         )
     )
     a = sig.selectExpr(
-        f"`{stratum_col}` AS stratum_a",
+        f"{bq(stratum_col)} AS stratum_a",
         *[f"`__mh{i}` AS `__a{i}`" for i in range(num_hashes)],
     )
     b = sig.selectExpr(
-        f"`{stratum_col}` AS stratum_b",
+        f"{bq(stratum_col)} AS stratum_b",
         *[f"`__mh{i}` AS `__b{i}`" for i in range(num_hashes)],
     )
     matches_sql = " + ".join(

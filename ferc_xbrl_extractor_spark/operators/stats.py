@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ferc_xbrl_extractor_spark.operators import filters
+
 FACT_KEY = ["filing_name", "c_id", "name"]
 
 
@@ -74,10 +76,7 @@ def consumed_keys_for_tables(facts: DataFrame, specs) -> DataFrame:
     lookup = spark.createDataFrame(
         rows, "name string, instant boolean, __axes array<string>"
     ).dropDuplicates()
-    fits = F.forall(
-        F.map_keys(F.coalesce(F.col("dims"), F.create_map())),
-        lambda k: F.array_contains(F.col("__axes"), k),
-    )
+    fits = F.expr(filters.dims_fit_sql("`__axes`"))
     return (
         facts.join(F.broadcast(lookup), ["name", "instant"], "inner")
         .filter(fits)

@@ -12,6 +12,12 @@ parse pass. Each table plan is a single-shuffle job (see
 operators.fact_table); tables are independent, so on a cluster they are
 scheduled concurrently by the Spark scheduler (and we kick them off from a
 thread pool when writing).
+
+Plan construction is driver work that grows with the table count (~255 on
+Form 1). ``construct_table_with_errors`` renders each table's program as
+SQL text and hands it to the JVM in two ``spark.sql`` calls (data and
+errors), a few dozen py4j round trips per table instead of one per column
+expression and list element.
 """
 
 from __future__ import annotations

@@ -19,7 +19,14 @@ def default_parallelism() -> int:
 
 
 def _driver_mem() -> str:
-    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    """Driver heap: explicit SPARK_GRAFT_DRIVER_MEM, else min(24g, 60% of
+    physical RAM) in MiB — a fixed 24g (with its 16g initial heap) cannot
+    start on a smaller host."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{max(min(24 * 1024, phys_mb * 3 // 5), 1)}m"
 
 
 def _driver_xms() -> str:
@@ -80,7 +87,7 @@ def get_spark(
         .config("spark.driver.memory", _driver_mem())
         # Pin the initial heap to ~2/3 of the max: growing 1g -> 24g
         # mid-job causes full-GC spikes that dwarf the queries being
-        # measured. Derived from SPARK_GRAFT_DRIVER_MEM (never a hardcoded
+        # measured. Derived from the driver heap (never a hardcoded
         # 16g — that refuses to launch on hosts with less RAM); override
         # exactly with SPARK_GRAFT_DRIVER_XMS.
         .config("spark.driver.extraJavaOptions", f"-Xms{_driver_xms()}")

@@ -143,3 +143,116 @@ def test_skew_safe_mode_equivalence(spark):
     # exchange (reading the plan bottom-up, the deepest agg is partial)
     assert "partial_" in plan
     assert "REPARTITION_BY_COL" not in plan
+
+
+_FACTS_DDL = (
+    "filing_name string, c_id string, entity_id string, instant boolean,"
+    "start_date string, end_date string, dims map<string,string>,"
+    "name string, value string, publication_time timestamp"
+)
+
+
+def _fact_rows(spark, rows):
+    """(c_id, dims, name, value) tuples as duration facts of one filing."""
+    import datetime
+
+    pub = datetime.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [
+            ("f1", c, "E1", False, "2021-01-01", "2021-12-31", dims, n, v, pub)
+            for c, dims, n, v in rows
+        ],
+        _FACTS_DDL,
+    )
+
+
+def test_pivot_after_duplicate_fact_keys(spark):
+    """Duplicate (filing_name, c_id, name) facts reach the map pivot only
+    after fuzzy dedup has left one row per key: no DUPLICATE_MAP_KEY, one
+    row per context, the resolved value (NULL for the unresolvable string
+    conflict), and exactly that conflict in the quarantine relation."""
+    from ferc_xbrl_extractor_spark.operators.fact_table import (
+        construct_table_with_errors,
+    )
+
+    one = {"line_axis": "1"}
+    facts = _fact_rows(
+        spark,
+        [
+            ("c1", one, "cost", "5.0"),  # exact duplicate
+            ("c1", one, "cost", "5.0"),
+            ("c1", one, "net", "1.1"),  # precision variant: 1.15 wins
+            ("c1", one, "net", "1.15"),
+            ("c1", one, "label", "x"),  # string conflict: quarantined
+            ("c1", one, "label", "y"),
+            ("c2", {"line_axis": "2"}, "cost", "3"),
+        ],
+    )
+    spec = TableSpec(
+        name="t",
+        period_type="duration",
+        columns={"cost": "number", "net": "number", "label": "string"},
+        axes=["line_axis"],
+    )
+    built = construct_table_with_errors(facts, spec)
+    rows = built.data.select("line_axis", *spec.data_columns).collect()
+    assert sorted(tuple(r) for r in rows) == [
+        ("1", 5.0, 1.15, None),
+        ("2", 3.0, None, None),
+    ]
+    errors = built.errors.collect()
+    assert [(r["c_id"], r["name"], list(r["values"])) for r in errors] == [
+        ("c1", "label", ["x", "y"])
+    ]
+
+
+def _py4j_commands(spark, build) -> int:
+    """py4j commands ``build()`` sends, counted on the gateway client with
+    Python's GC held off (a collection would send object-release commands
+    that are not construction)."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counted(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(*args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counted
+    try:
+        build()
+    finally:
+        client.send_command = send
+        gc.enable()
+    return calls
+
+
+def test_construction_py4j_budget(spark):
+    """Building a table plan costs a bounded number of driver⇄JVM round
+    trips, whatever the table's width: the program goes to the JVM as SQL
+    text, not as one py4j call per column expression and list element."""
+    from ferc_xbrl_extractor_spark.operators.fact_table import (
+        construct_table_with_errors,
+    )
+
+    facts = _fact_rows(spark, [("c1", {"a0_axis": "x"}, "col_0", "1.5")])
+    types = ["number", "integer", "string", "date", "boolean"]
+    narrow = TableSpec(
+        name="narrow",
+        period_type="instant",
+        columns={f"col_{i}": types[i % 5] for i in range(4)},
+    )
+    wide = TableSpec(
+        name="wide",
+        period_type="duration",
+        columns={f"col_{i}": types[i % 5] for i in range(40)},
+        axes=["a0_axis", "a1_axis", "a2_axis"],
+    )
+    for spec in (narrow, wide):
+        n = _py4j_commands(spark, lambda: construct_table_with_errors(facts, spec))
+        assert n <= 100, f"{spec.name}: {n} py4j commands"

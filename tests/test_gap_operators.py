@@ -1868,6 +1868,21 @@ def test_corpus_similarity_matrix(spark):
         neardup.corpus_similarity(df, num_hashes=0)
 
 
+def test_corpus_similarity_quotes_stratum_column(spark):
+    """A stratum column name holding a backtick binds to that column: the
+    report equals the one computed under a plain name."""
+    from ferc_xbrl_extractor_spark.operators import neardup
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    rows = [(0, "a", base), (1, "b", base), (2, "c", "one two three four five"), (3, "d", "")]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    plain = neardup.corpus_similarity(df, num_hashes=16)
+    odd = neardup.corpus_similarity(
+        df.withColumnRenamed("source", "src`x"), stratum_col="src`x", num_hashes=16
+    )
+    assert sorted(odd.collect()) == sorted(plain.collect())
+
+
 def test_winnow_fingerprints_and_overlap(spark):
     """G101: winnowing (Schleimer et al. SIGMOD'03). Pins the paper's
     guarantee — any shared substring of length >= window + k - 1

@@ -14,6 +14,7 @@ Mirrors the reference's integration suite:
 
 from __future__ import annotations
 
+import os
 import sqlite3
 
 import duckdb
@@ -22,6 +23,12 @@ import pytest
 TAXONOMY_2V = "/root/reference/tests/integration/data/ferc1-xbrl-taxonomies.zip"
 TAXONOMY_1V = "/root/reference/examples/ferc1-xbrl-taxonomies.zip"
 SAMPLE_FILINGS = "/root/reference/examples/ferc1-2021-sample.zip"
+
+pytestmark = pytest.mark.skipif(
+    not all(os.path.exists(p) for p in (TAXONOMY_2V, TAXONOMY_1V, SAMPLE_FILINGS)),
+    reason="reference Form-1 fixture zips (taxonomy archives, 2021 sample "
+    "filings) not found",
+)
 
 REQUESTED = [
     "identification_001_duration",

@@ -4924,8 +4924,9 @@ def fine_oracle_sql() -> dict[str, str]:
     """
 
     # Transitive closure of the Jaccard pair graph; component label =
-    # min reachable id. Mirrors neardup.connected_components' min-label
-    # propagation fixpoint exactly (both are "min id in my component").
+    # min reachable id. Mirrors neardup.connected_components exactly
+    # (both are "min id in my component", whichever of propagation or
+    # star contraction computes it).
     sql["g2_cluster_dedup"] = f"""
         WITH RECURSIVE {_SHINGLES_CTE},
         jpairs AS (

@@ -16,6 +16,10 @@ Design for 100 TB:
 - **No Python in the loop.** Shingling, signatures, and band hashing are
   Catalyst expressions (``transform``/``aggregate``/``md5``); candidate
   verification is a join + aggregate.
+- **One clustering entry point.** ``connected_components`` turns a pair
+  relation into duplicate groups for every consumer (``attach_clusters``,
+  ``dedup_by_pairs*``); the graph, not the caller, decides between
+  min-label propagation and star contraction.
 
 A pyspark.ml variant (``HashingTF + MinHashLSH.approxSimilarityJoin``) is
 provided for parity with the stock MLlib pattern; it is seed-deterministic
@@ -950,20 +954,51 @@ def decontaminate(
     return corpus.join(hits.select(id_col), id_col, "left_anti")
 
 
+# Propagation rounds tried before switching to star contraction: near-dup
+# components are clique-ish (diameter ≤ ~3) and converge inside this.
+_PROPAGATION_ROUNDS = 4
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 25,
+    max_iter: int = 50,
 ) -> DataFrame:
-    """Connected components of an undirected pair graph by distributed
-    min-label propagation. Returns (id, label) for every node that appears
-    in ``pairs``; label = the component's minimum id (deterministic).
+    """Connected components of an undirected pair graph. Returns
+    (id, label) for every node that appears in ``pairs``; label = the
+    component's minimum id (deterministic).
 
     This is the step that turns a near-dup *pair* relation (Jaccard /
     MinHash-LSH / SimHash output) into actual corpus deduplication: pairs
     are transitive in intent (A≈B, B≈C ⇒ keep one of {A,B,C}), so the
     duplicate groups are the components of the pair graph.
+
+    The graph picks the algorithm (the G13b measured-probe pattern): run
+    min-label propagation for at most ``_PROPAGATION_ROUNDS`` rounds;
+    near-dup components are clique-ish and converge there. A graph that
+    does not — a chain-shaped dup graph, whose diameter multiplies
+    propagation rounds — restarts on the large-star/small-star
+    contraction (:func:`connected_components_twophase`), whose O(log n)
+    rounds are bounded by ``max_iter``. The probe's sunk cost is bounded:
+    a few keyed join+aggregate passes over O(|edges|). Neither form
+    dominates: on clique-ish graphs propagation finishes in fewer jobs
+    than contraction, which always runs two keyed shuffles and a
+    signature action per round plus a confirming round. Raises
+    ``RuntimeError`` when contraction hits ``max_iter``.
+    """
+    labels = _propagate_labels(pairs, id_a, id_b, _PROPAGATION_ROUNDS)
+    if labels is not None:
+        return labels
+    return connected_components_twophase(pairs, id_a, id_b, max_iter=max_iter)
+
+
+def _propagate_labels(
+    pairs: DataFrame, id_a: str, id_b: str, max_rounds: int
+) -> DataFrame | None:
+    """Min-label propagation: the (id, label) relation of
+    :func:`connected_components` if it converges within ``max_rounds``
+    rounds, else None.
 
     Scale shape: the bidirectional edge relation is persisted hash-
     partitioned on ``src`` once; each iteration is edges⋈labels (both
@@ -973,16 +1008,13 @@ def connected_components(
     compounds. Convergence is detected from a column carried through the
     same aggregate (labels only decrease, so ``sum(label < old)`` hits 0
     at the fixpoint) — one tiny follow-up action per round, no extra
-    join. Rounds needed = graph diameter; near-dup components are
-    clique-ish (diameter ≤ ~3), so 3-4 rounds is typical. For adversarial
-    high-diameter graphs swap in the large-star/small-star contraction —
-    the API contract here stays the same.
+    join. Rounds needed = graph diameter.
 
     Checkpoint storage: each round's ``localCheckpoint`` pins one copy of
     the labels relation (O(|pair-graph nodes|) — the near-dup docs, tiny
     next to the corpus) until the dropped reference is collected and
     Spark's ContextCleaner unpersists the blocks; worst-case in-flight
-    copies are bounded by ``max_iter``, not corpus size.
+    copies are bounded by ``max_rounds``, not corpus size.
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = (
@@ -1002,7 +1034,7 @@ def connected_components(
         .localCheckpoint()
     )
     converged = False
-    for _ in range(max_iter):
+    for _ in range(max_rounds):
         lbl_type = dict(labels.dtypes)["label"]
         prop = edges.join(labels, edges["src"] == labels["id"]).select(
             F.col("dst").alias("id"),
@@ -1024,13 +1056,7 @@ def connected_components(
             converged = True
             break
     edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "the pair graph has a longer diameter than near-dup components "
-            "should — raise max_iter or use a star-contraction variant"
-        )
-    return labels
+    return labels if converged else None
 
 
 def connected_components_twophase(
@@ -1286,59 +1312,11 @@ def neardup_recall_report(
     return out
 
 
-def connected_components_auto(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    probe_rounds: int = 4,
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components with measured dispatch (the G13b probe
-    pattern, third use): run min-label propagation for ``probe_rounds``
-    bounded rounds — near-dup components are clique-ish (diameter ≤ ~3)
-    and converge there, paying nothing over the plain propagation call —
-    and on non-convergence RESTART on the star-contraction form, whose
-    O(log n) rounds handle the high-diameter graphs propagation would
-    grind through diameter-many rounds on. The probe's sunk cost is
-    bounded: ``probe_rounds`` keyed join+aggregate passes over O(|edges|),
-    exactly the work the first contraction rounds would do anyway.
-
-    This removes the opt-in footgun the r7 verdict named: callers no
-    longer have to KNOW their pair graph's shape — ``cc="auto"`` is
-    correct on both, value-identical to either form (label = component
-    minimum)."""
-    try:
-        return connected_components(pairs, id_a, id_b, max_iter=probe_rounds)
-    except RuntimeError:
-        return connected_components_twophase(
-            pairs, id_a, id_b, max_iter=max_iter
-        )
-
-
-def _cc_labels(pairs: DataFrame, cc: str) -> DataFrame:
-    """Dispatch between the CC forms: "propagation" (min-label, rounds =
-    diameter — the near-dup default, components are clique-ish),
-    "twophase" (large-star/small-star, O(log n) rounds — for
-    chain-shaped dup graphs), and "auto" (bounded propagation probe,
-    star contraction on non-convergence — shape-oblivious). Same
-    (id, label) contract every way."""
-    if cc == "propagation":
-        return connected_components(pairs, id_a="id_a", id_b="id_b")
-    if cc == "twophase":
-        return connected_components_twophase(pairs, id_a="id_a", id_b="id_b")
-    if cc == "auto":
-        return connected_components_auto(pairs, id_a="id_a", id_b="id_b")
-    raise ValueError(
-        f"cc must be 'propagation', 'twophase', or 'auto', got {cc!r}"
-    )
-
-
 def attach_clusters(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     cluster_col: str = "cluster",
-    cc: str = "propagation",
 ) -> DataFrame:
     """Annotate every document with its near-dup cluster id: the component
     min-id for documents in the pair graph, the document's own id for
@@ -1346,7 +1324,7 @@ def attach_clusters(
     the corpus — so the left join broadcasts (AQE, from runtime stats)."""
     # Internal names are __-prefixed: the corpus may legitimately carry a
     # column called "label" (the embeddings table does).
-    labels = _cc_labels(pairs, cc).withColumnsRenamed(
+    labels = connected_components(pairs).withColumnsRenamed(
         {"id": id_col, "label": "__cc_label"}
     )
     return (
@@ -1360,13 +1338,12 @@ def dedup_by_pairs(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    cc: str = "propagation",
 ) -> DataFrame:
     """Collapse a corpus by a near-dup pair relation: keep exactly one
     survivor (the minimum id) per connected component, pass singletons
     through. ``df`` is never shuffled — the loser set (|non-survivors|
     rows) anti-joins against the scan, broadcast by AQE when small."""
-    labels = _cc_labels(pairs, cc)
+    labels = connected_components(pairs)
     losers = labels.filter(F.col("label") != F.col("id")).select(
         F.col("id").alias(id_col)
     )
@@ -1378,7 +1355,6 @@ def dedup_by_pairs_best(
     pairs: DataFrame,
     keep_by: str,
     id_col: str = "doc_id",
-    cc: str = "propagation",
 ) -> DataFrame:
     """:func:`dedup_by_pairs` with a QUALITY keep policy: per near-dup
     component the survivor is the member with the highest ``keep_by``
@@ -1393,7 +1369,7 @@ def dedup_by_pairs_best(
     component is ONE ``max_by`` aggregate (no window sort), and ``df``
     itself is never shuffled — the loser set anti-joins against the scan.
     """
-    labels = _cc_labels(pairs, cc)
+    labels = connected_components(pairs)
     members = labels.withColumnsRenamed({"id": id_col, "label": "__cc"})
     # `scored` feeds two consumers (winners + losers) over IDENTICAL
     # subtrees — AQE's runtime exchange/stage reuse dedupes that

@@ -17,10 +17,10 @@ engine; first 15 hex chars = 60-bit uniform — see operators/neardup.py).
   2^60) computed driver-side), so there is no float-boundary drift
   between engines.
 - ``stratified_sample_n``: exact per-stratum row budgets. Hash-ordered
-  row_number per stratum — with a partition-local pre-prune before the
-  single keyed shuffle (the same two-phase shape as similarity.topk)
-  so the exchange carries ≤ n × partitions rows per stratum, not the
-  stratum's full population.
+  row_number per stratum, which Spark plans with a partition-local
+  partial ``WindowGroupLimit`` before the single keyed shuffle (the same
+  shape as similarity.topk_per_key), so the exchange carries
+  ≤ n × partitions rows per stratum, not the stratum's full population.
 
 No reference counterpart (the reference is an XBRL ETL); this is the
 SURVEY.md §2.12 gap surface, G-series.
@@ -677,7 +677,6 @@ def stratified_sample_n(
     key_col: str,
     n: int,
     id_col: str = "doc_id",
-    two_phase: bool = False,
     salt: str = "",
 ) -> DataFrame:
     """Exact-size per-stratum sample: the ``n`` rows of each ``key_col``
@@ -685,29 +684,16 @@ def stratified_sample_n(
     deterministic and engine-portable: md5 hex compares identically
     everywhere).
 
-    Default (single window): Spark ≥3.5 already prunes each map
-    partition to its local top-n before the shuffle via the partial
-    ``WindowGroupLimit`` it plans for ``row_number() ≤ n``
-    (SPARK-37099), so the exchange carries at most n × partitions rows
-    per stratum natively. The manual ``two_phase`` form predates that
-    and now costs an extra exchange + sort (the planner
-    hash-partitions on (key, spark_partition_id()) for the "local"
-    window); kept as an A/B hook — output identical (the md5+id order
-    is total). Output = input columns (no rank artifacts).
+    Spark ≥3.5 prunes each map partition to its local top-n before the
+    shuffle via the partial ``WindowGroupLimit`` it plans for
+    ``row_number() ≤ n`` (SPARK-37099), so the exchange carries at most
+    n × partitions rows per stratum. Output = input columns (no rank
+    artifacts).
     """
     h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    order = [h.asc(), F.col(id_col).asc()]
-    out = df
-    if two_phase:
-        local = Window.partitionBy(key_col, F.spark_partition_id()).orderBy(*order)
-        out = (
-            out.withColumn("__lrn", F.row_number().over(local))
-            .filter(F.col("__lrn") <= n)
-            .drop("__lrn")
-        )
-    w = Window.partitionBy(key_col).orderBy(*order)
+    w = Window.partitionBy(key_col).orderBy(h.asc(), F.col(id_col).asc())
     return (
-        out.withColumn("__rn", F.row_number().over(w))
+        df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= n)
         .drop("__rn")
     )

@@ -3,13 +3,15 @@
 The corpus is the big side (billions of vectors at 100 TB); queries are the
 small side. So the brute-force baseline broadcasts the *queries*, computes
 dot products map-side over the corpus scan (``zip_with`` + ``aggregate`` —
-JVM codegen, no Python), and reduces with a two-phase top-k:
+JVM codegen, no Python), and reduces with one ``row_number() ≤ k`` window
+per query, which Spark plans as a two-phase top-k:
 
-    per-partition top-k (window over (query, spark_partition_id))
-    → global top-k (window over query)
+    partial WindowGroupLimit (per map partition)
+    → one hashpartitioning(query) exchange
+    → final WindowGroupLimit
 
-The first phase cuts the shuffle from |corpus|×|queries| rows to
-k × partitions × |queries|, and the second phase's per-query partitions are
+The partial phase cuts the shuffle from |corpus|×|queries| rows to
+k × partitions × |queries|, and the final phase's per-query partitions are
 tiny — no single-reducer skew even with one query.
 
 The scale path is sign-LSH bucketing (``hyperplane_lsh_topk``): deterministic
@@ -53,29 +55,15 @@ def topk_per_key(
     keys: list[str],
     order_cols: list,
     k: int,
-    two_phase: bool = False,
 ) -> DataFrame:
     """Generic distributed top-k per key.
 
-    Default (single window): Spark ≥3.5 plans ``row_number() ≤ k`` as a
-    map-side partial ``WindowGroupLimit`` BEFORE the exchange plus a
-    final one after it (SPARK-37099) — the two-phase scalable top-k,
-    natively, with ONE shuffle. The manual ``two_phase`` form (a first
-    window keyed on (keys, spark_partition_id())) predates that
-    optimization and now costs an ENTIRE EXTRA exchange + sort: the
-    planner hash-partitions on (keys, pid) for the "local" window
-    (measured in plans/r10/g3_ivf_topk_before.txt: two Exchanges where
-    the single-window form has one, both with WindowGroupLimit anyway).
-    Kept only as an A/B hook; output is identical for any total
-    ``order_cols`` (every caller breaks ties on a unique id).
+    Spark ≥3.5 plans ``row_number() ≤ k`` as a map-side partial
+    ``WindowGroupLimit`` BEFORE the exchange plus a final one after it
+    (SPARK-37099) — the two-phase scalable top-k, natively, with ONE
+    ``hashpartitioning(keys)`` shuffle. Output is deterministic for any
+    total ``order_cols`` (every caller breaks ties on a unique id).
     """
-    if two_phase:
-        local = Window.partitionBy(*keys, F.spark_partition_id()).orderBy(*order_cols)
-        df = (
-            df.withColumn("__lrn", F.row_number().over(local))
-            .filter(F.col("__lrn") <= k)
-            .drop("__lrn")
-        )
     w = Window.partitionBy(*keys).orderBy(*order_cols)
     return (
         df.withColumn("rank", F.row_number().over(w))
@@ -91,15 +79,10 @@ def cosine_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     exclude_self: bool = True,
-    two_phase: bool = False,
 ) -> DataFrame:
-    """Brute-force exact top-k cosine neighbors for each query vector.
-
-    ``two_phase`` defaults False like :func:`topk_per_key` (Spark ≥3.5
-    already plans the single window as a map-side partial
-    ``WindowGroupLimit`` before the exchange; the manual pre-prune costs
-    a whole extra exchange+sort). Output is identical either way — the
-    order is total (sim desc, neighbor_id).
+    """Brute-force exact top-k cosine neighbors for each query vector,
+    reduced by :func:`topk_per_key` (the order is total: sim desc,
+    neighbor_id).
 
     Output: (query_id, neighbor_id, sim, rank) with sim rounded to 4
     decimals and rank ties broken by neighbor id (deterministic across
@@ -135,7 +118,6 @@ def cosine_topk(
         [query_id_col],
         [F.col("sim").desc(), F.col("neighbor_id")],
         k,
-        two_phase=two_phase,
     ).select(query_id_col, "neighbor_id", "sim", "rank")
 
 
@@ -791,7 +773,6 @@ def quantized_cosine_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     exclude_self: bool = True,
-    two_phase: bool = False,
 ) -> DataFrame:
     """Top-k neighbors scored on int8-quantized vectors — the
     memory-bound ANN pattern (4× less candidate bandwidth than float32;
@@ -851,7 +832,6 @@ def quantized_cosine_topk(
         [query_id_col],
         [F.col("qsim").desc(), F.col("neighbor_id")],
         k,
-        two_phase=two_phase,
     ).select(query_id_col, "neighbor_id", "qsim", "rank")
 
 
@@ -1085,7 +1065,6 @@ def hard_negative_pairs(
     label_col: str = "label",
     anchor_id_col: str = "anchor_id",
     candidates: DataFrame | None = None,
-    two_phase: bool = False,
 ) -> DataFrame:
     """Contrastive training-pair mining (the DPR/SimCSE data-prep step):
     for each anchor vector, the ``n_pos`` most-similar SAME-label vectors
@@ -1148,7 +1127,6 @@ def hard_negative_pairs(
         [anchor_id_col, "role"],
         [F.col("sim").desc(), F.col("neighbor_id")],
         max(k_neg, n_pos),
-        two_phase=two_phase,
     )
     return ranked.filter(
         F.col("rank")
@@ -1492,7 +1470,6 @@ def margin_mine(
     vec_col: str = "embedding",
     threshold_micro: int = 1_000_000,
     mutual_only: bool = False,
-    two_phase: bool = False,
 ) -> DataFrame:
     """G102: margin-based parallel-pair mining between two embedding
     corpora (Artetxe & Schwenk ACL'19, the CCMatrix/LASER reduction):
@@ -1536,7 +1513,7 @@ def margin_mine(
     micro = lambda c: F.round(c * 1_000_000).cast("long")  # noqa: E731
     fwd = cosine_topk(
         right, left, k=k, id_col=id_col, vec_col=vec_col,
-        query_id_col="id_a", exclude_self=False, two_phase=two_phase,
+        query_id_col="id_a", exclude_self=False,
     ).select(
         "id_a",
         F.col("neighbor_id").alias("id_b"),
@@ -1545,7 +1522,7 @@ def margin_mine(
     )
     bwd = cosine_topk(
         left, right, k=k, id_col=id_col, vec_col=vec_col,
-        query_id_col="id_b", exclude_self=False, two_phase=two_phase,
+        query_id_col="id_b", exclude_self=False,
     ).select(
         F.col("neighbor_id").alias("id_a"),
         "id_b",

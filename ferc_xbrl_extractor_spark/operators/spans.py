@@ -23,11 +23,12 @@ here is the standard positional n-gram inverted index:
    island starts iff ``pos - prev_pos > n``) — a per-document window,
    bounded by document length, never a global sort.
 
-Shuffle budget (default, skew-safe form): one map-side-combinable gram
-count aggregate + an AQE-broadcast semi join back onto the gram relation,
-then one doc-keyed window. The opt-in ``hot_gram_safe=False`` window form
-shuffles the gram relation once instead (measured ~1.9× faster at sf0.1)
-but single-tasks every hot gram — see ``duplicated_spans``. All rows are narrow (id, int, 16-byte
+Shuffle budget: a bounded sample probe (``probe_hot_gram``) picks the
+gram-frequency form. On a skewed corpus it is one map-side-combinable gram
+count aggregate + an AQE-broadcast semi join back onto the gram relation;
+on a flat corpus a count window shuffles the gram relation once instead
+(measured ~1.9× faster at sf0.1) — see ``duplicated_spans``. Either way
+one doc-keyed window follows. All rows are narrow (id, int, 16-byte
 md5). At 100 TB the gram relation is ~|tokens| rows — that is the honest
 price of substring-level dedup; the knobs that bound it are ``n`` (longer
 grams → fewer duplicated positions survive) and pre-filtering the corpus
@@ -168,7 +169,6 @@ def duplicated_spans(
     text_col: str = "text",
     n: int = 8,
     min_count: int = 2,
-    hot_gram_safe: bool | str = "auto",
 ) -> DataFrame:
     """Maximal per-document token spans covered by n-grams that occur at
     least ``min_count`` times corpus-wide.
@@ -176,34 +176,28 @@ def duplicated_spans(
     Returns ``(id_col, span_start, span_end)`` with ``span_end``
     exclusive — tokens ``span_start .. span_end-1`` are duplicated text.
 
-    Two formulations of the corpus-frequency filter; the default
-    ``"auto"`` picks between them with one bounded sample probe
-    (:func:`probe_hot_gram` — r6, the G13b measured-probe pattern):
-    value-identical either way, only the shuffle shape changes.
+    Two formulations of the corpus-frequency filter; one bounded sample
+    probe (:func:`probe_hot_gram` — the G13b measured-probe pattern)
+    picks between them: value-identical either way, only the shuffle
+    shape changes.
 
-    - ``hot_gram_safe=True`` (what ``"auto"`` picks on skewed corpora):
-      groupBy count (map-side partial
-      combine — the aggregate side never skews) + a semi join back onto
-      the gram relation. The duplicated-gram set is usually a small
+    - Skewed corpora (the probe finds a hot gram): groupBy count
+      (map-side partial combine — the aggregate side never skews) + a
+      semi join back onto the gram relation. The duplicated-gram set is usually a small
       fraction of the grams, so AQE broadcasts the build side (no probe
       shuffle at all); if it is ever too big to broadcast, AQE's skew-join
       splitting still handles a hot gram's probe partition. This is the
       100-TB default: one boilerplate gram covering 10⁶ documents costs
       nothing special here.
-    - ``hot_gram_safe=False`` (what ``"auto"`` picks on flat corpora): a
-      count window over the gram key — the
-      gram relation is evaluated and shuffled ONCE (measured ~1.9× faster
-      at sf0.1 where nothing is hot), at the cost of a within-partition
-      sort. Caveat: a window hash-partitions ALL occurrences of one gram
-      onto one partition and gets no AQE skew mitigation, so a
-      pathological gram shared by a large fraction of the corpus makes a
-      single-task straggler — force this only when the gram-frequency
-      distribution is known to be flat (e.g. pre-deduplicated corpora).
+    - Flat corpora: a count window over the gram key — the gram relation
+      is evaluated and shuffled ONCE (measured ~1.9× faster at sf0.1
+      where nothing is hot), at the cost of a within-partition sort. A
+      window hash-partitions ALL occurrences of one gram onto one
+      partition and gets no AQE skew mitigation, which is why the probe
+      keeps this form away from corpora with a hot gram.
     """
-    if hot_gram_safe == "auto":
-        hot_gram_safe = probe_hot_gram(df, id_col, text_col, n)
     grams = positional_grams(df, id_col, text_col, n)
-    if hot_gram_safe:
+    if probe_hot_gram(df, id_col, text_col, n):
         dup = (
             grams.groupBy("g")
             .agg(F.count(F.lit(1)).alias("__cnt"))
@@ -241,7 +235,6 @@ def trim_duplicated_spans(
     n: int = 8,
     min_count: int = 2,
     spans: DataFrame | None = None,
-    hot_gram_safe: bool | str = "auto",
     out_col: str = "clean_text",
     count_col: str = "n_kept_tokens",
 ) -> DataFrame:
@@ -259,9 +252,7 @@ def trim_duplicated_spans(
     fits.
     """
     if spans is None:
-        spans = duplicated_spans(
-            df, id_col, text_col, n, min_count, hot_gram_safe
-        )
+        spans = duplicated_spans(df, id_col, text_col, n, min_count)
     per_doc = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )

@@ -20,6 +20,23 @@ def spark():
     yield spark
 
 
+@pytest.fixture()
+def contraction_calls(monkeypatch):
+    """Record every call of the star-contraction connected components
+    (still delegating to it), to pin which form the graph selected."""
+    from ferc_xbrl_extractor_spark.operators import neardup
+
+    calls = []
+    real = neardup.connected_components_twophase
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(neardup, "connected_components_twophase", spy)
+    return calls
+
+
 FILING_XML = """<?xml version="1.0" encoding="UTF-8"?>
 <xbrli:xbrl xmlns:xbrli="http://www.xbrl.org/2003/instance"
             xmlns:ferc="http://ferc.gov/form/2022-01-01/ferc"

@@ -99,10 +99,14 @@ def test_cc_two_components(spark):
 def test_cc_chain_needs_iterations(spark):
     # A 7-node path: the min label must travel 6 hops, exercising the
     # multi-round propagation (one round would only move it one hop).
-    chain = [(i, i + 1) for i in range(1, 7)]
-    labels = connected_components(_pairs(spark, chain))
+    # Below the diameter's round budget it reports non-convergence.
+    from ferc_xbrl_extractor_spark.operators.neardup import _propagate_labels
+
+    chain = _pairs(spark, [(i, i + 1) for i in range(1, 7)])
+    labels = _propagate_labels(chain, "id_a", "id_b", max_rounds=25)
     got = {r["id"]: r["label"] for r in labels.collect()}
     assert got == {i: 1 for i in range(1, 8)}
+    assert _propagate_labels(chain, "id_a", "id_b", max_rounds=4) is None
 
 
 def test_cc_matches_union_find(spark):
@@ -145,13 +149,14 @@ def test_cc_unconverged_raises(spark):
 
 def _cc_both_forms_agree(spark, edges):
     from ferc_xbrl_extractor_spark.operators.neardup import (
+        _propagate_labels,
         connected_components_twophase,
     )
 
-    want = {
-        r["id"]: r["label"]
-        for r in connected_components(_pairs(spark, edges)).collect()
-    }
+    propagated = _propagate_labels(
+        _pairs(spark, edges), "id_a", "id_b", max_rounds=50
+    )
+    want = {r["id"]: r["label"] for r in propagated.collect()}
     got = {
         r["id"]: r["label"]
         for r in connected_components_twophase(_pairs(spark, edges)).collect()
@@ -202,50 +207,78 @@ def test_cc_twophase_chain_converges_in_log_rounds(spark):
     assert got == {i: 1 for i in range(1, 1002)}
 
 
-@pytest.mark.slow
-def test_cc_auto_dispatch_value_identity(spark):
-    """cc='auto' (VERDICT r7 #4): a clique-ish graph converges inside
-    the propagation probe; a chain longer than the probe's round budget
-    dispatches to star contraction — value-identical labels either way,
-    so callers never have to know their pair graph's shape."""
-    from ferc_xbrl_extractor_spark.operators.neardup import (
-        connected_components,
-        connected_components_auto,
-        attach_clusters,
-        dedup_by_pairs,
+def test_chain_graph_dedup_with_defaults(spark, contraction_calls):
+    """A chain-shaped dup graph longer than the propagation probe: the
+    default consumers finish it on star contraction instead of raising
+    after the propagation round budget."""
+    chain = [(i, i + 1) for i in range(1, 40)]  # 40-node path, diameter 39
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(1, 45)], "doc_id long, text string"
     )
+    kept = dedup_by_pairs(docs, _pairs(spark, chain))
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 41, 42, 43, 44]
+    clustered = {
+        r["doc_id"]: r["cluster"]
+        for r in attach_clusters(docs, _pairs(spark, chain)).collect()
+    }
+    assert clustered == {i: 1 if i <= 40 else i for i in range(1, 45)}
+    assert len(contraction_calls) == 2  # one per consumer call
 
+
+def test_cc_probe_failure_is_not_nonconvergence(
+    spark, monkeypatch, contraction_calls
+):
+    """A failure inside the propagation probe's Spark actions (on Spark 4,
+    PySparkRuntimeError subclasses RuntimeError) propagates; it is never
+    mistaken for non-convergence and retried on star contraction."""
+    from pyspark.errors import PySparkRuntimeError
+
+    from ferc_xbrl_extractor_spark.operators import neardup
+
+    def failing_probe(*args, **kwargs):
+        raise PySparkRuntimeError(message="probe failed")
+
+    monkeypatch.setattr(neardup, "_propagate_labels", failing_probe)
+    with pytest.raises(PySparkRuntimeError, match="probe failed"):
+        connected_components(_pairs(spark, [(1, 2)]))
+    assert contraction_calls == []
+
+
+@pytest.mark.slow
+def test_cc_dispatch_value_identity(spark, contraction_calls):
+    """The one entry point: a clique-ish graph converges inside the
+    propagation probe and never starts star contraction; a chain longer
+    than the probe's round budget does — value-identical labels either
+    way, so callers never have to know their pair graph's shape."""
     clique = [(a, b) for a in range(5) for b in range(a + 1, 5)]
-    want_clique = {
+    got_clique = {
         r["id"]: r["label"]
         for r in connected_components(_pairs(spark, clique)).collect()
     }
-    got_clique = {
-        r["id"]: r["label"]
-        for r in connected_components_auto(_pairs(spark, clique)).collect()
-    }
-    assert got_clique == want_clique == {i: 0 for i in range(5)}
+    assert got_clique == {i: 0 for i in range(5)}
+    assert contraction_calls == []
 
-    # diameter 7 > probe_rounds=4: propagation CANNOT converge in the
-    # probe, so this exercises the restart-on-twophase path (expected
+    # diameter 7 > the 4 probe rounds: propagation CANNOT converge in the
+    # probe, so this exercises the restart-on-contraction path (expected
     # labels are closed-form for a chain: everything -> the min node)
     chain = [(i, i + 1) for i in range(1, 8)]
     got_chain = {
         r["id"]: r["label"]
-        for r in connected_components_auto(_pairs(spark, chain)).collect()
+        for r in connected_components(_pairs(spark, chain)).collect()
     }
     assert got_chain == {i: 1 for i in range(1, 9)}
+    assert len(contraction_calls) == 1
 
-    # the consumers reach it by name (the in-probe clique path — each
-    # consumer call re-runs the full CC, so the chain restart is pinned
-    # once above, not three times)
+    # the consumers reach the same entry point (the in-probe clique path;
+    # the chain path is pinned by test_chain_graph_dedup_with_defaults)
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(5)], "doc_id long, text string"
     )
-    kept = dedup_by_pairs(docs, _pairs(spark, clique), cc="auto")
+    kept = dedup_by_pairs(docs, _pairs(spark, clique))
     assert sorted(r["doc_id"] for r in kept.collect()) == [0]
-    clustered = attach_clusters(docs, _pairs(spark, clique), cc="auto")
+    clustered = attach_clusters(docs, _pairs(spark, clique))
     assert {r["cluster"] for r in clustered.collect()} == {0}
+    assert len(contraction_calls) == 1
 
 
 @pytest.mark.slow

@@ -141,14 +141,41 @@ def test_ivf_topk_recall_vs_brute_force(spark):
     assert full == exact
 
 
-def test_topk_two_phase_matches_single_phase(spark):
-    df = spark.createDataFrame(
-        [(i % 3, float(i), i) for i in range(300)], "k int, score double, id int"
-    ).repartition(8)
+def _assert_native_two_phase_topk(df, key):
+    """The final adaptive plan of a ``row_number() <= k`` top-k has ONE
+    ``hashpartitioning(key)`` exchange, with the partial WindowGroupLimit
+    below it and the final one above it (SPARK-37099)."""
+    import re
+
+    df.collect()  # let AQE finalize
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+
+    def at(pattern):
+        return [i for i, line in enumerate(lines) if re.search(pattern, line)]
+
+    hashed = at(r"Exchange hashpartitioning\(")
+    assert len(hashed) == 1, plan
+    assert re.search(rf"hashpartitioning\({key}#\d+L?, ", lines[hashed[0]]), plan
+    final = at(r"WindowGroupLimit .*, Final$")
+    partial = at(r"WindowGroupLimit .*, Partial$")
+    assert len(final) == len(partial) == 1, plan
+    # the plan prints top-down: Final consumes the exchange, which
+    # consumes the map-side Partial
+    assert final[0] < hashed[0] < partial[0], plan
+
+
+def test_topk_per_key_native_two_phase_plan(spark):
+    rows = [(i % 3, float(i), i) for i in range(300)]
+    df = spark.createDataFrame(rows, "k int, score double, id int").repartition(8)
     order = [F.col("score").desc(), F.col("id")]
-    two = similarity.topk_per_key(df, ["k"], order, 5, two_phase=True)
-    one = similarity.topk_per_key(df, ["k"], order, 5, two_phase=False)
-    assert sorted(map(tuple, two.collect())) == sorted(map(tuple, one.collect()))
+    top = similarity.topk_per_key(df, ["k"], order, 5)
+    _assert_native_two_phase_topk(top, "k")
+    want = []
+    for key in range(3):
+        group = sorted((r for r in rows if r[0] == key), key=lambda r: (-r[1], r[2]))
+        want += [(*r, rank) for rank, r in enumerate(group[:5], start=1)]
+    assert sorted(map(tuple, top.collect())) == sorted(want)
 
 
 def test_text_stats(docs):
@@ -339,20 +366,24 @@ def test_sample_by_rate_is_map_side_only(spark):
     assert "Exchange" not in plan  # pure scan -> filter
 
 
-def test_stratified_sample_n_exact_and_two_phase_equal(spark):
+def test_stratified_sample_n_exact_budgets_single_exchange(spark):
+    import hashlib
+
     from ferc_xbrl_extractor_spark.operators import sampling
 
-    df = spark.createDataFrame(
-        [(i, f"s{i % 5}") for i in range(500)], "doc_id long, source string"
-    ).repartition(8)
-    two = sampling.stratified_sample_n(df, "source", 7, "doc_id", two_phase=True)
-    one = sampling.stratified_sample_n(df, "source", 7, "doc_id", two_phase=False)
-    rows = sorted(map(tuple, two.collect()))
-    assert rows == sorted(map(tuple, one.collect()))
-    counts = {}
-    for _, src in rows:
-        counts[src] = counts.get(src, 0) + 1
-    assert counts == {f"s{i}": 7 for i in range(5)}  # exact budgets
+    rows = [(i, f"s{i % 5}") for i in range(500)]
+    df = spark.createDataFrame(rows, "doc_id long, source string").repartition(8)
+    sample = sampling.stratified_sample_n(df, "source", 7, "doc_id")
+    _assert_native_two_phase_topk(sample, "source")
+    # exact budgets: per stratum, the 7 ids with the smallest md5 hex
+    want = []
+    for s in range(5):
+        ids = sorted(
+            (i for i, src in rows if src == f"s{s}"),
+            key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i),
+        )
+        want += [(i, f"s{s}") for i in ids[:7]]
+    assert sorted(map(tuple, sample.collect())) == sorted(want)
 
 
 def test_decontaminate_drops_overlapping_docs(spark):
@@ -5349,38 +5380,46 @@ def test_curate_domain_col_and_group_cap(spark):
 
 
 @pytest.mark.slow
-def test_dedup_by_pairs_twophase_dispatch(spark):
-    """cc='twophase' reaches the star-contraction CC from the pair-dedup
-    consumers with identical survivors/clusters; bad names raise."""
+def test_dedup_by_pairs_consumers_in_probe_and_contraction(
+    spark, contraction_calls
+):
+    """The pair-dedup consumers give the same survivors/clusters whether
+    connected_components finishes in the propagation probe (short
+    chains) or restarts on star contraction (the same shape with the
+    first component stretched past the probe's round budget)."""
     from ferc_xbrl_extractor_spark.operators import neardup
 
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}", float(i)) for i in range(6)],
-        "doc_id long, text string, score double",
-    )
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (4, 5)], "id_a long, id_b long"
-    )
-    for cc in ("propagation", "twophase"):
+    for length, want_contraction in ((3, False), (8, True)):
+        # component {0..length-1} as a path, singleton `length`, pair
+        # (length+1, length+2); scores rise with id
+        last = length - 1
+        edges = [(i, i + 1) for i in range(last)] + [(length + 1, length + 2)]
+        docs = spark.createDataFrame(
+            [(i, f"doc {i}", float(i)) for i in range(length + 3)],
+            "doc_id long, text string, score double",
+        )
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        contraction_calls.clear()
         kept = sorted(
             r["doc_id"]
-            for r in neardup.dedup_by_pairs(docs, pairs, cc=cc).collect()
+            for r in neardup.dedup_by_pairs(docs, pairs).collect()
         )
-        assert kept == [0, 3, 4], cc
+        assert kept == [0, length, length + 1], length
         best = sorted(
             r["doc_id"]
             for r in neardup.dedup_by_pairs_best(
-                docs, pairs, keep_by="score", cc=cc
+                docs, pairs, keep_by="score"
             ).collect()
         )
-        assert best == [2, 3, 5], cc
+        assert best == [last, length, length + 2], length
         clusters = {
             r["doc_id"]: r["cluster"]
-            for r in neardup.attach_clusters(docs, pairs, cc=cc).collect()
+            for r in neardup.attach_clusters(docs, pairs).collect()
         }
-        assert clusters == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4}, cc
-    with pytest.raises(ValueError, match="cc must be"):
-        neardup.dedup_by_pairs(docs, pairs, cc="magic")
+        want = {i: 0 for i in range(length)}
+        want.update({length: length, length + 1: length + 1, length + 2: length + 1})
+        assert clusters == want, length
+        assert bool(contraction_calls) is want_contraction, length
 
 
 @pytest.mark.slow

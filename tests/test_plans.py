@@ -364,9 +364,9 @@ def test_flagship_query_plans_one_fused_exchange(spark):
     assert n == 1, plan
 
 
-def test_duplicated_spans_skew_safe_form_is_semi_join(spark):
-    """G26 skew-safe form (hot_gram_safe=True — what "auto" picks on
-    hot-gram corpora): the corpus-frequency filter is a
+def test_duplicated_spans_skew_safe_form_is_semi_join(spark, monkeypatch):
+    """G26 skew-safe form (what the form probe picks on hot-gram
+    corpora): the corpus-frequency filter is a
     map-side-combinable aggregate + semi join — never a count window that
     would single-task a hot gram. The duplicated-gram build side is tiny,
     so AQE broadcasts it (no probe-side shuffle)."""
@@ -376,23 +376,26 @@ def test_duplicated_spans_skew_safe_form_is_semi_join(spark):
         [(i, "a b c d e f g h i j k l") for i in range(20)],
         "doc_id long, text string",
     )
-    plan = _executed_plan(sp.duplicated_spans(docs, n=4, hot_gram_safe=True))
+    monkeypatch.setattr(sp, "probe_hot_gram", lambda *a, **k: True)
+    plan = _executed_plan(sp.duplicated_spans(docs, n=4))
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in plan
     # no Window over the gram key: the only windows are doc-keyed
     assert "partitionbyg" not in plan.lower().replace(" ", "")
 
 
-def test_duplicated_spans_window_form_single_gram_evaluation(spark):
-    """G26 opt-in window form (hot_gram_safe=False): evaluates the
-    positional-gram relation ONCE and contains no join at all."""
+def test_duplicated_spans_window_form_single_gram_evaluation(spark, monkeypatch):
+    """G26 window form (what the form probe picks on flat corpora):
+    evaluates the positional-gram relation ONCE and contains no join at
+    all."""
     from ferc_xbrl_extractor_spark.operators import spans as sp
 
     docs = spark.createDataFrame(
         [(i, "a b c d e f g h i j k l") for i in range(20)],
         "doc_id long, text string",
     )
-    plan = _executed_plan(sp.duplicated_spans(docs, n=4, hot_gram_safe=False))
+    monkeypatch.setattr(sp, "probe_hot_gram", lambda *a, **k: False)
+    plan = _executed_plan(sp.duplicated_spans(docs, n=4))
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
     # one gram-generate only: the explode of the positional gram array

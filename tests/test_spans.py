@@ -15,6 +15,15 @@ def _docs(spark, rows):
 BOILER = "b1 b2 b3 b4"  # 4 tokens, injected into several docs
 
 
+def _spans_in_form(monkeypatch, df, hot, **kwargs):
+    """duplicated_spans with the form probe's verdict fixed: ``hot=True``
+    reaches the aggregate + semi-join form, ``hot=False`` the window
+    form."""
+    with monkeypatch.context() as m:
+        m.setattr(sp, "probe_hot_gram", lambda *a, **k: hot)
+        return {tuple(r) for r in sp.duplicated_spans(df, **kwargs).collect()}
+
+
 @pytest.fixture(scope="module")
 def corpus(spark):
     # doc 1 and 2 share BOILER mid-document; doc 3 repeats a 4-gram
@@ -98,16 +107,13 @@ def test_empty_and_whitespace_docs(spark):
     assert trimmed == {1: "", 2: "", 3: "", 4: ""}
 
 
-def test_hot_gram_safe_mode_equivalence(spark, corpus):
-    a = {
-        tuple(r)
-        for r in sp.duplicated_spans(corpus, n=4).collect()
-    }
-    b = {
-        tuple(r)
-        for r in sp.duplicated_spans(corpus, n=4, hot_gram_safe=False).collect()
-    }
-    assert a == b and a  # same spans from both formulations
+def test_hot_gram_safe_mode_equivalence(spark, corpus, monkeypatch):
+    """The hot-gram-safe (aggregate + semi-join) form and the window form
+    give the same spans, and so does whatever the probe picks."""
+    auto = {tuple(r) for r in sp.duplicated_spans(corpus, n=4).collect()}
+    agg = _spans_in_form(monkeypatch, corpus, True, n=4)
+    win = _spans_in_form(monkeypatch, corpus, False, n=4)
+    assert auto == agg == win and auto  # same spans from both formulations
 
 
 def test_hot_gram_default_handles_boilerplate_gram(spark):
@@ -156,11 +162,13 @@ def test_contamination_spans_runs_and_zeros(spark):
 
 
 @pytest.mark.slow
-def test_auto_form_probe_picks_per_corpus_and_is_value_identical(spark):
-    """G26 "auto" (r5 review item #8): the probe picks the window form on
-    flat corpora and the aggregate form on hot-gram corpora, and BOTH
-    forms produce the same spans as "auto" on both fixture classes —
-    correctness is probe-independent."""
+def test_auto_form_probe_picks_per_corpus_and_is_value_identical(
+    spark, monkeypatch
+):
+    """G26 form probe (r5 review item #8): the probe picks the window form
+    on flat corpora and the aggregate form on hot-gram corpora, and BOTH
+    forms produce the same spans as the probe's pick on both fixture
+    classes — correctness is probe-independent."""
     flat = spark.createDataFrame(
         [(i, f"p{i} q{i} r{i} s{i} t{i} u{i} shared tail gram four") for i in range(60)],
         "doc_id long, text string",
@@ -184,18 +192,8 @@ def test_auto_form_probe_picks_per_corpus_and_is_value_identical(spark):
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     for corpus in (flat, hot):
         auto = {tuple(r) for r in sp.duplicated_spans(corpus, n=4).collect()}
-        agg = {
-            tuple(r)
-            for r in sp.duplicated_spans(
-                corpus, n=4, hot_gram_safe=True
-            ).collect()
-        }
-        win = {
-            tuple(r)
-            for r in sp.duplicated_spans(
-                corpus, n=4, hot_gram_safe=False
-            ).collect()
-        }
+        agg = _spans_in_form(monkeypatch, corpus, True, n=4)
+        win = _spans_in_form(monkeypatch, corpus, False, n=4)
         assert auto == agg == win
 
 

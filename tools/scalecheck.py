@@ -18,6 +18,7 @@ import json
 import os
 import sys
 import time
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -192,12 +193,12 @@ def pairgraph_three_decades() -> None:
 def chain_graph_tiers() -> None:
     """Chain-shaped pair-graph tier (VERDICT r7 #4): one path graph of
     100k and 1M edges — diameter = |E|, the adversarial shape for
-    min-label propagation — through connected_components_auto, which
+    min-label propagation — through connected_components, which
     probes propagation for 4 bounded rounds and restarts on the
     large-star/small-star contraction (O(log n) alternations). The
-    sub-linear time ratio for 10× edges is the evidence that the auto
-    dispatch removes the high-diameter footgun AT SCALE, not just on
-    the pytest fixture. Run: python tools/scalecheck.py chain."""
+    sub-linear time ratio for 10× edges is the evidence that the
+    graph-driven choice handles high-diameter graphs AT SCALE, not just
+    on the pytest fixture. Run: python tools/scalecheck.py chain."""
     spark = get_spark(
         "scalecheck_chain",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
@@ -209,7 +210,7 @@ def chain_graph_tiers() -> None:
         )
 
         def run(e=edges):
-            labels = neardup.connected_components_auto(e)
+            labels = neardup.connected_components(e)
             # correctness rides the measurement: one component, min=1
             assert (
                 labels.agg(
@@ -218,19 +219,25 @@ def chain_graph_tiers() -> None:
                 == (1, 1)
             )
 
-        out[str(n)] = {"edges": n, "cc_auto_s": timeit(run, reps=1)}
+        out[str(n)] = {"edges": n, "cc_s": timeit(run, reps=1)}
     tiers = sorted(out)
-    ratio = out[tiers[1]]["cc_auto_s"] / max(out[tiers[0]]["cc_auto_s"], 1e-9)
+    ratio = out[tiers[1]]["cc_s"] / max(out[tiers[0]]["cc_s"], 1e-9)
     print(
         json.dumps(
             {
                 "record": "scalecheck_chain",
-                "op": "connected_components_auto",
+                "op": "connected_components",
                 "tiers": out,
                 "time_ratio_for_10x_edges": round(ratio, 2),
             }
         )
     )
+
+
+def _window_form_spans_count(df) -> int:
+    """G26 window form, reached by making the form probe see no hot gram."""
+    with mock.patch.object(spans, "probe_hot_gram", return_value=False):
+        return spans.duplicated_spans(df, n=8).count()
 
 
 def timeit(fn, reps: int = 2) -> float:
@@ -256,11 +263,9 @@ def main() -> None:
 
     small = f"{src}/documents.parquet"
     cases = {
-        # default = the skew-safe aggregate+semi-join form (since r5)
+        # the form probe picks the aggregate+semi-join or the window form
         "g26_dup_spans": lambda df: spans.duplicated_spans(df, n=8).count(),
-        "g26_window_form": lambda df: spans.duplicated_spans(
-            df, n=8, hot_gram_safe=False
-        ).count(),
+        "g26_window_form": _window_form_spans_count,
         "g34_gopher_rules": lambda df: text.gopher_rules(df).count(),
         # r5 fourth session: HTML strip is pure map-side regex work —
         # the decade ratio should sit at the scan slope, near 1×-2×

@@ -393,16 +393,16 @@ _ZIP_PUB = {
 def q_xbrl_zip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S5/F7 under the oracle: pack the synthetic filings into a real
     zip archive with an rssfeed JSON sidecar (driver-side fixture build —
-    3 small documents), scan it with scan_filings using an instance
-    pattern that keeps only filing-A/filing-R (S5 listing-level pushdown),
-    shred, and aggregate per filing. Publication times carry a -04:00
+    3 small documents), shred it with shred_paths (the extract's own
+    one-pass scan+shred) using an instance pattern that keeps only
+    filing-A/filing-R (S5: tested before a member is read), and aggregate
+    per filing. Publication times carry a -04:00
     offset, so the emitted naive-UTC timestamps prove the F7 conversion."""
     import io
     import json
     import zipfile
 
     from ferc_xbrl_extractor_spark.sources import shredder
-    from ferc_xbrl_extractor_spark.sources.filings import scan_filings
 
     def build(d: str) -> None:
         xml_rows = _synthetic_filing_xml(spark, sf_dir).collect()
@@ -430,8 +430,9 @@ def q_xbrl_zip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(buf.getvalue())
 
     d = _cached_fixture("zipscan", sf_dir, build)
-    filings = scan_filings(spark, d, instance_pattern="filing-[AR]")
-    facts = shredder.facts_from(shredder.shred_filings(filings))
+    facts = shredder.facts_from(
+        shredder.shred_paths(spark, d, instance_pattern="filing-[AR]")
+    )
     return facts.groupBy("filing_name", "publication_time", "taxonomy_version").agg(
         F.count(F.lit(1)).alias("n_facts"),
         F.countDistinct("c_id").alias("n_contexts"),
@@ -440,11 +441,10 @@ def q_xbrl_zip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_xbrl_dir_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 under the oracle: write the synthetic filings as loose .xbrl
-    files in a directory, scan_filings it, shred, and aggregate. Directory
+    files in a directory, shred it with shred_paths, and aggregate. Directory
     instances carry NULL publication_time (reference parity — never the
     file mtime, which would break reproducibility across copies)."""
     from ferc_xbrl_extractor_spark.sources import shredder
-    from ferc_xbrl_extractor_spark.sources.filings import scan_filings
 
     def build(d: str) -> None:
         for r in _synthetic_filing_xml(spark, sf_dir).collect():
@@ -452,7 +452,7 @@ def q_xbrl_dir_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write(r["xml"])
 
     d = _cached_fixture("dirscan", sf_dir, build)
-    facts = shredder.facts_from(shredder.shred_filings(scan_filings(spark, d)))
+    facts = shredder.facts_from(shredder.shred_paths(spark, d))
     return facts.groupBy("filing_name", "publication_time", "taxonomy_version").agg(
         F.count(F.lit(1)).alias("n_facts"),
         F.countDistinct("c_id").alias("n_contexts"),

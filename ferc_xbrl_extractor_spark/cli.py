@@ -59,7 +59,12 @@ def parse(argv: list[str] | None = None) -> argparse.Namespace:
         type=Path,
         help="Freeze the parsed taxonomy catalog to JSON here.",
     )
-    parser.add_argument("--instance-pattern", default="", help="Filing-name regex.")
+    parser.add_argument(
+        "--instance-pattern",
+        default="",
+        help="Filing-name regex in Python re syntax, matched anywhere in the "
+        "name (re.search).",
+    )
     parser.add_argument(
         "--requested-tables",
         nargs="+",

@@ -6,11 +6,13 @@ from ferc_xbrl_extractor_spark.sources.shredder import (
     contexts_from,
     facts_from,
     shred_filings,
+    shred_paths,
 )
 
 __all__ = [
     "scan_filings",
     "shred_filings",
+    "shred_paths",
     "facts_from",
     "contexts_from",
     "SHREDDED_SCHEMA",

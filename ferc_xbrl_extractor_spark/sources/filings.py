@@ -1,14 +1,20 @@
 """Filing scans (SURVEY.md §2.1 S1/S2/S5).
 
-Spark-first shape: the unit of parallelism is the *filing file*. A directory
-of ``.xbrl`` files is a ``binaryFile`` scan (splittable across executors,
-listing parallelized by the driver); a zip archive is one binaryFile row that
-a ``mapInPandas`` explodes into member rows (zips are not splittable, so
-parallelism comes from having many zips — at production scale FERC publishes
-one zip per form-year, and a 1000-executor cluster reads all of them
-concurrently). The instance-name regex filter (reference xbrl.py:67-72) is
-applied to the *listing*, before any parse work — file-skipping predicate
-pushdown.
+Spark-first shape: the unit of parallelism is the *file* in a ``binaryFile``
+listing, and the file source's own packing spreads the files over tasks
+(min(files, cores) partitions for small files, balanced by size, with no
+shuffle). A loose ``.xbrl`` file is one filing. A zip archive is one listing
+row whose ``.xbrl`` members are its filings; zips are not splittable, so
+every member of one zip is read by the task that holds the zip (at
+production scale FERC publishes one zip per form-year, and a cluster reads
+many zips concurrently).
+
+``filings_of`` is the one generator that turns listing rows into filings.
+``scan_filings`` runs it in a ``mapInPandas`` to return the filings
+themselves; ``shredder.shred_paths`` runs it inside the shred, so a
+member's bytes enter Python once and only shredded rows come back. The
+instance-name regex (reference xbrl.py:67-72) is tested on each name
+before the member's bytes are read from the archive.
 
 Reference behavior pinned: instances_from_zip / get_instances
 (/root/reference/src/ferc_xbrl_extractor/instance.py:411-484), including the
@@ -21,12 +27,12 @@ from __future__ import annotations
 import datetime
 import io
 import json
+import re
 import zipfile
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 FILING_SCHEMA = T.StructType(
@@ -57,32 +63,88 @@ def _parse_rssfeed(raw: bytes) -> tuple[dict[str, datetime.datetime], dict[str, 
     return pub_times, tax_versions
 
 
-def _explode_zip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """One zip-file row in -> one row per ``.xbrl`` member out."""
-    for pdf in batches:
-        for _, row in pdf.iterrows():
-            archive = zipfile.ZipFile(io.BytesIO(row["content"]))
+def list_files(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """The ``binaryFile`` listing (path, content) of every ``.xbrl`` and
+    ``.zip`` file under ``path``, recursively.
+
+    ``path`` may be a single path or a list (the CLI's ``nargs='+'``
+    surface, reference get_instances per filing source) — passed through
+    to ``load`` as a list; a comma-joined string would be read as ONE
+    literal path by Spark's file sources and match nothing.
+    """
+    paths = [path] if isinstance(path, str) else list(path)
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.{xbrl,zip}")
+        .option("recursiveFileLookup", "true")
+        .load(paths)
+        .select("path", "content")
+    )
+
+
+def compile_instance_pattern(instance_pattern: str | None) -> re.Pattern | None:
+    """Compile the instance-name regex on the driver, so a bad pattern
+    fails when the plan is built, not in a worker. The syntax is Python
+    ``re`` (the reference's), not Java's: a Java-only construct such as
+    ``\\p{Alpha}`` or ``(?<name>...)`` raises ``ValueError``."""
+    if not instance_pattern:
+        return None
+    try:
+        return re.compile(instance_pattern)
+    except re.error as e:
+        raise ValueError(
+            f"instance pattern {instance_pattern!r} is not a Python re "
+            f"regular expression: {e}"
+        ) from e
+
+
+def filings_of(
+    listing: pd.DataFrame,
+    pattern: re.Pattern | None = None,
+    publication_time: datetime.datetime | None = None,
+) -> Iterator[tuple]:
+    """Listing rows (path, content) -> one (filing_name, content,
+    publication_time, taxonomy_version) tuple per filing.
+
+    A loose ``.xbrl`` file is one filing named by its file name without
+    ``.xbrl``. It has NO publication time (reference parity,
+    instance.py:454-484) unless the caller passes ``publication_time``;
+    never the file mtime, which changes on copy, since publication_time is
+    part of every table's primary key.
+
+    A ``.zip`` yields its ``.xbrl`` members, named by the member's base
+    name without ``.xbrl``, with publication time and taxonomy version
+    from its ``rssfeed`` member when that lists them.
+
+    ``pattern`` keeps only filings whose name it matches anywhere
+    (``re.search``: the find-anywhere semantics of Spark's ``rlike`` and of
+    the reference's Python ``re`` filter). A member is tested before its
+    bytes are read from the archive.
+    """
+    for path, content in zip(listing["path"], listing["content"]):
+        if not path.endswith(".zip"):
+            name = path.rsplit("/", 1)[-1].removesuffix(".xbrl")
+            if pattern is None or pattern.search(name):
+                yield name, content, publication_time, None
+            continue
+        with zipfile.ZipFile(io.BytesIO(content)) as archive:
             names = archive.namelist()
             pub_times: dict[str, datetime.datetime] = {}
             tax_versions: dict[str, str] = {}
             if "rssfeed" in names:
                 pub_times, tax_versions = _parse_rssfeed(archive.read("rssfeed"))
-            out = []
             for member in names:
                 if not member.endswith(".xbrl"):
                     continue
-                stem = member.rsplit("/", 1)[-1]
-                stem = stem[: -len(".xbrl")]
-                out.append(
-                    {
-                        "filing_name": stem,
-                        "content": archive.read(member),
-                        "publication_time": pub_times.get(member),
-                        "taxonomy_version": tax_versions.get(member),
-                    }
+                name = member.rsplit("/", 1)[-1][: -len(".xbrl")]
+                if pattern is not None and not pattern.search(name):
+                    continue
+                yield (
+                    name,
+                    archive.read(member),
+                    pub_times.get(member),
+                    tax_versions.get(member),
                 )
-            if out:
-                yield pd.DataFrame(out)
 
 
 def scan_filings(
@@ -93,52 +155,21 @@ def scan_filings(
 ) -> DataFrame:
     """Scan directories of ``.xbrl`` files and/or zip archives into a
     filings DataFrame (filing_name, content, publication_time,
-    taxonomy_version).
-
-    ``path`` may be a single path or a list (the CLI's ``nargs='+'``
-    surface, reference get_instances per filing source) — passed through
-    to ``load`` as a list; a comma-joined string would be read as ONE
-    literal path by Spark's file sources and match nothing.
+    taxonomy_version): one ``mapInPandas`` of ``filings_of`` over the
+    listing.
 
     ``instance_pattern`` filters filing *names* before any XML parsing —
-    the cheap pre-scan predicate (reference S5).
+    the cheap pre-scan predicate (reference S5). The extract itself does
+    not go through here: ``shredder.shred_paths`` shreds the same filings
+    in the same pass that finds them.
     """
-    paths = [path] if isinstance(path, str) else list(path)
-    listing = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{xbrl,zip}")
-        .option("recursiveFileLookup", "true")
-        .load(paths)
-    )
-    is_zip = F.col("path").endswith(".zip")
+    pattern = compile_instance_pattern(instance_pattern)
+    columns = FILING_SCHEMA.fieldNames()
 
-    plain = (
-        listing.filter(~is_zip)
-        .select(
-            F.regexp_replace(
-                F.element_at(F.split(F.col("path"), "/"), -1), r"\.xbrl$", ""
-            ).alias("filing_name"),
-            F.col("content"),
-            # Reference parity: non-zip instances have NO publication time
-            # (instance.py:454-484 leaves it None) unless the caller sets
-            # one explicitly. Never stamp mtime — it changes on copy and
-            # publication_time is part of every table's primary key.
-            F.lit(publication_time).cast("timestamp").alias("publication_time"),
-            F.lit(None).cast("string").alias("taxonomy_version"),
-        )
-    )
-    zipped = (
-        listing.filter(is_zip)
-        .select("path", "content")
-        # Hash-repartition on the zip path so N zips spread over N tasks
-        # regardless of how few listing partitions the driver produced —
-        # a plan-time expression, not the eager .rdd partition probe this
-        # used to do (zips aren't splittable; the member explode is the
-        # expensive step being parallelized here).
-        .repartition(F.col("path"))
-        .mapInPandas(_explode_zip, schema=FILING_SCHEMA)
-    )
-    filings = plain.unionByName(zipped)
-    if instance_pattern:
-        filings = filings.filter(F.col("filing_name").rlike(instance_pattern))
-    return filings
+    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for listing in batches:
+            rows = list(filings_of(listing, pattern, publication_time))
+            if rows:
+                yield pd.DataFrame(rows, columns=columns)
+
+    return list_files(spark, path).mapInPandas(explode, schema=FILING_SCHEMA)

@@ -1,10 +1,13 @@
 """The XML shredder (SURVEY.md §2.1 S3): filing bytes -> long relations.
 
 This is the engine's one UDTF-shaped custom source: a ``mapInPandas`` that
-runs an XML parse per filing row and emits a single long DataFrame holding
+runs an XML parse per filing and emits a single long DataFrame holding
 both record kinds (``fact`` and ``context``), discriminated by
-``record_type``. Downstream, ``facts_from``/``contexts_from`` are cheap
-filters over the cached shredded relation.
+``record_type``. ``shred_paths`` (the extract's path) runs it straight over
+the file listing, opening zips in the same pass; ``shred_filings`` runs it
+over an existing filings DataFrame (streaming ingest, in-plan documents).
+Both share one per-filing kernel. Downstream, ``facts_from``/
+``contexts_from`` are cheap filters over the cached shredded relation.
 
 Scale design decision (the big departure from the reference, which keeps
 facts and contexts separate and joins them per table —
@@ -28,16 +31,21 @@ Reference semantics pinned (instance.py:350-408):
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from functools import lru_cache
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ferc_xbrl_extractor_spark.functions.naming import snakecase as _snakecase_raw
 from ferc_xbrl_extractor_spark.functions.naming import strip_xml_prefix
+from ferc_xbrl_extractor_spark.sources.filings import (
+    compile_instance_pattern,
+    filings_of,
+    list_files,
+)
 
 # Tag and dimension names repeat across every fact/context in a filing
 # (an XBRL taxonomy has a bounded vocabulary); the two-regex snakecase
@@ -163,76 +171,81 @@ def _report_date(facts: list[dict], ctx_by_id: dict[str, dict]) -> str | None:
     return None
 
 
+# Columnar assembly (guide §4.2): the output batch is built as one list
+# per column via per-column comprehensions, never as a list of per-row
+# dicts — the dict-merge per fact ({**base, **ctx, **f}) plus pandas'
+# list-of-dicts constructor cost ~40% of the Python-side time on the sf0.1
+# roundtrip fixture (assembly 0.08-0.15s dicts vs 0.05-0.06s columnar,
+# outputs .equals()-identical), all of it O(rows) churn that scales with
+# the corpus. Row order: contexts then kept facts per filing.
+_COLUMNS = [f.name for f in SHREDDED_SCHEMA]
+
+
+def _shred_rows(filings: Iterable[tuple], fact_prefix: str) -> pd.DataFrame | None:
+    """(filing_name, content, publication_time, taxonomy_version) tuples
+    -> one shredded batch, or None when no filing yielded a row."""
+    cols: dict[str, list] = {c: [] for c in _COLUMNS}
+    for filing_name, content, pub, taxo in filings:
+        try:
+            contexts, facts = shred_one(content, fact_prefix)
+        except ET.ParseError:
+            # E1: corrupt filing -> skip (reference xbrl.py:159-163)
+            continue
+        ctx_by_id = {c["c_id"]: c for c in contexts}
+        report = _report_date(facts, ctx_by_id)
+        kept = [(f, ctx_by_id[f["c_id"]]) for f in facts if f["c_id"] in ctx_by_id]
+        n_ctx, n_f = len(contexts), len(kept)
+        n = n_ctx + n_f
+        ext = {
+            "record_type": (["context"] * n_ctx, ["fact"] * n_f),
+            "c_id": ([c["c_id"] for c in contexts], [x["c_id"] for _, x in kept]),
+            "entity_id": (
+                [c["entity_id"] for c in contexts],
+                [x["entity_id"] for _, x in kept],
+            ),
+            "instant": (
+                [c["instant"] for c in contexts],
+                [x["instant"] for _, x in kept],
+            ),
+            "start_date": (
+                [c["start_date"] for c in contexts],
+                [x["start_date"] for _, x in kept],
+            ),
+            "end_date": (
+                [c["end_date"] for c in contexts],
+                [x["end_date"] for _, x in kept],
+            ),
+            "dims": ([c["dims"] for c in contexts], [x["dims"] for _, x in kept]),
+            "name": ([None] * n_ctx, [f["name"] for f, _ in kept]),
+            "value": ([None] * n_ctx, [f["value"] for f, _ in kept]),
+            "filing_name": ([filing_name] * n,),
+            "publication_time": ([pub] * n,),
+            "taxonomy_version": ([taxo] * n,),
+            "report_date": ([report] * n,),
+        }
+        for cname, chunks in ext.items():
+            for chunk in chunks:
+                cols[cname].extend(chunk)
+    if not cols["record_type"]:
+        return None
+    return pd.DataFrame(cols, columns=_COLUMNS)
+
+
 def _shred_batches(fact_prefix: str):
-    # Columnar assembly (guide §4.2): the output batch is built as one
-    # list per column via per-column comprehensions, never as a list of
-    # per-row dicts — the dict-merge per fact ({**base, **ctx, **f})
-    # plus pandas' list-of-dicts constructor cost ~40% of the
-    # Python-side time on the sf0.1 roundtrip fixture (assembly 0.08-
-    # 0.15s dicts vs 0.05-0.06s columnar, outputs .equals()-identical),
-    # all of it O(rows) churn that scales with the corpus. Row order
-    # unchanged: contexts then kept facts per filing.
-    colnames = [f.name for f in SHREDDED_SCHEMA]
+    """The ``mapInPandas`` function over filings batches (filing_name,
+    content, publication_time, taxonomy_version)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cols: dict[str, list] = {c: [] for c in colnames}
-            for filing_name, content, pub, taxo in zip(
-                pdf["filing_name"], pdf["content"],
-                pdf["publication_time"], pdf["taxonomy_version"],
-            ):
-                try:
-                    contexts, facts = shred_one(content, fact_prefix)
-                except ET.ParseError:
-                    # E1: corrupt filing -> skip (reference xbrl.py:159-163)
-                    continue
-                ctx_by_id = {c["c_id"]: c for c in contexts}
-                report = _report_date(facts, ctx_by_id)
-                kept = [
-                    (f, ctx_by_id[f["c_id"]])
-                    for f in facts
-                    if f["c_id"] in ctx_by_id
-                ]
-                n_ctx, n_f = len(contexts), len(kept)
-                n = n_ctx + n_f
-                ext = {
-                    "record_type": (["context"] * n_ctx, ["fact"] * n_f),
-                    "c_id": (
-                        [c["c_id"] for c in contexts],
-                        [x["c_id"] for _, x in kept],
-                    ),
-                    "entity_id": (
-                        [c["entity_id"] for c in contexts],
-                        [x["entity_id"] for _, x in kept],
-                    ),
-                    "instant": (
-                        [c["instant"] for c in contexts],
-                        [x["instant"] for _, x in kept],
-                    ),
-                    "start_date": (
-                        [c["start_date"] for c in contexts],
-                        [x["start_date"] for _, x in kept],
-                    ),
-                    "end_date": (
-                        [c["end_date"] for c in contexts],
-                        [x["end_date"] for _, x in kept],
-                    ),
-                    "dims": (
-                        [c["dims"] for c in contexts],
-                        [x["dims"] for _, x in kept],
-                    ),
-                    "name": ([None] * n_ctx, [f["name"] for f, _ in kept]),
-                    "value": ([None] * n_ctx, [f["value"] for f, _ in kept]),
-                    "filing_name": ([filing_name] * n,),
-                    "publication_time": ([pub] * n,),
-                    "taxonomy_version": ([taxo] * n,),
-                    "report_date": ([report] * n,),
-                }
-                for cname, chunks in ext.items():
-                    for chunk in chunks:
-                        cols[cname].extend(chunk)
-            if cols["record_type"]:
-                yield pd.DataFrame(cols, columns=colnames)
+            out = _shred_rows(
+                zip(
+                    pdf["filing_name"], pdf["content"],
+                    pdf["publication_time"], pdf["taxonomy_version"],
+                ),
+                fact_prefix,
+            )
+            if out is not None:
+                yield out
 
     return fn
 
@@ -245,6 +258,36 @@ def shred_filings(filings: DataFrame, fact_prefix: str = "ferc") -> DataFrame:
     ``persist()`` the result when materializing many tables from it.
     """
     return filings.mapInPandas(_shred_batches(fact_prefix), schema=SHREDDED_SCHEMA)
+
+
+def shred_paths(
+    spark: SparkSession,
+    path: str | list[str],
+    instance_pattern: str | None = None,
+    fact_prefix: str = "ferc",
+) -> DataFrame:
+    """Directories of ``.xbrl`` files and/or zip archives -> the long
+    shredded relation, in ONE ``mapInPandas`` straight over the
+    ``binaryFile`` listing.
+
+    Each listing row is expanded into filings by ``filings.filings_of``
+    (the generator ``scan_filings`` runs) and every filing goes through
+    the same kernel as ``shred_filings``, so the rows equal
+    ``shred_filings(scan_filings(...))``. A zip member's bytes enter Python
+    once and only shredded rows come back to the JVM; there is no
+    exchange, and the file source's packing of the listing sets the task
+    count. ``instance_pattern`` is that of ``scan_filings`` (Python ``re``,
+    matched anywhere in the name); loose files get no publication time.
+    """
+    pattern = compile_instance_pattern(instance_pattern)
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for listing in batches:
+            out = _shred_rows(filings_of(listing, pattern), fact_prefix)
+            if out is not None:
+                yield out
+
+    return list_files(spark, path).mapInPandas(fn, schema=SHREDDED_SCHEMA)
 
 
 def facts_from(shredded: DataFrame) -> DataFrame:

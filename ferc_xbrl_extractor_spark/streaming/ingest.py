@@ -8,9 +8,11 @@ filings all quarter, and re-extracting the full archive per filing is
 O(archive) work for O(1) new data. Structured Streaming's file source
 gives exactly-once incremental semantics for free: the checkpoint records
 which files are done, ``maxFilesPerTrigger`` bounds per-batch work, and the
-same ``mapInPandas`` shredder runs unchanged on the stream (one filing is
-one input row, so batch and streaming shred are literally the same code
-path and produce identical rows — pinned by tests/test_streaming.py).
+same per-filing shred kernel runs unchanged on the stream (one filing is
+one input row). Batch and stream share the kernel, not the plan: the batch
+extract shreds in one pass over its file listing (``shred_paths``), the
+stream through ``shred_filings`` over its file rows, and both produce
+identical rows — pinned by tests/test_streaming.py.
 
 Downstream of the shred, the per-table pipeline (operators.fact_table) is a
 keyed aggregate, which on a stream becomes the G12 stateful surface; the

@@ -4,12 +4,11 @@ tests/integration/datapackage_test.py:87-152 analogues)."""
 import pytest
 from ferc_xbrl_extractor_spark.catalog.tablespec import TableSpec
 from ferc_xbrl_extractor_spark.operators.fact_table import construct_table
-from ferc_xbrl_extractor_spark.sources.filings import scan_filings
-from ferc_xbrl_extractor_spark.sources.shredder import facts_from, shred_filings
+from ferc_xbrl_extractor_spark.sources.shredder import facts_from, shred_paths
 
 
 def _facts(spark, filing_dir):
-    return facts_from(shred_filings(scan_filings(spark, filing_dir)))
+    return facts_from(shred_paths(spark, filing_dir))
 
 
 def test_duration_no_axes(spark, filing_dir):

@@ -299,10 +299,10 @@ def test_stream_curate_filters_and_dedups_across_batches(spark, tmp_path):
 
 def test_stream_filings_dir_matches_batch_shred(spark, tmp_path):
     """Incremental ingestion: a file-source stream over a landing dir,
-    drained one filing per microbatch, must produce exactly the batch
-    shredder's rows (same mapInPandas code path on both sides)."""
+    drained one filing per microbatch, must produce exactly the rows of
+    the batch extract's one-pass shred (same per-filing kernel on both
+    sides)."""
     from ferc_xbrl_extractor_spark.sources import shredder
-    from ferc_xbrl_extractor_spark.sources.filings import scan_filings
     from ferc_xbrl_extractor_spark.streaming import stream_filings_dir
 
     xml = """<?xml version="1.0"?>
@@ -326,9 +326,7 @@ def test_stream_filings_dir_matches_batch_shred(spark, tmp_path):
     stream = stream_filings_dir(spark, str(land), max_files_per_trigger=1)
     got = _drain(spark, stream, "s8_test").drop("publication_time")
 
-    batch = shredder.shred_filings(scan_filings(spark, str(land))).drop(
-        "publication_time"
-    )
+    batch = shredder.shred_paths(spark, str(land)).drop("publication_time")
     key = lambda r: (r["record_type"], r["filing_name"], r["c_id"], r["name"])
     assert sorted(map(key, got.collect())) == sorted(map(key, batch.collect()))
     facts = got.filter(F.col("record_type") == "fact").collect()

@@ -23,7 +23,12 @@ stateful operator's required clustering is a *superset* of those two keys —
 the fuzzy-dedup aggregate groups on (filing, c_id, name), the pivot groups
 on (filing, c_id) — and Spark's HashPartitioning(subset) satisfies
 ClusteredDistribution(superset), so Catalyst plans them all over the single
-exchange (pinned by tests/test_plans.py).
+exchange (pinned by tests/test_plans.py). A caller whose facts are already
+clustered on (filing_name, c_id) passes ``input_clustered`` and the plan
+has no exchange at all. There is one plan shape: a filing or context that
+owns most of the rows lands in one task, and no workload measures that
+case to justify a second shape. The plan has no ORDER BY; the sinks write
+unordered and tests sort what they collect.
 
     filter (P2 period ∧ P3 concept set ∧ P4 dims-fit)  — map-side, pushed down
     -> per-type value normalisation + P7 axis backfill — map-side
@@ -86,8 +91,6 @@ def _table_sql(
     src: str,
     spec: TableSpec,
     typed_dates: bool = False,
-    deterministic_order: bool = False,
-    skew_safe: bool = False,
     input_clustered: bool = False,
 ) -> tuple[str, str]:
     """The table's program as SQL text over the facts relation ``src``:
@@ -119,10 +122,8 @@ def _table_sql(
     )
     selected = f"SELECT {', '.join(select_sql)} FROM {src} WHERE {where_sql}"
     # The single shuffle: every grouping key below is a superset of
-    # (filing_name, c_id), so this one clustering serves them all. In
-    # skew_safe mode the aggregates own their exchanges instead (partial
-    # aggregation before each shuffle — see construct_table_with_errors).
-    if not (skew_safe or input_clustered):
+    # (filing_name, c_id), so this one clustering serves them all.
+    if not input_clustered:
         selected += " DISTRIBUTE BY `filing_name`, `c_id`"
 
     # A2+A3 in ONE aggregate: fuzzy dedup is multiplicity-insensitive, so
@@ -175,8 +176,6 @@ def _table_sql(
         f"SELECT * FROM ({wide}) AS __wide "
         f"WHERE {filters.at_least_one_non_null_sql(spec.data_columns)}"
     )
-    if deterministic_order:
-        data += " ORDER BY " + ", ".join(bq(pk) for pk in spec.primary_key)
     return data, errors
 
 
@@ -184,8 +183,6 @@ def construct_table_with_errors(
     facts: DataFrame,
     spec: TableSpec,
     typed_dates: bool = False,
-    deterministic_order: bool = False,
-    skew_safe: bool = False,
     input_clustered: bool = False,
 ) -> TableResult:
     """Build one output table from the (denormalized) long facts relation.
@@ -195,22 +192,6 @@ def construct_table_with_errors(
         spec: the table's schema contract.
         typed_dates: cast date PK columns to DateType (Spark-native surface)
             instead of the reference's ISO strings.
-        deterministic_order: end with ORDER BY PK — needed only for golden
-            comparisons / single-file sinks; a cluster sink should stay
-            unordered and let the writer bucket it.
-        skew_safe: hot-key fallback (the G13 two-phase shape). The default
-            single-exchange plan ships RAW rows through one
-            repartition(filing_name, c_id); a pathological key (one filing
-            or one context owning most of the rows) then funnels into one
-            task. With ``skew_safe`` the explicit repartition is dropped
-            and each aggregate owns its exchange, so Catalyst plans a
-            partial aggregate BEFORE the shuffle: hot-key rows are
-            pre-combined on every map task (the salt is the input
-            partitioning itself) and the shuffle carries one partial row
-            per (map task × key). Costs a second exchange (fuzzy on the
-            fact key, pivot on the context key) — worth it exactly when a
-            key is hot; output is identical (pinned by
-            tests/test_fact_table.py::test_skew_safe_mode_equivalence).
         input_clustered: the caller guarantees ``facts`` is already
             hash-clustered on (filing_name, c_id) — e.g. loaded from a
             bucketed table, or repartitioned BEFORE a row-multiplying
@@ -221,14 +202,7 @@ def construct_table_with_errors(
     """
     spark = facts.sparkSession
     with temp_view(facts) as view:
-        data_sql, errors_sql = _table_sql(
-            bq(view),
-            spec,
-            typed_dates=typed_dates,
-            deterministic_order=deterministic_order,
-            skew_safe=skew_safe,
-            input_clustered=input_clustered,
-        )
+        data_sql, errors_sql = _table_sql(bq(view), spec, typed_dates, input_clustered)
         return TableResult(data=spark.sql(data_sql), errors=spark.sql(errors_sql))
 
 
@@ -236,18 +210,9 @@ def construct_table(
     facts: DataFrame,
     spec: TableSpec,
     typed_dates: bool = False,
-    deterministic_order: bool = False,
-    skew_safe: bool = False,
     input_clustered: bool = False,
 ) -> DataFrame:
     """Data-only convenience wrapper; use construct_table_with_errors (or
     pipeline.extract's errors/strict surface) to observe quarantined
     conflicts."""
-    return construct_table_with_errors(
-        facts,
-        spec,
-        typed_dates=typed_dates,
-        deterministic_order=deterministic_order,
-        skew_safe=skew_safe,
-        input_clustered=input_clustered,
-    ).data
+    return construct_table_with_errors(facts, spec, typed_dates, input_clustered).data

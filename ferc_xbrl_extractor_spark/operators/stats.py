@@ -92,15 +92,3 @@ def rows_all_null(df: DataFrame, data_columns: list[str]) -> DataFrame:
         pred = pred & F.col(c).isNull()
     return df.filter(pred)
 
-
-def table_counts(tables: dict[str, DataFrame], max_parallel: int = 8) -> dict[str, int]:
-    """A6: per-table row counts. The count jobs are independent, so they
-    are submitted concurrently from a thread pool (Spark's scheduler
-    interleaves them across cores) — 255 tables is 255 serial round-trips
-    otherwise."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    names = list(tables)
-    with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-        counts = pool.map(lambda n: tables[n].count(), names)
-    return dict(zip(names, counts))

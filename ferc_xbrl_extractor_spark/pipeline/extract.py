@@ -42,7 +42,6 @@ from ferc_xbrl_extractor_spark.operators.stats import (
 # perfbench/worker.py wraps them by name in its traced runs.
 from ferc_xbrl_extractor_spark.sources.filings import scan_filings  # noqa: F401
 from ferc_xbrl_extractor_spark.sources.shredder import (  # noqa: F401
-    contexts_from,
     facts_from,
     shred_filings,
     shred_paths,
@@ -54,7 +53,6 @@ class ExtractResult:
     """Lazy handles to everything the run produced."""
 
     facts: DataFrame
-    contexts: DataFrame
     tables: dict[str, DataFrame]
     # Per-table quarantined fuzzy-dedup conflicts (filing_name, c_id, name,
     # values) — the rows the reference raises ValueError on (E2). Empty
@@ -119,7 +117,6 @@ def extract(
         spark, filings_path, instance_pattern=instance_pattern, fact_prefix=fact_prefix
     ).persist(StorageLevel.MEMORY_AND_DISK)
     facts = facts_from(shredded)
-    contexts = contexts_from(shredded)
 
     tables: dict[str, DataFrame] = {}
     errors: dict[str, DataFrame] = {}
@@ -129,7 +126,6 @@ def extract(
         errors[name] = built.errors
     return ExtractResult(
         facts=facts,
-        contexts=contexts,
         tables=tables,
         errors=errors,
         shredded=shredded,

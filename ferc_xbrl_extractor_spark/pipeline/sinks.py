@@ -6,8 +6,12 @@
   never for the 100 TB path.
 - DuckDB: parquet is the interchange (duckdb has no Spark connector);
   CREATE TABLE ... AS FROM read_parquet on the driver.
-- Datapackage JSON descriptor (frictionless-shaped; validation runs when the
-  ``frictionless`` package is importable, otherwise it's emitted unvalidated).
+- Datapackage JSON descriptor (frictionless-shaped). Its structural check
+  always runs; the full ``frictionless`` spec check is added when that
+  package is importable.
+
+The SQLite and DuckDB sinks read the Parquet staging that ``stage_and_sink``
+writes, so each table plan runs once whatever the number of sinks.
 """
 
 from __future__ import annotations
@@ -21,24 +25,19 @@ from pyspark.sql import DataFrame
 
 from ferc_xbrl_extractor_spark.catalog.tablespec import TableSpec
 
+# Concurrent table writes: enough to keep every executor busy between one
+# table's stages and the next table's.
+_WRITE_THREADS = 8
+
 
 def write_parquet(
-    tables: dict[str, DataFrame],
-    out_dir: str,
-    single_file: bool = False,
-    max_parallel: int = 8,
-    partition_by: list[str] | None = None,
+    tables: dict[str, DataFrame], out_dir: str, single_file: bool = False
 ) -> None:
     """K3: one parquet dataset per table.
 
     Writes run from a thread pool — each .write is a separate Spark job and
     the scheduler interleaves their stages, keeping all executors busy
     instead of draining the cluster one table at a time.
-
-    ``partition_by`` (e.g. ["filing_name"]) produces hive-partitioned
-    layout, giving downstream readers partition pruning on the named
-    columns — the right default at 100 TB where consumers slice by filing
-    or period (columns must exist in every table passed).
     """
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
@@ -46,109 +45,49 @@ def write_parquet(
     def _write(item):
         name, df = item
         target = df.coalesce(1) if single_file else df
-        writer = target.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(out / name))
+        target.write.mode("overwrite").parquet(str(out / name))
 
-    with ThreadPoolExecutor(max_workers=max_parallel) as pool:
+    with ThreadPoolExecutor(max_workers=_WRITE_THREADS) as pool:
         list(pool.map(_write, tables.items()))
-
-
-def write_bucketed(
-    tables: dict[str, DataFrame],
-    bucket_cols: list[str],
-    num_buckets: int = 64,
-    database: str | None = None,
-) -> None:
-    """K3 at-scale variant: persist tables bucketed (and sorted) on the
-    join/group key via ``bucketBy`` + ``saveAsTable``.
-
-    A downstream equi-join or aggregation on ``bucket_cols`` between two
-    tables bucketed the same way runs with ZERO exchanges — the scan
-    itself reports the hash distribution (pinned in
-    tests/test_plans.py::test_bucketed_join_skips_exchange). This is the
-    co-located-join strategy for relations too big to broadcast, e.g.
-    facts × per-filing metadata at 100 TB.
-    """
-    for name, df in tables.items():
-        target = f"{database}.{name}" if database else name
-        (
-            df.write.mode("overwrite")
-            .bucketBy(num_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-            .saveAsTable(target)
-        )
-
-
-def _is_hive_partitioned(table_dir: Path) -> bool:
-    """True when the staged layout is hive-partitioned (``col=value``
-    subdirectories from ``write_parquet(partition_by=...)``)."""
-    return any(
-        child.is_dir() and "=" in child.name for child in table_dir.iterdir()
-    )
 
 
 def staged_row_counts(staging_dir: str, names: list[str]) -> dict[str, int]:
     """Row count per staged table from parquet footer metadata only — no
     Spark job, no data read. This is how the CLI drops empty tables
     without re-executing any table plan (reference cli.py:122 gates on
-    ``df.empty``, which re-runs the plan; the footer already knows)."""
+    ``df.empty``, which re-runs the plan; the footer already knows). A
+    table with no staged directory counts 0."""
     import pyarrow.dataset as pads
 
     counts: dict[str, int] = {}
     for name in names:
         table_dir = Path(staging_dir) / name
-        if not table_dir.exists():
-            counts[name] = 0
-            continue
-        ds = pads.dataset(
-            str(table_dir),
-            format="parquet",
-            partitioning="hive" if _is_hive_partitioned(table_dir) else None,
+        counts[name] = (
+            pads.dataset(str(table_dir), format="parquet").count_rows()
+            if table_dir.exists()
+            else 0
         )
-        counts[name] = ds.count_rows()
     return counts
 
 
 def write_sqlite(
-    tables: dict[str, DataFrame], db_path: str, staging_dir: str | None = None
+    tables: dict[str, DataFrame], db_path: str, staging_dir: str
 ) -> None:
     """K1: serialize tables into SQLite via the driver (single-writer).
 
     SQLite is inherently a driver-side single-writer sink, but the driver
     never materializes a whole table: Spark writes parquet distributed
-    (same staging pattern as the DuckDB sink), then the driver streams it
-    into SQLite one record batch at a time via a pyarrow dataset scan.
-    Peak driver memory is one batch (~100k rows), independent of table
-    size — the previous ``df.toPandas()`` collect was a scale-killer for
-    any table bigger than driver RAM.
-
-    ``staging_dir``: a directory already holding ``write_parquet`` output
-    for these tables — reused as-is (no rewrite, not deleted). When None,
-    a temp staging dir is written and cleaned up."""
-    import shutil
-    import tempfile
-
+    into ``staging_dir`` (``write_parquet`` output, reused as-is and not
+    deleted), then the driver streams it into SQLite one record batch at a
+    time via a pyarrow dataset scan. Peak driver memory is one batch
+    (~100k rows), independent of table size."""
     import pyarrow.dataset as pads
 
-    owns_staging = staging_dir is None
-    staging = staging_dir or tempfile.mkdtemp(prefix="sqlite_stage_")
-    if owns_staging:
-        write_parquet(tables, staging)
     conn = sqlite3.connect(db_path)
     try:
         for name, df in tables.items():
             first = True
-            table_dir = Path(staging) / name
-            # A partition_by staging layout stores the partition column in
-            # directory names; read it back as a column (hive partitioning)
-            # or SQLite rows silently lose it.
-            ds = pads.dataset(
-                str(table_dir),
-                format="parquet",
-                partitioning="hive" if _is_hive_partitioned(table_dir) else None,
-            )
+            ds = pads.dataset(str(Path(staging_dir) / name), format="parquet")
             for batch in ds.to_batches(batch_size=100_000):
                 batch.to_pandas().to_sql(
                     name, conn, if_exists="replace" if first else "append", index=False
@@ -161,46 +100,26 @@ def write_sqlite(
         conn.commit()
     finally:
         conn.close()
-        if owns_staging:
-            shutil.rmtree(staging, ignore_errors=True)
 
 
 def write_duckdb(
-    tables: dict[str, DataFrame], db_path: str, staging_dir: str | None = None
+    tables: dict[str, DataFrame], db_path: str, staging_dir: str
 ) -> None:
-    """K2: stage parquet from Spark, CTAS into DuckDB on the driver.
-
-    ``staging_dir`` semantics match ``write_sqlite``: an existing
-    ``write_parquet`` layout is reused as-is; None stages to a temp dir
-    and cleans it up."""
-    import shutil
-    import tempfile
-
+    """K2: CTAS each table into DuckDB on the driver from its parquet in
+    ``staging_dir`` (``write_parquet`` output, reused as-is)."""
     import duckdb
 
-    owns_staging = staging_dir is None
-    staging = staging_dir or tempfile.mkdtemp(prefix="duckdb_stage_")
-    if owns_staging:
-        write_parquet(tables, staging)
     con = duckdb.connect(db_path)
     try:
         for name in tables:
-            if _is_hive_partitioned(Path(staging) / name):
-                # Recursive glob + hive_partitioning so partition columns
-                # written as directory names come back as real columns.
-                src = (
-                    f"read_parquet('{staging}/{name}/**/*.parquet', "
-                    "hive_partitioning = true)"
-                )
-            else:
-                src = f"read_parquet('{staging}/{name}/*.parquet')"
+            # A DuckDB string literal escapes ' by doubling it.
+            files = f"{staging_dir}/{name}/*.parquet".replace("'", "''")
             con.execute(
-                f'CREATE OR REPLACE TABLE "{name}" AS SELECT * FROM {src}'
+                f'CREATE OR REPLACE TABLE "{name}" AS '
+                f"SELECT * FROM read_parquet('{files}')"
             )
     finally:
         con.close()
-        if owns_staging:
-            shutil.rmtree(staging, ignore_errors=True)
 
 
 def stage_and_sink(
@@ -234,8 +153,8 @@ def stage_and_sink(
     import shutil
     import tempfile
 
-    owns_staging = output_dir is None
-    staging = output_dir or tempfile.mkdtemp(prefix="xbrl_stage_")
+    temp_staging = None if output_dir else tempfile.mkdtemp(prefix="xbrl_stage_")
+    staging = output_dir or temp_staging
     try:
         write_parquet(tables, staging, single_file=single_file)
         counts = staged_row_counts(staging, list(tables))
@@ -266,8 +185,8 @@ def stage_and_sink(
                 )
         return counts
     finally:
-        if owns_staging:
-            shutil.rmtree(staging, ignore_errors=True)
+        if temp_staging:
+            shutil.rmtree(temp_staging, ignore_errors=True)
 
 
 def datapackage_descriptor(
@@ -327,31 +246,16 @@ def datapackage_descriptor(
     return {"name": name, "profile": "tabular-data-package", "resources": resources}
 
 
-def datapackage_to_parquet_flavor(doc: dict) -> dict:
-    """Rewrite an existing (sqlite-flavored) descriptor to point at parquet
-    files — the reference's convert_and_validate_datapackage_sqlite_to_parquet
-    (cli.py:210-230): per-resource path/format/mediatype rewrite, dialect
-    dropped."""
-    out = json.loads(json.dumps(doc))  # deep copy
-    for resource in out["resources"]:
-        resource["path"] = f"{resource['name']}.parquet"
-        resource["format"] = "parquet"
-        resource["mediatype"] = "application/vnd.apache.parquet"
-        resource.pop("dialect", None)
-    return out
-
-
 def write_datapackage(
     specs: dict[str, TableSpec],
     path: str,
-    validate: bool = True,
     flavor: str = "sqlite",
     db_uri: str | None = None,
     base_dir: str | None = None,
 ) -> dict:
+    """Build, validate and write the K4 descriptor; returns it."""
     doc = datapackage_descriptor(specs, flavor=flavor, db_uri=db_uri)
-    if validate:
-        validate_descriptor(doc, base_dir=base_dir)
+    validate_descriptor(doc, base_dir=base_dir)
     Path(path).write_text(json.dumps(doc, indent=2, default=str))
     return doc
 

@@ -99,18 +99,15 @@ def compile_instance_pattern(instance_pattern: str | None) -> re.Pattern | None:
 
 
 def filings_of(
-    listing: pd.DataFrame,
-    pattern: re.Pattern | None = None,
-    publication_time: datetime.datetime | None = None,
+    listing: pd.DataFrame, pattern: re.Pattern | None = None
 ) -> Iterator[tuple]:
     """Listing rows (path, content) -> one (filing_name, content,
     publication_time, taxonomy_version) tuple per filing.
 
     A loose ``.xbrl`` file is one filing named by its file name without
     ``.xbrl``. It has NO publication time (reference parity,
-    instance.py:454-484) unless the caller passes ``publication_time``;
-    never the file mtime, which changes on copy, since publication_time is
-    part of every table's primary key.
+    instance.py:454-484); never the file mtime, which changes on copy,
+    since publication_time is part of every table's primary key.
 
     A ``.zip`` yields its ``.xbrl`` members, named by the member's base
     name without ``.xbrl``, with publication time and taxonomy version
@@ -125,7 +122,7 @@ def filings_of(
         if not path.endswith(".zip"):
             name = path.rsplit("/", 1)[-1].removesuffix(".xbrl")
             if pattern is None or pattern.search(name):
-                yield name, content, publication_time, None
+                yield name, content, None, None
             continue
         with zipfile.ZipFile(io.BytesIO(content)) as archive:
             names = archive.namelist()
@@ -151,7 +148,6 @@ def scan_filings(
     spark: SparkSession,
     path: str | list[str],
     instance_pattern: str | None = None,
-    publication_time: datetime.datetime | None = None,
 ) -> DataFrame:
     """Scan directories of ``.xbrl`` files and/or zip archives into a
     filings DataFrame (filing_name, content, publication_time,
@@ -168,7 +164,7 @@ def scan_filings(
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for listing in batches:
-            rows = list(filings_of(listing, pattern, publication_time))
+            rows = list(filings_of(listing, pattern))
             if rows:
                 yield pd.DataFrame(rows, columns=columns)
 

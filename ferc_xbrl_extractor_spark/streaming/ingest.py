@@ -40,7 +40,6 @@ def stream_filings_dir(
     pattern: str = "*.xbrl",
     fact_prefix: str = "ferc",
     max_files_per_trigger: int | None = None,
-    mtime_as_publication_time: bool = False,
 ) -> DataFrame:
     """Streaming shredded relation over a landing directory.
 
@@ -53,11 +52,10 @@ def stream_filings_dir(
         max_files_per_trigger: bound filings per microbatch — backfill of a
             large archive proceeds in bounded-memory increments instead of
             one giant batch.
-        mtime_as_publication_time: stamp ``publication_time`` from the
-            file's mtime (the directory-scan analogue of the rssfeed
-            publication time, F6/F7). Default leaves it null, matching the
-            batch dir scan; deterministic pipelines should prefer an
-            explicit rssfeed sidecar.
+
+    A loose filing has no publication time, as in the batch directory scan
+    (the file mtime changes on copy, and publication_time is part of every
+    table's primary key).
     """
     # The file source needs the schema up front (no inference on streams);
     # binaryFile's is fixed.
@@ -73,17 +71,12 @@ def stream_filings_dir(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.load(path)
-    pub = (
-        F.col("modificationTime")
-        if mtime_as_publication_time
-        else F.lit(None).cast("timestamp")
-    )
     filings = raw.select(
         F.regexp_replace(
             F.element_at(F.split(F.col("path"), "/"), -1), r"\.[^.]*$", ""
         ).alias("filing_name"),
         F.col("content"),
-        pub.alias("publication_time"),
+        F.lit(None).cast("timestamp").alias("publication_time"),
         F.lit(None).cast("string").alias("taxonomy_version"),
     )
     return shred_filings(filings, fact_prefix)

@@ -1,7 +1,6 @@
 """End-to-end table materialization goldens (reference
 tests/integration/datapackage_test.py:87-152 analogues)."""
 
-import pytest
 from ferc_xbrl_extractor_spark.catalog.tablespec import TableSpec
 from ferc_xbrl_extractor_spark.operators.fact_table import construct_table
 from ferc_xbrl_extractor_spark.sources.shredder import facts_from, shred_paths
@@ -17,7 +16,7 @@ def test_duration_no_axes(spark, filing_dir):
         period_type="duration",
         columns={"revenue_total": "number", "operator_name": "string"},
     )
-    df = construct_table(_facts(spark, filing_dir), spec, deterministic_order=True)
+    df = construct_table(_facts(spark, filing_dir), spec)
     rows = df.collect()
     # d2/d3 have dims not in PK -> excluded (P4); only d1 fits
     assert len(rows) == 1
@@ -37,7 +36,7 @@ def test_duration_with_axis_and_total_backfill(spark, filing_dir):
         columns={"revenue_total": "number", "operator_name": "string"},
         axes=["region_axis"],
     )
-    df = construct_table(_facts(spark, filing_dir), spec, deterministic_order=True)
+    df = construct_table(_facts(spark, filing_dir), spec)
     rows = {r["region_axis"]: r for r in df.collect()}
     # d1 (no dims) fits and becomes the 'total' slice; d2 (region only)
     # fits; d3 has an extra axis -> excluded
@@ -53,7 +52,7 @@ def test_instant_with_fuzzy_dedup(spark, filing_dir):
         period_type="instant",
         columns={"plant_count": "integer", "net_generation": "number"},
     )
-    df = construct_table(_facts(spark, filing_dir), spec, deterministic_order=True)
+    df = construct_table(_facts(spark, filing_dir), spec)
     rows = df.collect()
     assert len(rows) == 1  # i2 has a dim -> excluded
     r = rows[0]
@@ -70,7 +69,7 @@ def test_instant_with_axis(spark, filing_dir):
         columns={"plant_count": "integer"},
         axes=["region_axis"],
     )
-    df = construct_table(_facts(spark, filing_dir), spec, deterministic_order=True)
+    df = construct_table(_facts(spark, filing_dir), spec)
     rows = {r["region_axis"]: r["plant_count"] for r in df.collect()}
     assert rows == {"total": 12, "west": 7}
 
@@ -92,56 +91,6 @@ def test_pk_columns_and_order(spark, filing_dir):
         "region_axis",
         "revenue_total",
     ]
-
-
-@pytest.mark.slow
-def test_skew_safe_mode_equivalence(spark):
-    # G13-shaped hot-key fallback: one filing owns ~90% of rows (and one
-    # context inside it is hot). skew_safe must produce identical output
-    # via aggregate-owned exchanges with partial (map-side) aggregation
-    # before the first shuffle — the mechanism that spreads hot-key work
-    # across every map task instead of one reducer.
-    from pyspark.sql import functions as F
-
-    hot = spark.range(0, 9000).select(
-        F.lit("filing-hot").alias("filing_name"),
-        # one hot context gets a third of the hot filing's rows
-        F.when(F.col("id") % 3 == 0, F.lit("ctx-hot"))
-        .otherwise(F.concat(F.lit("c"), F.col("id"))).alias("c_id"),
-        F.lit("e1").alias("entity_id"),
-        F.lit(False).alias("instant"),
-        F.lit("2021-01-01").alias("start_date"),
-        F.lit("2021-12-31").alias("end_date"),
-        F.create_map().cast("map<string,string>").alias("dims"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("publication_time"),
-        F.lit("cost").alias("name"),
-        (F.col("id") % 7).cast("string").alias("value"),
-    )
-    cold = spark.range(0, 1000).select(
-        F.concat(F.lit("filing-"), F.col("id") % 10).alias("filing_name"),
-        F.concat(F.lit("k"), F.col("id")).alias("c_id"),
-        F.lit("e2").alias("entity_id"),
-        F.lit(False).alias("instant"),
-        F.lit("2021-01-01").alias("start_date"),
-        F.lit("2021-12-31").alias("end_date"),
-        F.create_map().cast("map<string,string>").alias("dims"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("publication_time"),
-        F.lit("cost").alias("name"),
-        (F.col("id") % 5).cast("string").alias("value"),
-    )
-    facts = hot.unionByName(cold)
-    spec = TableSpec(
-        name="t", period_type="duration", columns={"cost": "number"}, axes=[]
-    )
-    base = construct_table(facts, spec, deterministic_order=True)
-    safe = construct_table(facts, spec, deterministic_order=True, skew_safe=True)
-    assert base.collect() == safe.collect()
-
-    plan = safe._jdf.queryExecution().executedPlan().toString()
-    # aggregate-owned exchanges: partial aggregation appears before any
-    # exchange (reading the plan bottom-up, the deepest agg is partial)
-    assert "partial_" in plan
-    assert "REPARTITION_BY_COL" not in plan
 
 
 _FACTS_DDL = (
@@ -205,30 +154,32 @@ def test_pivot_after_duplicate_fact_keys(spark):
     ]
 
 
-def _py4j_commands(spark, build) -> int:
-    """py4j commands ``build()`` sends, counted on the gateway client with
-    Python's GC held off (a collection would send object-release commands
-    that are not construction)."""
-    import gc
+def _py4j_commands(spark, build) -> list[str]:
+    """py4j commands ``build()`` sends, recorded on the gateway client.
+    Only the calling thread's commands count, and object-release commands
+    do not: py4j sends one whenever a ``JavaObject``'s reference count
+    drops to zero, which is garbage collection, not construction."""
+    import threading
+
+    from py4j import protocol as proto
 
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
-    calls = 0
+    release = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+    caller = threading.get_ident()
+    commands: list[str] = []
 
-    def counted(*args, **kwargs):
-        nonlocal calls
-        calls += 1
-        return send(*args, **kwargs)
+    def counted(command, *args, **kwargs):
+        if threading.get_ident() == caller and not command.startswith(release):
+            commands.append(command)
+        return send(command, *args, **kwargs)
 
-    gc.collect()
-    gc.disable()
     client.send_command = counted
     try:
         build()
     finally:
         client.send_command = send
-        gc.enable()
-    return calls
+    return commands
 
 
 def test_construction_py4j_budget(spark):
@@ -253,5 +204,6 @@ def test_construction_py4j_budget(spark):
         axes=["a0_axis", "a1_axis", "a2_axis"],
     )
     for spec in (narrow, wide):
-        n = _py4j_commands(spark, lambda: construct_table_with_errors(facts, spec))
-        assert n <= 100, f"{spec.name}: {n} py4j commands"
+        sent = _py4j_commands(spark, lambda: construct_table_with_errors(facts, spec))
+        heads = [c.split("\n")[:3] for c in sent[:5]]
+        assert len(sent) <= 100, f"{spec.name}: {len(sent)} py4j commands, first {heads}"

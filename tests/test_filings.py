@@ -68,15 +68,6 @@ def test_directory_scan_null_publication_time(spark, tmp_path):
     assert rows[0]["publication_time"] is None
 
 
-def test_directory_scan_explicit_publication_time(spark, tmp_path):
-    d = tmp_path / "filings2"
-    d.mkdir()
-    (d / "x.xbrl").write_bytes(FILING_A)
-    ts = datetime.datetime(2024, 1, 1, 9, 0)
-    rows = scan_filings(spark, str(d), publication_time=ts).collect()
-    assert rows[0]["publication_time"] == ts
-
-
 def test_multi_path_scan(spark, tmp_path):
     # CLI surface: nargs='+' filings must all be scanned (a comma-joined
     # string would be one literal path and match nothing)

@@ -213,36 +213,6 @@ def test_salted_agg_two_exchange_shape(spark):
     assert "__salt" in plan
 
 
-def test_bucketed_join_skips_exchange(spark, tmp_path):
-    """Two tables bucketed+sorted on the join key must join with zero
-    exchanges — the bucketed scans themselves provide the distribution."""
-    from ferc_xbrl_extractor_spark.pipeline.sinks import write_bucketed
-
-    a = spark.createDataFrame(
-        [(i, f"a{i}") for i in range(1000)], "k long, va string"
-    )
-    b = spark.createDataFrame(
-        [(i, f"b{i}") for i in range(0, 1000, 2)], "k long, vb string"
-    )
-    write_bucketed({"bkt_a": a, "bkt_b": b}, ["k"], num_buckets=8)
-    try:
-        joined = (
-            spark.table("bkt_a")
-            .join(spark.table("bkt_b"), "k")
-            .filter(F.col("k") >= 0)  # keep AQE from broadcasting trivially
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = _executed_plan(joined)
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 500
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
     """A persisted IVF index is partitioned by inverted list; probing must
     prune at the partition level (scan only nprobe directories)."""

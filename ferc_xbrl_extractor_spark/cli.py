@@ -157,15 +157,14 @@ def run_main(args: argparse.Namespace) -> int:
         instance_pattern=args.instance_pattern or None,
         requested_tables=args.requested_tables,
     )
-    if args.strict:
-        result.raise_on_conflicts()
-
     # ONE execution per table plan: stage-first with footer-based empty
     # table dropping (no per-table isEmpty probes, which executed every
     # plan twice — 2×255 serial jobs on a Form-1 run). output_dir, when
     # given, doubles as staging and gets a parquet-flavored
     # datapackage.json (reference cli.py:185-230).
     try:
+        if args.strict:
+            result.raise_on_conflicts()
         counts = sinks.stage_and_sink(
             result.tables,
             specs=specs,

@@ -4,13 +4,14 @@ declarative Spark plan.
 
 Construction: the whole per-table program is rendered as SQL text over the
 facts relation (exposed as a uniquely named temp view) and handed to the
-JVM in ONE ``spark.sql`` call, plus one more for the quarantine (errors)
-relation. The Column-API form of the same program cost a py4j round trip
-per call, per column argument and per list element — 1,100-2,100
-driver⇄JVM crossings per table, whatever its width. The SQL-text form
-costs a few dozen per table (pinned by
-tests/test_fact_table.py::test_construction_py4j_budget); the executed
-plan keeps its shape.
+JVM in ONE ``spark.sql`` call. The quarantine (errors) relation costs a
+second call, made only when ``TableResult.errors`` is first read: a run
+that never looks at its conflicts never analyzes their plans. The
+Column-API form of the same program cost a py4j round trip per call, per
+column argument and per list element — 1,100-2,100 driver⇄JVM crossings
+per table, whatever its width. The SQL-text form costs a few dozen per
+table (pinned by tests/test_fact_table.py::test_construction_py4j_budget);
+the executed plan keeps its shape.
 
 Stage order matters for determinism (SURVEY.md §7.4): fuzzy dedup leaves
 exactly one row per (filing, c_id, name), so the pivot never sees a
@@ -44,7 +45,8 @@ join form kept in operators.joins for parity.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -59,14 +61,28 @@ INTEGER_TYPES = {"integer", "year"}
 FACT_KEY = ["filing_name", "c_id", "name"]
 
 
-@dataclass
 class TableResult:
     """One output table plus its quarantined dedup conflicts (A3 errors:
     (filing_name, c_id, name, values) rows the reference would have raised
-    ValueError on — reference datapackage.py:570-572)."""
+    ValueError on — reference datapackage.py:570-572).
 
-    data: DataFrame
-    errors: DataFrame
+    ``errors`` is analyzed on its first read and kept, so most runs, which
+    never read it, pay one ``spark.sql`` per table instead of two."""
+
+    def __init__(self, data: DataFrame, build_errors: Callable[[], DataFrame]):
+        self.data = data
+        self._build_errors = build_errors
+        self._errors: DataFrame | None = None
+        # extract() reads many tables' errors from a thread pool; the lock
+        # keeps a table's first read from analyzing its plan twice.
+        self._lock = threading.Lock()
+
+    @property
+    def errors(self) -> DataFrame:
+        with self._lock:
+            if self._errors is None:
+                self._errors = self._build_errors()
+            return self._errors
 
 
 def _normalized_value_sql(spec: TableSpec) -> str:
@@ -201,9 +217,12 @@ def construct_table_with_errors(
             plan runs with ZERO exchanges.
     """
     spark = facts.sparkSession
-    with temp_view(facts) as view:
-        data_sql, errors_sql = _table_sql(bq(view), spec, typed_dates, input_clustered)
-        return TableResult(data=spark.sql(data_sql), errors=spark.sql(errors_sql))
+
+    def build(part: int) -> DataFrame:
+        with temp_view(facts) as view:
+            return spark.sql(_table_sql(bq(view), spec, typed_dates, input_clustered)[part])
+
+    return TableResult(build(0), lambda: build(1))
 
 
 def construct_table(
@@ -212,7 +231,7 @@ def construct_table(
     typed_dates: bool = False,
     input_clustered: bool = False,
 ) -> DataFrame:
-    """Data-only convenience wrapper; use construct_table_with_errors (or
-    pipeline.extract's errors/strict surface) to observe quarantined
-    conflicts."""
+    """Data-only convenience wrapper (it never analyzes the errors plan);
+    use construct_table_with_errors (or pipeline.extract's errors/strict
+    surface) to observe quarantined conflicts."""
     return construct_table_with_errors(facts, spec, typed_dates, input_clustered).data

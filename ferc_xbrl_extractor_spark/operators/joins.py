@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ferc_xbrl_extractor_spark.operators.sqltext import bq, raw_col
+
 
 def context_join(pivoted: DataFrame, contexts: DataFrame, keys=("filing_name", "c_id")) -> DataFrame:
     """J1: enrich wide fact rows with their context's PK columns.
@@ -161,7 +163,7 @@ def interval_join(
 
     def nums(df: DataFrame, c: str) -> Column:
         dt = df.schema[c].dataType.simpleString()
-        col = F.col(c)
+        col = raw_col(c)
         if dt in ("timestamp", "date", "timestamp_ntz"):
             # NTZ/date have no direct double cast; both sides route through
             # the same session-zone ltz conversion, so containment filtering
@@ -179,9 +181,8 @@ def interval_join(
         "*", F.explode(F.sequence(i_lo, i_hi)).alias("__bkt")
     )
     on = keys + ["__bkt"]
-    contained = F.expr(
-        f"`{point_col}` {lo_ok} `{start_col}` AND `{point_col}` {hi_ok} `{end_col}`"
-    )
+    pt, lo, hi = bq(point_col), bq(start_col), bq(end_col)
+    contained = F.expr(f"{pt} {lo_ok} {lo} AND {pt} {hi_ok} {hi}")
     return p.join(i, on, "inner").filter(contained).drop("__bkt")
 
 

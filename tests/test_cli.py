@@ -1,6 +1,7 @@
 """The extract CLI end to end on the synthetic filing: one ``run_main`` call
 writes Parquet, SQLite, DuckDB and both datapackage descriptors, and the
-three data sinks hold the same rows."""
+three data sinks hold the same rows; ``--strict`` fails the run on an
+unresolvable duplicate fact."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import sqlite3
 
 import duckdb
 import pyarrow.parquet as pq
+import pytest
 
 CATALOG = {
     # two rows from the fixture filing: the no-dims 'total' slice and 'west'
@@ -87,3 +89,48 @@ def test_cli_writes_every_sink(spark, filing_dir, tmp_path):
     assert parquet_doc["resources"][0]["path"] == f"{KEPT}.parquet"
     schema_doc = json.loads(datapackage.read_text())
     assert {r["name"] for r in schema_doc["resources"]} == {KEPT, EMPTY}
+
+
+def test_cli_strict_fails_on_conflict(spark, filing_bytes, tmp_path):
+    """A second OperatorName value in context d1 is an unresolvable string
+    conflict: with ``--strict`` the run raises a ValueError naming the
+    table, filing, context, concept and values before any sink runs;
+    without it the run exits 0, quarantines the conflict and writes the
+    sinks with a NULL operator name on the conflicted row."""
+    from ferc_xbrl_extractor_spark import cli
+
+    operator = '<ferc:OperatorName contextRef="d1">Acme Power</ferc:OperatorName>'
+    xml = filing_bytes.decode()
+    assert operator in xml
+    filings = tmp_path / "filings"
+    filings.mkdir()
+    (filings / "acme-2021.xbrl").write_text(
+        xml.replace(operator, operator + operator.replace("Acme", "Other"))
+    )
+    catalog = tmp_path / "catalog.json"
+    catalog.write_text(json.dumps(CATALOG))
+    out, sqlite_path = tmp_path / "parquet", tmp_path / "out.sqlite"
+    argv = [
+        str(filings),
+        "--frozen-catalog", str(catalog),
+        "--output-dir", str(out),
+        "--sqlite-path", str(sqlite_path),
+        "--loglevel", "WARNING",
+    ]
+    with pytest.raises(ValueError) as raised:
+        cli.run_main(cli.parse([*argv, "--strict"]))
+    message = str(raised.value)
+    for part in (KEPT, "acme-2021", "d1", "operator_name", "Acme Power", "Other Power"):
+        assert part in message
+    assert not out.exists() and not sqlite_path.exists()
+
+    assert cli.run_main(cli.parse(argv)) == 0
+    table = pq.read_table(str(out / f"{KEPT}.parquet")).to_pydict()
+    by_region = dict(zip(table["region_axis"], table["operator_name"]))
+    assert by_region == {"total": None, "west": None}
+    conn = sqlite3.connect(sqlite_path)
+    try:
+        n = conn.execute(f"SELECT count(*) FROM {KEPT}").fetchone()[0]
+    finally:
+        conn.close()
+    assert n == 2

@@ -1282,6 +1282,34 @@ def test_interval_join_matches_naive_range_join(spark):
     assert "BroadcastNestedLoop" not in plan and "CartesianProduct" not in plan
 
 
+def test_interval_join_binds_raw_column_names(spark):
+    """Point, start, end and key columns whose names hold a dot or a
+    backtick join exactly like the same columns under plain names, for
+    numeric and timestamp axes."""
+    from ferc_xbrl_extractor_spark.operators.joins import interval_join
+
+    points = spark.createDataFrame(
+        [(i, i % 2, float(i)) for i in range(12)], "pid int, k int, t double"
+    ).withColumn("ts", F.timestamp_seconds("t"))
+    intervals = spark.createDataFrame(
+        [(100, 0, 1.0, 4.0), (101, 1, 3.0, 9.0), (102, 0, 20.0, 30.0)],
+        "iid int, k int, s double, e double",
+    ).withColumn("sts", F.timestamp_seconds("s")).withColumn("ets", F.timestamp_seconds("e"))
+    odd = {"k": "k.`ey", "t": "t.p`t", "ts": "ts.p`t", "s": "s.`tart", "e": "e.n`d", "sts": "st`s.x", "ets": "et`s.x"}
+
+    def renamed(df):
+        return df.toDF(*(odd.get(c, c) for c in df.columns))
+
+    for p, s, e in (("t", "s", "e"), ("ts", "sts", "ets")):
+        plain = interval_join(points, intervals, p, s, e, bucket_width=2.0, keys=["k"])
+        odd_out = interval_join(
+            renamed(points), renamed(intervals), odd[p], odd[s], odd[e],
+            bucket_width=2.0, keys=[odd["k"]],
+        )
+        want = sorted(map(tuple, plain.select("pid", "iid").collect()))
+        assert want and sorted(map(tuple, odd_out.select("pid", "iid").collect())) == want
+
+
 def test_weighted_sample_k_matches_reference_formula(spark):
     """weighted_sample_k replicates the A-ES draw computed independently
     in Python (hashlib md5 → ln(u)/w → top-k)."""

@@ -36,7 +36,6 @@ from typing import Callable, Iterable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ferc_xbrl_extractor_spark.catalog.tablespec import TableSpec
 from ferc_xbrl_extractor_spark.operators.fact_table import (
@@ -110,21 +109,21 @@ class ExtractResult:
 
     def raise_on_conflicts(self, max_show: int = 5) -> None:
         """Strict mode (reference E2 semantics): fail the run if any table
-        quarantined a conflict. One collect over the union of every
-        table's errors, each row tagged with its table; run it before
-        sinking when reference parity matters."""
-        if not self.errors:
-            return
-        tagged = [
-            err.select(F.lit(name).alias("__table"), "*")
-            for name, err in self.errors.items()
-        ]
-        bad = functools.reduce(DataFrame.unionByName, tagged).limit(max_show).collect()
+        quarantined a conflict; run it before sinking when reference parity
+        matters. The tables are checked concurrently from the construction
+        pool. One collect over the union of every table's errors measured
+        slower at 64 tables and grew faster than the table count: adaptive
+        execution re-plans the whole union after each of its stages."""
+        found = _pooled(
+            lambda item: [(item[0], r) for r in item[1].limit(max_show).collect()],
+            self.errors.items(),
+        )
+        bad = [hit for hits in found for hit in hits][:max_show]
         if bad:
             detail = "; ".join(
-                f"table {r['__table']}: "
+                f"table {name}: "
                 f"{r['filing_name']}:{r['c_id']}:{r['name']} {list(r['values'])}"
-                for r in bad
+                for name, r in bad
             )
             raise ValueError(f"unresolvable duplicate facts — {detail}")
 

@@ -82,7 +82,7 @@ def test_extract_equals_serial_construction(spark, tmp_path, filing_bytes, confl
     """Every table and every errors relation of the pooled build equals a
     serial ``construct_table_with_errors`` loop over the same facts, in row
     multiset and schema, with and without a conflict and for both date
-    surfaces."""
+    surfaces; the strict check names every conflicted table."""
     path = _filings(tmp_path, filing_bytes, conflict)
     for typed_dates in (False, True):
         result = extract(spark, path, SPECS, typed_dates=typed_dates)
@@ -96,6 +96,13 @@ def test_extract_equals_serial_construction(spark, tmp_path, filing_bytes, confl
             conflicted = {n for n, e in result.errors.items() if e.count()}
             want = {"summary_by_region_duration", "report_duration"} if conflict else set()
             assert conflicted == want
+            if not conflict:
+                result.raise_on_conflicts()
+                continue
+            with pytest.raises(ValueError) as raised:
+                result.raise_on_conflicts()
+            for name in want:
+                assert f"table {name}: " in str(raised.value)
         finally:
             result.shredded.unpersist()
     assert _temp_views(spark) == []

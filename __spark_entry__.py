@@ -1493,8 +1493,9 @@ def q_g27_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, and apply the paper's greedy survivor rule (drop any vector
     with a lower-id similar neighbor in its cluster; SemDeDup dedups
     within clusters directly, not by transitive closure — the transitive
-    `survivor="components"` policy is gate-covered by g2_cluster_dedup's
-    recursive-CTE oracle and a pytest golden). Oracle replays assignment
+    policy, ``neardup.dedup_by_pairs`` over these pairs, is gate-covered
+    by g2_cluster_dedup's recursive-CTE oracle and a pytest golden).
+    Oracle replays assignment
     (argmax dot, ties low) and the within-cluster pair join."""
     emb = _t(spark, sf_dir, "embeddings")
     cvecs = similarity.unit_centroids_from_rows(_ivf_centroids(spark, sf_dir))
@@ -3531,14 +3532,14 @@ def q_g20_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_g20_merge_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G20: incremental upsert semantics (pipeline/upsert.py merge_latest)
+    """G20: incremental upsert semantics (pipeline/upsert.py merge_latest_unioned)
     — a refiling batch (every 7th order re-priced, every 97th a fresh
     insert under a shifted key) merged into the base table; newest
     version wins via one max_by aggregate, no window sort.
 
     The base+updates relation is built from ONE scan of orders — each row
     emits its base version plus conditional refile/insert structs through
-    an in-place explode (``merge_latest``'s union form read orders three
+    an in-place explode (a union of base and updates read orders three
     times here; r4's worst scale slope, 6.37x for 10x data, was those
     stacked scans + three shuffle inputs)."""
     from ferc_xbrl_extractor_spark.pipeline.upsert import merge_latest_unioned

@@ -1,10 +1,10 @@
-"""Type mapping + column casts (SURVEY.md §1.2, §2.7 F9).
+"""Type mapping for column casts (SURVEY.md §1.2, §2.7 F9).
 
 The reference's type chain is XBRL base type -> Frictionless field type ->
 pandas dtype / convert callable (taxonomy.py:58-66, datapackage.py:116-137).
-Here every declared field type maps to exactly one Spark type and the cast
-is a Catalyst ``CAST`` — vectorized, codegen'd, null-safe (invalid strings
-become NULL via try_cast semantics when lenient=True).
+Here every declared field type maps to exactly one Spark type, and the
+table plans (operators/fact_table.py) cast with a Catalyst ``TRY_CAST`` —
+vectorized, codegen'd, null-safe (invalid strings become NULL).
 
 Documented deviation (deliberate): the reference converts booleans with
 Python ``bool()`` (datapackage.py:129-137), so the string 'false' is
@@ -16,8 +16,6 @@ DuckDB oracle agrees with Spark here, not with the reference.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Frictionless field type -> Spark type. Dates are kept as ISO strings to
@@ -38,38 +36,8 @@ _TYPED_OVERRIDES: dict[str, T.DataType] = {
     "date": T.DateType(),
 }
 
-# XBRL base type -> Frictionless field type (taxonomy.py:58-66).
-XBRL_TO_FIELD: dict[str, str] = {
-    "string": "string",
-    "decimal": "number",
-    "gyear": "year",
-    "integer": "integer",
-    "boolean": "boolean",
-    "date": "date",
-    "duration": "string",
-}
-
 
 def spark_type_for(field_type: str, typed_dates: bool = False) -> T.DataType:
     if typed_dates and field_type in _TYPED_OVERRIDES:
         return _TYPED_OVERRIDES[field_type]
     return FIELD_TO_SPARK[field_type]
-
-
-def cast_columns(
-    df: DataFrame, column_types: dict[str, str], typed_dates: bool = False
-) -> DataFrame:
-    """Cast named columns to their declared field types (reference F9).
-
-    Uses ``try_cast`` semantics so malformed values become NULL instead of
-    failing a 1000-executor stage; strictness belongs to the quality checks
-    (operators.stats), not to the cast.
-    """
-    exprs = []
-    for name in df.columns:
-        if name in column_types:
-            target = spark_type_for(column_types[name], typed_dates)
-            exprs.append(F.col(name).try_cast(target).alias(name))
-        else:
-            exprs.append(F.col(name))
-    return df.select(*exprs)

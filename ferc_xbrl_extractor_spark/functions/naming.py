@@ -6,18 +6,11 @@ semantics (reference uses the public ``stringcase`` package:
 datapackage.py:238). We re-implement the same public algorithm here (it is a
 three-line transformation) plus the reference's uppercase-word cleanup and
 table-name parsing (datapackage.py:142-153, 201-246), pinned by golden tests.
-
-Driver-side names use the Python functions; data-plane columns use the
-Column-expression variant (``snakecase_col``) which stays inside Catalyst
-codegen — no Python UDF in the hot path.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 _SEPARATORS = re.compile(r"[\-\.\s]")
 _UPPER = re.compile(r"[A-Z]")
@@ -40,18 +33,6 @@ def snakecase(name: str) -> str:
     if not s:
         return s
     return s[0].lower() + _UPPER.sub(lambda m: "_" + m.group(0).lower(), s[1:])
-
-
-def snakecase_col(col: Column) -> Column:
-    """Data-plane snakecase as a Catalyst expression (no Python UDF).
-
-    Equivalent to :func:`snakecase` for ASCII names: separator chars ->
-    ``_``, then insert ``_`` before every uppercase char except at the
-    start, then lowercase.
-    """
-    s = F.regexp_replace(col, r"[\-\.\s]", "_")
-    s = F.regexp_replace(s, r"(?!^)([A-Z])", r"_$1")
-    return F.lower(s)
 
 
 def strip_xml_prefix(name: str) -> str:

@@ -333,19 +333,12 @@ def json_extract(
 
     ``fields`` maps output column name -> JSONPath (``$.k``). Uses
     get_json_object (no schema needed); callers with a fixed schema should
-    prefer ``from_json`` so Catalyst prunes unused fields — provided via
-    json_parse below.
+    prefer ``F.from_json`` so Catalyst prunes unused fields.
     """
     out = df
     for name, path in fields.items():
         out = out.withColumn(name, F.get_json_object(F.col(json_col), path))
     return out
-
-
-def json_parse(df: DataFrame, json_col: str, schema: str, out_col: str = "parsed") -> DataFrame:
-    """G10 schema-full variant: from_json into a struct column; nested field
-    pruning then applies to downstream selects."""
-    return df.withColumn(out_col, F.from_json(F.col(json_col), schema))
 
 
 def unpivot(

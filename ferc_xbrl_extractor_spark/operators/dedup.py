@@ -16,7 +16,8 @@ probe precision p in 0..5. Groups that never isolate exactly one value
 (string conflicts, precision ties, all-integers) raise a ValueError in the
 reference; at cluster scale a task failure is the wrong tool, so the
 default here is a quarantine channel — conflicted keys are routed to an
-``errors`` DataFrame and strict mode turns them into a driver-side raise.
+``errors`` DataFrame, and the extract's strict mode
+(``ExtractResult.raise_on_conflicts``) turns them into a driver-side raise.
 
 Two deliberate refinements over the reference (per round-1 advice):
 - ``numeric_names`` restricts precision-resolution to groups whose
@@ -171,15 +172,6 @@ def _ndigits_sql(col_sql: str, max_precision: int = 6) -> str:
     return f"CASE {probes} ELSE {max_precision + 1} END"
 
 
-def _ndigits(col, max_precision: int = 6):
-    """Column-expression form of ``_ndigits_sql`` for callers holding a
-    Column; used by tests."""
-    expr = F.lit(max_precision + 1)
-    for p in range(max_precision, -1, -1):
-        expr = F.when(F.round(col, p) == col, F.lit(p)).otherwise(expr)
-    return expr
-
-
 def fuzzy_dedup_sql(
     src: str,
     columns: list[str],
@@ -309,17 +301,3 @@ def fuzzy_dedup(
             bq(view), df.columns, keys, value_col, max_precision, numeric_names
         )
         return FuzzyDedupResult(resolved=spark.sql(resolved), errors=spark.sql(errors))
-
-
-def fuzzy_dedup_strict(
-    df: DataFrame, keys: list[str], value_col: str = "value"
-) -> DataFrame:
-    """Reference-exact error semantics: raise on the first conflicted group
-    (E2). Prefer the quarantine channel for large runs."""
-    result = fuzzy_dedup(df, keys, value_col)
-    bad = result.errors.limit(1).collect()
-    if bad:
-        row = bad[0]
-        key_repr = ":".join(str(row[k]) for k in keys)
-        raise ValueError(f"Fact {key_repr} has values {row['values']}")
-    return result.resolved

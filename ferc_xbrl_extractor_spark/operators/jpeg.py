@@ -2,7 +2,7 @@
 
 A real crawl's images are JPEG-first, but this environment has no
 Pillow/libjpeg — so the perceptual-image family (G69 dHash dedup,
-feature extraction, resize) previously exercised its pipeline on PPM
+feature extraction) previously exercised its pipeline on PPM
 only. This module implements the baseline subset of ITU-T T.81 (the
 public JPEG spec) with numpy as the only dependency:
 
@@ -18,10 +18,10 @@ public JPEG spec) with numpy as the only dependency:
   the E1 contract exactly like a truncated PPM.
 - ENCODE (``encode_jpeg_baseline``): baseline 4:4:4 (or grayscale),
   Annex-K quant tables scaled by the libjpeg quality convention,
-  Annex-K Huffman tables. Exists so fixtures and re-encode paths work
-  without any external codec; it is an independent implementation of
-  the forward path (FDCT + quantize + Huffman), which is what makes
-  the decode/encode round-trip a meaningful test.
+  Annex-K Huffman tables. Exists so test fixtures work without any
+  external codec (no engine path encodes); it is an independent
+  implementation of the forward path (FDCT + quantize + Huffman),
+  which is what makes the decode/encode round-trip a meaningful test.
   ``encode_jpeg_progressive`` (r10) emits the same quantized
   coefficients through a SOF2 scan script, so a progressive stream and
   its baseline twin decode BIT-IDENTICALLY — the cross-path pin.

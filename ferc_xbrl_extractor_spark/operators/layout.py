@@ -1,22 +1,22 @@
-"""G25: Z-order (Morton) clustering for multi-column data skipping.
+"""G25: Z-order (Morton) interleave, the clustering key for multi-column
+data skipping.
 
 Parquet scans prune row groups / files with min-max statistics, but a
 layout sorted on one column leaves every OTHER column's min-max spanning
-the full domain — a filter on the second column prunes nothing. Writing
-rows ordered by the bit-interleaved Z-value of several columns bounds
-EVERY interleaved column's span per file (each file covers a small hyper-
+the full domain — a filter on the second column prunes nothing. Rows
+ordered by the bit-interleaved Z-value of several columns bound EVERY
+interleaved column's span per file (each file covers a small hyper-
 rectangle of the key space), so selective filters on any of them skip
-most of a 100-TB table's files.
+most files.
 
 Spark-first: the Z-value is a pure Catalyst bit expression (unrolled
-``shiftleft``/``bitwise OR`` — codegen'd, no UDF); the layout step is the
-standard ``repartitionByRange(z) .sortWithinPartitions(z)`` write recipe,
-i.e. a single range exchange that doubles as the file splitter.
+``shiftleft``/``bitwise OR`` — codegen'd, no UDF); a layout is then the
+standard ``repartitionByRange(z).sortWithinPartitions(z)`` write recipe.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -41,116 +41,3 @@ def zvalue(cols: list[Column | str], bits: int = 16) -> Column:
             bit = F.shiftright(c, j).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, j * n + i))
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    num_files: int | None = None,
-) -> None:
-    """Write ``df`` as parquet clustered by the Z-order of ``cols``: one
-    range exchange on the Z-value, sorted within partitions, so each
-    output file covers a compact hyper-rectangle and min-max stats prune
-    on EVERY clustered column. ``num_files`` controls the range partition
-    count (default: current shuffle parallelism)."""
-    z = zvalue(cols, bits).alias("__z")
-    out = df.withColumn("__z", z)
-    out = (
-        out.repartitionByRange(num_files, "__z")
-        if num_files
-        else out.repartitionByRange("__z")
-    )
-    out.sortWithinPartitions("__z").drop("__z").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def file_spans(spark, path: str, cols: list[str]):
-    """Per-file (min, max) spans of ``cols`` — the pruning telemetry used
-    to validate a layout (narrow spans == effective skipping)."""
-    df = spark.read.parquet(path).withColumn(
-        "__file", F.input_file_name()
-    )
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    return df.groupBy("__file").agg(*aggs)
-
-
-FOOTER_REPORT_SCHEMA = (
-    "file string, row_group int, column string, "
-    "vmin string, vmax string, n_rows long"
-)
-
-
-def skipping_report(spark, path: str, cols: list[str]) -> DataFrame:
-    """Row-group min/max statistics read from parquet FOOTERS only — the
-    at-scale layout validator. ``file_spans`` answers the same question
-    by scanning the data; at 100 TB the whole point of a clustered layout
-    is that you never have to. This reads each file's metadata pages (a
-    few KB regardless of file size) in a distributed ``mapInPandas`` over
-    the file list, so validating a million-file table costs a metadata
-    sweep, not a table scan.
-
-    Returns one row per (file, row_group, column) with stringified
-    min/max (type-generic; numeric consumers cast). Use
-    :func:`skip_fraction` to score a predicate against the report.
-    """
-    import pandas as pd
-
-    files = spark.read.parquet(path).inputFiles()
-    fdf = spark.createDataFrame([(f,) for f in files], "file string")
-
-    def read_footers(batches):
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for f in pdf["file"]:
-                local = f[7:] if f.startswith("file://") else f
-                md = pq.ParquetFile(local).metadata
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for i in range(g.num_columns):
-                        cm = g.column(i)
-                        if cm.path_in_schema not in cols:
-                            continue
-                        st = cm.statistics
-                        rows.append(
-                            (
-                                f,
-                                rg,
-                                cm.path_in_schema,
-                                None if st is None else str(st.min),
-                                None if st is None else str(st.max),
-                                g.num_rows,
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "file", "row_group", "column", "vmin", "vmax", "n_rows"
-                ],
-            )
-
-    return fdf.mapInPandas(read_footers, FOOTER_REPORT_SCHEMA)
-
-
-def skip_fraction(report: DataFrame, column: str, lo: float, hi: float):
-    """Fraction of row groups a numeric range predicate ``[lo, hi]``
-    could skip according to a :func:`skipping_report` — the one-number
-    summary of whether a layout earns its keep (z-ordered layouts score
-    high on EVERY clustered column; single-column sorts only on their
-    own). Row groups with no statistics count as unskippable."""
-    r = report.filter(F.col("column") == column)
-    skippable = (
-        F.col("vmin").isNotNull()
-        & (
-            (F.col("vmax").cast("double") < F.lit(float(lo)))
-            | (F.col("vmin").cast("double") > F.lit(float(hi)))
-        )
-    ).cast("double")
-    row = r.agg(F.round(F.avg(skippable), 4).alias("skip_fraction")).first()
-    return row["skip_fraction"]

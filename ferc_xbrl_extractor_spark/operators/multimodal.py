@@ -17,9 +17,9 @@ dispatch order inside the same Arrow-batched ``mapInPandas`` bodies:
    and Y4M video** — REAL codecs, always available. PPM/WAV/Y4M are uncompressed (header +
    raw samples); JPEG adds the entropy+DCT pipeline a real crawl's
    images actually arrive in. Decode, ITU-R 601-2 luma,
-   nearest-neighbor resize, linear-interp resample, BT.601 YUV->RGB
-   frame extraction, and RMS/zero-crossing audio features are numpy
-   array ops with no media library at all. ``decode_stub=False``
+   nearest-neighbor downscale for features and perceptual hashes,
+   BT.601 YUV->RGB frame decode, and RMS/zero-crossing audio features
+   are numpy array ops with no media library at all. ``decode_stub=False``
    genuinely decodes in any environment for these formats. Baseline
    and progressive JPEG (r10) decode through the BUILT-IN codec even
    when Pillow is importable, so hashes/features are
@@ -51,9 +51,6 @@ from ferc_xbrl_extractor_spark.operators.jpeg import (
     decode_gif,
     decode_jpeg_baseline,
     decode_png,
-    encode_gif,
-    encode_jpeg_baseline,
-    encode_png,
 )
 
 try:  # image codec for non-PPM/JPEG formats, layered in when available
@@ -165,24 +162,6 @@ def _luma(arr: np.ndarray) -> np.ndarray:
         (a[..., 0] * 299 + a[..., 1] * 587 + a[..., 2] * 114) // 1000
     ).astype(np.uint8)
 
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image|audio|video
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("meta", MEDIA_META_SCHEMA),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -282,123 +261,6 @@ def extract_features(
             )
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def resize_images(
-    media: DataFrame, width: int, height: int, decode_stub: bool = True
-) -> DataFrame:
-    """Image resize over ``mapInPandas``: same media layout in and out,
-    with ``meta.width/height`` set to the target and ``content`` replaced
-    by the resized encoding. With ``decode_stub=False``, PPM (P6) content
-    resizes for real via the pure-numpy codec (nearest-neighbor,
-    re-encoded as PPM) in any environment; other formats use Pillow when
-    importable (re-encoded as PNG). The stub path keeps deterministic
-    truncated/md5-padded bytes sized ~proportionally to the pixel count,
-    so the plumbing — blob-through-Arrow round trip, struct metadata
-    rewrite, output schema stability — is testable with no codec at all.
-    """
-
-    def real_resize(b):
-        # NULL/undecodable-empty content passes through as NULL — parity
-        # with how a real pipeline quarantines rather than crashes on
-        # blob-less rows (the stub fabricates bytes instead).
-        if b is None or len(b) == 0:
-            return None
-        b = bytes(b)
-        if b[:2] == b"P6":
-            return encode_ppm(_nn_resize(decode_ppm(b), width, height))
-        if b[:2] == b"\xff\xd8" or b[:4] == b"\x89PNG" or b[:4] == b"GIF8":
-            kind = (
-                "png" if b[:4] == b"\x89PNG"
-                else "gif" if b[:4] == b"GIF8"
-                else "jpeg"
-            )
-            try:
-                arr = {
-                    "png": decode_png,
-                    "gif": decode_gif,
-                    "jpeg": decode_jpeg_baseline,
-                }[kind](b)
-            except ValueError:
-                if _PILImage is None:
-                    return None  # quarantine (E1)
-                arr = None
-            if arr is not None:
-                # the container survives the resize: JPEG re-encodes as
-                # baseline 4:4:4 (quality 85, the encoder default);
-                # PNG losslessly; GIF keeps its palette (nearest-
-                # neighbor sampling never mints new colors)
-                out = _nn_resize(arr, width, height)
-                if kind == "png":
-                    return encode_png(out)
-                if kind == "gif":
-                    return encode_gif(out)
-                return encode_jpeg_baseline(out)
-        if _PILImage is None:
-            raise NotImplementedError(
-                "only the built-in PPM (P6) and baseline-JPEG codecs are "
-                "available in this environment (Pillow not importable); "
-                "re-encode media, run with decode_stub=True, or install "
-                "Pillow"
-            )
-        import io
-
-        img = _PILImage.open(io.BytesIO(b)).resize((width, height))
-        buf = io.BytesIO()
-        img.save(buf, format="PNG")
-        return buf.getvalue()
-
-    def _out_mime(b, declared):
-        if decode_stub:
-            # the stub never decodes: the declared mime is kept
-            return declared
-        if b is not None and bytes(b[:2]) == b"P6":
-            return "image/x-portable-pixmap"
-        if b is not None and bytes(b[:2]) == b"\xff\xd8":
-            return "image/jpeg"
-        if b is not None and bytes(b[:4]) == b"GIF8":
-            return "image/gif"
-        return "image/png"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height
-        for pdf in batches:
-
-            def fake_resize(b):
-                b = bytes(b) if b is not None else b""
-                if len(b) >= target:
-                    return b[:target]
-                pad = b
-                while len(pad) < target:
-                    pad += hashlib.md5(pad[-16:] or b"seed").digest()
-                return pad[:target]
-
-            meta = pd.DataFrame(
-                {
-                    "media_type": pdf["meta"].apply(lambda m: m["media_type"]),
-                    # real kernels re-encode (PPM stays PPM, PIL emits
-                    # PNG); the stub keeps the declared mime (it never
-                    # decodes)
-                    "mime": [
-                        _out_mime(b, m["mime"])
-                        for b, m in zip(pdf["content"], pdf["meta"])
-                    ],
-                    "width": width,
-                    "height": height,
-                    "duration_ms": pdf["meta"].apply(lambda m: m["duration_ms"]),
-                }
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": pdf["content"].apply(
-                        fake_resize if decode_stub else real_resize
-                    ),
-                    "meta": meta.to_dict("records"),
-                }
-            )
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
 
 
 def _decode_gray(b, width: int, height: int):
@@ -993,75 +855,6 @@ def extract_audio_features(
     return media.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
 
 
-def resample_audio(
-    media: DataFrame, target_rate: int, decode_stub: bool = True
-) -> DataFrame:
-    """Audio resample over ``mapInPandas``: same media layout in and out,
-    ``content`` replaced by the resampled encoding and
-    ``meta.duration_ms`` set from the decoded length. PCM WAV resamples
-    for REAL via the pure-numpy codec (linear interpolation per channel,
-    re-encoded 16-bit PCM) in any environment; other containers raise at
-    the batch level with ``decode_stub=False``. The stub keeps
-    deterministic byte-scaling so plumbing is testable with no codec.
-    """
-    if target_rate <= 0:
-        raise ValueError("target_rate must be positive")
-
-    def real_rs(b):
-        if b is None or len(b) == 0:
-            return None, None
-        rate, samples = decode_wav(bytes(b))
-        n = samples.shape[0]
-        m = max(1, int(round(n * target_rate / rate)))
-        # linear interpolation at center-aligned positions, per channel
-        pos = np.arange(m) * (n - 1) / max(m - 1, 1)
-        lo = np.floor(pos).astype(np.int64)
-        hi = np.minimum(lo + 1, n - 1)
-        frac = (pos - lo)[:, None]
-        out = (
-            samples[lo].astype(np.float64) * (1 - frac)
-            + samples[hi].astype(np.float64) * frac
-        )
-        enc = encode_wav(target_rate, np.rint(out).astype(np.int64))
-        return enc, int(round(m * 1000 / target_rate))
-
-    def stub_rs(b):
-        if b is None or len(b) == 0:
-            return None, None
-        b = bytes(b)
-        # deterministic size-scaled stand-in: repeat/truncate toward a
-        # byte budget proportional to the rate ratio vs an assumed 16k
-        budget = max(1, int(len(b) * target_rate / 16000))
-        out = (b * (budget // len(b) + 1))[:budget]
-        return out, int(round(budget * 1000 / target_rate))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = stub_rs if decode_stub else real_rs
-        for pdf in batches:
-            outs = [kernel(b) for b in pdf["content"]]
-            meta = pd.DataFrame(
-                {
-                    "media_type": pdf["meta"].apply(lambda m: m["media_type"]),
-                    "mime": [
-                        (m["mime"] if decode_stub else "audio/wav")
-                        for m in pdf["meta"]
-                    ],
-                    "width": pdf["meta"].apply(lambda m: m["width"]),
-                    "height": pdf["meta"].apply(lambda m: m["height"]),
-                    "duration_ms": [d for _, d in outs],
-                }
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": [c for c, _ in outs],
-                    "meta": meta.to_dict("records"),
-                }
-            )
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
 def decode_y4m(b: bytes) -> tuple[int, int, list[np.ndarray]]:
     """Decode an uncompressed Y4M (YUV4MPEG2) stream into
     ``(fps_num, fps_den, [(h, w, 3) RGB uint8 frames])`` — pure numpy.
@@ -1142,77 +935,3 @@ def encode_y4m(
         for plane in (y, u, v):
             out.append(plane.astype(np.uint8).tobytes())
     return b"".join(out)
-
-
-def extract_frames(
-    media: DataFrame, every_ms: int = 1000, decode_stub: bool = True
-) -> DataFrame:
-    """Real video frame extraction: sample one frame per ``every_ms``
-    from each media row and emit it as a PPM image row — the bridge
-    from video to the whole image pipeline (features, resize, dedup).
-
-    ``decode_stub=False`` decodes Y4M for REAL via the pure-numpy codec
-    (frame index = floor(ms/1000 * fps), then BT.601 to RGB, re-encoded
-    P6); other containers raise at the batch level. The stub emits
-    md5-derived fake frame bytes with the same schema. Output:
-    (media_id, frame_ms, content=PPM bytes, meta with width/height).
-    """
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_ms", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("meta", MEDIA_META_SCHEMA),
-        ]
-    )
-
-    def _meta(w, h):
-        return {
-            "media_type": "image",
-            "mime": "image/x-portable-pixmap",
-            "width": w,
-            "height": h,
-            "duration_ms": None,
-        }
-
-    def real_rows(mid, b):
-        if not b:
-            return []
-        fn, fd, frames = decode_y4m(bytes(b))
-        duration_ms = int(len(frames) * 1000 * fd / fn)
-        rows = []
-        for ms in range(0, max(duration_ms, 1), every_ms):
-            idx = min(int(ms * fn / (1000 * fd)), len(frames) - 1)
-            arr = frames[idx]
-            rows.append(
-                (mid, ms, encode_ppm(arr), _meta(arr.shape[1], arr.shape[0]))
-            )
-        return rows
-
-    def stub_rows(mid, b):
-        if not b:
-            return []
-        b = bytes(b)
-        n = max(1, len(b) // 1024)
-        return [
-            (
-                mid,
-                i * every_ms,
-                hashlib.md5(b + i.to_bytes(4, "little")).digest(),
-                _meta(None, None),
-            )
-            for i in range(n)
-        ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = stub_rows if decode_stub else real_rows
-        for pdf in batches:
-            rows = []
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                rows.extend(kernel(mid, b))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_ms", "content", "meta"]
-            )
-
-    return media.mapInPandas(run, out_schema)

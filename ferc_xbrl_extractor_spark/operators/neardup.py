@@ -1397,43 +1397,6 @@ def dedup_by_pairs_best(
     return df.join(losers, id_col, "left_anti")
 
 
-def minhash_lsh_ml(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hash_tables: int = 5,
-    distance_threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """Stock MLlib pattern: HashingTF over shingles → MinHashLSH →
-    approxSimilarityJoin (banded/bucketed inside MLlib — never all-pairs).
-    Seed-deterministic within Spark but not reproducible by a SQL oracle;
-    use minhash_lsh_pairs for oracle-checked runs."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = df.select(F.col(id_col), shingles(text_col).alias("sh")).filter(
-        F.size("sh") > 0
-    )
-    tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=1 << 18)
-    feats = tf.transform(sh)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(
-        feats, feats, distance_threshold, distCol="jaccard_dist"
-    )
-    return (
-        joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.round(1.0 - F.col("jaccard_dist"), 4).alias("jaccard"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-
-
 def split_leakage_report(
     df: DataFrame,
     split_col: str = "split",
@@ -1807,29 +1770,3 @@ def contamination_multi_report(
         .agg(F.count(F.lit(1)).alias("n_hits"))
         .filter(F.col("n_hits") >= min_overlap)
     )
-
-
-def decontaminate_multi(
-    corpus: DataFrame,
-    benchmarks: dict[str, DataFrame],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    min_overlap: int = 1,
-    **kwargs,
-) -> DataFrame:
-    """Remove documents contaminated by ANY of the benchmarks, in one
-    corpus pass: left-anti join against the G107 multi-report's ids.
-    With a single benchmark this equals :func:`decontaminate` row for
-    row (pytest-pinned); with N benchmarks it replaces N sequential
-    anti-join passes."""
-    hits = contamination_multi_report(
-        corpus,
-        benchmarks,
-        id_col=id_col,
-        text_col=text_col,
-        n=n,
-        min_overlap=min_overlap,
-        **kwargs,
-    )
-    return corpus.join(hits.select(id_col), id_col, "left_anti")

@@ -166,8 +166,3 @@ def check_constraints(df: DataFrame, checks: list[Check]) -> DataFrame:
         agg_row.select(F.explode(report_structs(checks)).alias("r"))
         .select("r.constraint", "r.metric", "r.passed")
     )
-
-
-def suite_passed(report: DataFrame) -> bool:
-    """Driver-side convenience: did every constraint pass?"""
-    return report.filter(~F.col("passed")).isEmpty()

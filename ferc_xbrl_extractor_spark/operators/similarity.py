@@ -290,182 +290,6 @@ def ivf_index(
     return assigned, centroids
 
 
-def ivf_write_index(assigned: DataFrame, path: str) -> None:
-    """Persist an IVF-assigned corpus partitioned by inverted list, so a
-    probe-time read scans only nprobe/nlist of the files (Hive partition
-    pruning — the on-disk analogue of the keyed search join)."""
-    assigned.write.mode("overwrite").partitionBy("__cluster").parquet(path)
-
-
-def ivf_append(
-    new_vectors: DataFrame,
-    path: str,
-    unit_centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> dict[int, int]:
-    """Append an increment into a persisted IVF index — O(increment) at
-    any index size (the G23/G24 incremental-maintenance pattern applied
-    to ANN).
-
-    Assignment uses the FROZEN quantizer that built the index
-    (``ivf_assign``'s literal-matrix projection — reclustering would
-    silently invalidate every existing inverted list), and the write is
-    parquet ``append`` partitioned by ``__cluster``: only the touched
-    lists gain files, existing files are never read or rewritten, and
-    probe-time partition pruning keeps working unchanged.
-
-    Returns per-cluster appended row counts (bounded by nlist — the
-    observability hook that tells you when drift has imbalanced the
-    lists and a recluster is due). Appends accumulate small files;
-    compose with ``pipeline.maintenance.compact_partitions`` on the
-    index directory, exactly as for any incrementally-written table.
-    """
-    assigned = new_vectors.withColumn(
-        "__nvec", _unit(F.col(vec_col))
-    ).withColumn(
-        "__cluster", ivf_assign(F.col("__nvec"), unit_centroids)
-    )
-    assigned.write.mode("append").partitionBy("__cluster").parquet(path)
-    spark = new_vectors.sparkSession
-    spark.catalog.refreshByPath(path)
-    counts = (
-        assigned.groupBy("__cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    return {int(r["__cluster"]): int(r["n"]) for r in counts}
-
-
-def ivf_cluster_counts(path: str) -> dict[int, int]:
-    """Per-inverted-list row counts from parquet footer metadata only —
-    no Spark job, no data read (the ``staged_row_counts`` trick applied
-    to the index layout). This is the drift signal ``ivf_append`` returns
-    incrementally, recomputable for the whole index at any time."""
-    import pyarrow.dataset as pads
-    from pathlib import Path
-
-    counts: dict[int, int] = {}
-    for child in Path(path).iterdir():
-        if not (child.is_dir() and child.name.startswith("__cluster=")):
-            continue
-        cl = int(child.name.split("=", 1)[1])
-        counts[cl] = pads.dataset(str(child), format="parquet").count_rows()
-    return counts
-
-
-def ivf_lists_to_split(
-    counts: dict[int, int], factor: float = 4.0
-) -> list[int]:
-    """Inverted lists whose size exceeds ``factor`` × the mean list size —
-    the recluster trigger. With a balanced index this returns [] and
-    maintenance is a no-op."""
-    if not counts:
-        return []
-    mean = sum(counts.values()) / len(counts)
-    return sorted(c for c, n in counts.items() if n > factor * mean)
-
-
-def ivf_recluster_split(
-    spark,
-    path: str,
-    unit_centroids: list[list[float]],
-    clusters: list[int] | None = None,
-    factor: float = 4.0,
-    split_into: int = 2,
-    id_col: str = "vec_id",
-    scale: int = 1000,
-    iters: int = 2,
-) -> list[list[float]]:
-    """Drift-triggered IVF maintenance: split each overfull inverted list
-    in place, touching NOTHING else (closes the loop ``ivf_append``'s
-    per-cluster counts open).
-
-    Appends drift the corpus: when new vectors crowd one region, its list
-    grows unboundedly and every probe that selects it degenerates toward
-    a full scan. Retraining the whole quantizer would invalidate every
-    list (a full index rewrite); instead this retrains a *sub-quantizer*
-    (G37 integer k-means, :func:`~ferc_xbrl_extractor_spark.operators.clustering.kmeans_train`)
-    on each overfull list alone and splits it into ``split_into`` lists:
-    the first keeps the old cluster id (its partition is rewritten), the
-    rest get fresh ids appended to the centroid table. A dynamic
-    partition-overwrite write replaces ONLY the split partitions —
-    untouched lists stay byte-identical on disk (pinned by
-    tests/test_maintenance.py), so the operation is O(overfull lists),
-    never O(index).
-
-    Returns the updated unit-centroid list (index = cluster id, as
-    everywhere in the IVF API); probe with it exactly as before. Callers:
-    ``ivf_recluster_split(spark, path, cents)`` after appends, or pass
-    ``clusters=`` explicitly when the ``ivf_append`` return already
-    identified the hot lists."""
-    from ferc_xbrl_extractor_spark.operators.clustering import (
-        centroids_float,
-        kmeans_train,
-    )
-
-    if clusters is None:
-        clusters = ivf_lists_to_split(ivf_cluster_counts(path), factor)
-    cents = [list(c) for c in unit_centroids]
-    if not clusters:
-        return cents
-
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for c in sorted(clusters):
-            # materialize the list off its files before the overwrite:
-            # the rewrite reads and replaces the SAME partition, and a
-            # lazy plan would race its own commit. Bounded by the one
-            # overfull list, never the index.
-            part = spark.read.parquet(
-                f"{path}/__cluster={c}"
-            ).localCheckpoint(eager=True)
-            sub_int = kmeans_train(
-                part, vec_col="__nvec", id_col=id_col, k=split_into,
-                iters=iters, scale=scale,
-            )
-            sub_unit = unit_centroids_from_rows(centroids_float(sub_int, scale))
-            new_ids = [c] + [len(cents) + j for j in range(split_into - 1)]
-            id_map = F.array(*[F.lit(int(i)) for i in new_ids])
-            reassigned = part.withColumn(
-                "__cluster",
-                F.element_at(
-                    id_map, ivf_assign(F.col("__nvec"), sub_unit) + 1
-                ),
-            )
-            (
-                reassigned.write.mode("overwrite")
-                .partitionBy("__cluster")
-                .parquet(path)
-            )
-            cents[c] = sub_unit[0]
-            cents.extend(sub_unit[1:])
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
-    spark.catalog.refreshByPath(path)
-    return cents
-
-
-def ivf_read_probed(spark, path: str, clusters: list[int]) -> DataFrame:
-    """Read only the probed inverted lists from a persisted IVF index; the
-    ``__cluster`` filter lands in the scan's PartitionFilters (pinned in
-    tests/test_plans.py), never touching unprobed files."""
-    from pyspark.sql import functions as _F
-
-    return spark.read.parquet(path).filter(_F.col("__cluster").isin(clusters))
-
-
-def _dot_literal(vec_col: Column, coeffs: list[float]) -> Column:
-    """Σ vec[i]·coeffs[i] as a branch-free literal projection, summed
-    sequentially from 0.0 so the float result is bitwise-identical to a
-    left-fold (Spark ``aggregate``) and to DuckDB ``list_inner_product``
-    over the same values."""
-    proj = F.lit(0.0)
-    for i, cf in enumerate(coeffs):
-        proj = proj + vec_col[i].cast("double") * F.lit(float(cf))
-    return proj
-
-
 def ivf_assign(nvec_col: Column, unit_centroids: list[list[float]]) -> Column:
     """Coarse-quantizer assignment against a *supplied* centroid set,
     compiled into the projection: argmax_i dot(v, c_i), ties to the lowest
@@ -679,41 +503,6 @@ def semantic_pairs(
         .filter(F.col("__sim") >= threshold)
         .select("id_a", "id_b", F.round("__sim", 4).alias("sim"))
     )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    unit_centroids: list[list[float]],
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    survivor: str = "components",
-) -> DataFrame:
-    """Semantic corpus dedup over the within-cluster cosine pair graph.
-    The corpus is never shuffled; losers anti-join against the scan.
-
-    Two survivor policies, both used by real pipelines:
-
-    - ``"components"`` — transitive: one survivor (min id) per connected
-      component, via the G2b iterative min-label propagation. Stronger
-      dedup (A≈B, B≈C ⇒ keep one of three), but pays ~2 jobs per
-      propagation round.
-    - ``"greedy"`` — drop every doc that has ANY lower-id neighbor above
-      threshold (the G23/G24 increment rule): one distinct + one anti
-      join, no iteration — the cheap scale path. Non-transitive: in the
-      component {1–3, 2–3} it keeps 1 AND 2 (3 suppressed both), where
-      components keeps only 1.
-
-    (SemDeDup's own survivor rule — keep the member farthest from the
-    centroid — is a one-line ``max_by`` swap on either policy; ids are
-    used here for cross-engine determinism.)"""
-    pairs = semantic_pairs(df, unit_centroids, threshold, id_col, vec_col)
-    if survivor == "greedy":
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        return df.join(losers, id_col, "left_anti")
-    from .neardup import dedup_by_pairs
-
-    return dedup_by_pairs(df, pairs, id_col=id_col)
 
 
 def quantize_int8(

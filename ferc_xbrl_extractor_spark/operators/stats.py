@@ -83,12 +83,3 @@ def consumed_keys_for_tables(facts: DataFrame, specs) -> DataFrame:
         .select(*FACT_KEY)
         .distinct()
     )
-
-
-def rows_all_null(df: DataFrame, data_columns: list[str]) -> DataFrame:
-    """A7 violation query: rows with every data column null."""
-    pred = F.lit(True)
-    for c in data_columns:
-        pred = pred & F.col(c).isNull()
-    return df.filter(pred)
-

@@ -2036,24 +2036,3 @@ def host_edges(
         .select(F.col(id_col), F.col("__src").alias("src_host"), dst.alias("dst_host"))
         .filter((F.col("src_host") != "") & (F.col("dst_host") != ""))
     )
-
-
-def ip_to_long(ip_col: str | Column) -> Column:
-    """G111 companion: dotted-quad IPv4 text → uint32 long (the
-    ``key_col`` :func:`~ferc_xbrl_extractor_spark.operators.joins.
-    lpm_join` consumes), NULL for anything that is not four octets in
-    [0, 255]. Pure split/cast arithmetic — map-side, no UDF; the SQL
-    replay is the same split expression."""
-    col = F.col(ip_col) if isinstance(ip_col, str) else ip_col
-    parts = F.split(col, r"\.")
-    oct_ok = F.forall(
-        parts, lambda p: p.rlike("^[0-9]{1,3}$") & (p.cast("long") <= 255)
-    )
-    valid = (F.size(parts) == 4) & oct_ok
-    val = (
-        F.element_at(parts, 1).cast("long") * F.lit(16777216)
-        + F.element_at(parts, 2).cast("long") * F.lit(65536)
-        + F.element_at(parts, 3).cast("long") * F.lit(256)
-        + F.element_at(parts, 4).cast("long")
-    )
-    return F.when(valid, val)

@@ -1,6 +1,5 @@
-"""Extract lifecycle + sinks + incremental table maintenance."""
+"""Extract lifecycle + sinks."""
 
 from ferc_xbrl_extractor_spark.pipeline.extract import ExtractResult, extract
-from ferc_xbrl_extractor_spark.pipeline.upsert import merge_latest, upsert_parquet
 
-__all__ = ["extract", "ExtractResult", "merge_latest", "upsert_parquet"]
+__all__ = ["extract", "ExtractResult"]

@@ -63,8 +63,8 @@ def _dir_has_unbucketed_files(index_dir: str) -> bool:
     HOLDS the bucketed catalog table would then fail its bucketed scan
     with 'Invalid bucket file' at execution time. Detecting the plain
     file up front lets that session degrade to the plain-parquet read
-    (same rows, one keyed exchange more) until ``index_compact``
-    restores the layout. Local-FS listing; non-local paths skip the
+    (same rows, one keyed exchange more) until ``index_init`` rewrites
+    the index. Local-FS listing; non-local paths skip the
     check (returns False) and keep the catalog read."""
     import os
     import re
@@ -83,7 +83,7 @@ def _dir_has_unbucketed_files(index_dir: str) -> bool:
 # Directories whose layout this session has verified clean (no foreign
 # plain-parquet files): the os.walk in _dir_has_unbucketed_files is
 # O(#files) local-FS work and the verdict only changes when files are
-# added — this session's own appends/compacts invalidate below; a
+# added — this session's own appends invalidate below; a
 # CONCURRENT foreign append mid-session was always a point-in-time race
 # (the walk sees whatever exists when it runs) and stays one.
 _CLEAN_LAYOUT_DIRS: set[str] = set()
@@ -122,9 +122,8 @@ def index_init(
     Layout: hive-partitioned by fingerprint prefix (probe-side partition
     pruning) AND bucketed+sorted on ``fp`` within each partition (the
     digest-bucketed trade — see ``operators.dedup.write_digest_bucketed``):
-    the keyed exchange is paid here once, so :func:`index_compact` and any
-    other fp-keyed maintenance over the index runs with ZERO index-side
-    Exchange (pinned in tests/test_incremental.py)."""
+    the keyed exchange is paid here once, so fp-keyed work over the index
+    runs with ZERO index-side Exchange."""
     fps = fingerprint(docs, text_col).select("fp").distinct()
     name = _index_table(index_dir)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -239,7 +238,7 @@ def incremental_dedup(
             # index created by another session: the catalog entry (and
             # with it the bucket metadata) is gone — append plain
             # partitioned parquet; rows stay correct, a later
-            # index_init/index_compact restores the bucketed layout
+            # index_init restores the bucketed layout
             append.write.mode("append").partitionBy(PREFIX_COL).parquet(
                 index_dir
             )
@@ -249,53 +248,6 @@ def incremental_dedup(
         n_batch_dups=None if n_batch is None else n_batch - n_surv,
         n_historical_dups=None if n_surv is None else n_surv - n_fresh,
     )
-
-
-def index_compact_plan(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The dedup relation :func:`index_compact` rewrites from: distinct
-    fingerprints over the index scan. Over the bucketed layout this is
-    ZERO-Exchange (the scan's bucket clustering already satisfies the
-    aggregate — pinned in tests/test_incremental.py); exposed separately
-    so the plan is inspectable without executing the rewrite."""
-    return _read_index(spark, index_dir).select("fp").distinct()
-
-
-def index_compact(spark: SparkSession, index_dir: str) -> int:
-    """Rewrite the fingerprint index after many appends: collapse any
-    duplicate fingerprints (concurrent writers) and the per-append small
-    files back into one bucketed file set.
-
-    The read side is :func:`index_compact_plan` — exchange-free over the
-    bucketed layout, which is exactly what the layout was bought for:
-    init/appends pay the keyed shuffle once, every maintenance rebuild
-    reads pre-clustered. The deduped set stages through a sibling
-    directory (disk, not executor storage — at 100 TB the fp set is
-    hundreds of GB) and is rewritten through the same bucketed writer as
-    :func:`index_init`, restoring the layout even after plain fallback
-    appends. Returns the distinct-fingerprint count."""
-    import shutil
-
-    # infer the prefix length from the data (must match across appends)
-    first = _read_index(spark, index_dir).select(PREFIX_COL).first()
-    prefix_len = len(first[0]) if first else 2
-    tmp = index_dir.rstrip("/") + "__compact"
-    index_compact_plan(spark, index_dir).write.mode("overwrite").parquet(tmp)
-    fps = spark.read.parquet(tmp)
-    name = _index_table(index_dir)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    (
-        _with_prefix(fps, prefix_len)
-        .write.mode("overwrite")
-        .partitionBy(PREFIX_COL)
-        .bucketBy(INDEX_BUCKETS, "fp")
-        .sortBy("fp")
-        .option("path", index_dir)
-        .saveAsTable(name)
-    )
-    n = spark.table(name).count()
-    shutil.rmtree(tmp, ignore_errors=True)
-    _CLEAN_LAYOUT_DIRS.discard(index_dir)  # layout rewritten: re-verify
-    return n
 
 
 # ---------------------------------------------------------------------------

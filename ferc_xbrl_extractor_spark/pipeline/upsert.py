@@ -1,48 +1,18 @@
-"""Incremental upsert: merge a batch of re-filed/updated rows into a table.
+"""Incremental upsert: keep the newest version of each key.
 
 The reference rebuilds every output table from scratch on each run
 (ref:cli.py:113-127 ``if_exists="replace"``); re-filed FERC filings are
-simply newer rows that downstream consumers dedup by publication_time. At
-100 TB a full rebuild per increment is untenable, so this module provides
-MERGE-style semantics as plain DataFrame algebra plus a
-partition-pruned physical apply:
-
-- :func:`merge_latest` — pure dataflow: union existing+updates, keep the
-  newest version of each key with ONE ``max_by`` hash aggregate (map-side
-  combinable; no window sort, no join).
-- :func:`upsert_parquet` — physical increment: only partitions touched by
-  the updates batch are read (partition-pruned via an ``isin`` on the
-  update batch's partition values) and rewritten (dynamic partition
-  overwrite). Untouched partitions are never opened — the cost scales
-  with the increment, not the table.
+simply newer rows that downstream consumers dedup by publication_time.
+:func:`merge_latest_unioned` gives MERGE-style semantics as plain
+DataFrame algebra: over existing and updated rows in one relation, keep
+the newest version of each key with ONE ``max_by`` hash aggregate
+(map-side combinable; no window sort, no join).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def merge_latest(
-    existing: DataFrame,
-    updates: DataFrame,
-    keys: list[str],
-    order_col: str,
-    tiebreak: list[str] | None = None,
-) -> DataFrame:
-    """Upsert semantics as one aggregate: per key, the row with the
-    greatest ``(order_col, *tiebreak)`` wins; keys present only in
-    ``updates`` are inserts, keys only in ``existing`` pass through.
-
-    ``max_by(struct(cols), struct(order, tiebreak))`` gives a single
-    two-phase hash aggregate whose shuffle carries |keys| rows — the same
-    survivor-selection shape as dedup_exact_keep (operators/dedup.py),
-    which round 3 measured 5x faster than the window formulation.
-    Columns missing on either side are null-filled (schema evolution on
-    append, SURVEY.md §1.2).
-    """
-    both = existing.unionByName(updates, allowMissingColumns=True)
-    return merge_latest_unioned(both, keys, order_col, tiebreak=tiebreak)
 
 
 def merge_latest_unioned(
@@ -51,14 +21,18 @@ def merge_latest_unioned(
     order_col: str,
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
-    """The survivor-selection aggregate of :func:`merge_latest`, exposed on
-    an already-combined relation. Callers that can produce base+updates
-    rows from ONE scan (e.g. an in-place explode of conditional update
-    structs, or a CDC log that already interleaves versions) should use
-    this directly: ``merge_latest``'s union reads each side's source
-    separately, so a fixture deriving updates from the base table scans it
-    once per branch — this entry point keeps it to a single scan feeding a
-    single map-side-combinable ``max_by`` aggregate."""
+    """Upsert semantics as one aggregate over base and update rows already
+    combined in ``both``: per key, the row with the greatest
+    ``(order_col, *tiebreak)`` wins; keys present only in the updates are
+    inserts, keys only in the base pass through.
+
+    ``max_by(struct(cols), struct(order, tiebreak))`` gives a single
+    two-phase hash aggregate whose shuffle carries |keys| rows — the same
+    survivor-selection shape as dedup_exact_keep (operators/dedup.py),
+    which round 3 measured 5x faster than the window formulation. Taking
+    the rows already combined lets a caller produce base and updates from
+    ONE scan (e.g. an in-place explode of conditional update structs, or
+    a CDC log that already interleaves versions)."""
     payload = [c for c in both.columns if c not in keys]
     order = F.struct(
         F.col(order_col), *[F.col(c) for c in (tiebreak or []) if c != order_col]
@@ -67,56 +41,3 @@ def merge_latest_unioned(
         F.max_by(F.struct(*[F.col(c) for c in payload]), order).alias("_row")
     )
     return merged.select(*keys, *[F.col(f"_row.{c}").alias(c) for c in payload])
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    table_dir: str,
-    updates: DataFrame,
-    keys: list[str],
-    order_col: str,
-    partition_col: str,
-    tiebreak: list[str] | None = None,
-) -> list:
-    """Apply an updates batch to a hive-partitioned parquet table, reading
-    and rewriting ONLY the partitions the batch touches.
-
-    Returns the touched partition values. The updates batch is assumed
-    small relative to the table (an increment); its distinct partition
-    values are collected driver-side (bounded by the partition count, not
-    the row count) and pushed into the existing-side scan as an ``isin``
-    partition filter — Catalyst prunes every other partition at listing
-    time, so the job's input is just the affected slices.
-
-    CONTRACT — the partition column must be STABLE under updates: a key's
-    partition value may never change between versions. An update that
-    moves ``k`` from partition A to B, with A absent from the batch,
-    would leave the stale A-row in place (A is pruned, B is merged) and
-    the table would hold ``k`` twice. This is the standard
-    dynamic-partition-overwrite MERGE precondition (detecting a move
-    would require scanning every partition, defeating the pruning); keys
-    whose partition can evolve need a key→partition index, which is out
-    of scope here. Partition by something derived from the key (or an
-    immutable attribute) and this cannot occur.
-    """
-    if partition_col not in updates.columns:
-        raise ValueError(f"updates missing partition column {partition_col!r}")
-    touched = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    if not touched:
-        return []
-    existing = (
-        spark.read.parquet(table_dir)
-        .filter(F.col(partition_col).isin(touched))
-    )
-    merged = merge_latest(existing, updates, keys, order_col, tiebreak=tiebreak)
-    # Dynamic overwrite replaces only the partitions present in `merged`
-    # (== the touched set); every other partition's files are untouched.
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(table_dir)
-    )
-    return touched

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ferc_xbrl_extractor_spark.operators.sqltext import bq
+
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
@@ -47,19 +49,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def register_star(spark: SparkSession, sf_dir: str, suffix: str = "") -> list[str]:
-    """Register every star-schema table as a temp view (ns-repaired,
-    re-parallelized via ``load_table``) so callers can drive the engine
-    through plain ``spark.sql`` — the declarative surface Catalyst
-    optimizes end-to-end. Returns the view names registered."""
-    names = []
-    for name in TABLES:
-        view = f"{name}{suffix}"
-        load_table(spark, sf_dir, name).createOrReplaceTempView(view)
-        names.append(view)
-    return names
 
 
 def load_table(
@@ -138,5 +127,5 @@ def load_table(
     ) and row_groups < cpus // 2:
         df = df.repartition(cpus)
     for c in nano_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+        df = df.withColumn(c, F.expr(f"timestamp_micros({bq(c)} div 1000)"))
     return df

@@ -6,8 +6,7 @@ as data arrives instead of discovering a bad crawl batch at training time.
 The batch and streaming forms share the SAME compiled expressions
 (``Check.metric`` aggregates + ``report_structs`` unpivot), so a suite
 validated batch-side against the DuckDB oracle monitors the stream
-unchanged — the identity ``streaming/windows.py`` establishes for the G8
-window operators, extended to quality constraints.
+unchanged.
 
 Scale shape: one watermark-bounded windowed aggregation (state = one wide
 row per open window), then a stateless explode into the tidy report —

@@ -158,49 +158,6 @@ def stream_asof_enrich(
     )
 
 
-def stream_curate(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 10,
-    max_stopword_ratio: float = 0.5,
-    min_uniq_ratio: float = 0.0,
-) -> DataFrame:
-    """Streaming corpus curation: the G16 pipeline's always-on form for
-    continuously-arriving documents (crawl output, log ingestion).
-
-    Quality filtering is stateless column pruning on the microbatch
-    (identical expressions to the batch path — same G4 stats); exact
-    dedup is the stateful part: a whitespace-normalized md5 fingerprint
-    keys ``stream_dedup_first``'s one-boolean-per-key state, so the first
-    arrival of any text survives and every later duplicate is suppressed
-    across microbatches. State is O(distinct fingerprints) booleans —
-    bound it in production with watermark-based state TTL if the
-    dedup horizon is finite.
-
-    Output: ``(id, fingerprint, text)`` of surviving documents, in
-    arrival order per fingerprint.
-    """
-    from ferc_xbrl_extractor_spark.operators import text as text_ops
-
-    stats = text_ops.with_text_stats(docs, text_col)
-    quality = stats.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("stopword_ratio") <= max_stopword_ratio)
-        & (F.col("uniq_ratio") >= min_uniq_ratio)
-    )
-    fingered = text_ops.fingerprint(quality, text_col, out_col="fp").withColumn(
-        "__tb", F.col(id_col)
-    )
-    return stream_dedup_first(
-        fingered,
-        key_cols=["fp"],
-        ts_col=id_col,
-        tiebreak_col="__tb",
-        payload_cols=[text_col],
-    ).select(F.col(id_col), "fp", F.col(text_col))
-
-
 def stream_neardup_suppress(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -285,94 +242,6 @@ def stream_neardup_suppress(
 
     return keyed.groupBy("__bucket").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def stream_dedup_ttl(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    tiebreak_col: str,
-    payload_cols: list[str],
-    ttl_ms: int,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """G56: keep-first dedup with an EVENT-TIME TTL — ``stream_dedup_first``
-    whose per-key suppression EXPIRES once the key goes quiet for more
-    than ``ttl_ms`` of event time. The production form of streaming
-    dedup: unbounded keep-first state grows with every distinct key ever
-    seen (the #1 streaming state footgun at 100 TB/day); a TTL bounds
-    live state to the keys active inside one TTL window, at the cost of
-    re-emitting a key that falls silent for longer than the TTL (exact
-    dedup within any active window, at-least-once across windows —
-    downstream MERGE-latest/G20b absorbs the re-emits idempotently).
-
-    Semantics are DETERMINISTIC in event time, independent of microbatch
-    boundaries: per key, rows are processed in (ts, tiebreak) order and a
-    row is emitted iff it is the first ever observed or its gap from the
-    immediately preceding observation exceeds ``ttl_ms`` (sliding expiry
-    — every observation renews the window, so a hot key stays suppressed
-    forever at O(1) state). Intra-batch gaps count: two arrivals
-    ``ttl_ms`` apart land identically whether they share a microbatch or
-    not.
-
-    State eviction: ``GroupStateTimeout.EventTimeTimeout`` — the timer is
-    armed at ``last_seen + ttl_ms``, so the store drops a key exactly
-    when the watermark proves every future on-time row would re-emit
-    anyway (gap > ttl); eviction is therefore semantically invisible for
-    rows inside the watermark. (``ProcessingTimeTimeout`` dies in this
-    Spark build's planner — internal NPE in the streaming timeout path —
-    and is nondeterministic besides.) Rows later than the watermark
-    follow the standard late-data caveat: after eviction a sub-watermark
-    straggler re-emits where live state would have suppressed it. A
-    straggler older than its key's last observation is suppressed
-    (negative gap <= ttl). ``ts_col`` must be non-null.
-
-    Output columns: ``key_cols + [ts_col, tiebreak_col] + payload_cols``.
-    """
-    out_fields = [events.schema[c] for c in (*key_cols, ts_col, tiebreak_col)]
-    out_fields += [events.schema[c] for c in payload_cols]
-    out_schema = T.StructType(out_fields)
-    state_schema = T.StructType([T.StructField("last_ms", T.LongType())])
-    order = [ts_col, tiebreak_col]
-    cols = [f.name for f in out_fields]
-
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        ts_ms = pdf[ts_col].astype("datetime64[ms]").astype("int64")
-        prev = ts_ms.shift(1)
-        if state.exists:
-            prev.iloc[0] = float(state.get[0])
-            emit = (ts_ms - prev) > ttl_ms
-        else:
-            emit = prev.isna() | ((ts_ms - prev) > ttl_ms)
-        last_ms = int(ts_ms.iloc[-1])
-        state.update((last_ms,))
-        # timer must land strictly past the current watermark
-        state.setTimeoutTimestamp(
-            max(last_ms + ttl_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        out = pdf[emit.to_numpy()][cols]
-        if len(out):
-            yield out
-
-    return (
-        events.select(*cols)
-        .withWatermark(ts_col, watermark)
-        .groupBy(*key_cols)
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
     )
 
 
@@ -684,149 +553,4 @@ def stream_funnel(
 
     return src.groupBy("__u").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def stream_assemble_dialogues(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    role_col: str = "role",
-    text_col: str = "text",
-    gap_ms: int = 30 * 60 * 1000,
-    sep: str = "\n",
-    watermark: str = "10 minutes",
-    max_turns_per_session: int = 10_000,
-) -> DataFrame:
-    """G109: STREAMING dialogue/session assembly — the
-    ``packing.assemble_dialogues`` (G103) reduction as a stateful
-    stream: raw interaction events become one ordered transcript per
-    conversation AS SESSIONS CLOSE, instead of in a nightly batch —
-    the continuous-SFT-feed form (support transcripts, agent traces
-    landing in a queue, chat exports).
-
-    Semantics match the batch operator's PROBED boundary rule: an event
-    landing at exactly ``last + gap`` still merges; only a strictly
-    larger gap starts a new conversation. Turn order inside a
-    transcript is the same TOTAL order (ts, role, text) — out-of-order
-    arrivals WITHIN an open session slot into place regardless of which
-    microbatch delivered them; NULL role/text render as empty strings
-    (the slot is kept). A session is emitted when (a) a later event of
-    the same user proves the gap, in whichever microbatch that
-    arrives, or (b) the event-time watermark passes ``last + gap``
-    (``GroupStateTimeout.EventTimeTimeout`` — quiet users flush
-    without needing another event).
-
-    Batch/stream divergence contract (pytest-pinned): equal to G103 on
-    any input whose cross-batch stragglers stay inside their session's
-    open window; a straggler arriving AFTER its session was emitted
-    (past the watermark) starts a fresh conversation instead of
-    retroactively merging two emitted ones — the standard streaming
-    late-data caveat, and why ``watermark`` should cover the real
-    arrival skew. No SQL oracle (timer-state class, like G56): the
-    cross-engine pin is the batch operator's oracle plus the
-    equivalence test.
-
-    State per user: the OPEN session only — three parallel arrays
-    bounded by ``max_turns_per_session`` (oldest turns beyond the cap
-    are dropped with the count preserved in ``n_turns``, so a runaway
-    bot session bounds memory but stays visible); closed sessions
-    leave the store immediately. Events shuffle once on the user key.
-
-    Output per closed session: ``(user_col, started_at, n_turns,
-    transcript)`` — the batch operator's exact schema.
-    """
-    if gap_ms <= 0:
-        raise ValueError(f"gap_ms must be > 0, got {gap_ms}")
-    if max_turns_per_session < 1:
-        raise ValueError(
-            f"max_turns_per_session must be >= 1, got {max_turns_per_session}"
-        )
-    out_schema = T.StructType(
-        [
-            events.schema[user_col],
-            T.StructField("started_at", T.TimestampType()),
-            T.StructField("n_turns", T.LongType()),
-            T.StructField("transcript", T.StringType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.ArrayType(T.LongType())),
-            T.StructField("roles", T.ArrayType(T.StringType())),
-            T.StructField("texts", T.ArrayType(T.StringType())),
-            T.StructField("n_seen", T.LongType()),
-        ]
-    )
-    gap_us = int(gap_ms) * 1000
-
-    def _assemble(user, ts_us, roles, texts, n_seen):
-        turns = sorted(zip(ts_us, roles, texts))
-        return {
-            user_col: user,
-            "started_at": pd.to_datetime(turns[0][0], unit="us"),
-            "n_turns": int(n_seen),
-            "transcript": sep.join(f"{r}: {x}" for _, r, x in turns),
-        }
-
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user = key[0]
-        if state.hasTimedOut:
-            if state.exists:
-                ts_us, roles, texts, n_seen = state.get
-                yield pd.DataFrame(
-                    [_assemble(user, ts_us, roles, texts, n_seen)]
-                )
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(
-            [ts_col, role_col, text_col], kind="mergesort"
-        ).reset_index(drop=True)
-        if state.exists:
-            ts_us, roles, texts, n_seen = state.get
-            ts_us, roles, texts = list(ts_us), list(roles), list(texts)
-            n_seen = int(n_seen)
-        else:
-            ts_us, roles, texts, n_seen = [], [], [], 0
-        last = max(ts_us) if ts_us else None
-        closed = []
-        ev_us = pdf[ts_col].astype("datetime64[us]").astype("int64")
-        ev_role = pdf[role_col].astype(object)
-        ev_text = pdf[text_col].astype(object)
-        for t, r, x in zip(ev_us, ev_role, ev_text):
-            t = int(t)
-            if last is not None and t > last + gap_us:
-                closed.append(_assemble(user, ts_us, roles, texts, n_seen))
-                ts_us, roles, texts, n_seen = [], [], [], 0
-                last = None
-            ts_us.append(t)
-            roles.append("" if r is None or r is pd.NA else str(r))
-            texts.append("" if x is None or x is pd.NA else str(x))
-            n_seen += 1
-            if len(ts_us) > max_turns_per_session:
-                # drop the OLDEST turn by the total order; count stays
-                drop = min(range(len(ts_us)), key=lambda i: (ts_us[i], roles[i], texts[i]))
-                del ts_us[drop], roles[drop], texts[drop]
-            last = t if last is None else max(last, t)
-        state.update((ts_us, roles, texts, n_seen))
-        state.setTimeoutTimestamp(
-            max(last // 1000 + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        if closed:
-            yield pd.DataFrame(closed)
-
-    return (
-        events.select(user_col, ts_col, role_col, text_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
     )

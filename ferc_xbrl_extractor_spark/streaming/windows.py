@@ -1,95 +1,14 @@
-"""Structured Streaming surface (SURVEY.md §2.9 gap — the reference has no
-streaming; this is the engine's G8 operators lifted to unbounded input).
+"""Drain a streaming frame into the in-memory sink.
 
-The batch operators in ``operators.analytics`` are already expressed as
-event-time groupings (``F.window`` / ``F.session_window``), so the
-streaming versions reuse the *same* expressions — the only streaming-
-specific concerns are the watermark (bounding state for late data) and the
-output mode. That identity is the point: a pipeline validated batch-side
-against the DuckDB oracle runs unchanged under ``readStream``.
-
-At scale: state lives in the state store keyed by (window, group); the
-watermark bounds it. Tumbling/sliding windows shuffle once on the group
-key; session windows additionally merge adjacent state — both are Spark's
-native stateful operators, no custom state handling needed.
+The streaming operators in this package (``stateful``, ``quality``,
+``ingest``) return streaming DataFrames; :func:`run_stream_to_memory`
+runs one to completion (``availableNow``) so a query or a test can read
+its result back as a table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def stream_tumbling_counts(
-    events: DataFrame,
-    ts_col: str,
-    duration: str,
-    group_cols: list[str],
-    aggs: list[Column] | None = None,
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Tumbling (or, with ``slide``, sliding) event-time aggregation over a
-    streaming DataFrame.
-
-    ``events`` comes from ``spark.readStream`` (or a batch frame — the plan
-    is identical minus the watermark node, which batch mode ignores).
-    """
-    aggs = aggs or [F.count(F.lit(1)).alias("n")]
-    w = F.window(F.col(ts_col), duration, slide) if slide else F.window(
-        F.col(ts_col), duration
-    )
-    out = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(w.alias("w"), *group_cols)
-        .agg(*aggs)
-    )
-    rest = [c for c in out.columns if c != "w"]
-    return out.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *rest,
-    )
-
-
-def stream_sliding_counts(
-    events: DataFrame,
-    ts_col: str,
-    duration: str,
-    slide: str,
-    group_cols: list[str],
-    aggs: list[Column] | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Sliding (hopping) event-time aggregation on a stream: each event
-    contributes to duration/slide overlapping windows; state per (window,
-    group) is bounded by the watermark exactly as for tumbling windows."""
-    return stream_tumbling_counts(
-        events, ts_col, duration, group_cols, aggs, watermark, slide=slide
-    )
-
-
-def stream_session_counts(
-    events: DataFrame,
-    ts_col: str,
-    gap: str,
-    group_cols: list[str],
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Session windows on a stream: state merges adjacent events within
-    ``gap``; the watermark closes (finalizes) sessions once event time
-    passes session end + watermark."""
-    out = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), *group_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    rest = [c for c in out.columns if c != "w"]
-    return out.select(
-        F.col("w.start").alias("session_start"),
-        F.col("w.end").alias("session_end"),
-        *rest,
-    )
+from pyspark.sql import DataFrame
 
 
 def run_stream_to_memory(

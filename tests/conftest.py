@@ -9,9 +9,18 @@ a report_date fact, plus — beyond the reference fixture — duplicate facts
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from ferc_xbrl_extractor_spark.session import get_spark
+
+# The sf0.001 star-schema tables (TESTDATA.md). Tests that read them carry
+# ``needs_sf0001`` and skip where the fixture is absent.
+SF0001 = "/root/testdata/sf0.001"
+needs_sf0001 = pytest.mark.skipif(
+    not os.path.isdir(SF0001), reason=f"star-schema fixture {SF0001} is absent"
+)
 
 
 @pytest.fixture(scope="session")

@@ -5,7 +5,6 @@ import pytest
 from ferc_xbrl_extractor_spark.operators.dedup import (
     dedup_exact,
     fuzzy_dedup,
-    fuzzy_dedup_strict,
 )
 
 
@@ -47,13 +46,6 @@ def test_fuzzy_string_conflict_is_error(spark):
     res = fuzzy_dedup(df, ["c_id", "name"])
     assert res.resolved.count() == 0
     assert res.errors.count() == 1
-
-
-@pytest.mark.slow
-def test_fuzzy_strict_raises(spark):
-    df = _df(spark, [("a", "job", "accountant"), ("a", "job", "pringle")])
-    with pytest.raises(ValueError, match="has values"):
-        fuzzy_dedup_strict(df, ["c_id", "name"])
 
 
 def test_exact_dedup_before_fuzzy(spark):

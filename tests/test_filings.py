@@ -1,4 +1,5 @@
-"""Filing scans (S1/S2/S5/F7): zip explode, rssfeed sidecar, name filter."""
+"""Sources: filing scans (S1/S2/S5/F7: zip explode, rssfeed sidecar, name
+filter), WARC I/O and the star-table loader."""
 
 from __future__ import annotations
 
@@ -79,21 +80,6 @@ def test_multi_path_scan(spark, tmp_path):
     (d2 / "two.xbrl").write_bytes(FILING_B)
     rows = scan_filings(spark, [str(d1), str(d2)]).collect()
     assert {r["filing_name"] for r in rows} == {"one", "two"}
-
-
-def test_register_star_sql_surface(spark):
-    from ferc_xbrl_extractor_spark.sources.star import register_star
-
-    views = register_star(spark, "/root/testdata/sf0.001", suffix="_t")
-    assert len(views) == 10
-    # events goes through the nanos repair; a SQL join across views works
-    n = spark.sql(
-        "SELECT count(*) AS n FROM lineitem_t l JOIN orders_t o "
-        "ON l.l_orderkey = o.o_orderkey"
-    ).first()["n"]
-    assert n > 0
-    ts = spark.sql("SELECT max(ts) AS m FROM events_t").first()["m"]
-    assert ts is not None
 
 
 def test_warc_writer_cluster_contract(spark, tmp_path):
@@ -190,3 +176,31 @@ def test_warc_roundtrip_and_corruption(spark, tmp_path):
     after = scan_warc(spark, d)
     assert after.count() == 46
     assert after.filter(F.col("target_uri") == "https://ok").count() == 1
+
+
+def test_load_table_repairs_nanos_column_with_backtick_in_name(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column is rebuilt as microsecond timestamps with
+    the same instants, whatever its name holds (here a backtick)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampType
+
+    from ferc_xbrl_extractor_spark.operators.sqltext import raw_col
+    from ferc_xbrl_extractor_spark.sources.star import NANOS_CONF, load_table
+
+    ns = [1_700_000_000_123_456_789, 1_000_999, None]
+    table = pa.table({"id": [1, 2, 3], "ev`ts": pa.array(ns, pa.timestamp("ns"))})
+    pq.write_table(table, str(tmp_path / "ev.parquet"), version="2.6")
+    prev = spark.conf.get(NANOS_CONF, None)
+    try:
+        df = load_table(spark, str(tmp_path), "ev")
+        assert df.schema["ev`ts"].dataType == TimestampType()
+        us = F.unix_micros(raw_col("ev`ts")).alias("us")
+        got = [r["us"] for r in df.orderBy("id").select(us).collect()]
+    finally:
+        if prev is None:
+            spark.conf.unset(NANOS_CONF)
+        else:
+            spark.conf.set(NANOS_CONF, prev)
+    assert got == [1_700_000_000_123_456, 1_000, None]

@@ -12,6 +12,8 @@ from ferc_xbrl_extractor_spark.operators import (
     text,
 )
 
+from conftest import SF0001, needs_sf0001
+
 
 @pytest.fixture()
 def docs(spark):
@@ -113,8 +115,9 @@ def test_embedding_neardup_bucketed_finds_identicals(spark):
 
 
 @pytest.mark.slow
+@needs_sf0001
 def test_ivf_topk_recall_vs_brute_force(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 10)
     exact = {
         (r["query_id"], r["neighbor_id"])
@@ -252,8 +255,8 @@ def test_multimodal_stub_raises_without_codec(spark):
 )
 def test_multimodal_real_decode_when_pillow_present(spark):
     """When the environment grows Pillow, decode_stub=False must run a
-    REAL decode/resize through the identical mapInPandas plumbing: a
-    2x2 PNG resizes to 8x8 PNG bytes and features come from pixels."""
+    REAL decode through the identical mapInPandas plumbing: features of
+    a 2x2 PNG come from pixels."""
     import io
 
     img = multimodal._PILImage.new("RGB", (2, 2), (255, 0, 0))
@@ -268,9 +271,6 @@ def test_multimodal_real_decode_when_pillow_present(spark):
         "image",
         "image/png",
     )
-    out = multimodal.resize_images(media, 8, 8, decode_stub=False).first()
-    resized = multimodal._PILImage.open(io.BytesIO(bytes(out["content"])))
-    assert resized.size == (8, 8) and out["meta"]["mime"] == "image/png"
     feat = multimodal.extract_features(media, dim=4, decode_stub=False).first()
     assert len(feat["feature"]) == 4
     assert all(-1.0 <= v < 1.0 for v in feat["feature"])
@@ -282,23 +282,6 @@ def test_multimodal_real_decode_when_pillow_present(spark):
     )
     nf = multimodal.extract_features(nulls, dim=4, decode_stub=False).first()
     assert nf["feature"] is None and nf["n_bytes"] == 0
-    nr = multimodal.resize_images(nulls, 8, 8, decode_stub=False).first()
-    assert nr["content"] is None
-
-
-def test_resize_images_plumbing(spark):
-    df = spark.createDataFrame(
-        [(1, b"x" * 500), (2, b"y" * 10), (3, None)], "doc_id long, bin binary"
-    )
-    media = multimodal.media_table_from_binary(df, "doc_id", "bin", "image", "image/png")
-    out = multimodal.resize_images(media, width=8, height=8).collect()
-    by_id = {r["media_id"]: r for r in out}
-    assert all(len(by_id[i]["content"]) == 64 for i in (1, 2, 3))
-    assert by_id[1]["meta"]["width"] == 8 and by_id[1]["meta"]["height"] == 8
-    assert by_id[1]["meta"]["mime"] == "image/png"
-    # deterministic: same input bytes -> same resized bytes
-    again = {r["media_id"]: r for r in multimodal.resize_images(media, 8, 8).collect()}
-    assert again[2]["content"] == by_id[2]["content"]
 
 
 def test_salted_agg_matches_plain_agg(spark):
@@ -556,8 +539,7 @@ def test_host_edges_and_ip_to_long(spark):
     """G113: crawl rows → host edges — absolute links take their own
     host (lowercased, port stripped), protocol-relative take the
     href's host, path-relative self-edge, non-web schemes dropped,
-    pages without a resolvable URL dropped. G111 companion: dotted-
-    quad parsing with NULL for malformed input."""
+    pages without a resolvable URL dropped."""
     from ferc_xbrl_extractor_spark.operators import text as text_ops
 
     rows = [
@@ -579,17 +561,6 @@ def test_host_edges_and_ip_to_long(spark):
         (1, "www.a.com", "c.org"),     # protocol-relative
         (1, "www.a.com", "www.a.com"), # path-relative self-edge
     ]
-
-    ips = spark.createDataFrame(
-        [("1.2.3.4",), ("255.255.255.255",), ("1.2.3.256",), ("1.2.3",),
-         ("a.b.c.d",), (None,)],
-        "ip string",
-    )
-    vals = [
-        r["v"]
-        for r in ips.select(text_ops.ip_to_long("ip").alias("v")).collect()
-    ]
-    assert vals == [16909060, 4294967295, None, None, None, None]
 
 
 @pytest.mark.slow
@@ -627,13 +598,6 @@ def test_multi_benchmark_decontamination(spark):
         (3, "b0"): 2,
         (3, "b1"): 2,
     }
-    survivors = {
-        r["doc_id"]
-        for r in neardup.decontaminate_multi(
-            corpus, {"b0": b0, "b1": b1}, n=3, min_overlap=2
-        ).collect()
-    }
-    assert survivors == {4}
 
     # single-benchmark identity with the G15 pair
     single = sorted(
@@ -979,6 +943,7 @@ def test_bm25_ranks_relevant_docs(spark):
     assert abs(got[1] - expected) < 1e-9
 
 
+@needs_sf0001
 def test_quantized_topk_close_to_exact(spark):
     from ferc_xbrl_extractor_spark.operators.similarity import (
         cosine_topk,
@@ -986,7 +951,7 @@ def test_quantized_topk_close_to_exact(spark):
     )
     from ferc_xbrl_extractor_spark.sources.star import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, SF0001, "embeddings")
     queries = emb.filter("vec_id < 5")
     exact = {
         (r["query_id"], r["neighbor_id"])
@@ -1357,8 +1322,8 @@ def test_weighted_sample_k_excludes_nonpositive_and_uses_topk_plan(spark):
 
 
 def test_semantic_dedup_blocks_by_cluster_and_keeps_min_id(spark):
+    from ferc_xbrl_extractor_spark.operators.neardup import dedup_by_pairs
     from ferc_xbrl_extractor_spark.operators.similarity import (
-        semantic_dedup,
         semantic_pairs,
         unit_centroids_from_rows,
     )
@@ -1380,14 +1345,12 @@ def test_semantic_dedup_blocks_by_cluster_and_keeps_min_id(spark):
         (7, [9.5, 10.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in semantic_pairs(df, cents, threshold=0.99).collect()
-    }
+    pairs_df = semantic_pairs(df, cents, threshold=0.99)
+    pairs = {(r["id_a"], r["id_b"]) for r in pairs_df.collect()}
     assert pairs == {(1, 2), (4, 5)}
     survivors = {
         r["vec_id"]
-        for r in semantic_dedup(df, cents, threshold=0.99).collect()
+        for r in dedup_by_pairs(df, pairs_df, id_col="vec_id").collect()
     }
     assert survivors == {1, 3, 4, 6, 7}
 
@@ -1514,36 +1477,6 @@ def test_curate_classifier_spans_encode_stages_compose(spark):
         assert 0 in ids                              # OOV present (vocab=6)
 
 
-def test_semantic_dedup_greedy_vs_components_policies(spark):
-    from ferc_xbrl_extractor_spark.operators.similarity import (
-        semantic_dedup,
-        unit_centroids_from_rows,
-    )
-
-    # One cluster; pair graph is {1-3, 2-3}: 3 is near both 1 and 2, but
-    # 1 and 2 are not near each other.
-    cents = unit_centroids_from_rows([[1.0, 0.0]])
-    rows = [
-        (1, [10.0, 1.0]),
-        (2, [10.0, -1.0]),
-        (3, [10.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # cos(1,3)=cos(2,3)~0.995; cos(1,2)~0.98 -> threshold between them
-    comp = {
-        r["vec_id"]
-        for r in semantic_dedup(df, cents, threshold=0.99).collect()
-    }
-    greedy = {
-        r["vec_id"]
-        for r in semantic_dedup(
-            df, cents, threshold=0.99, survivor="greedy"
-        ).collect()
-    }
-    assert comp == {1}            # transitive: one survivor per component
-    assert greedy == {1, 2}       # non-transitive: only 3 had a lower-id nbr
-
-
 def test_corpus_orc_roundtrip(spark, tmp_path):
     from ferc_xbrl_extractor_spark.sources import corpus
 
@@ -1627,126 +1560,6 @@ def test_split_by_hash_disjoint_exhaustive_stable(spark):
 
     with pytest.raises(ValueError):
         split_by_hash(df, {"a": 0.5, "b": 0.4})
-
-
-def _reference_bpe(word_counts, num_merges, min_pair_count=2):
-    """Sennrich-style reference: dict of word->count, greedy best-pair
-    merges with (count desc, pair asc) tie order."""
-    words = {w: list(w) for w in word_counts}
-    merges = []
-    for _ in range(num_merges):
-        pairs = {}
-        for w, syms in words.items():
-            for x, y in zip(syms, syms[1:]):
-                pairs[(x, y)] = pairs.get((x, y), 0) + word_counts[w]
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < min_pair_count:
-            break
-        (a, b), _n = best
-        merges.append((a, b))
-        for w, syms in words.items():
-            out = []
-            for x in syms:
-                if out and out[-1] == a and x == b:
-                    out[-1] = a + b
-                else:
-                    out.append(x)
-            words[w] = out
-    return merges, words
-
-
-def test_bpe_learn_matches_reference(spark):
-    from ferc_xbrl_extractor_spark.operators import vocab as V
-
-    corpus = [
-        (1, "low low low lower lowest"),
-        (2, "low newer newest newer"),
-        (3, "wider wide wide"),
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    counts = {}
-    for _, t in corpus:
-        for w in t.split():
-            counts[w] = counts.get(w, 0) + 1
-    ref_merges, ref_words = _reference_bpe(counts, 6)
-
-    merges, words = V.bpe_learn(df, 6)
-    assert merges == ref_merges
-    got = {r["word"]: list(r["symbols"]) for r in words.collect()}
-    assert got == ref_words
-
-    enc = V.bpe_encode_documents(df, words)
-    by_id = {r["doc_id"]: r["bpe_tokens"] for r in enc.collect()}
-    # doc 1 re-encodes as the concatenation of its words' segmentations
-    expect1 = [s for w in corpus[0][1].split() for s in ref_words[w]]
-    assert by_id[1] == expect1
-    # OOV words fall back to characters
-    oov = spark.createDataFrame([(9, "zag")], "doc_id long, text string")
-    assert V.bpe_encode_documents(oov, words).first()["bpe_tokens"] == [
-        "z", "a", "g"
-    ]
-
-
-def _reference_unigram(counts, vocab_size, seed_size, rounds,
-                       max_piece_len, shrink=0.75):
-    """Serial unigram-LM reference (Kudo 2018 spec as documented on
-    unigram_learn): substring seed scored freq*len, soft-EM rounds via
-    forward-backward, count prune keeping singles, renormalize."""
-    import math
-
-    import numpy as np
-
-    scores = {}
-    for w, n in counts.items():
-        for i in range(len(w)):
-            for l in range(1, min(max_piece_len, len(w) - i) + 1):
-                p = w[i:i + l]
-                scores[p] = scores.get(p, 0) + n * l
-    chars = {p: s for p, s in scores.items() if len(p) == 1}
-    multis = sorted(
-        ((p, s) for p, s in scores.items() if len(p) > 1),
-        key=lambda kv: (-kv[1], kv[0]),
-    )[: max(seed_size - len(chars), 0)]
-    seed = dict(chars)
-    seed.update(dict(multis))
-    total = sum(seed.values())
-    logp = {p: math.log(s / total) for p, s in seed.items()}
-
-    ecounts = {}
-    for r in range(rounds):
-        ecounts = {}
-        for w, n in counts.items():
-            m = len(w)
-            alpha = np.full(m + 1, -np.inf); alpha[0] = 0.0
-            beta = np.full(m + 1, -np.inf); beta[m] = 0.0
-            spans = []
-            for i in range(1, m + 1):
-                for j in range(max(0, i - max_piece_len), i):
-                    lp = logp.get(w[j:i])
-                    if lp is not None:
-                        spans.append((j, i, lp))
-                        alpha[i] = np.logaddexp(alpha[i], alpha[j] + lp)
-            for j, i, lp in reversed(spans):
-                beta[j] = np.logaddexp(beta[j], lp + beta[i])
-            z = alpha[m]
-            for j, i, lp in spans:
-                e = float(np.exp(alpha[j] + lp + beta[i] - z)) * n
-                ecounts[w[j:i]] = ecounts.get(w[j:i], 0.0) + e
-        te = sum(ecounts.values())
-        logp = {p: math.log(c / te) for p, c in ecounts.items() if c > 0}
-        target = vocab_size if r == rounds - 1 else max(
-            vocab_size, int(math.ceil(len(logp) * shrink))
-        )
-        singles = {p for p in logp if len(p) == 1}
-        ml = sorted((p for p in logp if len(p) > 1),
-                    key=lambda p: (-ecounts[p], p))
-        keep = singles | set(ml[: max(target - len(singles), 0)])
-        logp = {p: lp for p, lp in logp.items() if p in keep}
-        z = math.log(sum(math.exp(lp) for lp in sorted(logp.values())))
-        logp = {p: lp - z for p, lp in logp.items()}
-    return logp, ecounts
 
 
 def test_assemble_dialogues(spark):
@@ -2020,99 +1833,6 @@ _UNIGRAM_CORPUS = [
 ]
 
 
-def test_unigram_encode_semantics(spark):
-    """G99 default tier: train a small unigram model and pin the
-    encode contract — Viterbi segmentations concatenate back to the
-    source tokens, OOV characters become single-char pieces instead of
-    failing, single chars survive even a vocab_size below the char-set
-    size, and validation raises. (The serial-reference equality is the
-    slow twin.)"""
-    from ferc_xbrl_extractor_spark.operators import vocab as V
-
-    df = spark.createDataFrame(_UNIGRAM_CORPUS, "doc_id long, text string")
-    kw = dict(vocab_size=30, seed_size=150, rounds=1, max_piece_len=6)
-    pieces = V.unigram_learn(df, **kw)
-    model = {r["piece"] for r in pieces.collect()}
-    enc = V.unigram_encode_documents(df, pieces)
-    for r in enc.collect():
-        text = dict(_UNIGRAM_CORPUS)[r["doc_id"]]
-        assert "".join(r["unigram_tokens"]) == text.replace(" ", "")
-        assert all(p in model for p in r["unigram_tokens"])
-
-    oov = spark.createDataFrame([(9, "thexq")], "doc_id long, text string")
-    toks = V.unigram_encode_documents(oov, pieces).first()["unigram_tokens"]
-    assert "".join(toks) == "thexq"
-    assert "q" in toks  # q never appeared in the corpus
-
-    with pytest.raises(ValueError, match="vocab_size"):
-        V.unigram_learn(df, 0)
-    with pytest.raises(ValueError, match="shrink"):
-        V.unigram_learn(df, 10, shrink=0.0)
-
-    chars = {c for _, t in _UNIGRAM_CORPUS for c in t.replace(" ", "")}
-    tiny = V.unigram_learn(df, vocab_size=3, seed_size=50, rounds=1,
-                           max_piece_len=4)
-    kept = {r["piece"] for r in tiny.collect()}
-    assert chars <= kept
-
-
-@pytest.mark.slow
-def test_unigram_learn_matches_reference(spark):
-    """G99 slow twin: unigram-LM training (vocab.unigram_learn) equals
-    the independent serial reference — identical piece SET,
-    logprobs/ecounts to 1e-9 — over two full soft-EM rounds."""
-    from ferc_xbrl_extractor_spark.operators import vocab as V
-
-    df = spark.createDataFrame(_UNIGRAM_CORPUS, "doc_id long, text string")
-    counts = {}
-    for _, t in _UNIGRAM_CORPUS:
-        for w in t.split():
-            counts[w] = counts.get(w, 0) + 1
-
-    kw = dict(vocab_size=30, seed_size=150, rounds=2, max_piece_len=6)
-    ref_logp, ref_ec = _reference_unigram(counts, **kw)
-    got = {r["piece"]: r for r in V.unigram_learn(df, **kw).collect()}
-
-    assert set(got) == set(ref_logp)
-    for p, row in got.items():
-        assert abs(row["logprob"] - ref_logp[p]) < 1e-9, p
-        assert abs(row["ecount"] - ref_ec[p]) < 1e-9, p
-
-
-def test_bpe_encode_join_fallback_matches_broadcast_path(spark):
-    """G31 broadcast bound: over max_broadcast_words the encode switches
-    to posexplode + join + doc-keyed reassembly; results (including OOV
-    char fallback, empty docs, and token order) must match the map-probe
-    path exactly."""
-    from ferc_xbrl_extractor_spark.operators import vocab as V
-
-    corpus = [
-        (1, "low low lower lowest zag"),
-        (2, "newer newest newer"),
-        (3, ""),  # no tokens: fallback must still emit an empty encoding
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    _, words = V.bpe_learn(df, 5)
-
-    via_map = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in V.bpe_encode_documents(df, words).collect()
-    }
-    via_join = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in V.bpe_encode_documents(
-            df, words, id_col="doc_id", max_broadcast_words=1
-        ).collect()
-    }
-    assert via_join == via_map
-
-    # without a row key the guard refuses rather than risk a bad merge
-    import pytest
-
-    with pytest.raises(ValueError, match="id_col"):
-        V.bpe_encode_documents(df, words, max_broadcast_words=1)
-
-
 def test_corpus_report_single_scan_goldens(spark):
     from ferc_xbrl_extractor_spark.operators import text as T
 
@@ -2191,13 +1911,12 @@ def test_strip_common_lines_ratio_and_min_docs(spark):
     assert out2[1] == "a" and out2[2] == "b"
 
 
-def test_review_fixes_null_strata_and_guards(spark, tmp_path):
+def test_review_fixes_null_strata_and_guards(spark):
     import pytest as _pt
 
     from ferc_xbrl_extractor_spark.operators.packing import temperature_rates
     from ferc_xbrl_extractor_spark.operators.sampling import split_by_hash
     from ferc_xbrl_extractor_spark.operators.text import strip_common_lines
-    from ferc_xbrl_extractor_spark.streaming import stream_interval_join
 
     # temperature_rates: NULL stratum excluded, not a None dict key
     df = spark.createDataFrame(
@@ -2221,17 +1940,6 @@ def test_review_fixes_null_strata_and_guards(spark, tmp_path):
         for r in strip_common_lines(docs, source_col="source").collect()
     }
     assert out == {1: "u1", 2: "u2", 3: "u3"}
-
-    # stream_interval_join: keys are mandatory (Spark rejects keyless
-    # stream-stream joins), so the operator fails fast with a clear error
-    spark.createDataFrame([], "id long, ts timestamp").write.parquet(
-        str(tmp_path / "s")
-    )
-    s = spark.readStream.schema("id long, ts timestamp").parquet(
-        str(tmp_path / "s")
-    )
-    with _pt.raises(ValueError, match="equi key"):
-        stream_interval_join(s, s, "ts", "ts")
 
 
 def test_curate_trim_recomputes_stats(spark):
@@ -2919,9 +2627,8 @@ def test_image_pipeline_on_real_jpeg_bytes(spark):
     """G69 on real JPEG bytes end-to-end (r8 verdict #7): dHash equality
     between a PPM and a q95 JPEG of the SAME image (container-invariant
     fingerprints), perceptual dedup pairs a JPEG re-encode with its PPM
-    original, resize keeps JPEG as JPEG with updated meta, features
-    decode for real, and a truncated JPEG quarantines to NULL instead
-    of killing the job."""
+    original, features decode for real, and a truncated JPEG quarantines
+    to NULL instead of killing the job."""
     import numpy as np
 
     from ferc_xbrl_extractor_spark.operators import multimodal as mm
@@ -2948,17 +2655,6 @@ def test_image_pipeline_on_real_jpeg_bytes(spark):
         for r in mm.image_dedup_pairs(media, max_hamming=4).collect()
     }
     assert pairs[(1, 2)] == 0
-
-    tbl = mm.media_table_from_binary(
-        media.filter(F.col("media_id") == 2), "media_id", "content",
-        media_type="image", mime="image/jpeg",
-    )
-    rs = mm.resize_images(tbl, 16, 12, decode_stub=False).collect()
-    assert len(rs) == 1
-    out_bytes = bytes(rs[0]["content"])
-    assert out_bytes[:2] == b"\xff\xd8"
-    assert rs[0]["meta"]["mime"] == "image/jpeg"
-    assert rs[0]["meta"]["width"] == 16 and rs[0]["meta"]["height"] == 12
 
     feats = {
         r["media_id"]: r["feature"]
@@ -3305,7 +3001,7 @@ def test_png_codec_and_pipeline(spark):
     decode (exercised by hand-built scanlines); palette and RGBA
     inputs decode; PPM/JPEG/PNG containers of the SAME image hash to
     the SAME dhash/phash; interlaced and 16-bit variants quarantine to
-    NULL per E1; resize keeps PNG as PNG losslessly."""
+    NULL per E1."""
     import struct as _struct
     import zlib as _zlib
 
@@ -3395,7 +3091,7 @@ def test_png_codec_and_pipeline(spark):
     with pytest.raises(ValueError, match="interlace"):
         decode_png(inter)
 
-    # container-invariant hashes + PNG-stays-PNG resize, through Spark
+    # container-invariant hashes, through Spark
     rows = [
         (1, mm.encode_ppm(img)),
         (2, encode_png(img)),
@@ -3410,17 +3106,6 @@ def test_png_codec_and_pipeline(spark):
     ph = {r["media_id"]: r["phash"] for r in mm.image_phash(media).collect()}
     assert ph[1] == ph[2] and ph[4] is None
 
-    tbl = mm.media_table_from_binary(
-        media.filter(F.col("media_id") == 2), "media_id", "content",
-        "image", "image/png",
-    )
-    rs = mm.resize_images(tbl, 16, 12, decode_stub=False).collect()[0]
-    out_b = bytes(rs["content"])
-    assert out_b[:4] == b"\x89PNG" and rs["meta"]["mime"] == "image/png"
-    assert (
-        decode_png(out_b) == mm._nn_resize(img, 16, 12)
-    ).all()  # lossless
-
 
 @pytest.mark.slow
 def test_gif_codec_and_pipeline(spark):
@@ -3428,8 +3113,7 @@ def test_gif_codec_and_pipeline(spark):
     pixel-exact (incl. grayscale and a full 256-color palette), the
     interlaced row order is undone (hand-built 4-pass fixture), a GIF
     of the same image dhashes identically to its PPM, truncated GIFs
-    quarantine, resize keeps GIF as GIF with the palette preserved,
-    and >256-color encode raises."""
+    quarantine, and >256-color encode raises."""
     import struct as _struct
 
     import numpy as np
@@ -3464,20 +3148,12 @@ def test_gif_codec_and_pipeline(spark):
     with pytest.raises(ValueError, match="256"):
         encode_gif(rng.randint(0, 256, (32, 32, 3)).astype(np.uint8))
 
-    # Spark pipeline: container-invariant dhash, E1 quarantine, resize
+    # Spark pipeline: container-invariant dhash, E1 quarantine
     gif = encode_gif(img)
     rows = [(1, mm.encode_ppm(img)), (2, gif), (3, gif[:20]), (4, None)]
     media = spark.createDataFrame(rows, "media_id long, content binary")
     d = {r["media_id"]: r["dhash"] for r in mm.image_dhash(media).collect()}
     assert d[1] == d[2] and d[3] is None and d[4] is None
-    tbl = mm.media_table_from_binary(
-        media.filter(F.col("media_id") == 2), "media_id", "content",
-        "image", "image/gif",
-    )
-    rs = mm.resize_images(tbl, 16, 12, decode_stub=False).collect()[0]
-    out_b = bytes(rs["content"])
-    assert out_b[:4] == b"GIF8" and rs["meta"]["mime"] == "image/gif"
-    assert (decode_gif(out_b) == mm._nn_resize(img, 16, 12)).all()
 
 
 def test_video_frame_hashes_and_perceptual_dedup(spark):
@@ -3655,41 +3331,6 @@ def test_ppm_codec_roundtrip_and_comments():
     with _pytest.raises(ValueError, match="maxval"):
         decode_ppm(b"P6\n1 1\n65535\n\x00\x00")
     assert isinstance(np.asarray(arr), np.ndarray)
-
-
-def test_resize_images_real_ppm_kernel(spark):
-    from ferc_xbrl_extractor_spark.operators import multimodal
-    from ferc_xbrl_extractor_spark.operators.multimodal import decode_ppm
-
-    # 4x4 quadrant image: each 2x2 quadrant a solid color
-    quad = {
-        (0, 0): (255, 0, 0), (1, 0): (0, 255, 0),
-        (0, 1): (0, 0, 255), (1, 1): (255, 255, 0),
-    }
-    img = _ppm(4, 4, lambda x, y: quad[(x // 2, y // 2)])
-    df = spark.createDataFrame(
-        [(1, bytearray(img)), (2, None)], "media_id long, content binary"
-    )
-    media = multimodal.media_table_from_binary(
-        df, "media_id", "content", "image", "image/x-portable-pixmap"
-    )
-    out = {
-        r["media_id"]: r
-        for r in multimodal.resize_images(
-            media, 2, 2, decode_stub=False
-        ).collect()
-    }
-    resized = decode_ppm(bytes(out[1]["content"]))
-    # nearest-neighbor center sampling: each output pixel = its quadrant
-    assert resized.shape == (2, 2, 3)
-    assert tuple(resized[0, 0]) == (255, 0, 0)
-    assert tuple(resized[0, 1]) == (0, 255, 0)
-    assert tuple(resized[1, 0]) == (0, 0, 255)
-    assert tuple(resized[1, 1]) == (255, 255, 0)
-    assert out[1]["meta"]["width"] == 2 and out[1]["meta"]["height"] == 2
-    assert out[1]["meta"]["mime"] == "image/x-portable-pixmap"
-    # blob-less rows pass through as NULL, not a crash
-    assert out[2]["content"] is None
 
 
 def test_extract_features_real_ppm_kernel(spark):
@@ -3874,41 +3515,6 @@ def test_image_dedup_pipeline_with_real_codec(spark):
     assert ids == [1, 3, 5]
 
 
-def test_resample_audio_real_wav_kernel(spark):
-    import numpy as np
-
-    from ferc_xbrl_extractor_spark.operators import multimodal
-
-    # a linear ramp resamples to a linear ramp under linear interpolation
-    ramp = np.linspace(0, 10000, 8000).astype(np.int64)
-    df = spark.createDataFrame(
-        [(1, bytearray(multimodal.encode_wav(16000, ramp))), (2, None)],
-        "media_id long, content binary",
-    )
-    media = multimodal.media_table_from_binary(
-        df, "media_id", "content", "audio", "audio/wav"
-    )
-    out = {
-        r["media_id"]: r
-        for r in multimodal.resample_audio(
-            media, 8000, decode_stub=False
-        ).collect()
-    }
-    rate, samples = multimodal.decode_wav(bytes(out[1]["content"]))
-    assert rate == 8000 and samples.shape[0] == 4000
-    got = samples[:, 0].astype(np.float64)
-    expect = np.linspace(0, 10000, 4000)
-    assert np.abs(got - expect).max() <= 3.0  # interp + int16 rounding
-    assert out[1]["meta"]["duration_ms"] == 500
-    assert out[1]["meta"]["mime"] == "audio/wav"
-    assert out[2]["content"] is None
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="target_rate"):
-        multimodal.resample_audio(media, 0)
-
-
 def test_y4m_codec_and_frame_extraction(spark):
     import numpy as np
 
@@ -3929,27 +3535,6 @@ def test_y4m_codec_and_frame_extraction(spark):
     # red frame (BT.601: Y81 U90 V240 ~ pure red)
     r, g, bl = decoded[1][0, 0]
     assert r > 230 and g < 30 and bl < 30, decoded[1][0, 0]
-
-    # frame extraction at 500ms -> one frame per input frame
-    df = spark.createDataFrame(
-        [(1, bytearray(b)), (2, None)], "media_id long, content binary"
-    )
-    media = multimodal.media_table_from_binary(
-        df, "media_id", "content", "video", "video/x-yuv4mpeg"
-    )
-    out = multimodal.extract_frames(
-        media, every_ms=500, decode_stub=False
-    ).collect()
-    got = {(r["media_id"], r["frame_ms"]) for r in out}
-    assert got == {(1, 0), (1, 500), (1, 1000)}
-    by_ms = {r["frame_ms"]: r for r in out}
-    # each extracted frame is a decodable PPM of the right frame
-    arr0 = multimodal.decode_ppm(bytes(by_ms[0]["content"]))
-    assert np.all(arr0 == 128)
-    arr1k = multimodal.decode_ppm(bytes(by_ms[1000]["content"]))
-    assert arr1k[0, 0, 2] > 230 or arr1k[0, 0, 0] < 90  # blue-ish frame
-    assert by_ms[0]["meta"]["width"] == 4
-    assert by_ms[0]["meta"]["mime"] == "image/x-portable-pixmap"
 
 
 def test_y4m_c420_chroma_upsampling(spark):
@@ -3978,8 +3563,8 @@ def test_y4m_c420_chroma_upsampling(spark):
 
 
 def test_video_to_image_feature_pipeline_real(spark):
-    """Video -> frames -> image features, every codec real: Y4M frame
-    extraction feeds the PPM feature kernel directly."""
+    """Video -> frames -> image features, every codec real: decoded Y4M
+    frames feed the PPM feature kernel directly."""
     import numpy as np
 
     from ferc_xbrl_extractor_spark.operators import multimodal
@@ -3989,21 +3574,16 @@ def test_video_to_image_feature_pipeline_real(spark):
         np.full((h, w), yv), np.full((h, w), 128), np.full((h, w), 128)
     )
     b = multimodal.encode_y4m([mk(64), mk(192)], fps=(1, 1), chroma="444")
+    _, _, frames = multimodal.decode_y4m(b)
+    ppms = [(700 + i, bytearray(multimodal.encode_ppm(f))) for i, f in enumerate(frames)]
     media = multimodal.media_table_from_binary(
-        spark.createDataFrame([(7, bytearray(b))], "media_id long, content binary"),
-        "media_id", "content", "video", "video/x-yuv4mpeg",
-    )
-    frames = multimodal.extract_frames(media, every_ms=1000, decode_stub=False)
-    as_images = frames.select(
-        (F.col("media_id") * 100 + F.col("frame_ms") / 1000).cast("long")
-        .alias("media_id"),
-        "content",
-        "meta",
+        spark.createDataFrame(ppms, "media_id long, content binary"),
+        "media_id", "content", "image", "image/x-portable-pixmap",
     )
     feats = {
         r["media_id"]: r["feature"]
         for r in multimodal.extract_features(
-            as_images, dim=2, decode_stub=False
+            media, dim=2, decode_stub=False
         ).collect()
     }
     # gray frames: every pixel = Y, so feature = Y/128 - 1 exactly

@@ -21,8 +21,7 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry  # noqa: E402
-
-SF = "/root/testdata/sf0.001"
+from conftest import SF0001 as SF, needs_sf0001  # noqa: E402
 
 
 def test_gate_fits_cap_and_covers_everything():
@@ -85,6 +84,7 @@ def test_slot_mapping_is_deterministic_and_typed():
                 assert (slot, kind) in slots
 
 
+@needs_sf0001
 @pytest.mark.parametrize("suite", ["xbrl_scan_suite", "g_window_asof_suite"])
 def test_suite_rows_partition_into_members(spark, suite):
     members = entry._SUITES[suite]
@@ -98,6 +98,7 @@ def test_suite_rows_partition_into_members(spark, suite):
         assert counts.get(m, 0) == fine[m](spark, SF).count()
 
 
+@needs_sf0001
 def test_member_schema_drift_raises(spark, monkeypatch):
     suite = "xbrl_scan_suite"
     member = entry._SUITES[suite][0]

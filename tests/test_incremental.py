@@ -71,55 +71,13 @@ def test_increment_probe_never_shuffles_the_index(spark, index_dir):
     assert "PartitionFilters" in plan
 
 
-def test_index_compact_is_exchange_free_and_correct(spark, index_dir):
-    """The digest-bucketed index layout: maintenance dedup over the index
-    runs with ZERO Exchange (the bucket clustering satisfies the
-    aggregate), and compaction after appends preserves the fingerprint
-    set, collapses duplicates, and keeps later probes correct."""
-    from ferc_xbrl_extractor_spark.pipeline.incremental import (
-        index_compact,
-        index_compact_plan,
-    )
-
-    # grow the index with two increments (bucketed appends)
-    incremental_dedup(
-        spark, index_dir, _docs(spark, [(10, "zeta eta"), (11, "theta")])
-    )
-    incremental_dedup(spark, index_dir, _docs(spark, [(20, "iota kappa")]))
-
-    plan = (
-        index_compact_plan(spark, index_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
-
-    before = {r["fp"] for r in spark.read.parquet(index_dir).collect()}
-    n = index_compact(spark, index_dir)
-    after = {r["fp"] for r in spark.read.parquet(index_dir).collect()}
-    assert after == before
-    assert n == len(before)
-
-    # the compacted index still suppresses historical dups
-    res = incremental_dedup(
-        spark,
-        index_dir,
-        _docs(spark, [(30, "zeta eta"), (31, "lambda")]),
-        collect_stats=True,
-        update_index=False,
-    )
-    assert {r["doc_id"] for r in res.fresh.collect()} == {31}
-    assert res.n_historical_dups == 1
-
-
 def test_index_cross_session_fallback_path(spark, index_dir):
     """A session that did not create the index has no catalog entry: the
-    probe falls back to the plain parquet path and plain appends, stays
-    correct, and a later compact restores the bucketed layout."""
+    probe falls back to the plain parquet path and plain appends, and
+    stays correct."""
     from ferc_xbrl_extractor_spark.pipeline.incremental import (
         _index_table,
-        index_compact_plan,
+        _read_index,
     )
 
     name = _index_table(index_dir)
@@ -134,18 +92,8 @@ def test_index_cross_session_fallback_path(spark, index_dir):
     assert {r["doc_id"] for r in res.fresh.collect()} == {51}
     assert res.n_historical_dups == 1
 
-    # fallback append landed; compact re-registers the bucketed table
-    from ferc_xbrl_extractor_spark.pipeline.incremental import index_compact
-
-    n = index_compact(spark, index_dir)
-    assert n == 4  # 3 initial + "mu nu"
-    plan = (
-        index_compact_plan(spark, index_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
+    # the fallback append landed
+    assert _read_index(spark, index_dir).count() == 4  # 3 initial + "mu nu"
 
 
 def test_mixed_layout_degrades_to_plain_read(spark, index_dir):
@@ -153,15 +101,13 @@ def test_mixed_layout_degrades_to_plain_read(spark, index_dir):
     'Invalid bucket file' after another session's plain-parquet fallback
     append mixed un-bucketed files into the directory: _read_index
     detects the un-suffixed file and degrades to the plain read (same
-    rows, one keyed exchange more) until index_compact restores the
-    layout."""
+    rows, one keyed exchange more)."""
     import os
 
     from ferc_xbrl_extractor_spark.pipeline.incremental import (
         _dir_has_unbucketed_files,
         _read_index,
         _with_prefix,
-        index_compact,
     )
     from ferc_xbrl_extractor_spark.operators.text import fingerprint
 
@@ -194,10 +140,6 @@ def test_mixed_layout_degrades_to_plain_read(spark, index_dir):
     )
     assert {r["doc_id"] for r in res.fresh.collect()} == {101}
     assert res.n_historical_dups == 1
-
-    # compact rewrites everything bucket-suffixed; the fast path returns
-    assert index_compact(spark, index_dir) == 4
-    assert not _dir_has_unbucketed_files(index_dir)
 
 
 def test_update_index_false_leaves_index_untouched(spark, index_dir):

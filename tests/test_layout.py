@@ -1,16 +1,11 @@
-"""G25: Z-order clustering layout (operators/layout.py)."""
+"""G25: Z-order (Morton) interleave (operators/layout.py)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
-from ferc_xbrl_extractor_spark.operators.layout import (
-    file_spans,
-    write_zordered,
-    zvalue,
-)
+from ferc_xbrl_extractor_spark.operators.layout import zvalue
 
 
 def _interleave2(x: int, y: int, bits: int) -> int:
@@ -37,80 +32,3 @@ def test_zvalue_validations(spark):
         zvalue(["x"], 8)
     with pytest.raises(ValueError, match="overflows"):
         zvalue(["x", "y", "w"], 21)
-
-
-def test_zorder_layout_bounds_every_column_span(spark, tmp_path):
-    """The point of Z-order: per-file min-max spans stay narrow on BOTH
-    clustered columns, where a single-column sort leaves the second
-    column's span at ~the full domain (useless for skipping)."""
-    n, dom = 4096, 256
-    df = spark.createDataFrame(
-        [Row(x=i % dom, y=(i * 7919) % dom) for i in range(n)]
-    )
-
-    zpath = str(tmp_path / "zorder")
-    write_zordered(df, zpath, ["x", "y"], bits=8, num_files=16)
-    spans = file_spans(spark, zpath, ["x", "y"]).collect()
-    assert len(spans) >= 8
-    avg_x = sum(r["max_x"] - r["min_x"] for r in spans) / len(spans)
-    avg_y = sum(r["max_y"] - r["min_y"] for r in spans) / len(spans)
-    # each file covers a compact rectangle: both spans well under the domain
-    assert avg_x < 0.6 * dom
-    assert avg_y < 0.6 * dom
-
-    xpath = str(tmp_path / "xsort")
-    (
-        df.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.parquet(xpath)
-    )
-    xspans = file_spans(spark, xpath, ["x", "y"]).collect()
-    avg_y_xsort = sum(r["max_y"] - r["min_y"] for r in xspans) / len(xspans)
-    # the single-column layout cannot skip on y...
-    assert avg_y_xsort > 0.9 * dom
-    # ...and the z-order layout is dramatically better on y
-    assert avg_y < 0.7 * avg_y_xsort
-
-    # layout changes bytes, never rows
-    assert spark.read.parquet(zpath).count() == n
-
-
-@pytest.mark.slow
-def test_skipping_report_reads_footers_and_scores_layouts(spark, tmp_path):
-    """G25 validator: the footer-only report reproduces file_spans'
-    verdict without scanning data — the z-ordered layout skips most row
-    groups for a narrow y-range, the x-sorted layout skips none."""
-    from ferc_xbrl_extractor_spark.operators.layout import (
-        skip_fraction,
-        skipping_report,
-    )
-
-    n, dom = 4096, 256
-    df = spark.createDataFrame(
-        [Row(x=i % dom, y=(i * 7919) % dom) for i in range(n)]
-    )
-    zpath = str(tmp_path / "z2")
-    write_zordered(df, zpath, ["x", "y"], bits=8, num_files=16)
-    xpath = str(tmp_path / "x2")
-    (
-        df.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.parquet(xpath)
-    )
-
-    zrep = skipping_report(spark, zpath, ["x", "y"])
-    # footer stats agree with a real scan of the same files
-    scanned = {
-        r["__file"]: (r["min_y"], r["max_y"])
-        for r in file_spans(spark, zpath, ["y"]).collect()
-    }
-    from_footers = {
-        r["file"]: (int(r["vmin"]), int(r["vmax"]))
-        for r in zrep.filter("column = 'y'").collect()
-    }
-    assert from_footers == scanned  # single row group per file here
-
-    z_skip = skip_fraction(zrep, "y", 0, 31)
-    x_skip = skip_fraction(skipping_report(spark, xpath, ["x", "y"]), "y", 0, 31)
-    assert x_skip == 0.0          # x-sort: every file spans ~all of y
-    assert z_skip >= 0.5          # z-order: most row groups skippable on y

@@ -1,101 +1,6 @@
-"""Small-file compaction (pipeline/maintenance.py)."""
+"""Manifest-committed shard publishing (pipeline/shards.py)."""
 
 from __future__ import annotations
-
-import os
-
-from pyspark.sql import Row
-
-from ferc_xbrl_extractor_spark.pipeline.maintenance import (
-    compact_partitions,
-    partition_layouts,
-)
-
-
-def _write_fragmented(spark, table, n_rows, n_files, part):
-    df = spark.createDataFrame(
-        [Row(k=i, v=f"v{i}", part=part) for i in range(n_rows)]
-    )
-    df.repartition(n_files).write.mode("append").partitionBy("part").parquet(table)
-
-
-def _files(table, part):
-    d = os.path.join(table, f"part={part}")
-    return sorted(
-        (f, os.path.getmtime(os.path.join(d, f)))
-        for f in os.listdir(d)
-        if f.endswith(".parquet")
-    )
-
-
-def test_compact_rewrites_only_degenerate_partitions(spark, tmp_path):
-    table = str(tmp_path / "tbl")
-    _write_fragmented(spark, table, n_rows=200, n_files=16, part="frag")
-    _write_fragmented(spark, table, n_rows=50, n_files=1, part="ok")
-
-    layouts = {p.value: p for p in partition_layouts(table, "part")}
-    assert layouts["frag"].n_files == 16
-    assert layouts["ok"].n_files == 1
-
-    before_ok = _files(table, "ok")
-    plan = compact_partitions(
-        spark, table, "part", target_file_bytes=1 << 30, max_files_per_partition=4
-    )
-    assert plan == {"frag": 1}
-    assert len(_files(table, "frag")) == 1
-    # healthy partition's files are the same files, not rewritten
-    assert _files(table, "ok") == before_ok
-    # no rows lost or duplicated
-    got = spark.read.parquet(table)
-    assert got.filter("part = 'frag'").count() == 200
-    assert got.filter("part = 'ok'").count() == 50
-    assert got.filter("part = 'frag'").select("k").distinct().count() == 200
-
-
-def test_compact_respects_byte_budget(spark, tmp_path):
-    table = str(tmp_path / "tbl2")
-    _write_fragmented(spark, table, n_rows=500, n_files=10, part="p")
-    total = partition_layouts(table, "part")[0].total_bytes
-    # budget of ~half the partition -> 2 output files
-    plan = compact_partitions(
-        spark, table, "part",
-        target_file_bytes=max(1, total // 2),
-        max_files_per_partition=1,
-    )
-    assert plan["p"] in (2, 3)  # ceil(total/budget); budget rounding tolerance
-    assert len(_files(table, "p")) == plan["p"]
-
-
-def test_compact_noop_on_healthy_table(spark, tmp_path):
-    table = str(tmp_path / "tbl3")
-    _write_fragmented(spark, table, n_rows=10, n_files=1, part="a")
-    assert compact_partitions(spark, table, "part") == {}
-
-
-def test_compact_handles_hive_escaped_partition_values(spark, tmp_path):
-    """Partition values with special characters are %-escaped in dir
-    names; the layout report must decode them so the pruned filter
-    actually selects the partition's rows."""
-    table = str(tmp_path / "tbl4")
-    _write_fragmented(spark, table, n_rows=60, n_files=8, part="a b:c")
-    layouts = partition_layouts(table, "part")
-    assert layouts[0].value == "a b:c"
-    plan = compact_partitions(
-        spark, table, "part", target_file_bytes=1 << 30, max_files_per_partition=2
-    )
-    assert plan == {"a b:c": 1}
-    got = spark.read.parquet(table)
-    assert got.filter("part = 'a b:c'").count() == 60
-    import os
-
-    d = [e for e in os.listdir(table) if e.startswith("part=")][0]
-    files = [f for f in os.listdir(os.path.join(table, d)) if f.endswith(".parquet")]
-    assert len(files) == 1
-
-
-# ---------------------------------------------------------------------------
-# Manifest-committed shard publishing (pipeline/shards.py)
-# ---------------------------------------------------------------------------
 
 
 def _corpus(spark, n=200):
@@ -203,119 +108,3 @@ def test_shard_fingerprint_is_row_order_insensitive(spark, tmp_path):
     m1, m2 = sh.read_manifest(p1), sh.read_manifest(p2)
     assert m1["fingerprint"] == m2["fingerprint"]
     assert m1["n_rows"] == m2["n_rows"] == 300
-
-
-def test_ivf_recluster_split_restores_probe_efficiency(spark, tmp_path):
-    """Drift-triggered IVF maintenance (r5 review item #6): appends crowd
-    one inverted list; ivf_recluster_split retrains a sub-quantizer on
-    THAT list only (G37 k-means) and splits it in place. Pins: the drift
-    signal fires only for the hot list; untouched partitions stay
-    byte-identical; no vector is lost or duplicated; and a 1-list probe
-    for the drifted region scans far fewer rows while still containing
-    the true nearest neighbor."""
-    import hashlib
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from ferc_xbrl_extractor_spark.operators import similarity as sim
-
-    def blob(base, start, n, eps=0.02):
-        rows = []
-        for i in range(n):
-            v = [x + eps * ((i * 7 + j) % 5 - 2) for j, x in enumerate(base)]
-            rows.append((start + i, v))
-        return rows
-
-    a = blob([1.0, 0.0, 0.0, 0.0], 0, 40)
-    b = blob([0.0, 1.0, 0.0, 0.0], 100, 40)
-    cents = sim.unit_centroids_from_rows(
-        [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-    )
-    corpus = spark.createDataFrame(
-        a + b, "vec_id long, embedding array<double>"
-    )
-    assigned = corpus.withColumn(
-        "__nvec", sim._unit(F.col("embedding"))
-    ).withColumn("__cluster", sim.ivf_assign(F.col("__nvec"), cents))
-    path = str(tmp_path / "ivf_drift")
-    sim.ivf_write_index(assigned, path)
-
-    # drift: a third blob well inside list 0's Voronoi cell, 4x bigger
-    c = blob([0.9, 0.3, 0.0, 0.0], 1000, 160)
-    inc = spark.createDataFrame(c, "vec_id long, embedding array<double>")
-    appended = sim.ivf_append(inc, path, cents)
-    assert set(appended) == {0}  # all drift lands in list 0
-
-    counts = sim.ivf_cluster_counts(path)
-    assert counts == {0: 200, 1: 40}
-    assert sim.ivf_lists_to_split(counts, factor=1.5) == [0]
-
-    def _file_md5s(cluster):
-        d = Path(path) / f"__cluster={cluster}"
-        return {
-            p.name: hashlib.md5(p.read_bytes()).hexdigest()
-            for p in d.glob("*.parquet")
-        }
-
-    before_list1 = _file_md5s(1)
-    rows_scanned_before = sim.ivf_read_probed(spark, path, [0]).count()
-
-    new_cents = sim.ivf_recluster_split(
-        spark, path, cents, factor=1.5, split_into=2, id_col="vec_id"
-    )
-    assert len(new_cents) == 3
-
-    # untouched list byte-identical; no vector lost or duplicated
-    assert _file_md5s(1) == before_list1
-    all_ids = [
-        r["vec_id"]
-        for r in spark.read.parquet(path).select("vec_id").collect()
-    ]
-    assert sorted(all_ids) == sorted(i for i, _ in a + b + c)
-    # split partitions agree with the returned quantizer
-    relisted = spark.read.parquet(path).withColumn(
-        "__expect", sim.ivf_assign(F.col("__nvec"), new_cents)
-    )
-    assert relisted.filter(F.col("__cluster") != F.col("__expect")).count() == 0
-
-    # probe the drifted region with nprobe=1 via the new quantizer
-    q = [0.9, 0.3, 0.0, 0.0]
-    qn = sim.unit_centroids_from_rows([q])[0]
-    best = max(
-        range(len(new_cents)),
-        key=lambda i: sum(x * y for x, y in zip(qn, new_cents[i])),
-    )
-    probed = sim.ivf_read_probed(spark, path, [best])
-    assert probed.count() < rows_scanned_before  # scans fewer rows
-    # true nearest neighbor (brute force) is inside the probed list
-    dots = probed.withColumn(
-        "__d",
-        F.aggregate(
-            F.zip_with(
-                F.col("__nvec"),
-                F.array(*[F.lit(float(x)) for x in qn]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    top_probed = dots.orderBy(F.col("__d").desc()).first()["__d"]
-    full = spark.read.parquet(path).withColumn(
-        "__d",
-        F.aggregate(
-            F.zip_with(
-                F.col("__nvec"),
-                F.array(*[F.lit(float(x)) for x in qn]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    top_true = full.orderBy(F.col("__d").desc()).first()["__d"]
-    # ANN quality bound: the 1-list probe's best hit is within 0.1% of
-    # the exact best similarity (exact-id equality is not an IVF
-    # guarantee at sub-list Voronoi boundaries), at half the scan.
-    assert top_probed >= 0.999 * top_true

@@ -13,6 +13,8 @@ from ferc_xbrl_extractor_spark.catalog.tablespec import TableSpec
 from ferc_xbrl_extractor_spark.operators import neardup, similarity
 from ferc_xbrl_extractor_spark.operators.fact_table import construct_table
 
+from conftest import SF0001, needs_sf0001
+
 
 def _executed_plan(df) -> str:
     df.collect()  # force AQE to finalize
@@ -213,25 +215,6 @@ def test_salted_agg_two_exchange_shape(spark):
     assert "__salt" in plan
 
 
-def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
-    """A persisted IVF index is partitioned by inverted list; probing must
-    prune at the partition level (scan only nprobe directories)."""
-    corpus = spark.createDataFrame(
-        [(i, [float(i % 5), 1.0, float(i % 3), 2.0]) for i in range(200)],
-        "vec_id long, embedding array<double>",
-    )
-    assigned, _ = similarity.ivf_index(corpus, nlist=4)
-    path = str(tmp_path / "ivf")
-    similarity.ivf_write_index(assigned, path)
-    probed = similarity.ivf_read_probed(spark, path, [0, 1])
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__cluster" in plan.split(
-        "PartitionFilters"
-    )[1].split("]")[0], plan
-    got_clusters = {r["__cluster"] for r in probed.select("__cluster").distinct().collect()}
-    assert got_clusters <= {0, 1}
-
-
 def test_shingle_expression_never_pushed_into_scan(spark, tmp_path):
     """Regression pin for the explode-pushdown trap: plain ``explode``
     makes Catalyst synthesize a ``size(arr) > 0`` filter that predicate
@@ -318,6 +301,7 @@ def test_input_clustered_table_plan_has_single_exchange(spark, facts):
     assert n_exchanges == 1, plan
 
 
+@needs_sf0001
 def test_flagship_query_plans_one_fused_exchange(spark):
     """The flagship xbrl_fact_pipeline fuses the load-repair shuffle with
     its semantic shuffle: the raw scan is hash-repartitioned on the key
@@ -327,7 +311,7 @@ def test_flagship_query_plans_one_fused_exchange(spark):
     keyed repartition shape it replaces shipped the rows twice)."""
     import __spark_entry__ as entrymod
 
-    df = entrymod.queries()["xbrl_fact_pipeline"](spark, "/root/testdata/sf0.001")
+    df = entrymod.queries()["xbrl_fact_pipeline"](spark, SF0001)
     df.count()  # let AQE finalize
     plan = df._jdf.queryExecution().executedPlan().toString()
     n = plan.count("Exchange") - plan.count("ReusedExchange")
@@ -405,61 +389,6 @@ def test_classifier_scoring_is_pure_projection(spark):
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "PythonUDF" not in plan
-
-
-def test_ivf_append_is_o_increment_and_prunes(spark, tmp_path):
-    """Appending an increment into a persisted IVF index must leave every
-    pre-existing file untouched (O(increment) write), keep partition
-    pruning working, and make the new vectors findable in their probed
-    list."""
-    import os
-
-    cents = similarity.unit_centroids_from_rows(
-        [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]]
-    )
-    base = spark.createDataFrame(
-        [
-            (1, [0.9, 0.1, 0.0, 0.0]),
-            (2, [0.1, 0.9, 0.0, 0.0]),
-            (3, [0.0, 0.1, 0.9, 0.0]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    assigned = base.withColumn(
-        "__nvec", similarity._unit(F.col("embedding"))
-    ).withColumn(
-        "__cluster", similarity.ivf_assign(F.col("__nvec"), cents)
-    )
-    path = str(tmp_path / "ivf_inc")
-    similarity.ivf_write_index(assigned, path)
-
-    def files_with_mtimes():
-        out = {}
-        for root, _dirs, names in os.walk(path):
-            for n in names:
-                if n.endswith(".parquet"):
-                    p = os.path.join(root, n)
-                    out[p] = os.path.getmtime(p)
-        return out
-
-    before = files_with_mtimes()
-    inc = spark.createDataFrame(
-        [(10, [0.95, 0.05, 0.0, 0.0]), (11, [0.0, 0.0, 1.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    counts = similarity.ivf_append(inc, path, cents)
-    assert counts == {0: 1, 2: 1}
-    after = files_with_mtimes()
-    # every original file untouched; only new files added
-    for p, m in before.items():
-        assert p in after and after[p] == m, p
-    assert len(after) > len(before)
-    # pruned probe of cluster 0 sees old AND new vectors, nothing else
-    probed = similarity.ivf_read_probed(spark, path, [0])
-    ids = sorted(r["vec_id"] for r in probed.collect())
-    assert ids == [1, 10]
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
 
 
 def test_budget_select_boundary_window_is_block_bounded(spark, monkeypatch):

@@ -1,15 +1,13 @@
-"""G20: one-pass quality constraint suite + incremental upsert."""
+"""G20: one-pass quality constraint suite + the upsert survivor aggregate."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ferc_xbrl_extractor_spark.operators import quality as Q
-from ferc_xbrl_extractor_spark.pipeline.upsert import merge_latest, upsert_parquet
+from ferc_xbrl_extractor_spark.pipeline.upsert import merge_latest_unioned
 
 
 @pytest.fixture()
@@ -121,10 +119,8 @@ def test_merge_latest_updates_inserts_passthrough(spark):
     updates = spark.createDataFrame(
         [Row(k=2, v="new2", ver=2), Row(k=3, v="new3", ver=2)]
     )
-    out = {
-        r["k"]: r
-        for r in merge_latest(existing, updates, ["k"], "ver").collect()
-    }
+    both = existing.unionByName(updates)
+    out = {r["k"]: r for r in merge_latest_unioned(both, ["k"], "ver").collect()}
     assert out[1]["v"] == "old1"  # passthrough
     assert out[2]["v"] == "new2"  # update wins
     assert out[3]["v"] == "new3"  # insert
@@ -134,7 +130,8 @@ def test_merge_latest_updates_inserts_passthrough(spark):
 def test_merge_latest_schema_evolution(spark):
     existing = spark.createDataFrame([Row(k=1, v="a", ver=1)])
     updates = spark.createDataFrame([Row(k=2, v="b", ver=2, extra="x")])
-    out = {r["k"]: r for r in merge_latest(existing, updates, ["k"], "ver").collect()}
+    both = existing.unionByName(updates, allowMissingColumns=True)
+    out = {r["k"]: r for r in merge_latest_unioned(both, ["k"], "ver").collect()}
     assert out[1]["extra"] is None
     assert out[2]["extra"] == "x"
 
@@ -143,64 +140,13 @@ def test_merge_latest_is_aggregate_not_window(spark):
     existing = spark.createDataFrame([Row(k=1, v="a", ver=1)])
     updates = spark.createDataFrame([Row(k=1, v="b", ver=2)])
     plan = (
-        merge_latest(existing, updates, ["k"], "ver")
+        merge_latest_unioned(existing.unionByName(updates), ["k"], "ver")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "Window" not in plan
     assert "max_by" in plan or "HashAggregate" in plan
-
-
-def test_upsert_parquet_touches_only_affected_partitions(spark, tmp_path):
-    table = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [
-            Row(k=1, v="a", ver=1, part="p0"),
-            Row(k=2, v="b", ver=1, part="p1"),
-            Row(k=3, v="c", ver=1, part="p2"),
-        ]
-    )
-    base.repartition(1).write.partitionBy("part").parquet(table)
-
-    def part_files(p):
-        d = os.path.join(table, f"part={p}")
-        return sorted(
-            (f, os.path.getmtime(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    before_p2 = part_files("p2")
-    updates = spark.createDataFrame(
-        [Row(k=1, v="A2", ver=2, part="p0"), Row(k=9, v="new", ver=2, part="p1")]
-    )
-    touched = upsert_parquet(
-        spark, table, updates, keys=["k"], order_col="ver", partition_col="part"
-    )
-    assert sorted(touched) == ["p0", "p1"]
-    # untouched partition's files are bit-for-bit the same ones
-    assert part_files("p2") == before_p2
-    got = {r["k"]: r for r in spark.read.parquet(table).collect()}
-    assert got[1]["v"] == "A2" and got[1]["ver"] == 2
-    assert got[2]["v"] == "b"
-    assert got[3]["v"] == "c"
-    assert got[9]["v"] == "new"
-    assert len(got) == 4
-
-
-def test_upsert_parquet_empty_updates_is_noop(spark, tmp_path):
-    table = str(tmp_path / "tbl2")
-    spark.createDataFrame([Row(k=1, v="a", ver=1, part="p0")]).write.partitionBy(
-        "part"
-    ).parquet(table)
-    updates = spark.createDataFrame(
-        [Row(k=1, v="x", ver=2, part="p0")]
-    ).filter(F.lit(False))
-    assert upsert_parquet(
-        spark, table, updates, keys=["k"], order_col="ver", partition_col="part"
-    ) == []
-    assert spark.read.parquet(table).count() == 1
 
 
 @pytest.mark.slow

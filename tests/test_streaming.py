@@ -1,5 +1,5 @@
-"""Streaming surface: the G8 window operators under readStream must match
-their batch counterparts (same expressions, plus watermark)."""
+"""Streaming surface: the stateful, quality and ingest operators under
+readStream must match their batch counterparts."""
 
 from __future__ import annotations
 
@@ -10,66 +10,7 @@ from ferc_xbrl_extractor_spark.streaming import (
     run_stream_to_memory,
     stream_asof_enrich,
     stream_dedup_first,
-    stream_session_counts,
-    stream_tumbling_counts,
 )
-
-
-@pytest.fixture()
-def event_dir(spark, tmp_path):
-    rows = [
-        (1, "2024-01-01 00:05:00", "click"),
-        (2, "2024-01-01 00:25:00", "click"),
-        (3, "2024-01-01 01:10:00", "view"),
-        (4, "2024-01-01 01:12:00", "view"),
-        (5, "2024-01-01 03:00:00", "click"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts_s string, event_type string"
-    ).withColumn("ts", F.to_timestamp("ts_s"))
-    path = str(tmp_path / "events")
-    df.write.parquet(path)
-    return path, df.schema
-
-
-@pytest.mark.slow
-def test_stream_tumbling_matches_batch(spark, event_dir):
-    path, schema = event_dir
-    stream = spark.readStream.schema(schema).parquet(path)
-    windowed = stream_tumbling_counts(stream, "ts", "1 hour", ["event_type"])
-    # append mode only emits watermark-closed windows; the final window
-    # stays open forever on a finite input -> use update mode for the test
-    q = run_stream_to_memory(windowed, "tumbling_test", output_mode="update")
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (str(r["window_start"]), r["event_type"]): r["n"]
-        for r in spark.sql("SELECT * FROM tumbling_test").collect()
-    }
-    assert got == {
-        ("2024-01-01 00:00:00", "click"): 2,
-        ("2024-01-01 01:00:00", "view"): 2,
-        ("2024-01-01 03:00:00", "click"): 1,
-    }
-
-
-def test_stream_sessions(spark, event_dir):
-    path, schema = event_dir
-    stream = spark.readStream.schema(schema).parquet(path)
-    sessions = stream_session_counts(stream, "ts", "30 minutes", ["event_type"])
-    # session windows support append (watermark-gated) or complete, not
-    # update; complete emits all finalized-so-far sessions on a finite input
-    q = run_stream_to_memory(sessions, "session_test", output_mode="complete")
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM session_test").collect()
-    by_start = {(str(r["session_start"]), r["event_type"]): r["n"] for r in rows}
-    # events 1+2 merge (20 min gap < 30); 3+4 merge; 5 alone
-    assert by_start == {
-        ("2024-01-01 00:05:00", "click"): 2,
-        ("2024-01-01 01:10:00", "view"): 2,
-        ("2024-01-01 03:00:00", "click"): 1,
-    }
 
 
 def _drain(spark, stream, name, mode="append"):
@@ -172,39 +113,6 @@ def test_stream_asof_enrich_carries_state_across_batches(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_stream_sliding_matches_batch(spark, event_dir):
-    from ferc_xbrl_extractor_spark.streaming import stream_sliding_counts
-
-    path, schema = event_dir
-    stream = spark.readStream.schema(schema).parquet(path)
-    windowed = stream_sliding_counts(
-        stream, "ts", "1 hour", "30 minutes", ["event_type"]
-    )
-    q = run_stream_to_memory(windowed, "sliding_test", output_mode="update")
-    q.processAllAvailable()
-    q.stop()
-    from ferc_xbrl_extractor_spark.operators import analytics
-    from pyspark.sql import functions as F2
-
-    batch = analytics.sliding_window_agg(
-        spark.read.schema(schema).parquet(path),
-        "ts",
-        "1 hour",
-        "30 minutes",
-        ["event_type"],
-        [F2.count(F2.lit(1)).alias("n")],
-    )
-    got = {
-        (str(r["window_start"]), r["event_type"]): r["n"]
-        for r in spark.sql("SELECT * FROM sliding_test").collect()
-    }
-    want = {
-        (str(r["window_start"]), r["event_type"]): r["n"] for r in batch.collect()
-    }
-    assert got == want
-
-
-@pytest.mark.slow
 def test_stream_asof_enrich_late_reference_does_not_regress_state(spark, tmp_path):
     """A reference OLDER than the carried state must neither crash
     merge_asof (unsorted right side) nor roll state back."""
@@ -256,47 +164,6 @@ def test_stream_asof_enrich_numeric_time_axis(spark, tmp_path):
     assert {r["event_id"]: r["ref_val"] for r in rows} == {1: 100, 2: 200}
 
 
-@pytest.mark.slow
-def test_stream_curate_filters_and_dedups_across_batches(spark, tmp_path):
-    from ferc_xbrl_extractor_spark.streaming.stateful import stream_curate
-
-    path = str(tmp_path / "docs")
-    schema = "doc_id long, text string"
-    batch1 = spark.createDataFrame(
-        [
-            (1, "a genuinely long unique document about spark engines here"),
-            (2, "short"),  # fails min_tokens
-            (3, "a  genuinely long   unique document about spark engines here"),
-        ],
-        schema,
-    )
-    # batch 2 arrives later: whitespace-variant dup of doc 1 + a fresh doc
-    batch2 = spark.createDataFrame(
-        [
-            (9, "a genuinely  long unique document about spark engines here"),
-            (10, "another sufficiently long and distinct document body right here"),
-        ],
-        schema,
-    )
-    # one file per logical batch (see test_stream_dedup_state_*)
-    batch1.coalesce(1).write.mode("append").parquet(path)
-    batch2.coalesce(1).write.mode("append").parquet(path)
-
-    stream = spark.readStream.schema(batch1.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(path)
-    out = stream_curate(stream, min_tokens=6, max_stopword_ratio=1.0)
-    rows = _drain(spark, out, "curate_stream").collect()
-    # docs 1/3/9 share a whitespace-normalized fingerprint: exactly one
-    # survivor (the batch-1 min id); doc 2 quality-filtered; doc 10 kept.
-    by_fp: dict = {}
-    for r in rows:
-        by_fp.setdefault(r["fp"], []).append(r["doc_id"])
-    assert sorted(len(v) for v in by_fp.values()) == [1, 1]
-    survivors = sorted(r["doc_id"] for r in rows)
-    assert survivors == [1, 10]
-
-
 def test_stream_filings_dir_matches_batch_shred(spark, tmp_path):
     """Incremental ingestion: a file-source stream over a landing dir,
     drained one filing per microbatch, must produce exactly the rows of
@@ -333,158 +200,6 @@ def test_stream_filings_dir_matches_batch_shred(spark, tmp_path):
     assert {(r["c_id"], r["value"]) for r in facts} == {
         ("c_1", "10"), ("c_2", "20"), ("c_3", "30")
     }
-
-
-@pytest.mark.slow
-def test_stream_extract_to_parquet_matches_batch_extract(spark, tmp_path):
-    """Continuous extract: drained incremental output (one filing per
-    microbatch, dynamic-partition-overwrite per filing) must equal the
-    one-shot batch extract of the same landing directory; a second drain
-    over the same checkpoint must be a no-op (exactly-once per filing)."""
-    from ferc_xbrl_extractor_spark.catalog.tablespec import TableSpec
-    from ferc_xbrl_extractor_spark.pipeline.extract import extract
-    from ferc_xbrl_extractor_spark.streaming import stream_extract_to_parquet
-
-    xml = """<?xml version="1.0"?>
-<xbrli:xbrl xmlns:xbrli="http://www.xbrl.org/2003/instance"
-            xmlns:ferc="http://ferc.gov/form/2023-01-01/ferc">
-  <xbrli:context id="c_{i}">
-    <xbrli:entity><xbrli:identifier scheme="s">E{i}</xbrli:identifier></xbrli:entity>
-    <xbrli:period>
-      <xbrli:startDate>2023-01-01</xbrli:startDate>
-      <xbrli:endDate>2023-12-31</xbrli:endDate>
-    </xbrli:period>
-  </xbrli:context>
-  <ferc:Amount contextRef="c_{i}">{v}</ferc:Amount>
-  <ferc:Label contextRef="c_{i}">row{i}</ferc:Label>
-</xbrli:xbrl>"""
-    land = tmp_path / "landing"
-    land.mkdir()
-    for i in (1, 2, 3):
-        (land / f"filing-{i}.xbrl").write_text(
-            xml.replace("{i}", str(i)).replace("{v}", str(1.5 * i))
-        )
-
-    specs = {
-        "amounts": TableSpec(
-            name="amounts",
-            period_type="duration",
-            columns={"amount": "number", "label": "string"},
-            axes=[],
-        )
-    }
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_extract_to_parquet(
-        spark, str(land), specs, out, ckpt,
-        max_files_per_trigger=1, available_now=True,
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(f"{out}/amounts")
-    batch = extract(spark, str(land), specs).tables["amounts"]
-    key = lambda r: (r["filing_name"], r["entity_id"], r["amount"], r["label"])
-    assert sorted(map(key, got.collect())) == sorted(map(key, batch.collect()))
-    assert got.count() == 3
-
-    # drain again over the same checkpoint: no new files, no duplicates
-    q2 = stream_extract_to_parquet(
-        spark, str(land), specs, out, ckpt,
-        max_files_per_trigger=1, available_now=True,
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(f"{out}/amounts").count() == 3
-
-
-def test_stream_upsert_parquet_applies_batches_incrementally(spark, tmp_path):
-    from ferc_xbrl_extractor_spark.streaming.cdc import stream_upsert_parquet
-
-    table = str(tmp_path / "cdc_table")
-    landing = str(tmp_path / "cdc_updates")
-    ckpt = str(tmp_path / "cdc_ckpt")
-    base = spark.createDataFrame(
-        [(1, "a", 1, "p0"), (2, "b", 1, "p1"), (3, "c", 1, "p2")],
-        "k long, v string, ver long, part string",
-    )
-    base.write.partitionBy("part").parquet(table)
-
-    updates1 = spark.createDataFrame(
-        [(1, "a2", 2, "p0"), (9, "new", 2, "p1")],
-        "k long, v string, ver long, part string",
-    )
-    updates1.write.parquet(landing)
-    stream = spark.readStream.schema(updates1.schema).parquet(landing)
-    q = stream_upsert_parquet(
-        stream, table, keys=["k"], order_col="ver",
-        partition_col="part", checkpoint_path=ckpt, available_now=True,
-    )
-    q.awaitTermination(120)
-    got = {r["k"]: (r["v"], r["ver"]) for r in spark.read.parquet(table).collect()}
-    assert got == {1: ("a2", 2), 2: ("b", 1), 3: ("c", 1), 9: ("new", 2)}
-
-    # second increment: only processes the NEW file (checkpoint), and an
-    # older version for k=1 must NOT regress the stored survivor
-    spark.createDataFrame(
-        [(1, "stale", 0, "p0"), (3, "c3", 3, "p2")],
-        "k long, v string, ver long, part string",
-    ).write.mode("append").parquet(landing)
-    stream2 = spark.readStream.schema(updates1.schema).parquet(landing)
-    q2 = stream_upsert_parquet(
-        stream2, table, keys=["k"], order_col="ver",
-        partition_col="part", checkpoint_path=ckpt, available_now=True,
-    )
-    q2.awaitTermination(120)
-    got2 = {r["k"]: (r["v"], r["ver"]) for r in spark.read.parquet(table).collect()}
-    assert got2 == {1: ("a2", 2), 2: ("b", 1), 3: ("c3", 3), 9: ("new", 2)}
-
-
-@pytest.mark.slow
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream watermarked interval join ≡ the same join in batch."""
-    from ferc_xbrl_extractor_spark.streaming import stream_interval_join
-
-    clicks = [
-        (1, "u1", "2024-01-01 00:05:00"),
-        (2, "u1", "2024-01-01 00:40:00"),
-        (3, "u2", "2024-01-01 00:06:00"),
-        (4, "u3", "2024-01-01 02:00:00"),
-    ]
-    buys = [
-        (10, "u1", "2024-01-01 00:10:00"),  # within 10m of click 1
-        (11, "u1", "2024-01-01 00:41:00"),  # within 10m of click 2
-        (12, "u2", "2024-01-01 00:30:00"),  # too late for click 3
-        (13, "u3", "2024-01-01 01:55:00"),  # before click 4 -> no match
-    ]
-    cdf = spark.createDataFrame(
-        clicks, "click_id long, user string, cts_s string"
-    ).withColumn("click_ts", F.to_timestamp("cts_s")).drop("cts_s")
-    bdf = spark.createDataFrame(
-        buys, "buy_id long, user string, bts_s string"
-    ).withColumn("buy_ts", F.to_timestamp("bts_s")).drop("bts_s")
-    cpath, bpath = str(tmp_path / "clicks"), str(tmp_path / "buys")
-    cdf.write.parquet(cpath)
-    bdf.write.parquet(bpath)
-
-    cs = spark.readStream.schema(cdf.schema).parquet(cpath)
-    bs = spark.readStream.schema(bdf.schema).parquet(bpath)
-    joined = stream_interval_join(
-        cs, bs, "click_ts", "buy_ts", lower="0 seconds",
-        upper="10 minutes", keys=["user"],
-    )
-    got = {
-        (r["click_id"], r["buy_id"])
-        for r in _drain(spark, joined, "sj_test").collect()
-    }
-    batch = {
-        (r["click_id"], r["buy_id"])
-        for r in cdf.join(
-            bdf,
-            (cdf["user"] == bdf["user"])
-            & (bdf["buy_ts"] >= cdf["click_ts"])
-            & (bdf["buy_ts"] <= cdf["click_ts"] + F.expr("INTERVAL 10 minutes")),
-        ).collect()
-    }
-    assert got == batch == {(1, 10), (2, 11)}
 
 
 def test_gopher_rules_is_stream_safe(spark, tmp_path):
@@ -620,55 +335,6 @@ def test_stream_neardup_suppress_greedy_and_cross_batch(spark, tmp_path):
     assert 1 in emitted and 4 not in emitted
     # emitted rows carry the fingerprint column
     assert all(r["fp"] == fps[r["doc_id"]] for r in got)
-
-
-@pytest.mark.slow
-def test_stream_dedup_ttl_expires_and_rebounds(spark, tmp_path):
-    from ferc_xbrl_extractor_spark.streaming.stateful import stream_dedup_ttl
-
-    path = str(tmp_path / "in")
-    schema = "event_id long, ts_s string, event_type string"
-
-    def _batch(rows, mode):
-        (
-            spark.createDataFrame(rows, schema)
-            .withColumn("ts", F.to_timestamp("ts_s"))
-            .drop("ts_s")
-            .coalesce(1)
-            .write.mode(mode)
-            .parquet(path)
-        )
-
-    # batch 1: two clicks 1s apart (inside the 60s TTL) + one view
-    _batch([(1, "2024-01-01 00:00:00", "click"),
-            (2, "2024-01-01 00:00:01", "click"),
-            (3, "2024-01-01 00:00:02", "view")], "overwrite")
-    # batch 2, same key across a batch boundary: id 4 gaps >60s from id 2
-    # (re-emit), id 5 is 30s after id 4 (suppressed — the window slid),
-    # id 6 gaps >60s from id 5 INSIDE the same batch (intra-batch expiry)
-    _batch([(4, "2024-01-01 00:10:00", "click"),
-            (5, "2024-01-01 00:10:30", "click"),
-            (6, "2024-01-01 00:30:00", "click")], "append")
-    # batch 3: a straggler older than the key's last observation has a
-    # negative gap and must stay suppressed
-    _batch([(7, "2024-01-01 00:29:59", "click")], "append")
-
-    # maxFilesPerTrigger=1 -> one microbatch per file, in write order
-    # (the availableNow drain stops once all pre-written files are done)
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    out = stream_dedup_ttl(
-        stream, ["event_type"], "ts", "event_id", [],
-        ttl_ms=60_000, watermark="5 seconds",
-    )
-    rows = _drain(spark, out, "dedup_ttl").collect()
-    clicks = sorted(r["event_id"] for r in rows if r["event_type"] == "click")
-    # exactly-once within an active window, re-emit after each TTL gap
-    assert clicks == [1, 4, 6]
-    assert [r["event_id"] for r in rows if r["event_type"] == "view"] == [3]
 
 
 @pytest.mark.slow
@@ -973,86 +639,3 @@ def test_stream_funnel_single_batch_and_crossbatch(spark, tmp_path):
         stream_funnel(stream2, ["signup"])
     with pytest.raises(ValueError, match="distinct"):
         stream_funnel(stream2, ["signup", "signup"])
-
-
-@pytest.mark.slow
-def test_stream_assemble_dialogues_matches_batch(spark, tmp_path):
-    """G109: streaming dialogue assembly ≡ batch G103 on in-order
-    input — gap-closed sessions emit with identical (user, started_at,
-    n_turns, transcript) rows whether the gap is proven by a later
-    event or by the watermark timer; the exact-boundary merge rule
-    (event AT last+gap merges) carries over; NULL role keeps its slot;
-    cross-batch turns of one open session assemble in total order."""
-    from ferc_xbrl_extractor_spark.operators.packing import assemble_dialogues
-    from ferc_xbrl_extractor_spark.streaming.stateful import (
-        stream_assemble_dialogues,
-    )
-
-    path = str(tmp_path / "turns")
-    schema = "user_id long, ts_s string, role string, text string"
-
-    def _batch(rows, mode):
-        (
-            spark.createDataFrame(rows, schema)
-            .withColumn("ts", F.to_timestamp("ts_s"))
-            .drop("ts_s")
-            .coalesce(1)
-            .write.mode(mode)
-            .parquet(path)
-        )
-
-    # user 1: session A (3 turns, one NULL role slot), then a 31-min
-    # gap -> session B; the second microbatch delivers an out-of-order
-    # turn INSIDE session B plus the gap-prover for session A.
-    # user 2: one session whose second turn lands AT exactly start+gap
-    # (merge), flushed by the watermark timer via the far-future tick.
-    _batch(
-        [
-            (1, "2024-01-01 00:00:00", "user", "hi"),
-            (1, "2024-01-01 00:05:00", "assistant", "hello"),
-            (1, "2024-01-01 00:06:00", None, "system note"),
-            (2, "2024-01-01 00:00:00", "user", "q"),
-            (2, "2024-01-01 00:30:00", "assistant", "a"),  # == gap: merge
-        ],
-        "overwrite",
-    )
-    _batch(
-        [
-            (1, "2024-01-01 00:40:00", "user", "new topic"),  # opens B
-            (1, "2024-01-01 00:39:00", "user", "typo fix"),  # ooo inside B
-            (9, "2024-01-02 00:00:00", "user", "watermark tick"),
-        ],
-        "append",
-    )
-
-    stream = (
-        spark.readStream.schema("user_id long, role string, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    out = stream_assemble_dialogues(
-        stream, gap_ms=30 * 60 * 1000, watermark="1 minute"
-    )
-    got = {
-        (r["user_id"], str(r["started_at"])): (r["n_turns"], r["transcript"])
-        for r in _drain(spark, out, "dialogues_stream").collect()
-    }
-
-    batch_df = spark.read.parquet(path)
-    want = {
-        (r["user_id"], str(r["started_at"])): (r["n_turns"], r["transcript"])
-        for r in assemble_dialogues(batch_df, gap="30 minutes").collect()
-        if r["user_id"] != 9  # the tick's own session never closes
-    }
-    # user 1 session B is closed by the watermark tick; session A by the
-    # in-stream gap; user 2 by the tick. All three match batch exactly.
-    assert got == want
-    assert len(got) == 3
-    a = got[(1, "2024-01-01 00:00:00")]
-    assert a == (3, "user: hi\nassistant: hello\n: system note")
-    b = got[(1, "2024-01-01 00:39:00")]
-    assert b == (2, "user: typo fix\nuser: new topic")
-    assert got[(2, "2024-01-01 00:00:00")][0] == 2  # boundary merged
-
-    with pytest.raises(ValueError, match="gap_ms"):
-        stream_assemble_dialogues(stream, gap_ms=0)

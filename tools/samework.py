@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import _CID_SQL, PUB_TS, TABLES  # noqa: E402
 
-# nd probe, mirroring operators/dedup.py::_ndigits (max_precision=6).
+# nd probe, mirroring operators/dedup.py::_ndigits_sql (max_precision=6).
 _ND_SQL = (
     "CASE "
     + " ".join(f"WHEN round(num, {p}) = num THEN {p}" for p in range(7))

@@ -2232,11 +2232,12 @@ def q_g16_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_g36_curate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G36: curation lineage funnel (pipeline/curate.curate_funnel) over
-    the exact g16 configuration — every document attributed to the FIRST
-    stage that dropped it (quality / decontaminate / exact_dup / sample,
-    NULL = shipped), aggregated to per-stage attrition counts. The oracle
-    replays the same stage predicates and set memberships in SQL."""
+    """G36: curation funnel (pipeline/curate.curate_funnel) over the exact
+    g16 configuration — the number of documents each curate_corpus stage
+    dropped (quality / decontaminate / exact_dup / sample, NULL =
+    shipped), counted after each stage runs, so building it runs jobs.
+    The oracle replays the same stage predicates and set memberships in
+    SQL."""
     docs = _t(spark, sf_dir, "documents")
     dup = docs.filter(F.col("doc_id") % 29 == 1).withColumn(
         "doc_id", F.col("doc_id") + 1000000

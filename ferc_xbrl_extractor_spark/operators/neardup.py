@@ -104,29 +104,25 @@ def _verify_candidates(
     docs_arr: DataFrame,
     id_col: str,
     threshold: float,
-    broadcast_verify: bool = True,
     docs_arr_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of a candidate pair set against per-doc
     shingle arrays: n_common = |array_intersect|, sizes = |array| — one
     expression per pair, no groupBy, no sizes aggregate.
 
-    With ``broadcast_verify`` the candidate set is broadcast, so the first
-    join streams the corpus with a map-side hash probe — right when
-    |candidates| ≪ |corpus| (the normal near-dup regime). The second join
-    (attaching the b-side arrays) is left to the planner: its left input
-    is |candidates| rows, so AQE turns it into a broadcast join from the
-    runtime stats without a separate materialization job (an explicit
-    ``broadcast(j1)`` would re-execute the whole candidate subplan just to
-    build the broadcast — measured 4× slower). At a scale where candidates
-    no longer fit a broadcast, set False: both joins run keyed on
-    id_a/id_b, still with no post-join aggregate."""
+    The candidate set is broadcast, so the first join streams the corpus
+    with a map-side hash probe — right when |candidates| ≪ |corpus| (the
+    normal near-dup regime). The second join (attaching the b-side arrays)
+    is left to the planner: its left input is |candidates| rows, so AQE
+    turns it into a broadcast join from the runtime stats without a
+    separate materialization job (an explicit ``broadcast(j1)`` would
+    re-execute the whole candidate subplan just to build the broadcast —
+    measured 4× slower). Past the scale where the candidate set fits a
+    broadcast, both joins have to run keyed on id_a/id_b instead."""
     a = docs_arr.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a"))
     b_src = docs_arr_b if docs_arr_b is not None else docs_arr
     b = b_src.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b"))
-    if broadcast_verify:
-        cands = F.broadcast(cands)
-    j1 = a.join(cands, "id_a")
+    j1 = a.join(F.broadcast(cands), "id_a")
     j2 = j1.join(b, "id_b")
     n_common = F.size(F.array_intersect(F.col("__sh_a"), F.col("__sh_b")))
     n_union = (
@@ -233,7 +229,6 @@ def ppjoin_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    broadcast_verify: bool = True,
 ) -> DataFrame:
     """G84: prefix-filtered exact Jaccard join (the SSJoin/PPJoin family
     — Chaudhuri et al. ICDE'06, Xiao et al. WWW'08). Same OUTPUT as
@@ -321,9 +316,7 @@ def ppjoin_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _verify_candidates(
-        cands, docs_arr, id_col, threshold, broadcast_verify
-    )
+    return _verify_candidates(cands, docs_arr, id_col, threshold)
 
 
 def _containment_unordered(
@@ -663,7 +656,6 @@ def minhash_lsh_join(
     num_hashes: int = 12,
     bands: int = 6,
     threshold: float = 0.5,
-    broadcast_verify: bool = True,
 ) -> DataFrame:
     """G94: CROSS-CORPUS MinHash-LSH near-dup join — every
     ``(id_a ∈ left, id_b ∈ right)`` pair with exact Jaccard ≥
@@ -717,14 +709,7 @@ def minhash_lsh_join(
         )
         .distinct()
     )
-    return _verify_candidates(
-        cands,
-        la,
-        id_col,
-        threshold,
-        broadcast_verify=broadcast_verify,
-        docs_arr_b=ra,
-    )
+    return _verify_candidates(cands, la, id_col, threshold, docs_arr_b=ra)
 
 
 def token_hashes(toks_col: str | Column) -> Column:

@@ -6,19 +6,24 @@ runs them:
 
     quality filter (G4 stats)          — map-side projection + filter
     → repetition screen (G4b)          — map-side dup-line/n-gram ratios
-    → classifier filter (G28)          — literal-weight logit over the stats
     → decontaminate (G15)              — broadcast benchmark probe + anti join
     → exact dedup by fingerprint (G1)  — one min_by hash aggregate
     → near-dup cluster dedup (G2b)     — LSH pairs → components → survivors
-    → paragraph dedup (G35)            — global-first-occurrence aggregate
     → duplicated-span trim (G26)       — positional-gram index over survivors
     → PII redaction (G4b)              — chained regexp_replace on survivors
     → stratified sample (G14)          — hash-ordered per-stratum budgets
     → integer encoding (G29)           — broadcast vocab-map transform probe
 
-Optional stages default off so the composition stays oracle-checkable at
-its G16 gate configuration; each extra stage is itself oracle-checked
-standalone (g4_repetition, g2_cluster_dedup, g4_pii_redact).
+Every stage is written once, in :func:`_curate_stages`, which yields them in
+order as ``(stage_name, DataFrame -> DataFrame)`` pairs.
+:func:`curate_corpus` folds the documents through them into one lazy plan;
+:func:`curate_funnel` (G36) folds the same pairs one stage at a time and
+counts the rows each stage leaves, so the funnel attributes every dropped
+document to the stage of :func:`curate_corpus` that dropped it.
+
+Optional stages default off, so the composition stays oracle-checkable at
+its G16 gate configuration; each of them is also oracle-checked standalone
+(e.g. g4_repetition, g2_cluster_dedup, g4_pii_redact, g61_c4_clean).
 
 Shuffle budget: the quality filter and fingerprint are map-side; the
 decontamination hit-count aggregate shuffles only contaminated-candidate
@@ -34,11 +39,13 @@ composition is oracle-checkable end to end (``g16_curate_e2e``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Iterator
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ferc_xbrl_extractor_spark.operators import (
-    classifier,
     neardup,
     sampling,
     spans,
@@ -46,6 +53,11 @@ from ferc_xbrl_extractor_spark.operators import (
     vocab,
 )
 from ferc_xbrl_extractor_spark.operators.dedup import dedup_exact_keep
+
+# shingle width of decontamination, near-dup and containment dedup
+_SHINGLE_N = 3
+# a span trimmed by trim_spans_n occurs in at least this many documents
+_TRIM_SPANS_MIN_COUNT = 2
 
 
 def _link_rank_relation(link_ranks: DataFrame, id_col: str) -> DataFrame:
@@ -81,8 +93,7 @@ def _validate_scripts(allowed_scripts) -> None:
         )
 
 
-def curate_corpus(
-    docs: DataFrame,
+def _curate_stages(
     benchmark: DataFrame | None = None,
     *,
     id_col: str = "doc_id",
@@ -90,13 +101,11 @@ def curate_corpus(
     min_tokens: int = 10,
     max_stopword_ratio: float = 0.5,
     min_uniq_ratio: float = 0.3,
-    shingle_n: int = 3,
     min_overlap: int = 5,
     url_col: str | None = None,
     domain_col: str | None = None,
     domain_suffixes=None,
     c4: bool = False,
-    c4_kwargs: dict | None = None,
     allowed_scripts: list[str] | None = None,
     max_dup_line_ratio: float | None = None,
     max_dup_3gram_ratio: float | None = None,
@@ -108,95 +117,44 @@ def curate_corpus(
     stratum_col: str | None = None,
     sample_n: int | None = None,
     sample_salt: str = "curate",
-    classifier_weights: dict[str, float] | None = None,
-    classifier_bias: float = 0.0,
-    keep_logit: float = 0.0,
-    gopher: bool = False,
-    gopher_kwargs: dict | None = None,
     link_ranks: DataFrame | None = None,
     link_edges: DataFrame | None = None,
     min_link_rank: int | None = None,
     link_rank_iters: int = 3,
-    paragraph_sep: str | None = None,
     trim_spans_n: int | None = None,
-    trim_spans_min_count: int = 2,
     group_cap: int | None = None,
     group_cap_col: str = "source",
     token_budget: int | None = None,
     budget_score_col: str = "stopword_ratio",
     encode_vocab_size: int | None = None,
-    cut_lineage: bool = True,
-) -> DataFrame:
-    """Curate a document corpus for training: quality-filter, remove
-    benchmark contamination, drop exact duplicates (whitespace-normalized
-    fingerprint; lowest id survives), and optionally cut each stratum to a
-    fixed budget.
+) -> Iterator[tuple[str, Callable[[DataFrame], DataFrame]]]:
+    """The curation stages in order, as ``(stage_name, DataFrame ->
+    DataFrame)`` pairs; the options are documented on
+    :func:`curate_corpus`. Every option is checked before the first pair
+    is yielded."""
+    if domain_col is not None and url_col is None:
+        raise ValueError("domain_col requires url_col")
+    if allowed_scripts is not None:
+        _validate_scripts(allowed_scripts)
+    if link_edges is not None and link_ranks is not None:
+        raise ValueError("pass link_ranks OR link_edges, not both")
+    if sample_n is not None and not stratum_col:
+        raise ValueError("sample_n requires stratum_col")
 
-    Returns the surviving rows with the G4 stat columns attached (callers
-    filter/project further downstream). ``benchmark=None`` skips
-    decontamination; ``sample_n=None`` skips sampling;
-    ``max_dup_*_ratio=None`` skips the repetition screen;
-    ``neardup_threshold=None`` skips near-dup cluster dedup;
-    ``containment_threshold=None`` skips subset/containment dedup (G90);
-    ``min_compression_ratio`` adds the G68 zlib-ratio screen to the
-    repetition stage (pages that deflate below the floor are template
-    spam even when the line/n-gram ratios pass; NULL/empty text is the
-    quality screen's business); ``redact``
-    scrubs PII from surviving text (applied after dedup so redaction
-    cost is paid on survivors only and never perturbs dedup keys).
-
-    Model/substring/encoding stages (all default off):
-    ``classifier_weights`` applies the G28 learned quality filter (logit
-    ≥ ``keep_logit``) on top of the rule thresholds — the stats columns
-    are already computed, so the model score is one extra projection;
-    ``gopher=True`` applies the G34 rule-pack (keep == fail_mask 0;
-    thresholds overridable via ``gopher_kwargs``) as an additional
-    map-side screen — the bitmask columns are dropped after filtering so
-    the stage composes transparently; ``domain_col`` derives a G66
-    registrable-domain column from ``url_col`` in-plan, so
-    ``group_cap_col``/``stratum_col`` can balance by domain without the
-    caller materializing it; ``link_ranks`` (an (id → rank)
-    relation, e.g. :func:`operators.graph.pagerank` output) or
-    ``link_edges`` (a (src, dst) link graph, ranked in-pipeline with
-    ``link_rank_iters`` G65 iterations) attaches a ``link_rank`` quality
-    prior — consumable downstream via ``budget_score_col="link_rank"``
-    or ``score_buckets`` — and with ``min_link_rank`` drops ranked
-    documents below the threshold (stage ``linkrank``; unranked
-    documents always pass); ``paragraph_sep`` runs G35
-    corpus-wide paragraph dedup on the survivors (before span trimming:
-    whole repeated paragraphs are cheaper to remove than the n-gram
-    spans they would otherwise become); ``trim_spans_n`` removes G26
-    cross-document duplicated n-gram spans from surviving text (after
-    document dedup: whole-doc duplicates are gone, boilerplate inside
-    survivors remains); ``neardup_keep_by`` names a numeric column (e.g.
-    ``n_tokens`` — the stats are already attached) and switches near-dup
-    survivor choice to the G52 quality-keep policy (best member wins,
-    not min id); ``group_cap`` applies the G59 per-group document cap
-    over ``group_cap_col`` (domain balancing: keep-best by
-    ``budget_score_col``, id tie-break — BEFORE the token budget, so no
-    single source monopolizes it); ``token_budget`` caps the FINAL corpus at a token
-    budget via G48 selection ordered by ``budget_score_col`` desc
-    (after sampling, before encoding — the budget bounds what ships);
-    ``encode_vocab_size`` appends G29 ``token_ids``
-    encoded against a vocab built from the final survivors (last, so the
-    vocab reflects what ships).
-    """
     if url_col is not None:
         # G64 runs BEFORE EVERYTHING: URL-keyed refetch dedup costs one
         # canonical-key aggregate and zero content work — the cheapest
         # possible attrition, so it goes first (the crawl-pipeline
         # convention). Survivor = minimum id per canonical URL.
-        docs = text.dedup_by_url(
-            docs, url_col=url_col, id_col=id_col
+        yield "url_dup", lambda df: text.dedup_by_url(
+            df, url_col=url_col, id_col=id_col
         ).drop("canon_url")
     if domain_col is not None:
         # G66: registrable domain derived in-plan from the URL, so
         # stratum_col / group_cap_col can balance by domain without the
         # caller materializing the column first
-        if url_col is None:
-            raise ValueError("domain_col requires url_col")
-        docs = text.with_registrable_domain(
-            docs.withColumn("__g66_host", text.host_of_url(url_col)),
+        yield "domain", lambda df: text.with_registrable_domain(
+            df.withColumn("__g66_host", text.host_of_url(url_col)),
             "__g66_host",
             domain_col,
             suffixes=domain_suffixes,
@@ -205,9 +163,9 @@ def curate_corpus(
         # G61 runs next (raw-crawl line cleanup precedes every
         # statistic): failing pages drop, surviving pages continue with
         # the line-filtered text so all downstream stats see clean text
-        cleaned = text.c4_clean(docs, text_col, **(c4_kwargs or {}))
-        docs = (
-            cleaned.filter(F.col("keep"))
+        yield "c4", lambda df: (
+            text.c4_clean(df, text_col)
+            .filter(F.col("keep"))
             .withColumn(text_col, F.col("clean_text"))
             .drop("clean_text", "n_kept_lines", "keep")
         )
@@ -215,572 +173,245 @@ def curate_corpus(
         # G91 script routing next: dominant-script membership is one
         # codegen'd expression, the cheapest per-row screen after c4 —
         # off-script documents never pay tokenization/statistics
-        _validate_scripts(allowed_scripts)
-        docs = docs.filter(
+        yield "script", lambda df: df.filter(
             text.script_of(text_col).isin(list(allowed_scripts))
         )
-    stats = text.with_text_stats(docs, text_col)
-    if max_dup_line_ratio is not None or max_dup_3gram_ratio is not None:
-        stats = text.with_repetition_stats(stats, text_col)
-        if max_dup_line_ratio is not None:
-            stats = stats.filter(F.col("dup_line_ratio") <= max_dup_line_ratio)
-        if max_dup_3gram_ratio is not None:
-            stats = stats.filter(F.col("dup_3gram_ratio") <= max_dup_3gram_ratio)
-    if min_compression_ratio is not None:
-        # G68 rides the repetition screen (same drop_stage): a page so
-        # repetitive it deflates below the floor is template spam even
-        # when its line/n-gram ratios pass. NULL ratio (empty text)
-        # passes here — the quality screen owns empties.
-        stats = text.compression_ratio(stats, text_col)
-        stats = stats.filter(
-            F.col("compression_ratio").isNull()
-            | (F.col("compression_ratio") >= float(min_compression_ratio))
-        )
-    quality = stats.filter(
+    yield "stats", lambda df: text.with_text_stats(df, text_col)
+    if (
+        max_dup_line_ratio is not None
+        or max_dup_3gram_ratio is not None
+        or min_compression_ratio is not None
+    ):
+
+        def repetition(df: DataFrame) -> DataFrame:
+            if max_dup_line_ratio is not None or max_dup_3gram_ratio is not None:
+                df = text.with_repetition_stats(df, text_col)
+                if max_dup_line_ratio is not None:
+                    df = df.filter(F.col("dup_line_ratio") <= max_dup_line_ratio)
+                if max_dup_3gram_ratio is not None:
+                    df = df.filter(F.col("dup_3gram_ratio") <= max_dup_3gram_ratio)
+            if min_compression_ratio is not None:
+                # G68 rides the repetition screen: a page so repetitive it
+                # deflates below the floor is template spam even when its
+                # line/n-gram ratios pass. NULL ratio (empty text) passes
+                # here — the quality screen owns empties.
+                df = text.compression_ratio(df, text_col).filter(
+                    F.col("compression_ratio").isNull()
+                    | (F.col("compression_ratio") >= float(min_compression_ratio))
+                )
+            return df
+
+        yield "repetition", repetition
+    yield "quality", lambda df: df.filter(
         (F.col("n_tokens") >= min_tokens)
         & (F.col("stopword_ratio") <= max_stopword_ratio)
         & (F.col("uniq_ratio") >= min_uniq_ratio)
     )
-    if classifier_weights is not None:
-        feat = classifier.attach_model_features(quality)
-        z = classifier.logit(classifier_weights, classifier_bias)
-        quality = feat.filter(z >= F.lit(float(keep_logit))).drop("n_tokens_k")
-    if gopher:
-        before = set(quality.columns)
-        ruled = text.gopher_rules(quality, text_col, **(gopher_kwargs or {}))
-        quality = ruled.filter(F.col("keep")).select(
-            *[c for c in ruled.columns if c in before]
-        )
     if link_edges is not None:
         # G65 quality prior derived in-pipeline from a (src, dst) link
         # graph over document ids
-        if link_ranks is not None:
-            raise ValueError("pass link_ranks OR link_edges, not both")
         from ferc_xbrl_extractor_spark.operators.graph import pagerank
 
         link_ranks = pagerank(link_edges, iters=link_rank_iters)
     if link_ranks is not None:
-        # one keyed join (O(nodes) rank relation; AQE broadcasts it when
-        # small) attaching `link_rank` — consumable downstream via
-        # budget_score_col="link_rank" / score_buckets. Documents ABSENT
-        # from the link graph keep a NULL rank and are never dropped by
-        # min_link_rank: no prior is not a bad prior.
-        quality = quality.join(
-            _link_rank_relation(link_ranks, id_col), id_col, "left"
-        )
-        if min_link_rank is not None:
-            quality = quality.filter(
-                F.col("link_rank").isNull()
-                | (F.col("link_rank") >= F.lit(int(min_link_rank)))
-            )
-    clean = quality
+
+        def linkrank(df: DataFrame) -> DataFrame:
+            # one keyed join (O(nodes) rank relation; AQE broadcasts it
+            # when small) attaching `link_rank`. Documents ABSENT from the
+            # link graph keep a NULL rank and are never dropped by
+            # min_link_rank: no prior is not a bad prior.
+            df = df.join(_link_rank_relation(link_ranks, id_col), id_col, "left")
+            if min_link_rank is not None:
+                df = df.filter(
+                    F.col("link_rank").isNull()
+                    | (F.col("link_rank") >= F.lit(int(min_link_rank)))
+                )
+            return df
+
+        yield "linkrank", linkrank
     if benchmark is not None:
-        clean = neardup.decontaminate(
-            quality,
+        yield "decontaminate", lambda df: neardup.decontaminate(
+            df,
             benchmark,
             id_col=id_col,
             text_col=text_col,
-            n=shingle_n,
+            n=_SHINGLE_N,
             min_overlap=min_overlap,
         )
-    deduped = dedup_exact_keep(
-        text.fingerprint(clean, text_col),
-        keys=["fp"],
-        order_by=[F.col(id_col)],
-    ).drop("fp")
-    # Two optional stages below re-traverse `deduped` with per-token
-    # work (jaccard's shingle self-join; vocab build + encode — two full
-    # token explodes), replaying the whole scan -> stats -> decontaminate
-    # -> dedup lineage per traversal: cut it once when either is on.
-    # Cheap re-references (two-phase sampling's count pass, the
-    # paragraph/span semi-join reassembly) measure FASTER without the
-    # cut — materializing the wide stats rows costs more than their
-    # extra pass — so they deliberately do not trigger it (opt-out via
-    # cut_lineage=False when executor-local storage is the constraint).
-    if cut_lineage and (
-        neardup_threshold is not None or encode_vocab_size is not None
-    ):
-        deduped = deduped.localCheckpoint(eager=False)
+
+    def exact_dup(df: DataFrame) -> DataFrame:
+        df = dedup_exact_keep(
+            text.fingerprint(df, text_col),
+            keys=["fp"],
+            order_by=[F.col(id_col)],
+        ).drop("fp")
+        # Near-dup (jaccard's shingle self-join) and encoding (vocab
+        # build + encode — two full token explodes) re-traverse the
+        # survivors with per-token work, replaying the whole scan ->
+        # stats -> decontaminate -> dedup lineage per traversal: cut it
+        # once when either is on. Cheap re-references (two-phase
+        # sampling's count pass, the span semi-join reassembly) measure
+        # FASTER without the cut — materializing the wide stats rows
+        # costs more than their extra pass — so they do not trigger it.
+        if neardup_threshold is not None or encode_vocab_size is not None:
+            df = df.localCheckpoint(eager=False)
+        return df
+
+    yield "exact_dup", exact_dup
     if neardup_threshold is not None:
-        pairs = neardup.jaccard_pairs(
-            deduped,
-            id_col=id_col,
-            text_col=text_col,
-            n=shingle_n,
-            threshold=neardup_threshold,
-        )
-        if neardup_keep_by is not None:
-            deduped = neardup.dedup_by_pairs_best(
-                deduped, pairs, keep_by=neardup_keep_by, id_col=id_col
+
+        def near_dup(df: DataFrame) -> DataFrame:
+            pairs = neardup.jaccard_pairs(
+                df,
+                id_col=id_col,
+                text_col=text_col,
+                n=_SHINGLE_N,
+                threshold=neardup_threshold,
             )
-        else:
-            deduped = neardup.dedup_by_pairs(deduped, pairs, id_col=id_col)
+            if neardup_keep_by is not None:
+                return neardup.dedup_by_pairs_best(
+                    df, pairs, keep_by=neardup_keep_by, id_col=id_col
+                )
+            return neardup.dedup_by_pairs(df, pairs, id_col=id_col)
+
+        yield "near_dup", near_dup
     if containment_threshold is not None:
         # G90 runs AFTER symmetric dedup: exact/near dup already removed
         # whole-doc copies, so the containment pass only has to catch
         # proper subsets (excerpts, quote pages) — the pair relation it
         # joins is smaller for it.
-        deduped = neardup.dedup_by_containment(
-            deduped,
+        yield "contained", lambda df: neardup.dedup_by_containment(
+            df,
             id_col=id_col,
             text_col=text_col,
-            n=shingle_n,
+            n=_SHINGLE_N,
             threshold=containment_threshold,
         )
-    if paragraph_sep is not None:
-        deduped = (
-            text.paragraph_dedup(
-                deduped, id_col, text_col, sep=paragraph_sep
-            )
-            .withColumn(text_col, F.col("clean_text"))
-            .drop("clean_text", "n_kept_paragraphs")
-        )
-        deduped = text.with_text_stats(deduped, text_col)
     if trim_spans_n is not None:
-        deduped = (
-            spans.trim_duplicated_spans(
-                deduped,
-                id_col,
-                text_col,
-                n=trim_spans_n,
-                min_count=trim_spans_min_count,
-            )
-            .withColumn(text_col, F.col("clean_text"))
-            .drop("clean_text", "n_kept_tokens")
-        )
         # the stat columns computed before trimming describe the old
         # text; recompute them so downstream consumers (packing budgets,
         # length filters) never read pre-trim counts.
-        deduped = text.with_text_stats(deduped, text_col)
+        yield "trim_spans", lambda df: text.with_text_stats(
+            spans.trim_duplicated_spans(
+                df,
+                id_col,
+                text_col,
+                n=trim_spans_n,
+                min_count=_TRIM_SPANS_MIN_COUNT,
+            )
+            .withColumn(text_col, F.col("clean_text"))
+            .drop("clean_text", "n_kept_tokens"),
+            text_col,
+        )
     if redact:
-        deduped = deduped.withColumn(text_col, text.redact_pii(text_col))
+        yield "redact", lambda df: df.withColumn(
+            text_col, text.redact_pii(text_col)
+        )
     if sample_n is not None:
-        if not stratum_col:
-            raise ValueError("sample_n requires stratum_col")
-        deduped = sampling.stratified_sample_n(
-            deduped, stratum_col, sample_n, id_col=id_col, salt=sample_salt
+        yield "sample", lambda df: sampling.stratified_sample_n(
+            df, stratum_col, sample_n, id_col=id_col, salt=sample_salt
         )
     if group_cap is not None:
-        deduped = sampling.cap_per_group(
-            deduped, group_cap_col, group_cap,
+        yield "group_cap", lambda df: sampling.cap_per_group(
+            df, group_cap_col, group_cap,
             order_col=budget_score_col, id_col=id_col,
         )
     if token_budget is not None:
-        deduped = sampling.select_to_token_budget(
-            deduped,
+        yield "token_budget", lambda df: sampling.select_to_token_budget(
+            df,
             token_budget,
             score_col=budget_score_col,
             token_col="n_tokens",
             id_col=id_col,
         )
     if encode_vocab_size is not None:
-        v = vocab.build_vocab(deduped, text_col, vocab_size=encode_vocab_size)
-        deduped = vocab.encode_documents(deduped, v, text_col)
-    return deduped
+        yield "encode", lambda df: vocab.encode_documents(
+            df, vocab.build_vocab(df, text_col, vocab_size=encode_vocab_size),
+            text_col,
+        )
 
 
-# stage order for curate_annotate / curate_funnel — a document's
-# drop_stage is the FIRST of these whose predicate rejects it, matching
-# curate_corpus' filter order exactly.
-CURATE_STAGES = [
-    "url_dup",
-    "c4",
-    "script",
-    "repetition",
-    "quality",
-    "classifier",
-    "gopher",
-    "linkrank",
-    "decontaminate",
-    "exact_dup",
-    "near_dup",
-    "contained",
-    "sample",
-]
-
-
-def curate_annotate(
-    docs: DataFrame,
-    benchmark: DataFrame | None = None,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 10,
-    max_stopword_ratio: float = 0.5,
-    min_uniq_ratio: float = 0.3,
-    shingle_n: int = 3,
-    min_overlap: int = 5,
-    url_col: str | None = None,
-    domain_col: str | None = None,
-    domain_suffixes=None,
-    c4: bool = False,
-    c4_kwargs: dict | None = None,
-    allowed_scripts: list[str] | None = None,
-    max_dup_line_ratio: float | None = None,
-    max_dup_3gram_ratio: float | None = None,
-    min_compression_ratio: float | None = None,
-    neardup_threshold: float | None = None,
-    containment_threshold: float | None = None,
-    stratum_col: str | None = None,
-    sample_n: int | None = None,
-    sample_salt: str = "curate",
-    classifier_weights: dict[str, float] | None = None,
-    classifier_bias: float = 0.0,
-    keep_logit: float = 0.0,
-    gopher: bool = False,
-    gopher_kwargs: dict | None = None,
-    link_ranks: DataFrame | None = None,
-    link_edges: DataFrame | None = None,
-    min_link_rank: int | None = None,
-    link_rank_iters: int = 3,
-    cut_lineage: bool = True,
-    _narrow: bool = False,
+def curate_corpus(
+    docs: DataFrame, benchmark: DataFrame | None = None, **options
 ) -> DataFrame:
-    """Per-document curation lineage: every input row annotated with
-    ``drop_stage`` — the FIRST pipeline stage that rejects it (stage
-    names in CURATE_STAGES order; NULL for survivors). ``curate_corpus``
-    drops rows silently, which is right for production but opaque for a
-    100-TB run you need to AUDIT: this computes the same decisions as
-    flags over the same operators, so attrition is attributable without
-    re-running the pipeline once per stage.
+    """Curate a document corpus for training: quality-filter, remove
+    benchmark contamination, drop exact duplicates (whitespace-normalized
+    fingerprint; lowest id survives), and optionally cut each stratum to a
+    fixed budget.
 
-    Scale shape: the filter stages are the same map-side expressions the
-    pipeline runs; the set-membership stages (contamination, dedup
-    losers, near-dup losers, sample membership) become broadcast
-    semi/anti joins against the SAME survivor/loser relations the
-    pipeline derives — each is |affected ids| rows, tiny next to the
-    corpus. One wide scan, no per-stage re-scans.
+    Returns the surviving rows with the G4 stat columns attached (callers
+    filter/project further downstream). ``benchmark=None`` skips
+    decontamination; ``sample_n=None`` (with ``stratum_col`` naming the
+    strata) skips sampling; ``max_dup_*_ratio=None`` skips the repetition
+    screen; ``neardup_threshold=None`` skips near-dup cluster dedup;
+    ``containment_threshold=None`` skips subset/containment dedup (G90);
+    ``min_compression_ratio`` adds the G68 zlib-ratio screen to the
+    repetition stage (pages that deflate below the floor are template
+    spam even when the line/n-gram ratios pass; NULL/empty text is the
+    quality screen's business); ``redact`` scrubs PII from surviving text
+    (applied after dedup so redaction cost is paid on survivors only and
+    never perturbs dedup keys).
 
-    Later-stage flags are computed on the exact population the real
-    pipeline would hand that stage (e.g. the dedup winner set is derived
-    from quality-passing docs only), so the funnel's stage attribution
-    equals what the pipeline actually did — curate_corpus(same params)
-    == the drop_stage-IS-NULL slice (pinned by tests).
+    ``url_col`` drops G64 refetch duplicates first (minimum id per
+    canonical URL); ``domain_col`` derives a G66 registrable-domain column
+    from ``url_col`` in-plan (``domain_suffixes`` switches to the public
+    suffix list), so ``group_cap_col``/``stratum_col`` can balance by
+    domain without the caller materializing it; ``c4`` applies the G61
+    line cleanup and page filter before every statistic;
+    ``allowed_scripts`` keeps documents whose dominant G91 script is
+    listed; ``link_ranks`` (an (id → rank) relation, e.g.
+    :func:`operators.graph.pagerank` output) or ``link_edges`` (a (src,
+    dst) link graph, ranked in-pipeline with ``link_rank_iters`` G65
+    iterations) attaches a ``link_rank`` quality prior — consumable
+    downstream via ``budget_score_col="link_rank"`` or ``score_buckets``
+    — and with ``min_link_rank`` drops ranked documents below the
+    threshold (unranked documents always pass); ``trim_spans_n`` removes
+    G26 cross-document duplicated n-gram spans from surviving text (after
+    document dedup: whole-doc duplicates are gone, boilerplate inside
+    survivors remains); ``neardup_keep_by`` names a numeric column (e.g.
+    ``n_tokens`` — the stats are already attached) and switches near-dup
+    survivor choice to the G52 quality-keep policy (best member wins,
+    not min id); ``group_cap`` applies the G59 per-group document cap
+    over ``group_cap_col`` (domain balancing: keep-best by
+    ``budget_score_col``, id tie-break — BEFORE the token budget, so no
+    single source monopolizes it); ``token_budget`` caps the FINAL corpus
+    at a token budget via G48 selection ordered by ``budget_score_col``
+    desc (after sampling, before encoding — the budget bounds what
+    ships); ``encode_vocab_size`` appends G29 ``token_ids`` encoded
+    against a vocab built from the final survivors (last, so the vocab
+    reflects what ships). The options and their defaults are the keyword
+    parameters of :func:`_curate_stages`.
     """
-    out_cols = list(docs.columns)
-    fail_url = F.lit(False)
-    if url_col is not None:
-        url_winners = text.dedup_by_url(
-            docs, url_col=url_col, id_col=id_col
-        ).select(id_col)
-        marked = url_winners.withColumn("__url_win", F.lit(True))
-        docs = docs.join(marked, id_col, "left").withColumn(
-            "__fail_url", ~F.coalesce(F.col("__url_win"), F.lit(False))
-        ).drop("__url_win")
-        fail_url = F.col("__fail_url")
-    if domain_col is not None:
-        # same in-plan derivation as curate_corpus (G66)
-        if url_col is None:
-            raise ValueError("domain_col requires url_col")
-        docs = text.with_registrable_domain(
-            docs.withColumn("__g66_host", text.host_of_url(url_col)),
-            "__g66_host",
-            domain_col,
-            suffixes=domain_suffixes,
-        ).drop("__g66_host")
-    fail_c4 = F.lit(False)
-    if c4:
-        cleaned = text.c4_clean(docs, text_col, **(c4_kwargs or {}))
+    return reduce(
+        lambda df, stage: stage[1](df), _curate_stages(benchmark, **options), docs
+    )
+
+
+def curate_funnel(
+    docs: DataFrame, benchmark: DataFrame | None = None, **options
+) -> DataFrame:
+    """Stage-attrition report (G36) for a :func:`curate_corpus`
+    configuration: ``(drop_stage, n_docs)``, one row per stage that
+    dropped at least one document plus a ``(NULL, n_survivors)`` row.
+
+    It runs the same stages as :func:`curate_corpus`, one at a time: each
+    stage's output is checkpointed eagerly and counted, so a document is
+    attributed to the stage that dropped it in the pipeline itself. The
+    checkpoint keeps each stage from replaying (and re-tokenizing) the
+    corpus through every stage before it; the count is observed on the
+    checkpoint's own job. Runs its jobs when called."""
+    n = docs.count()
+    rows = []
+    for name, stage in _curate_stages(benchmark, **options):
+        seen = Observation()
         docs = (
-            cleaned.withColumn(
-                "__fail_c4", ~F.coalesce(F.col("keep"), F.lit(False))
-            )
-            .withColumn(
-                text_col,
-                F.when(F.col("keep"), F.col("clean_text")).otherwise(
-                    F.col(text_col)
-                ),
-            )
-            .drop("clean_text", "n_kept_lines", "keep")
+            stage(docs)
+            .observe(seen, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
         )
-        fail_c4 = F.col("__fail_c4")
-
-    fail_script = F.lit(False)
-    if allowed_scripts is not None:
-        _validate_scripts(allowed_scripts)
-        fail_script = ~text.script_of(text_col).isin(
-            list(allowed_scripts)
-        )
-    stats = text.with_text_stats(docs, text_col)
-
-    fail_rep = F.lit(False)
-    if max_dup_line_ratio is not None or max_dup_3gram_ratio is not None:
-        # mirror curate_corpus: the per-token repetition ratios are only
-        # computed when a threshold actually consumes them
-        stats = text.with_repetition_stats(stats, text_col)
-        if max_dup_line_ratio is not None:
-            fail_rep = fail_rep | (
-                F.col("dup_line_ratio") > max_dup_line_ratio
-            )
-        if max_dup_3gram_ratio is not None:
-            fail_rep = fail_rep | (
-                F.col("dup_3gram_ratio") > max_dup_3gram_ratio
-            )
-    if min_compression_ratio is not None:
-        stats = text.compression_ratio(stats, text_col)
-        fail_rep = fail_rep | (
-            F.col("compression_ratio").isNotNull()
-            & (F.col("compression_ratio") < float(min_compression_ratio))
-        )
-
-    fail_quality = (
-        (F.col("n_tokens") < min_tokens)
-        | (F.col("stopword_ratio") > max_stopword_ratio)
-        | (F.col("uniq_ratio") < min_uniq_ratio)
-    )
-
-    fail_clf = F.lit(False)
-    if classifier_weights is not None:
-        stats = classifier.attach_model_features(stats)
-        fail_clf = classifier.logit(
-            classifier_weights, classifier_bias
-        ) < F.lit(float(keep_logit))
-
-    fail_gopher = F.lit(False)
-    if gopher:
-        before = set(stats.columns)
-        stats = text.gopher_rules(stats, text_col, **(gopher_kwargs or {}))
-        fail_gopher = ~F.col("keep")
-        stats = stats.withColumn("__fail_gopher", fail_gopher).select(
-            *[c for c in stats.columns if c in before], "__fail_gopher"
-        )
-        fail_gopher = F.col("__fail_gopher")
-
-    fail_link = F.lit(False)
-    if link_edges is not None:
-        if link_ranks is not None:
-            raise ValueError("pass link_ranks OR link_edges, not both")
-        from ferc_xbrl_extractor_spark.operators.graph import pagerank
-
-        link_ranks = pagerank(link_edges, iters=link_rank_iters)
-    if link_ranks is not None and min_link_rank is not None:
-        # same join + threshold as curate_corpus' linkrank stage;
-        # unranked (NULL) documents never fail — no prior is not a bad
-        # prior
-        stats = stats.join(
-            _link_rank_relation(link_ranks, id_col), id_col, "left"
-        )
-        fail_link = F.col("link_rank").isNotNull() & (
-            F.col("link_rank") < F.lit(int(min_link_rank))
-        )
-
-    annotated = stats.withColumn("__f_url", fail_url).withColumn(
-        "__f_c4", ~F.col("__f_url") & fail_c4
-    ).withColumn(
-        "__f_script", ~F.col("__f_url") & ~F.col("__f_c4") & fail_script
-    ).withColumn(
-        "__f_rep",
-        ~F.col("__f_url") & ~F.col("__f_c4") & ~F.col("__f_script")
-        & fail_rep,
-    ).withColumn(
-        "__f_qual",
-        ~F.col("__f_url") & ~F.col("__f_c4") & ~F.col("__f_script")
-        & ~F.col("__f_rep") & fail_quality,
-    )
-    annotated = annotated.withColumn(
-        "__f_clf",
-        ~F.col("__f_url") & ~F.col("__f_c4") & ~F.col("__f_script")
-        & ~F.col("__f_rep") & ~F.col("__f_qual") & fail_clf,
-    ).withColumn(
-        "__f_gopher",
-        ~F.col("__f_url") & ~F.col("__f_c4") & ~F.col("__f_script")
-        & ~F.col("__f_rep") & ~F.col("__f_qual") & ~F.col("__f_clf")
-        & fail_gopher,
-    ).withColumn(
-        "__f_link",
-        ~F.col("__f_url") & ~F.col("__f_c4") & ~F.col("__f_script")
-        & ~F.col("__f_rep") & ~F.col("__f_qual") & ~F.col("__f_clf")
-        & ~F.col("__f_gopher") & fail_link,
-    )
-    pass_rules = (
-        ~F.col("__f_url") & ~F.col("__f_c4") & ~F.col("__f_script")
-        & ~F.col("__f_rep") & ~F.col("__f_qual") & ~F.col("__f_clf")
-        & ~F.col("__f_gopher") & ~F.col("__f_link")
-    )
-
-    # The later stages (contamination, decontaminate->exact-dup, near-dup,
-    # sample) each branch off `survivors`, and a branch re-executes the
-    # whole scan + per-token stats lineage — 3-4 corpus re-reads inside
-    # the one action. `cut_lineage` materializes the survivors' MINIMAL
-    # projection (id, text, stratum) once via localCheckpoint, so every
-    # branch replays from that instead (quiet A/B at sf0.1: 3.8 -> 2.7s;
-    # the narrow projection alone already prunes the re-scans' width,
-    # and at 100 TB the cut converts N per-token corpus re-reads into
-    # one bounded write). Disable when executor-local storage is the
-    # scarcer resource and recompute is preferred.
-    keep = [id_col, text_col]
-    if stratum_col and stratum_col not in keep:
-        keep.append(stratum_col)
-    if _narrow and cut_lineage:
-        # funnel path: the caller only consumes (id, drop_stage), so the
-        # checkpoint can carry ALL rows with their flag bits instead of
-        # the survivors alone — the final flag scan then reads this one
-        # materialization instead of RE-TOKENIZING the corpus a second
-        # time (the stats columns feed the __f_* bits). One per-token
-        # pass over the corpus total; at 100 TB that is a whole corpus
-        # re-scan eliminated.
-        flag_cols = [c for c in annotated.columns if c.startswith("__f_")]
-        annotated = annotated.select(id_col, *keep[1:], *flag_cols)
-        annotated = annotated.localCheckpoint(eager=False)
-        out_cols = [id_col]
-        survivors = annotated.filter(pass_rules).select(*keep)
-    else:
-        # population the real pipeline hands the later stages
-        survivors = annotated.filter(pass_rules).select(*keep)
-        if cut_lineage:
-            survivors = survivors.localCheckpoint(eager=False)
-
-    def _mark(ids: DataFrame, name: str) -> DataFrame:
-        # ONE marker relation per stage id-set, shared by BOTH of its
-        # consumers (the membership flag on `annotated` and the next
-        # stage's population filter) so identical subtrees can share
-        # their exchange. Join strategy stays AQE-decided: contaminated
-        # ids are usually tiny, but the winner/sampled sets scale with
-        # the corpus — forcing broadcast here would ship a corpus-sized
-        # hash relation to every task at 100 TB.
-        return ids.select(F.col(id_col)).withColumn(f"__{name}", F.lit(True))
-
-    def _flag_members(df: DataFrame, marked: DataFrame, name: str) -> DataFrame:
-        return df.join(marked, id_col, "left").withColumn(
-            f"__{name}", F.coalesce(F.col(f"__{name}"), F.lit(False))
-        )
-
-    def _members(df: DataFrame, marked: DataFrame, name: str) -> DataFrame:
-        # semi-join via the SAME broadcast relation as the flag (ids are
-        # unique per stage set, so left-join + filter ≡ left_semi)
-        return (
-            df.join(marked, id_col, "left")
-            .filter(F.col(f"__{name}").isNotNull())
-            .drop(f"__{name}")
-        )
-
-    def _non_members(df: DataFrame, marked: DataFrame, name: str) -> DataFrame:
-        return (
-            df.join(marked, id_col, "left")
-            .filter(F.col(f"__{name}").isNull())
-            .drop(f"__{name}")
-        )
-
-    # Every stage's id-set below has TWO consumers in the one final plan
-    # (the membership flag + the next stage's population), and a relation
-    # consumed twice re-executes its whole probe/aggregate lineage twice —
-    # r5's funnel paid the contamination probe, the dedup aggregate, and
-    # the near-dup pipeline each two times. The id-sets are bounded
-    # (ids only), so cutting their lineage is a tiny materialization that
-    # halves the heavy stages.
-    def _cut_ids(ids: DataFrame) -> DataFrame:
-        return ids.localCheckpoint(eager=False) if cut_lineage else ids
-
-    clean = survivors
-    if benchmark is not None:
-        contaminated = _cut_ids(
-            neardup.contamination_report(
-                survivors, benchmark, id_col=id_col, text_col=text_col,
-                n=shingle_n, min_overlap=min_overlap,
-            ).select(id_col)
-        )
-        marked_c = _mark(contaminated, "contam")
-        annotated = _flag_members(annotated, marked_c, "contam")
-        # decontaminate(survivors, ...) would recompute the SAME
-        # contamination probe the flag above just ran (r5: the funnel's
-        # duplicated heaviest stage); the clean population filters
-        # through the SAME broadcast relation as the flag, so the hashed
-        # relation builds once (ReuseExchange).
-        clean = _non_members(survivors, marked_c, "contam")
-    else:
-        annotated = annotated.withColumn("__contam", F.lit(False))
-
-    fp = text.fingerprint(clean, text_col)
-    winners = _cut_ids(
-        dedup_exact_keep(
-            fp, keys=["fp"], order_by=[F.col(id_col)]
-        ).select(id_col)
-    )
-    marked_w = _mark(winners, "dup_winner")
-    deduped = _members(fp, marked_w, "dup_winner").drop("fp")
-    annotated = _flag_members(annotated, marked_w, "dup_winner")
-
-    if neardup_threshold is not None:
-        pairs = neardup.jaccard_pairs(
-            deduped, id_col=id_col, text_col=text_col,
-            n=shingle_n, threshold=neardup_threshold,
-        )
-        nd_ids = _cut_ids(
-            neardup.dedup_by_pairs(deduped, pairs, id_col=id_col)
-            .select(id_col)
-        )
-        marked_nd = _mark(nd_ids, "nd_winner")
-        annotated = _flag_members(annotated, marked_nd, "nd_winner")
-        final_pop = _members(deduped, marked_nd, "nd_winner")
-    else:
-        annotated = annotated.withColumn("__nd_winner", F.lit(True))
-        final_pop = deduped
-
-    if containment_threshold is not None:
-        ct_ids = _cut_ids(
-            neardup.dedup_by_containment(
-                final_pop, id_col=id_col, text_col=text_col,
-                n=shingle_n, threshold=containment_threshold,
-            ).select(id_col)
-        )
-        marked_ct = _mark(ct_ids, "not_contained")
-        annotated = _flag_members(annotated, marked_ct, "not_contained")
-        final_pop = _members(final_pop, marked_ct, "not_contained")
-    else:
-        annotated = annotated.withColumn("__not_contained", F.lit(True))
-
-    if sample_n is not None:
-        if not stratum_col:
-            raise ValueError("sample_n requires stratum_col")
-        sampled = sampling.stratified_sample_n(
-            final_pop, stratum_col, sample_n, id_col=id_col, salt=sample_salt
-        ).select(id_col)
-        annotated = _flag_members(annotated, _mark(sampled, "sampled"), "sampled")
-    else:
-        annotated = annotated.withColumn("__sampled", F.lit(True))
-
-    drop_stage = (
-        F.when(F.col("__f_url"), "url_dup")
-        .when(F.col("__f_c4"), "c4")
-        .when(F.col("__f_script"), "script")
-        .when(F.col("__f_rep"), "repetition")
-        .when(F.col("__f_qual"), "quality")
-        .when(F.col("__f_clf"), "classifier")
-        .when(F.col("__f_gopher"), "gopher")
-        .when(F.col("__f_link"), "linkrank")
-        .when(F.col("__contam"), "decontaminate")
-        .when(~F.col("__dup_winner"), "exact_dup")
-        .when(~F.col("__nd_winner"), "near_dup")
-        .when(~F.col("__not_contained"), "contained")
-        .when(~F.col("__sampled"), "sample")
-    )
-    return annotated.select(
-        *out_cols, drop_stage.alias("drop_stage")
-    )
-
-
-def curate_funnel(docs: DataFrame | None = None,
-                  benchmark: DataFrame | None = None,
-                  *, annotated: DataFrame | None = None,
-                  **kwargs) -> DataFrame:
-    """Stage-attrition report for a curation configuration:
-    ``(stage, n_dropped)`` plus a ``(NULL, n_survivors)`` row — one
-    aggregate over :func:`curate_annotate`'s single composed plan.
-
-    Pass ``annotated=`` (a persisted :func:`curate_annotate` result) when
-    the same session also consumes the per-document lineage or the
-    curated corpus itself — the funnel then reuses that one plan instead
-    of re-deriving every stage (the r5 review's shared-session ask): one
-    annotate run yields the corpus (``drop_stage IS NULL`` slice — pinned
-    equal to ``curate_corpus`` by tests), the audit rows, AND this
-    report."""
-    if annotated is None:
-        if docs is None:
-            raise ValueError("curate_funnel needs docs or annotated")
-        # _narrow: the funnel consumes only drop_stage, so annotate can
-        # checkpoint the flag bits for ALL rows and skip the second
-        # corpus tokenization its full-width output would need
-        annotated = curate_annotate(docs, benchmark, _narrow=True, **kwargs)
-    return annotated.groupBy("drop_stage").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
+        left = seen.get["n"]
+        if left < n:
+            rows.append((name, n - left))
+        n = left
+    rows.append((None, n))
+    return docs.sparkSession.createDataFrame(rows, "drop_stage string, n_docs long")

@@ -43,18 +43,17 @@ def _driver_xms() -> str:
 
 def get_spark(
     app_name: str = "ferc-xbrl-extractor-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    On a real cluster the caller passes ``master=None`` with an external
-    deployment (spark-submit / k8s) — every setting here is advisory and
-    cluster-safe. On local mode we size to SPARK_GRAFT_CPUS.
+    The master is ``SPARK_GRAFT_MASTER`` (a cluster deployment sets it;
+    every setting here is advisory and cluster-safe), else local mode
+    sized to SPARK_GRAFT_CPUS.
     """
     cpus = default_parallelism()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -618,6 +618,16 @@ def test_multi_benchmark_decontamination(spark):
         neardup.contamination_multi_report(corpus, {})
 
 
+def _funnel(docs, **params):
+    """curate_funnel as ``{drop_stage: n_docs}``."""
+    from ferc_xbrl_extractor_spark.pipeline import curate
+
+    return {
+        r["drop_stage"]: r["n_docs"]
+        for r in curate.curate_funnel(docs, **params).collect()
+    }
+
+
 def test_curate_corpus_stages_compose(spark):
     from ferc_xbrl_extractor_spark.pipeline import curate
 
@@ -1450,8 +1460,6 @@ def test_curate_classifier_spans_encode_stages_compose(spark):
     rows = [
         (1, f"{good1} one {boiler}"),
         (2, f"{good2} two {boiler}"),
-        # repetitive -> low uniq_ratio -> classifier drops it even though
-        # the rule thresholds (set permissive below) let it through
         (3, "spam spam spam spam spam spam spam spam spam spam spam spam"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
@@ -1460,16 +1468,13 @@ def test_curate_classifier_spans_encode_stages_compose(spark):
         min_tokens=1,
         max_stopword_ratio=1.0,
         min_uniq_ratio=0.0,
-        classifier_weights={"uniq_ratio": 10.0},
-        classifier_bias=-3.0,   # keep iff uniq_ratio > 0.3
         trim_spans_n=4,
         encode_vocab_size=6,
     ).collect()
     got = {r["doc_id"]: r for r in out}
-    assert set(got) == {1, 2}                       # classifier dropped 3
     assert got[1]["text"].startswith("alpha beta")   # unique text kept
     assert got[2]["text"].startswith("lambda mu")
-    for r in got.values():
+    for r in (got[1], got[2]):
         assert boiler not in r["text"]              # span trim removed it
         ids = r["token_ids"]
         assert len(ids) == len(r["text"].split())    # encoded post-trim
@@ -2039,36 +2044,6 @@ def test_paragraph_dedup_plan_is_aggregate_not_window(spark):
     assert "partitionby__h" not in plan.lower().replace(" ", "")
 
 
-def test_curate_gopher_and_paragraph_stages(spark):
-    """G16 + G34 + G35 composition: the rule-pack screens documents
-    map-side (bitmask columns dropped after the filter) and paragraph
-    dedup rewrites survivors before span trimming."""
-    from ferc_xbrl_extractor_spark.pipeline.curate import curate_corpus
-
-    good = "the quick brown fox and a dog run to the hills in summer "
-    rows = [
-        (1, "INTRO\n\n" + good * 3 + str(1)),
-        (2, "INTRO\n\n" + good * 3 + str(2)),
-        (3, "### ### ### ###"),  # fails gopher (symbols, no stopwords)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = curate_corpus(
-        docs,
-        min_tokens=2,
-        min_uniq_ratio=0.0,
-        gopher=True,
-        gopher_kwargs={"min_words": 5, "min_stop_hits": 1,
-                       "max_bullet_ratio": 1.0},
-        paragraph_sep="\n\n",
-    )
-    got = {r["doc_id"]: r["text"] for r in out.collect()}
-    assert set(got) == {1, 2}  # doc 3 screened out by the rule pack
-    # the shared INTRO paragraph survives only at its first occurrence
-    assert got[1].startswith("INTRO") and not got[2].startswith("INTRO")
-    # bitmask columns do not leak into the output schema
-    assert "fail_mask" not in out.columns and "keep" not in out.columns
-
-
 def test_recall_report_goldens(spark):
     """G3 recall report: exact-vs-exact is 1.0; a fully-missed query
     surfaces as recall 0.0 instead of being dropped."""
@@ -2092,10 +2067,9 @@ def test_recall_report_goldens(spark):
 
 
 @pytest.mark.slow
-def test_curate_annotate_funnel_matches_pipeline(spark):
-    """G36: drop_stage lineage equals the real pipeline's decisions —
-    the NULL slice IS curate_corpus' output, and every row gets exactly
-    the first stage that rejected it."""
+def test_curate_funnel_matches_pipeline(spark):
+    """G36: the funnel counts the documents each curate_corpus stage
+    dropped; its NULL row is the size of curate_corpus' output."""
     from ferc_xbrl_extractor_spark.pipeline import curate
 
     good = "the quick brown fox and a dog run to the hills in summer "
@@ -2118,27 +2092,109 @@ def test_curate_annotate_funnel_matches_pipeline(spark):
         benchmark=bench,
         min_tokens=5,
         min_uniq_ratio=0.2,
-        shingle_n=3,
         min_overlap=5,
     )
     out_ids = {
         r["doc_id"] for r in curate.curate_corpus(docs, **params).collect()
     }
-    ann = {
-        r["doc_id"]: r["drop_stage"]
-        for r in curate.curate_annotate(docs, **params).collect()
+    assert out_ids == {1, 3, 7}  # 2 is a dup of 1: min id wins
+    # 4 (min_tokens) and 5 (uniq_ratio) fail quality, 6 is contaminated
+    assert _funnel(docs, **params) == {
+        None: 3, "quality": 2, "decontaminate": 1, "exact_dup": 1,
     }
-    assert {i for i, s in ann.items() if s is None} == out_ids
-    assert ann[4] == "quality"
-    assert ann[5] == "quality"  # uniq_ratio too low
-    assert ann[6] == "decontaminate"
-    assert ann[2] == "exact_dup" and ann[1] is None  # min id wins
-    funnel = {
-        r["drop_stage"]: r["n_docs"]
-        for r in curate.curate_funnel(docs, **params).collect()
-    }
-    assert funnel[None] == len(out_ids)
-    assert sum(funnel.values()) == len(rows)
+
+
+def test_curate_funnel_counts_null_text_at_quality(spark):
+    """A NULL-text document has NULL stats, so the quality filter drops
+    it in curate_corpus; the funnel must count it there too."""
+    from ferc_xbrl_extractor_spark.pipeline import curate
+
+    good = "the quick brown fox and a dog run to the hills in summer "
+    docs = spark.createDataFrame(
+        [(1, good * 2), (2, None), (3, "tiny")], "doc_id long, text string"
+    )
+    params = dict(min_tokens=5, min_uniq_ratio=0.2, max_stopword_ratio=0.9)
+    out = {r["doc_id"] for r in curate.curate_corpus(docs, **params).collect()}
+    assert out == {1}
+    assert _funnel(docs, **params) == {None: 1, "quality": 2}
+
+
+_GOOD = "the quick brown fox and a dog run to the hills in summer "
+_FUNNEL_DOCS = [
+    # doc_id, text, url, source
+    (1, _GOOD * 2 + "one.", "http://a.com/p?utm_source=x", "web"),
+    (2, _GOOD * 2 + "one.", "HTTP://A.COM:80/p/", "web"),       # refetch of 1
+    (3, _GOOD * 2 + "one. ", "http://b.com/1", "web"),          # exact dup of 1
+    (4, _GOOD * 2 + "two.", "http://b.com/2", "web"),           # near dup of 1
+    (5, _GOOD, "http://b.com/3", "books"),                      # subset of 1
+    (6, "tiny", "http://c.com/1", "web"),                       # fails quality
+    (7, None, "http://c.com/2", "books"),                       # NULL text
+    (8, "spam " * 30, "http://c.com/3", "web"),                 # repetitive
+    (9, "привет мир это русский текст про собаку и реку " * 2,
+     "http://d.ru/1", "books"),                                 # off-script
+    (10, "benchmark sentence alpha beta gamma delta epsilon zeta eta "
+         "theta iota kappa", "http://e.com/1", "books"),       # contaminated
+    (11, "\n".join(["this line carries plenty of words and ends properly."]
+                   * 3), "http://f.com/1", "books"),
+    (12, "completely different words about machine learning and neural "
+         "networks training on large datasets forever", "http://g.com/1",
+     "books"),
+]
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["g36", "compression", "c4", "defaults", "linkrank", "domain_cap", "url",
+     "containment", "script", "keep_by_budget", "trim_sample"],
+)
+def test_curate_funnel_accounts_for_every_document(spark, case):
+    """For the option sets the curate tests use, the funnel's rows sum to
+    the input and its NULL row is the size of curate_corpus' output."""
+    from ferc_xbrl_extractor_spark.operators import graph
+    from ferc_xbrl_extractor_spark.pipeline import curate
+
+    docs = spark.createDataFrame(
+        _FUNNEL_DOCS, "doc_id long, text string, url string, source string"
+    )
+    lenient = dict(min_tokens=5, min_uniq_ratio=0.0, max_stopword_ratio=1.0)
+    params = {
+        "g36": dict(
+            benchmark=docs.filter("doc_id = 10").select("doc_id", "text"),
+            min_tokens=5, min_uniq_ratio=0.2, min_overlap=5,
+            stratum_col="source", sample_n=2, sample_salt="g16",
+        ),
+        "compression": dict(lenient, min_compression_ratio=0.3),
+        "c4": dict(lenient, c4=True),
+        "defaults": dict(min_tokens=5, min_uniq_ratio=0.2),
+        "linkrank": dict(
+            lenient,
+            link_ranks=graph.pagerank(spark.createDataFrame(
+                [(2, 1), (3, 1), (4, 1), (5, 1), (1, 2), (2, 3)],
+                "src long, dst long",
+            ), iters=3),
+            min_link_rank=200000,
+        ),
+        "domain_cap": dict(
+            lenient, url_col="url", domain_col="domain",
+            group_cap=1, group_cap_col="domain",
+        ),
+        "url": dict(min_tokens=5, min_uniq_ratio=0.2, url_col="url"),
+        "containment": dict(lenient, containment_threshold=0.8),
+        "script": dict(lenient, allowed_scripts=["latin"],
+                       max_dup_line_ratio=0.5, max_dup_3gram_ratio=0.5),
+        "keep_by_budget": dict(
+            lenient, neardup_threshold=0.5, neardup_keep_by="n_tokens",
+            token_budget=40,
+        ),
+        "trim_sample": dict(
+            lenient, trim_spans_n=4, redact=True, stratum_col="source",
+            sample_n=3, encode_vocab_size=20,
+        ),
+    }[case]
+    funnel = _funnel(docs, **params)
+    assert sum(funnel.values()) == len(_FUNNEL_DOCS)
+    assert funnel[None] == curate.curate_corpus(docs, **params).count()
+    assert all(n > 0 for n in funnel.values())
 
 
 def test_vocab_coverage_report_goldens(spark):
@@ -4191,15 +4247,11 @@ def test_compression_ratio_signal_and_curate_screen(spark):
         min_compression_ratio=floor,
     )
     assert {r["doc_id"] for r in out.collect()} == {2, 3}
-    ann = {
-        r["doc_id"]: r["drop_stage"]
-        for r in curate.curate_annotate(
-            df.filter("text IS NOT NULL AND text <> ''"),
-            min_tokens=5, min_uniq_ratio=0.0, max_stopword_ratio=1.0,
-            min_compression_ratio=floor,
-        ).collect()
-    }
-    assert ann == {1: "repetition", 2: None, 3: None}
+    assert _funnel(
+        df.filter("text IS NOT NULL AND text <> ''"),
+        min_tokens=5, min_uniq_ratio=0.0, max_stopword_ratio=1.0,
+        min_compression_ratio=floor,
+    ) == {"repetition": 1, None: 2}
 
     # CLI parity (ADVICE r7): the screen is reachable from curate_cli
     # like its sibling G65/G66 flags
@@ -4457,37 +4509,16 @@ def test_curate_c4_stage_and_annotation(spark):
     rows = [
         (1, page),                                  # clean page
         (2, page + "\nbroken { code page"),         # c4-dropped (brace)
-        (3, "the a of and to in unique short doc."),  # survives c4 (1 line? no)
+        (3, "the a of and to in unique short doc."),  # c4-dropped (1 line)
     ]
-    # doc 3: single good line but min_kept_lines=1 keeps it alive
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    params = dict(min_tokens=3, max_stopword_ratio=1.0, min_uniq_ratio=0.0,
+                  c4=True)
 
-    kept = curate.curate_corpus(
-        docs,
-        min_tokens=3,
-        max_stopword_ratio=1.0,
-        min_uniq_ratio=0.0,
-        c4=True,
-        c4_kwargs={"min_kept_lines": 1},
-    )
+    kept = curate.curate_corpus(docs, **params)
     ids = sorted(r["doc_id"] for r in kept.select("doc_id").collect())
-    assert ids == [1, 3]
-
-    ann = curate.curate_annotate(
-        docs,
-        min_tokens=3,
-        max_stopword_ratio=1.0,
-        min_uniq_ratio=0.0,
-        c4=True,
-        c4_kwargs={"min_kept_lines": 1},
-    )
-    stages = {r["doc_id"]: r["drop_stage"] for r in ann.collect()}
-    assert stages[2] == "c4"
-    # pipeline == NULL-slice invariance holds with the new stage
-    assert sorted(
-        r["doc_id"] for r in ann.filter("drop_stage IS NULL").collect()
-    ) == ids
-    assert ann.columns == ["doc_id", "text", "drop_stage"]
+    assert ids == [1]
+    assert _funnel(docs, **params) == {"c4": 2, None: 1}
 
 
 def test_curate_cli_c4_and_group_cap_flags(spark, tmp_path, capsys):
@@ -4550,43 +4581,13 @@ def test_c4_clean_runs_unchanged_on_a_stream(spark, tmp_path):
     assert got == want == {1: True, 2: False}
 
 
-def test_curate_funnel_reuses_precomputed_annotation(spark):
-    """G36 shared-session path: funnel(annotated=...) equals the
-    self-derived funnel — one annotate plan serves corpus + audit +
-    report without re-running any stage."""
-    from ferc_xbrl_extractor_spark.pipeline import curate
-
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox and a dog run to the hills " + str(i % 3))
-         for i in range(30)],
-        "doc_id long, text string",
-    )
-    params = dict(min_tokens=5, min_uniq_ratio=0.2)
-    ann = curate.curate_annotate(docs, **params).persist()
-    try:
-        shared = {
-            r["drop_stage"]: r["n_docs"]
-            for r in curate.curate_funnel(annotated=ann).collect()
-        }
-        direct = {
-            r["drop_stage"]: r["n_docs"]
-            for r in curate.curate_funnel(docs, **params).collect()
-        }
-        assert shared == direct
-        assert sum(shared.values()) == 30
-    finally:
-        ann.unpersist()
-    with pytest.raises(ValueError):
-        curate.curate_funnel()
-
-
 @pytest.mark.slow
 def test_curate_linkrank_stage(spark):
     """G65 as a curation stage: link_ranks joins a link_rank quality
     prior; min_link_rank drops ranked docs below threshold and NEVER
-    drops unranked docs; the annotate funnel attributes those drops to
-    'linkrank'; the NULL-slice ≡ curate_corpus invariant holds; and an
-    edges input ranks in-pipeline to the same result."""
+    drops unranked docs; the funnel attributes those drops to
+    'linkrank'; and an edges input ranks in-pipeline to the same
+    result."""
     from ferc_xbrl_extractor_spark.operators import graph
     from ferc_xbrl_extractor_spark.pipeline import curate
 
@@ -4614,18 +4615,7 @@ def test_curate_linkrank_stage(spark):
     assert set(got) == want_kept
     assert got[6] is None  # unranked passes with NULL prior
     assert got[1] == rank_map[1]
-
-    ann = {
-        r["doc_id"]: r["drop_stage"]
-        for r in curate.curate_annotate(docs, **params).collect()
-    }
-    assert {i for i, s in ann.items() if s is None} == set(got)
-    assert all(s == "linkrank" for i, s in ann.items() if s is not None)
-    funnel = {
-        r["drop_stage"]: r["n_docs"]
-        for r in curate.curate_funnel(docs, **params).collect()
-    }
-    assert funnel == {None: len(got), "linkrank": 6 - len(got)}
+    assert _funnel(docs, **params) == {None: len(got), "linkrank": 6 - len(got)}
 
     # the edges-input path is covered end-to-end (with a collect) by
     # test_curate_cli_linkrank_flags; here only the guard is pinned
@@ -4956,8 +4946,8 @@ def test_domain_report_counts(spark):
 @pytest.mark.slow
 def test_curate_domain_col_and_group_cap(spark):
     """G66 in the pipeline: domain_col derives the registrable domain
-    from url_col in-plan; group_cap over it caps the hot domain; the
-    annotate NULL-slice invariant holds with both knobs on."""
+    from url_col in-plan; group_cap over it caps the hot domain, and
+    the funnel attributes those drops to 'group_cap'."""
     from ferc_xbrl_extractor_spark.pipeline import curate
 
     good = "the quick brown fox and a dog run to the hills in summer "
@@ -4975,14 +4965,7 @@ def test_curate_domain_col_and_group_cap(spark):
     kept_hot = {i for i, d in got if d == "hot.com"}
     assert len(kept_hot) == 2  # capped
     assert (9, "cold.org") in got
-    ann = {
-        r["doc_id"]: r["drop_stage"]
-        for r in curate.curate_annotate(
-            docs, min_tokens=5, min_uniq_ratio=0.2,
-            url_col="url", domain_col="domain",
-        ).collect()
-    }
-    assert set(ann) == {1, 2, 3, 4, 9} and all(s is None for s in ann.values())
+    assert _funnel(docs, **params) == {"group_cap": 2, None: 3}
     with pytest.raises(ValueError, match="requires url_col"):
         curate.curate_corpus(docs, domain_col="domain")
 
@@ -5295,10 +5278,9 @@ def test_pagerank_hub_skew_graph(spark):
 
 
 @pytest.mark.slow
-def test_curate_url_dedup_stage_runs_first_and_annotates(spark):
+def test_curate_url_dedup_stage_runs_first(spark):
     """G64 as a curation stage: url_col drops refetch duplicates before
-    every other stage; annotate attributes them to 'url_dup' and the
-    NULL-slice ≡ curate_corpus invariant holds with the stage on."""
+    every other stage, and the funnel attributes them to 'url_dup'."""
     from ferc_xbrl_extractor_spark.pipeline import curate
 
     good = "the quick brown fox and a dog run to the hills in summer "
@@ -5316,16 +5298,7 @@ def test_curate_url_dedup_stage_runs_first_and_annotates(spark):
         r["doc_id"] for r in curate.curate_corpus(docs, **params).collect()
     )
     assert out_ids == [1, 3]  # 2 lost to url_dup, 4 to quality
-    ann = {
-        r["doc_id"]: r["drop_stage"]
-        for r in curate.curate_annotate(docs, **params).collect()
-    }
-    assert ann == {1: None, 2: "url_dup", 3: None, 4: "quality"}
-    funnel = {
-        r["drop_stage"]: r["n_docs"]
-        for r in curate.curate_funnel(docs, **params).collect()
-    }
-    assert funnel == {None: 2, "url_dup": 1, "quality": 1}
+    assert _funnel(docs, **params) == {None: 2, "url_dup": 1, "quality": 1}
 
 
 @pytest.mark.slow
@@ -6311,8 +6284,7 @@ def test_containment_dedup_and_curate_stage(spark):
     """G90: dedup_by_containment goldens — a strict subset drops and
     its container survives, mutual containment keeps the lower id,
     unrelated docs untouched — and the curation stage: containment
-    drops attribute to 'contained' in annotate/funnel and the
-    NULL-slice ≡ curate_corpus invariant holds (cross-engine values
+    drops attribute to 'contained' in the funnel (cross-engine values
     are the g90_containment_dedup oracle, hash-green at both scales)."""
     from ferc_xbrl_extractor_spark.operators.neardup import (
         dedup_by_containment,
@@ -6347,16 +6319,10 @@ def test_containment_dedup_and_curate_stage(spark):
                   containment_threshold=0.8)
     out = {r["doc_id"] for r in curate.curate_corpus(docs, **params).collect()}
     assert out == {1, 4}
-    ann = {r["doc_id"]: r["drop_stage"]
-           for r in curate.curate_annotate(docs, **params).collect()}
-    assert {i for i, s in ann.items() if s is None} == out
     # doc 3 is an EXACT dup after whitespace normalization, so the
-    # earlier stage claims it (stage order pinned); only the true
-    # proper subset reaches the containment stage
-    assert ann[2] == "contained" and ann[3] == "exact_dup"
-    funnel = {r["drop_stage"]: r["n_docs"]
-              for r in curate.curate_funnel(docs, **params).collect()}
-    assert funnel == {None: 2, "contained": 1, "exact_dup": 1}
+    # earlier stage claims it; only the true proper subset (doc 2)
+    # reaches the containment stage
+    assert _funnel(docs, **params) == {None: 2, "contained": 1, "exact_dup": 1}
 
     # CLI flag parses and routes
     from ferc_xbrl_extractor_spark.curate_cli import parse
@@ -6483,9 +6449,8 @@ def test_decayed_counts_goldens(spark):
 
 def test_curate_script_screen(spark):
     """G91 curation stage: allowed_scripts keeps only dominant-script
-    members, drops attribute to 'script' (after c4, before repetition
-    in the stage order), the NULL-slice ≡ curate_corpus invariant
-    holds, and the CLI flag parses a list."""
+    members, drops attribute to 'script' in the funnel, and the CLI
+    flag parses a list."""
     from ferc_xbrl_extractor_spark.pipeline import curate
 
     good = "the quick brown fox jumps over the lazy dog near the river "
@@ -6501,13 +6466,7 @@ def test_curate_script_screen(spark):
                   allowed_scripts=["latin"])
     out = {r["doc_id"] for r in curate.curate_corpus(docs, **params).collect()}
     assert out == {1, 3}  # doc 3 is latin-dominant despite mixed chars
-
-    ann = {r["doc_id"]: r["drop_stage"]
-           for r in curate.curate_annotate(docs, **params).collect()}
-    assert ann[2] == "script" and ann[1] is None and ann[3] is None
-    funnel = {r["drop_stage"]: r["n_docs"]
-              for r in curate.curate_funnel(docs, **params).collect()}
-    assert funnel == {None: 2, "script": 1}
+    assert _funnel(docs, **params) == {None: 2, "script": 1}
 
     # multi-script allow-list keeps both
     both = curate.curate_corpus(
@@ -6617,8 +6576,8 @@ def test_review_fix_edges(spark):
     with _pytest.raises(ValueError, match="unknown script"):
         curate.curate_corpus(docs, min_tokens=2, allowed_scripts=["Latin"])
     with _pytest.raises(ValueError, match="unknown script"):
-        curate.curate_annotate(docs, min_tokens=2,
-                               allowed_scripts=["korean"])
+        curate.curate_funnel(docs, min_tokens=2,
+                             allowed_scripts=["korean"])
 
     df = spark.createDataFrame(
         [(-0.01, True), (0.5, False)], "score double, label boolean"

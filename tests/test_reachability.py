@@ -52,7 +52,6 @@ KEEP = {
     ("sources/shredder.py", "contexts_from"): "the reference extractor's context relation",
     ("sources/filings.py", "scan_filings"): "perfbench wraps it by name as an attribute of pipeline.extract",
     ("operators/text.py", "GOPHER_RULES"): "documents the bit order of the Gopher rule mask",
-    ("pipeline/curate.py", "CURATE_STAGES"): "documents the order of the curate funnel's stages",
 }
 
 

@@ -32,6 +32,8 @@ EXECUTES_ON_CALL = {
     # temperature_rates collects the per-stratum sizes at query-build time
     "g30_temperature_mix",
     "g16_curate_e2e",
+    # curate_funnel checkpoints and counts every curate stage when called
+    "g36_curate_funnel",
 }
 
 # A BroadcastNestedLoopJoin is the DESIGNED plan when one side is a

@@ -18,12 +18,27 @@ driver's CORRECTNESS row format (rows/schema/hash match booleans).
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 import pandas as pd
+
+# The checkout this file belongs to: its queries are the ones checked.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def use_checkout() -> None:
+    """Import the package and ``__spark_entry__`` from :data:`REPO`, in this
+    process and in the Spark Python workers it starts, whatever the working
+    directory. Call it before the session starts: workers inherit
+    ``PYTHONPATH`` from the JVM."""
+    sys.path.insert(0, REPO)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -63,7 +78,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    use_checkout()
     import __spark_entry__ as entrymod
     from ferc_xbrl_extractor_spark.session import get_spark
 
@@ -73,8 +88,6 @@ def main() -> int:
         con.sql(
             f"CREATE VIEW {t} AS FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-
-    import os
 
     level = os.environ.get("SELFCHECK_LEVEL", "both")
     qs: dict = {}
@@ -156,9 +169,8 @@ def main() -> int:
             print(f"PASS {name}: {len(sdf)} rows [spark {spark_secs:.1f}s]")
 
     import json
-    import os as _os
 
-    json_path = _os.environ.get("SELFCHECK_JSON")
+    json_path = os.environ.get("SELFCHECK_JSON")
     if json_path:
         with open(json_path, "w") as fh:
             json.dump(

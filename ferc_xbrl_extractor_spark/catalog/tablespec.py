@@ -18,23 +18,10 @@ import json
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import types as T
-
-from ferc_xbrl_extractor_spark.functions.casts import spark_type_for
-
 # Common PK columns (reference DURATION_COLUMNS / INSTANT_COLUMNS,
 # datapackage.py:105-113).
 DURATION_PK = ["entity_id", "filing_name", "publication_time", "start_date", "end_date"]
 INSTANT_PK = ["entity_id", "filing_name", "publication_time", "date"]
-
-_CONTEXT_TYPES = {
-    "entity_id": "string",
-    "filing_name": "string",
-    "publication_time": "string",  # real timestamp; declared string for parity docs
-    "start_date": "date",
-    "end_date": "date",
-    "date": "date",
-}
 
 
 @dataclass
@@ -60,24 +47,6 @@ class TableSpec:
     @property
     def data_columns(self) -> list[str]:
         return [c for c in self.columns if c not in self.primary_key]
-
-    def spark_schema(self, typed_dates: bool = True) -> T.StructType:
-        fields = []
-        for pk in self.primary_key:
-            if pk == "publication_time":
-                dt: T.DataType = T.TimestampType()
-            elif pk.endswith("_axis") or pk.endswith("axis"):
-                dt = T.StringType()
-            else:
-                dt = spark_type_for(_CONTEXT_TYPES.get(pk, "string"), typed_dates)
-            fields.append(T.StructField(pk, dt, nullable=pk == "start_date"))
-        for name in self.data_columns:
-            fields.append(
-                T.StructField(
-                    name, spark_type_for(self.columns[name], typed_dates), True
-                )
-            )
-        return T.StructType(fields)
 
 
 def merge_specs(base: TableSpec, other: TableSpec) -> TableSpec:

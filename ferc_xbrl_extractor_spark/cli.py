@@ -22,7 +22,7 @@ from pathlib import Path
 logger = logging.getLogger(__name__)
 
 
-def parse(argv: list[str] | None = None) -> argparse.Namespace:
+def parse(argv: list[str]) -> argparse.Namespace:
     parser = argparse.ArgumentParser(
         description="Extract data from XBRL filings to SQLite, DuckDB or Parquet."
     )
@@ -182,7 +182,7 @@ def run_main(args: argparse.Namespace) -> int:
 
 
 def main() -> int:
-    return run_main(parse())
+    return run_main(parse(sys.argv[1:]))
 
 
 if __name__ == "__main__":

@@ -25,7 +25,7 @@ import json
 import sys
 
 
-def parse(argv: list[str] | None = None) -> argparse.Namespace:
+def parse(argv: list[str]) -> argparse.Namespace:
     p = argparse.ArgumentParser(description="Curate a text corpus for training.")
     p.add_argument("corpus", help="Input corpus path (file or shard directory).")
     p.add_argument("--output", required=True, help="Output shard directory.")
@@ -301,7 +301,7 @@ def run_main(args: argparse.Namespace) -> int:
 
 
 def main() -> int:
-    return run_main(parse())
+    return run_main(parse(sys.argv[1:]))
 
 
 if __name__ == "__main__":

@@ -62,7 +62,7 @@ def _parse_rates(spec: str | None) -> dict[str, float] | None:
     return out
 
 
-def parse(argv: list[str] | None = None) -> argparse.Namespace:
+def parse(argv: list[str]) -> argparse.Namespace:
     p = argparse.ArgumentParser(
         prog="epoch_cli", description=__doc__.splitlines()[0]
     )

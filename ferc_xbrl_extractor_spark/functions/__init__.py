@@ -6,10 +6,7 @@ from ferc_xbrl_extractor_spark.functions.naming import (
     snakecase,
     strip_xml_prefix,
 )
-from ferc_xbrl_extractor_spark.functions.casts import (
-    FIELD_TO_SPARK,
-    spark_type_for,
-)
+from ferc_xbrl_extractor_spark.functions.casts import FIELD_TO_SPARK
 
 __all__ = [
     "clean_table_name",
@@ -17,5 +14,4 @@ __all__ = [
     "snakecase",
     "strip_xml_prefix",
     "FIELD_TO_SPARK",
-    "spark_type_for",
 ]

@@ -20,8 +20,7 @@ from pyspark.sql import types as T
 
 # Frictionless field type -> Spark type. Dates are kept as ISO strings to
 # match reference output exactly (FIELD_TO_PANDAS["date"] == "string",
-# datapackage.py:121); a typed variant is available via spark_type_for(...,
-# typed_dates=True) for the Spark-native surface.
+# datapackage.py:121).
 FIELD_TO_SPARK: dict[str, T.DataType] = {
     "string": T.StringType(),
     "number": T.DoubleType(),
@@ -31,13 +30,3 @@ FIELD_TO_SPARK: dict[str, T.DataType] = {
     "duration": T.StringType(),
     "year": T.LongType(),
 }
-
-_TYPED_OVERRIDES: dict[str, T.DataType] = {
-    "date": T.DateType(),
-}
-
-
-def spark_type_for(field_type: str, typed_dates: bool = False) -> T.DataType:
-    if typed_dates and field_type in _TYPED_OVERRIDES:
-        return _TYPED_OVERRIDES[field_type]
-    return FIELD_TO_SPARK[field_type]

@@ -393,7 +393,6 @@ def cms_build(
     key_col: str,
     depth: int = 4,
     width: int = 2048,
-    count_col: str | None = None,
     salt: str = "cms",
 ) -> DataFrame:
     """G72: build a count-min sketch over ``key_col`` — the FIXED-SIZE
@@ -417,9 +416,9 @@ def cms_build(
     sketches roll up like the G7 HLL partials).
 
     Returns the sketch relation ``(sketch_row, bucket, n)`` with at most
-    ``depth × width`` rows. ``count_col`` weights each input row (default
-    1). NULL keys are skipped (they would otherwise pool into one cell per
-    row and masquerade as a heavy hitter).
+    ``depth × width`` rows; each input row counts 1. NULL keys are
+    skipped (they would otherwise pool into one cell per row and
+    masquerade as a heavy hitter).
     """
     if not 1 <= depth <= 8:
         # bucket_d = h1 + d*h2 with h1, h2 < 2^60: at d <= 7 the sum
@@ -429,14 +428,13 @@ def cms_build(
     if width < 2:
         raise ValueError(f"width must be >= 2, got {width}")
     key = F.col(key_col).cast("string")
-    w = (F.col(count_col) if count_col else F.lit(1)).cast("long")
     h1, h2 = _cms_hashes(key, salt)
     # materialize the hash pair in its own projection BEFORE the explode:
     # expressions inlined into the cell array would be recomputed per
     # sketch row (measured 3x slower at depth 4); as attributes behind a
     # Generate they evaluate once per input row
     hashed = df.filter(key.isNotNull()).select(
-        w.alias("__w"), h1.alias("__h1"), h2.alias("__h2")
+        h1.alias("__h1"), h2.alias("__h2")
     )
     cells = F.array(
         *[
@@ -450,12 +448,12 @@ def cms_build(
         ]
     )
     return (
-        hashed.select(F.explode(cells).alias("__cell"), "__w")
+        hashed.select(F.explode(cells).alias("__cell"))
         .groupBy(
             F.col("__cell.sketch_row").alias("sketch_row"),
             F.col("__cell.bucket").alias("bucket"),
         )
-        .agg(F.sum("__w").alias("n"))
+        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
@@ -800,7 +798,6 @@ def decayed_counts(
     ref_date: str = "2024-02-01",
     half_life_days: int = 7,
     horizon_days: int = 64,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """G92: exponentially time-decayed counts per key — the
     recency-weighted activity score (trending sources, freshness priors
@@ -817,8 +814,7 @@ def decayed_counts(
     event still contributes ~1953 micro-units and a 64-day-old one 0.
     Size ``horizon_days ≳ 20·half_life_days`` when the tail must decay
     below one micro-unit before the cut (2^(-20) ≈ 0.95 micro).
-    ``weight_col`` (integral — cast to long) weights each event;
-    default 1. Returns ``(key_cols..., decayed_micro, n_events,
+    Each event counts 1. Returns ``(key_cols..., decayed_micro, n_events,
     n_recent)`` where n_recent counts rows within one half-life.
 
     Scale shape: one map-side projection (date diff + a bounded
@@ -835,13 +831,8 @@ def decayed_counts(
         (age >= 0) & (age < horizon_days),
         F.element_at(lut_col, age + 1),
     ).otherwise(F.lit(0).cast("long"))
-    w = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
     return df.groupBy(*key_cols).agg(
-        F.sum(w * factor).cast("long").alias("decayed_micro"),
+        F.sum(factor).cast("long").alias("decayed_micro"),
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum(
             ((age >= 0) & (age <= half_life_days)).cast("long")

@@ -29,11 +29,16 @@ are re-verified with the exact join, which now only touches the ~fpp
 fraction of corpus shingles that matched — output is exactly the
 broadcast-join result at any fpp.
 
-For the JOIN prefilter (G86), the default is the REGISTER-BLOCKED form
+The JOIN prefilter (G86) uses the REGISTER-BLOCKED form
 (:func:`blocked_bloom_words`): all k bits of a key in one 64-bit word,
 so the probe is a broadcast join on the word index plus a pure
 expression mask test — no driver collect at build, no Python at probe.
-In-regime measurement: ``SCALECHECK_BLOOM_r09.json``.
+In-regime measurement: ``SCALECHECK_BLOOM_r09.json``, which also
+measured the driver-bitmap form as a join prefilter at 3× WORSE than no
+prefilter at 10⁷ dim keys — the reason the join never uses it.
+
+Both filters are sized for a 1% false-positive rate (``FPP``): callers
+re-verify with an exact join, so the rate only prices the prefilter.
 """
 
 from __future__ import annotations
@@ -53,12 +58,8 @@ from ferc_xbrl_extractor_spark.operators.sqltext import bq, raw_col
 # at build and probe time.
 _H2_SEED = 0x9E3779B9
 
-# Above this many dim keys, bloom_join(mode="udf") auto-dispatches to
-# the blocked form: SCALECHECK_BLOOM_r09.json pins the udf mode's
-# driver-built-bitmap cost at 3× WORSE than no prefilter at 10⁷ keys,
-# while it still wins below the broadcast ceiling. 2M keys ≈ a ~2.9 MB
-# bitmap at 1% fpp — comfortably inside the closure-broadcast regime.
-UDF_MODE_KEY_CEILING = 2_000_000
+# The nominal false-positive rate every filter here is sized for.
+FPP = 0.01
 
 
 @dataclass
@@ -68,8 +69,6 @@ class BloomFilter:
     words: np.ndarray  # uint64[m_bits / 64]
     m_bits: int
     k: int
-    n_keys: int
-    fpp: float
 
 
 def _hashes_mod(key: Column, m: int) -> tuple[Column, Column]:
@@ -84,23 +83,19 @@ def _hashes_mod(key: Column, m: int) -> tuple[Column, Column]:
     )
 
 
-def _geometry(n_keys: int, fpp: float) -> tuple[int, int]:
+def _geometry(n_keys: int) -> tuple[int, int]:
     n = max(n_keys, 1)
-    m = max(64, int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2))))
+    m = max(64, int(math.ceil(-n * math.log(FPP) / (math.log(2) ** 2))))
     m = ((m + 63) // 64) * 64  # whole words
     k = max(1, round(m / n * math.log(2)))
     return m, k
 
 
-def bloom_build(
-    keys: DataFrame, key_col: str, fpp: float = 0.01, n_keys: int | None = None
-) -> BloomFilter:
+def bloom_build(keys: DataFrame, key_col: str) -> BloomFilter:
     """Build a Bloom filter over ``keys[key_col]`` (distinctness not
     required — duplicate keys set the same bits). Triggers one count job
-    (unless ``n_keys`` is supplied) and one bitmap aggregation job."""
-    if n_keys is None:
-        n_keys = keys.count()
-    m, k = _geometry(n_keys, fpp)
+    and one bitmap aggregation job."""
+    m, k = _geometry(keys.count())
     h1, h2 = _hashes_mod(F.col(key_col), m)
     # the driver pull is bounded by the BITMAP (m/64 words — 1.5M rows
     # for a 10⁷-key 1% filter), never by key count, but 10⁶+ Py4J Row
@@ -127,7 +122,7 @@ def bloom_build(
     words[word_pdf["word"].to_numpy(dtype=np.int64)] = (
         word_pdf["bits"].to_numpy(dtype=np.int64).view(np.uint64)
     )
-    return BloomFilter(words=words, m_bits=m, k=k, n_keys=n_keys, fpp=fpp)
+    return BloomFilter(words=words, m_bits=m, k=k)
 
 
 def might_contain(bloom: BloomFilter, key: Column) -> Column:
@@ -162,7 +157,6 @@ def bloom_decontaminate(
     text_col: str = "text",
     n: int = 3,
     min_overlap: int = 1,
-    fpp: float = 0.01,
 ) -> DataFrame:
     """``neardup.decontaminate`` with a Bloom prefilter: corpus shingles
     probe the benchmark-shingle bloom first, and only the matching ~fpp
@@ -173,7 +167,7 @@ def bloom_decontaminate(
 
     c_sh = shingle_table(corpus, id_col, text_col, n)
     b_sh = shingle_table(benchmark, id_col, text_col, n).select("shingle").distinct()
-    bloom = bloom_build(b_sh, "shingle", fpp=fpp)
+    bloom = bloom_build(b_sh, "shingle")
     candidates = c_sh.filter(might_contain(bloom, F.col("shingle")))
     # Exact verify: only bloom survivors join the true shingle set (AQE
     # broadcasts it when it fits; when it doesn't, the shuffle is over the
@@ -187,9 +181,7 @@ def bloom_decontaminate(
     return corpus.join(hits.select(id_col), id_col, "left_anti")
 
 
-def blocked_bloom_words(
-    keys: DataFrame, key_col: str, fpp: float = 0.01, n_keys: int | None = None
-) -> tuple[DataFrame, int, int]:
+def blocked_bloom_words(keys: DataFrame, key_col: str) -> tuple[DataFrame, int, int]:
     """Register-blocked Bloom filter (Putze/Sanders/Singler, JEA'09) as
     a RELATION: all k bits of a key live in ONE 64-bit word, so build
     and probe never leave the JVM —
@@ -209,16 +201,13 @@ def blocked_bloom_words(
     heap (10⁹ keys → ~1.8 GB relation, still a shuffle-side build).
 
     Blocking costs accuracy for locality: a 64-bit block needs ~1.5×
-    the standard bits for the same nominal fpp (the geometry below
-    budgets that in), and the realized fpp is approximate — callers
-    re-verify with an exact join, so fpp only prices the prefilter.
+    the standard bits for the same nominal rate (the geometry below
+    budgets that in), and the realized rate is approximate.
 
-    Returns ``(words, W, k)``.
+    Triggers one count job. Returns ``(words, W, k)``.
     """
-    if n_keys is None:
-        n_keys = keys.count()
-    n = max(n_keys, 1)
-    m = int(math.ceil(1.5 * -n * math.log(fpp) / (math.log(2) ** 2)))
+    n = max(keys.count(), 1)
+    m = int(math.ceil(1.5 * -n * math.log(FPP) / (math.log(2) ** 2)))
     m = max(64, ((m + 63) // 64) * 64)
     w = m // 64
     k = min(8, max(1, round(m / n * math.log(2))))
@@ -251,74 +240,35 @@ def _blocked_word_mask(key_col: str, w: int, k: int) -> tuple[Column, Column]:
     return word, mask
 
 
-def bloom_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    fpp: float = 0.01,
-    n_keys: int | None = None,
-    mode: str = "blocked",
-) -> DataFrame:
+def bloom_join(fact: DataFrame, dim: DataFrame, on: str) -> DataFrame:
     """G86: exact inner equi-join with a Bloom prefilter on the fact
     side — the explicit form of runtime bloom-join pushdown for when the
     join's selectivity is KNOWN to be low (a filtered dimension joining
     a fact table: the star-schema shape where most fact rows match
     nothing and still pay the shuffle).
 
-    The dim side's join keys build a broadcastable bitmap (~1.2
-    bytes/key at 1% fpp — two orders of magnitude past the hash-relation
-    broadcast ceiling); the fact side filters through
-    :func:`might_contain` BEFORE its shuffle, so only the ~selectivity +
-    fpp fraction of fact rows ever serializes. Survivors run the normal
-    exact join — Bloom answers have no false negatives and the join
-    removes false positives, so the output is EXACTLY the plain join's
-    at any fpp (the gate oracle is the plain join).
+    The dim side's join keys build a register-blocked filter
+    (:func:`blocked_bloom_words`, ~1.8 bytes/key — two orders of
+    magnitude past the hash-relation broadcast ceiling); the fact side
+    probes it with ONE broadcast join on the word index plus a JVM
+    mask-test expression BEFORE its shuffle — no driver collect, no
+    Python in the hot path — so only the ~selectivity + fpp fraction of
+    fact rows ever serializes. Survivors run the normal exact join —
+    Bloom answers have no false negatives and the join removes false
+    positives, so the output is EXACTLY the plain join's (the gate
+    oracle is the plain join).
 
     Spark's own runtime bloom pushdown
     (``spark.sql.optimizer.runtime.bloomFilter.enabled``) makes the
     same transformation when its creation-side heuristics fire; this
     operator is the deterministic form — it always builds, from the dim
-    side you name, with the geometry you choose — for pipelines that
-    know their selectivity at author time.
+    side you name — for pipelines that know their selectivity at
+    author time.
 
     Returns ``fact ⋈ dim`` with dim's non-key columns appended (inner
     join on ``on``). Duplicate dim keys behave exactly as in the plain
-    join (row multiplication); ``n_keys`` skips the sizing count when
-    the caller already knows |dim|.
-
-    ``mode``:
-      - ``"blocked"`` (default): register-blocked filter
-        (:func:`blocked_bloom_words`) — the probe is ONE broadcast
-        join on the word index plus a JVM mask-test expression; no
-        driver collect, no Python in the hot path. The in-regime
-        measurement (``SCALECHECK_BLOOM_r09.json``) is this mode.
-      - ``"udf"``: the classic driver-built bitmap probed by an
-        Arrow-batched numpy UDF (:func:`bloom_build` /
-        :func:`might_contain`) — kept for closure-shipped reuse of one
-        filter across many DataFrames. ANTI-REGIME GUARD (r9 verdict:
-        its own scalecheck measured this mode at 30.1s vs 9.4s for NO
-        prefilter at 10⁷ dim keys — the driver-side bitmap build and
-        closure broadcast dominate long before the prefilter pays):
-        past ``UDF_MODE_KEY_CEILING`` dim keys the call auto-dispatches
-        to ``"blocked"``, so no mode of this operator is ever silently
-        worse than the plain join. Callers who genuinely want a
-        reusable bitmap above the ceiling build it themselves via
-        :func:`bloom_build`.
+    join (row multiplication).
     """
-    if not 0 < fpp < 1:
-        raise ValueError("fpp must be in (0, 1)")
-    if mode not in ("blocked", "udf"):
-        raise ValueError(f"mode must be 'blocked' or 'udf', got {mode!r}")
-    if mode == "udf":
-        if n_keys is None:
-            n_keys = dim.select(raw_col(on)).count()
-        if n_keys <= UDF_MODE_KEY_CEILING:
-            bloom = bloom_build(
-                dim.select(raw_col(on).alias(on)), on, fpp=fpp, n_keys=n_keys
-            )
-            pre = fact.filter(might_contain(bloom, raw_col(on)))
-            return pre.join(dim, on)
-        # fall through to blocked — the G13b probe-then-dispatch shape
     clash = {"__bw", "__bm", "__bits"} & (set(fact.columns) | set(dim.columns))
     if clash:
         # r9 ADVICE: a caller column named like a working column would
@@ -327,9 +277,7 @@ def bloom_join(
             f"bloom_join working column(s) {sorted(clash)} already exist "
             "on an input; rename them first"
         )
-    words, w, k = blocked_bloom_words(
-        dim.select(raw_col(on).alias(on)), on, fpp=fpp, n_keys=n_keys
-    )
+    words, w, k = blocked_bloom_words(dim.select(raw_col(on).alias(on)), on)
     word, mask = _blocked_word_mask(on, w, k)
     pre = (
         fact.withColumn("__bw", word)

@@ -51,7 +51,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from ferc_xbrl_extractor_spark.catalog.tablespec import TableSpec
-from ferc_xbrl_extractor_spark.functions.casts import spark_type_for
+from ferc_xbrl_extractor_spark.functions.casts import FIELD_TO_SPARK
 from ferc_xbrl_extractor_spark.operators import filters
 from ferc_xbrl_extractor_spark.operators.dedup import fuzzy_dedup_sql
 from ferc_xbrl_extractor_spark.operators.sqltext import bq, in_list, sq, temp_view
@@ -106,7 +106,6 @@ def _normalized_value_sql(spec: TableSpec) -> str:
 def _table_sql(
     src: str,
     spec: TableSpec,
-    typed_dates: bool = False,
     input_clustered: bool = False,
 ) -> tuple[str, str]:
     """The table's program as SQL text over the facts relation ``src``:
@@ -172,15 +171,11 @@ def _table_sql(
         f"FROM ({resolved}) AS __res GROUP BY `filing_name`, `c_id`"
     )
 
-    # F9 casts + P5 reindex to the declared column order.
-    out_sql = []
-    for pk in spec.primary_key:
-        if typed_dates and pk in ("date", "start_date", "end_date"):
-            out_sql.append(f"CAST({bq(pk)} AS DATE) AS {bq(pk)}")
-        else:
-            out_sql.append(bq(pk))
+    # F9 casts + P5 reindex to the declared column order. Date columns stay
+    # ISO strings, as the reference writes them.
+    out_sql = [bq(pk) for pk in spec.primary_key]
     for name in spec.data_columns:
-        target = spark_type_for(spec.columns[name], typed_dates)
+        target = FIELD_TO_SPARK[spec.columns[name]]
         out_sql.append(
             f"TRY_CAST(__m[{sq(name)}] AS {target.simpleString()}) AS {bq(name)}"
         )
@@ -198,7 +193,6 @@ def _table_sql(
 def construct_table_with_errors(
     facts: DataFrame,
     spec: TableSpec,
-    typed_dates: bool = False,
     input_clustered: bool = False,
 ) -> TableResult:
     """Build one output table from the (denormalized) long facts relation.
@@ -206,8 +200,6 @@ def construct_table_with_errors(
     Args:
         facts: output of ``sources.shredder.facts_from``.
         spec: the table's schema contract.
-        typed_dates: cast date PK columns to DateType (Spark-native surface)
-            instead of the reference's ISO strings.
         input_clustered: the caller guarantees ``facts`` is already
             hash-clustered on (filing_name, c_id) — e.g. loaded from a
             bucketed table, or repartitioned BEFORE a row-multiplying
@@ -220,7 +212,7 @@ def construct_table_with_errors(
 
     def build(part: int) -> DataFrame:
         with temp_view(facts) as view:
-            return spark.sql(_table_sql(bq(view), spec, typed_dates, input_clustered)[part])
+            return spark.sql(_table_sql(bq(view), spec, input_clustered)[part])
 
     return TableResult(build(0), lambda: build(1))
 
@@ -228,10 +220,9 @@ def construct_table_with_errors(
 def construct_table(
     facts: DataFrame,
     spec: TableSpec,
-    typed_dates: bool = False,
     input_clustered: bool = False,
 ) -> DataFrame:
     """Data-only convenience wrapper (it never analyzes the errors plan);
     use construct_table_with_errors (or pipeline.extract's errors/strict
     surface) to observe quarantined conflicts."""
-    return construct_table_with_errors(facts, spec, typed_dates, input_clustered).data
+    return construct_table_with_errors(facts, spec, input_clustered).data

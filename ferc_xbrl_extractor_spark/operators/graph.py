@@ -435,7 +435,6 @@ def bfs_hops(
     max_hops: int = 3,
     src: str = "src",
     dst: str = "dst",
-    directed: bool = True,
 ) -> DataFrame:
     """G100: bounded multi-source BFS — the minimum hop count from any
     seed to every node, capped at ``max_hops``. The trust-DISTANCE
@@ -449,7 +448,7 @@ def bfs_hops(
     nodes carry NULL (visible, never silently dropped). Seeds are
     operator literals like G87's (an ``isin`` in-plan, ``IN`` in the
     oracle); seeds absent from the graph are ignored in the output
-    domain. ``directed=False`` symmetrizes the edge relation once.
+    domain. Edges are followed in their direction only.
 
     Integer-exact and oracle-replayable by :func:`bfs_oracle_sql`: the
     recurrence is a pure min-plus unroll —
@@ -471,10 +470,6 @@ def bfs_hops(
     if not seeds:
         raise ValueError("seeds must be a non-empty list")
     raw = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    if not directed:
-        raw = raw.union(
-            raw.select(F.col("__d").alias("__s"), F.col("__s").alias("__d"))
-        )
     e = raw.distinct()
     nodes = (
         raw.select(F.explode(F.array("__s", "__d")).alias("node"))
@@ -508,7 +503,6 @@ def bfs_oracle_sql(
     edges_sql: str,
     seeds: list,
     max_hops: int = 3,
-    directed: bool = True,
 ) -> str:
     """ANSI-SQL replay of :func:`bfs_hops` with the rounds UNROLLED
     (the :func:`pagerank_oracle_sql` pattern — recursive CTEs cannot
@@ -522,8 +516,6 @@ def bfs_oracle_sql(
 
     seed_list = ", ".join(_lit(s) for s in seeds)
     base = f"SELECT src, dst FROM ({edges_sql})"
-    if not directed:
-        base = f"{base} UNION ALL SELECT dst, src FROM ({edges_sql})"
     sql = [
         f"e AS (SELECT DISTINCT src, dst FROM ({base}))",
         "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
@@ -553,7 +545,6 @@ def label_propagation(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    directed: bool = False,
 ) -> DataFrame:
     """G104: synchronous label-propagation communities (Raghavan et al.
     2007) — every node starts labeled with its own id; each round every
@@ -577,9 +568,8 @@ def label_propagation(
     round count (the round-t relation is still exact); production runs
     that want convergence semantics should raise ``rounds`` and
     compare successive rounds (two calls) rather than trust a hidden
-    stop rule. ``directed=False`` (default — the usual LPA setting)
-    symmetrizes the edge relation once; ``directed=True`` propagates
-    along edge direction only.
+    stop rule. The edge relation is symmetrized once (the usual LPA
+    setting).
 
     Scale shape (the :func:`pagerank` template): per round ONE keyed
     join of the label relation onto the edge relation (the edge side's
@@ -597,10 +587,9 @@ def label_propagation(
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
     raw = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    if not directed:
-        raw = raw.union(
-            raw.select(F.col("__d").alias("__s"), F.col("__s").alias("__d"))
-        )
+    raw = raw.union(
+        raw.select(F.col("__d").alias("__s"), F.col("__s").alias("__d"))
+    )
     e = raw.distinct()
     nodes = (
         raw.select(F.explode(F.array("__s", "__d")).alias("node"))
@@ -636,15 +625,15 @@ def label_propagation(
 def label_propagation_oracle_sql(
     edges_sql: str,
     rounds: int = 3,
-    directed: bool = False,
 ) -> str:
     """ANSI-SQL replay of :func:`label_propagation` with the rounds
     UNROLLED (the :func:`bfs_oracle_sql` pattern); the argmax replays
     as ``QUALIFY row_number() ORDER BY c DESC, lbl ASC``. ``edges_sql``
     must yield columns (src, dst)."""
-    base = f"SELECT src, dst FROM ({edges_sql})"
-    if not directed:
-        base = f"{base} UNION ALL SELECT dst, src FROM ({edges_sql})"
+    base = (
+        f"SELECT src, dst FROM ({edges_sql}) "
+        f"UNION ALL SELECT dst, src FROM ({edges_sql})"
+    )
     sql = [
         f"e AS (SELECT DISTINCT src, dst FROM ({base}))",
         "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",

@@ -43,7 +43,6 @@ def asof_join(
     left_time: str,
     right_time: str,
     right_values: list[str],
-    tolerance: str | int | float | None = None,
     direction: str = "backward",
 ) -> DataFrame:
     """G9: for each left row, attach the most recent right row at or before
@@ -52,10 +51,6 @@ def asof_join(
     Implementation: tag both sides, union on (key, time), window-sort once,
     carry the last non-null right value forward. One shuffle on ``on``;
     no range-join blowup; skewed keys are handled by AQE.
-
-    ``tolerance`` bounds how stale the match may be: an interval string
-    (e.g. "30 minutes") for timestamp time columns, or a number for
-    numeric time axes (versions, sequence numbers).
     """
     lt, rt = F.col(left_time), F.col(right_time)
     if direction not in ("backward", "forward"):
@@ -93,29 +88,8 @@ def asof_join(
     )
     carried = unioned.withColumn(
         "__match", F.last("__r", ignorenulls=True).over(w)
-    ).withColumn(
-        "__match_t", F.last(F.when(F.col("__is_left") == 0, F.col("__t")), ignorenulls=True).over(w)
     )
-
-    result = carried.filter(F.col("__is_left") == 1)
-    if tolerance is not None:
-        tol = (
-            F.expr(f"INTERVAL {tolerance}")
-            if isinstance(tolerance, str)
-            else F.lit(tolerance)
-        )
-        bound = (
-            F.col("__t") - tol if direction == "backward" else F.col("__t") + tol
-        )
-        ok = (
-            (F.col("__match_t") >= bound)
-            if direction == "backward"
-            else (F.col("__match_t") <= bound)
-        )
-        result = result.withColumn(
-            "__match", F.when(ok, F.col("__match"))
-        )
-    return result.select(
+    return carried.filter(F.col("__is_left") == 1).select(
         *[F.col(f"__l.{c}").alias(c) for c in left_cols],
         *[F.col(f"__match.{c}").alias(c) for c in right_values],
     )

@@ -169,14 +169,6 @@ class _BitReader:
         self.pos = pos
         self.bit = 0
 
-    def at_marker(self) -> bool:
-        return (
-            self.bit == 0
-            and self.pos + 1 < len(self.buf)
-            and self.buf[self.pos] == 0xFF
-            and self.buf[self.pos + 1] != 0x00
-        )
-
     def read_bit(self) -> int:
         if self.pos >= len(self.buf):
             raise ValueError("truncated JPEG scan data")

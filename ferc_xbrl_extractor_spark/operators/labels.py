@@ -438,7 +438,6 @@ def bt_scores(
     tie_col: str | None = None,
     iters: int = 3,
     unit: int = 1_000_000,
-    prior: int = 1,
 ) -> DataFrame:
     """G98: Bradley-Terry preference scores from pairwise comparisons —
     the reduction RLHF/DPO data prep runs over (chosen, rejected) pairs
@@ -452,12 +451,12 @@ def bt_scores(
     MM recurrence, ``iters`` fixed rounds (fixed so the oracle can
     unroll it — the G65/G37 pattern):
 
-      s_i ← (W_i + p) / ( Σ_j n_ij / (s_i + s_j)  +  2p / (s_i + 1) )
+      s_i ← (W_i + p) / ( Σ_j n_ij / (s_i + s_j)  +  2p / (s_i + 1) ),  p = 1
 
     in DOUBLED win-units so ties stay integral: a decisive comparison
     pays its winner 2 units, a tie pays each side 1, and every
-    comparison adds 2 units to the pair total n2_ij. ``prior`` adds, in
-    those units, ``prior`` virtual wins AND ``prior`` virtual losses
+    comparison adds 2 units to the pair total n2_ij. The prior adds, in
+    those units, one virtual win AND one virtual loss
     against a frozen anchor opponent at score ``unit`` — the standard
     regularizer that (a) keeps an undefeated player's score finite
     (pure BT sends it to +∞), (b) anchors the scale (raw BT is
@@ -492,8 +491,6 @@ def bt_scores(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    if prior < 1:
-        raise ValueError(f"prior must be >= 1 (it anchors the scale), got {prior}")
     d38 = "decimal(38,0)"
     u2 = unit * unit
     cap = unit * unit  # [1, unit^2] micro dynamic range
@@ -540,8 +537,8 @@ def bt_scores(
     )
     # round 1, closed form (every score is the anchor `unit`):
     #   T1 = (N2 div 2 + 2p)·unit  →  s1 = (W2+2p)·unit div (N2 div 2 + 2p)
-    w2p = F.col("__W2") + F.lit(2 * prior)
-    t1 = _dfloor_div(F.col("__N2"), 2) + F.lit(2 * prior)
+    w2p = F.col("__W2") + F.lit(2)
+    t1 = _dfloor_div(F.col("__N2"), 2) + F.lit(2)
     s1 = F.greatest(
         F.least(
             _dfloor_div(w2p * F.lit(unit), t1),
@@ -573,13 +570,13 @@ def bt_scores(
             F.sum("__t").alias("__T"), F.min("__si").alias("__si")
         )
         virt = _dfloor_div(
-            F.lit(4 * prior * u2).cast(d38),
+            F.lit(4 * u2).cast(d38),
             F.col("__si") + F.lit(unit),
         )
         s_next = F.greatest(
             F.least(
                 _dfloor_div(
-                    (F.col("__W2") + F.lit(2 * prior))
+                    (F.col("__W2") + F.lit(2))
                     * F.lit(u2).cast(d38),
                     F.col("__T") + virt,
                 ),
@@ -605,7 +602,6 @@ def bt_oracle_sql(
     comparisons_sql: str,
     iters: int = 3,
     unit: int = 1_000_000,
-    prior: int = 1,
 ) -> str:
     """ANSI-SQL replay of :func:`bt_scores` with the MM rounds UNROLLED
     (the :func:`~..graph.pagerank_oracle_sql` pattern). HUGEINT
@@ -615,7 +611,7 @@ def bt_oracle_sql(
     (winner, loser, tie)."""
     u2 = unit * unit
     cap = unit * unit
-    p2, p4u2 = 2 * prior, 4 * prior * u2
+    p2, p4u2 = 2, 4 * u2
     h = "CAST({} AS HUGEINT)"
     sql = [
         f"c AS (SELECT winner, loser, COALESCE(tie, FALSE) AS tie "

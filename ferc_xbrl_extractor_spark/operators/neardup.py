@@ -324,7 +324,6 @@ def _containment_unordered(
     id_col: str,
     text_col: str,
     n: int,
-    max_shingle_df: int | None,
 ) -> DataFrame:
     """The shared containment core: one shingle-keyed self-join + one
     pair aggregate, yielding UNORDERED ``(id_a < id_b, n_common, n_a,
@@ -339,15 +338,8 @@ def _containment_unordered(
             F.explode_outer("__sh").alias("shingle"),
         )
         .filter(F.col("shingle").isNotNull())
+        .repartition("shingle")
     )
-    if max_shingle_df is not None:
-        freq = st.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-        st = st.join(
-            F.broadcast(freq.filter(F.col("df_") > max_shingle_df)),
-            "shingle",
-            "left_anti",
-        )
-    st = st.repartition("shingle")
     j = st.alias("a").join(
         st.alias("b").hint("shuffle_hash"),
         F.col("a.shingle") == F.col("b.shingle"),
@@ -375,7 +367,6 @@ def containment_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.6,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """G82: asymmetric shingle containment join — ``C(a ⊆ b) =
     |S(a) ∩ S(b)| / |S(a)|`` (Broder 1997's containment, the companion
@@ -397,10 +388,8 @@ def containment_pairs(
     directed candidates are generated from each unordered pair by an
     in-plan ``explode`` (no second aggregate, no extra shuffle: the
     directed relation is derived from the half-sized pair aggregate).
-    ``max_shingle_df`` is the same stop-shingle cap (dropping shingles
-    only lowers measured containment).
     """
-    pairs = _containment_unordered(df, id_col, text_col, n, max_shingle_df)
+    pairs = _containment_unordered(df, id_col, text_col, n)
     directed = pairs.select(
         F.explode(
             F.array(
@@ -437,7 +426,6 @@ def dedup_by_containment(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.9,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """G90: drop documents whose shingle set is ≥``threshold``-contained
     in another document's — the quote/excerpt/subset cleanup the
@@ -476,22 +464,7 @@ def dedup_by_containment(
     executed sf0.1 plan) exists in the plan. One left-anti against the
     corpus scan closes it.
     """
-    if pairs is not None:
-        # caller-supplied DIRECTED pairs: the original rule, verbatim
-        p = pairs.select("id_a", "id_b")
-        rev = p.select(
-            F.col("id_a").alias("id_b"), F.col("id_b").alias("id_a")
-        ).withColumn("__mutual", F.lit(True))
-        drops = (
-            p.join(rev, ["id_a", "id_b"], "left")
-            .filter(
-                F.col("__mutual").isNull() | (F.col("id_a") > F.col("id_b"))
-            )
-            .select(F.col("id_a").alias(id_col))
-            .distinct()
-        )
-        return df.join(drops, id_col, "left_anti")
-    unordered = _containment_unordered(df, id_col, text_col, n, None)
+    unordered = _containment_unordered(df, id_col, text_col, n)
     # same float comparisons as containment_pairs' directed filter:
     # c = n_common / cast(n as double) >= threshold
     da = (F.col("n_common") / F.col("n_a").cast("double")) >= threshold
@@ -1049,8 +1022,7 @@ def connected_components_twophase(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    return_rounds: bool = False,
-) -> DataFrame | tuple[DataFrame, int]:
+) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — the O(log n)-round form for HIGH-DIAMETER pair
@@ -1157,8 +1129,6 @@ def connected_components_twophase(
         "id",
         "left",
     ).select("id", F.coalesce("label", F.col("id")).alias("label"))
-    if return_rounds:
-        return labels, rounds
     return labels
 
 

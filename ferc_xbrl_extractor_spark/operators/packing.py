@@ -120,55 +120,6 @@ def pack_sequences(
     )
 
 
-def mixture_rates(
-    df: DataFrame,
-    weights: dict[str, float],
-    by: str = "source",
-    token_col: str | None = None,
-) -> dict[str, float]:
-    """Per-stratum sampling rates that realize a target mixture.
-
-    Given target weights (e.g. ``{"web": 0.6, "code": 0.3, "books":
-    0.1}``), compute the Bernoulli rate per stratum such that the
-    *expected* post-sampling composition matches the weights, scaled so
-    the largest required rate is 1.0 (pure downsampling — no stratum is
-    upsampled; the binding stratum is kept whole). Feed the result to
-    ``sampling.sample_by_rate``.
-
-    Sizes come from one tiny aggregate (rows, or tokens when
-    ``token_col`` is given — mixtures are usually specified in tokens);
-    the collect is |strata| rows.
-    """
-    size_expr = (
-        F.sum(F.col(token_col)) if token_col else F.count(F.lit(1))
-    ).alias("n")
-    sizes = {
-        r[by]: r["n"]
-        for r in df.groupBy(by).agg(size_expr).collect()
-        if r[by] in weights
-    }
-    missing = set(weights) - set(sizes)
-    if missing:
-        raise ValueError(f"strata absent from corpus: {sorted(missing)}")
-    empty = sorted(
-        s for s, w in weights.items() if w > 0 and not sizes.get(s)
-    )
-    if empty:
-        raise ValueError(
-            f"positive-weight strata with zero corpus size: {empty} "
-            "(no sampling rate can realize the target mixture)"
-        )
-    # rate_s ∝ weight_s / size_s; scale so max rate = 1.
-    raw = {s: weights[s] / sizes[s] for s in weights if weights[s] > 0}
-    if not raw:
-        raise ValueError("all mixture weights are zero")
-    scale = 1.0 / max(raw.values())
-    rates = {s: raw[s] * scale for s in raw}
-    for s in weights:
-        rates.setdefault(s, 0.0)
-    return rates
-
-
 def temperature_rates(
     df: DataFrame,
     tau: float,

@@ -95,20 +95,20 @@ def max_at_most(col: str, hi: float) -> Check:
     return Check(f"max_at_most({col})", F.max(F.col(col)), hi=hi)
 
 
-def size_between(lo: int, hi: int | None = None) -> Check:
-    return Check("size", F.count(F.lit(1)), lo=float(lo),
-                 hi=float(hi) if hi is not None else None)
+def size_between(lo: int) -> Check:
+    """Row count at least ``lo``."""
+    return Check("size", F.count(F.lit(1)), lo=float(lo), hi=None)
 
 
-def matches(col: str, pattern: str, at_least: float = 1.0) -> Check:
-    """Fraction of non-null values CONTAINING a (Java) regex match —
+def matches(col: str, pattern: str) -> Check:
+    """Every non-null value CONTAINS a (Java) regex match —
     ``rlike`` is an unanchored substring search, so a full-value
     validation must anchor the pattern itself (``^...$``)."""
     hit = F.when(F.col(col).rlike(pattern), 1.0).otherwise(0.0)
     m = F.sum(F.when(F.col(col).isNotNull(), hit)) / F.sum(
         F.col(col).isNotNull().cast("double")
     )
-    return Check(f"matches({col})", m, lo=at_least)
+    return Check(f"matches({col})", m, lo=1.0)
 
 
 def in_set(col: str, allowed: list[str], at_least: float = 1.0) -> Check:

@@ -48,43 +48,32 @@ def hash_u60(col: Column, salt: str = "") -> Column:
 
 def sample_by_rate(
     df: DataFrame,
-    rate: float | None = None,
+    key_col: str,
+    rates: dict[str, float],
     id_col: str = "doc_id",
-    key_col: str | None = None,
-    rates: dict[str, float] | None = None,
     default_rate: float = 0.0,
     salt: str = "",
 ) -> DataFrame:
-    """Deterministic Bernoulli sample: keep a row iff
-    ``hash_u60(salt || id) < floor(rate * 2^60)``.
-
-    Pass ``rate`` for a uniform sample, or ``key_col`` + ``rates``
-    (stratum value → rate, ``default_rate`` otherwise) for a stratified
-    mixture. Pure projection+filter — no shuffle, no RNG broadcast; a
-    different ``salt`` gives an independent redraw.
+    """Deterministic stratified Bernoulli sample: keep a row iff
+    ``hash_u60(salt || id) < floor(rate * 2^60)``, where ``rate`` is
+    ``rates[key_col]`` (``default_rate`` for other strata). Pure
+    projection+filter — no shuffle, no RNG broadcast; a different ``salt``
+    gives an independent redraw.
     """
-    if (rate is None) == (rates is None):
-        raise ValueError("pass exactly one of rate= or rates=")
     u = hash_u60(F.col(id_col), salt)
-    if rate is not None:
-        thresh: Column = F.lit(int(rate * _U60_SPAN))
-    else:
-        if not key_col:
-            raise ValueError("rates= requires key_col=")
-        thresh = F.lit(int(default_rate * _U60_SPAN))
-        for value, r in sorted(rates.items()):
-            thresh = F.when(
-                F.col(key_col) == value, F.lit(int(r * _U60_SPAN))
-            ).otherwise(thresh)
+    thresh = F.lit(int(default_rate * _U60_SPAN))
+    for value, r in sorted(rates.items()):
+        thresh = F.when(
+            F.col(key_col) == value, F.lit(int(r * _U60_SPAN))
+        ).otherwise(thresh)
     return df.filter(u < thresh)
 
 
 def repeat_by_rate(
     df: DataFrame,
-    rate: float | None = None,
+    key_col: str,
+    rates: dict[str, float],
     id_col: str = "doc_id",
-    key_col: str | None = None,
-    rates: dict[str, float] | None = None,
     default_rate: float = 1.0,
     salt: str = "",
     copy_col: str = "epoch_copy",
@@ -111,11 +100,6 @@ def repeat_by_rate(
     composition is exact and every engine replays the same copy counts
     row-for-row.
     """
-    if (rate is None) == (rates is None):
-        raise ValueError("pass exactly one of rate= or rates=")
-    if rates is not None and not key_col:
-        raise ValueError("rates= requires key_col=")
-
     def _parts(r: float) -> tuple[int, int]:
         if r < 0:
             raise ValueError(f"negative rate {r}")
@@ -123,18 +107,13 @@ def repeat_by_rate(
         return base, int((r - base) * _U60_SPAN)
 
     u = hash_u60(F.col(id_col), salt)
-    if rate is not None:
-        b, t = _parts(rate)
-        base_c: Column = F.lit(b)
-        thresh: Column = F.lit(t)
-    else:
-        b, t = _parts(default_rate)
-        base_c, thresh = F.lit(b), F.lit(t)
-        for value, r in sorted(rates.items()):
-            rb, rt = _parts(r)
-            cond = F.col(key_col) == value
-            base_c = F.when(cond, F.lit(rb)).otherwise(base_c)
-            thresh = F.when(cond, F.lit(rt)).otherwise(thresh)
+    b, t = _parts(default_rate)
+    base_c, thresh = F.lit(b), F.lit(t)
+    for value, r in sorted(rates.items()):
+        rb, rt = _parts(r)
+        cond = F.col(key_col) == value
+        base_c = F.when(cond, F.lit(rb)).otherwise(base_c)
+        thresh = F.when(cond, F.lit(rt)).otherwise(thresh)
     n = base_c + F.when(u < thresh, F.lit(1)).otherwise(F.lit(0))
     copies = F.when(
         n > 0, F.sequence(F.lit(0), (n - 1).cast("int"))
@@ -493,7 +472,6 @@ def dsir_weights(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 10_000,
-    alpha: float = 1.0,
     salt: str = "dsir:",
     out_col: str = "dsir_logw_micro",
 ) -> DataFrame:
@@ -502,7 +480,7 @@ def dsir_weights(
     document by how much more likely its hashed n-gram features are under
     a small TARGET distribution (the domain you want more of) than under
     the raw corpus itself — ``log w(x) = Σ_feat log p_target(bucket) −
-    log p_raw(bucket)`` with add-``alpha`` smoothing over ``n_buckets``
+    log p_raw(bucket)`` with add-one smoothing over ``n_buckets``
     hash buckets of unigram+bigram features. Select with
     :func:`weighted_sample_k` (or a threshold) over the returned weight.
 
@@ -534,10 +512,10 @@ def dsir_weights(
     raw_total = raw_counts.agg(F.sum("__cr").alias("__tr"))
     tgt_total = tgt_counts.agg(F.sum("__ct").alias("__tt"))
 
-    denom = float(alpha) * n_buckets
+    denom = float(n_buckets)
     # Raw counts cover every bucket the corpus probe can hit (raw IS the
     # corpus), so a left join is total; absent target buckets smooth to
-    # alpha mass.
+    # a count of one.
     ratio = (
         raw_counts.join(tgt_counts, "__b", "left")
         .crossJoin(F.broadcast(tgt_total))
@@ -547,11 +525,11 @@ def dsir_weights(
             F.round(
                 (
                     F.log(
-                        (F.coalesce(F.col("__ct"), F.lit(0)) + F.lit(float(alpha)))
+                        (F.coalesce(F.col("__ct"), F.lit(0)) + F.lit(1.0))
                         / (F.col("__tt") + F.lit(denom))
                     )
                     - F.log(
-                        (F.col("__cr") + F.lit(float(alpha)))
+                        (F.col("__cr") + F.lit(1.0))
                         / (F.col("__tr") + F.lit(denom))
                     )
                 )
@@ -582,94 +560,25 @@ def score_buckets(
     df: DataFrame,
     score_col: str,
     by: str | None = None,
-    n_buckets: int = 3,
-    labels: tuple[str, ...] | None = ("head", "middle", "tail"),
     id_col: str = "doc_id",
     out_col: str = "bucket",
-    descending: bool = True,
-    exact: bool = True,
-    rel_err: float = 0.01,
 ) -> DataFrame:
     """CCNet-style head/middle/tail bucketing (Wenzek et al. 2020): rank
     every document within its ``by`` stratum (per-language in CCNet) by
-    ``score_col`` and label equal-POPULATION buckets — bucket 1 ("head")
-    is the best-scoring third, the one CCNet keeps outright. Descending
-    order means higher score = better; flip for perplexity-like scores
-    where lower is better.
+    ``score_col``, higher first, and label equal-POPULATION thirds
+    "head", "middle" and "tail" — the head is the best-scoring third, the
+    one CCNet keeps outright.
 
-    Two forms:
-
-    - ``exact=True``: NTILE over a per-stratum window (ties broken by
-      ``id_col`` — deterministic, replayable in any engine). One keyed
-      exchange; the window sorts each stratum on one task chain, so a
-      single dominant stratum is a straggler at extreme scale.
-    - ``exact=False``: per-stratum ``percentile_approx`` thresholds (one
-      map-side-combinable aggregate, |strata| rows to the driver) compiled
-      into a literal CASE — a pure map-side projection, no shuffle of the
-      corpus at all. Bucket POPULATIONS are then approximate (quantile
-      sketch error + ties sharing a threshold land in one bucket), which
-      is what a 100-TB CCNet pass actually runs.
+    NTILE over a per-stratum window (ties broken by ``id_col`` —
+    deterministic, replayable in any engine). One keyed exchange; the
+    window sorts each stratum on one task chain, so a single dominant
+    stratum is a straggler at extreme scale.
     """
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    if labels is not None and len(labels) != n_buckets:
-        raise ValueError(
-            f"labels has {len(labels)} entries for {n_buckets} buckets"
-        )
-    s = F.col(score_col)
-    order = [s.desc_nulls_last() if descending else s.asc_nulls_last(),
-             F.col(id_col)]
-
-    if exact:
-        w = Window.partitionBy(*( [by] if by else [] )).orderBy(*order)
-        idx = F.ntile(n_buckets).over(w)
-    else:
-        strata = (
-            df.groupBy(*( [by] if by else [] ))
-            .agg(
-                F.percentile_approx(
-                    s,
-                    [i / n_buckets for i in range(1, n_buckets)],
-                    int(1 / rel_err),
-                ).alias("__th")
-            )
-            .collect()
-        )
-        # Thresholds are per-stratum literals; the when-chain tests the
-        # TIGHTEST cut first (first match wins), so looser cuts cannot
-        # shadow it. NULL scores always fall to the last bucket.
-        def bucket_expr(th: list | None) -> Column:
-            cuts = [c for c in (th or []) if c is not None]
-            cuts = sorted(cuts, reverse=descending)
-            e = None
-            for i, c in enumerate(cuts):
-                cond = (
-                    s >= F.lit(float(c))
-                    if descending
-                    else s <= F.lit(float(c))
-                )
-                e = (
-                    F.when(cond, F.lit(i + 1))
-                    if e is None
-                    else e.when(cond, F.lit(i + 1))
-                )
-            e = F.lit(n_buckets) if e is None else e.otherwise(F.lit(n_buckets))
-            return F.when(s.isNull(), F.lit(n_buckets)).otherwise(e)
-
-        if by:
-            idx = None
-            for r in strata:
-                cond = F.col(by).eqNullSafe(F.lit(r[by]))
-                b = bucket_expr(r["__th"])
-                idx = F.when(cond, b) if idx is None else idx.when(cond, b)
-            idx = idx.otherwise(F.lit(n_buckets))
-        else:
-            idx = bucket_expr(strata[0]["__th"] if strata else None)
-
-    if labels is not None:
-        lab = F.element_at(F.array(*[F.lit(x) for x in labels]), idx)
-        return df.withColumn(out_col, lab)
-    return df.withColumn(out_col, idx.cast("int"))
+    order = [F.col(score_col).desc_nulls_last(), F.col(id_col)]
+    w = Window.partitionBy(*( [by] if by else [] )).orderBy(*order)
+    idx = F.ntile(3).over(w)
+    labels = F.array(*[F.lit(x) for x in ("head", "middle", "tail")])
+    return df.withColumn(out_col, F.element_at(labels, idx))
 
 
 def stratified_sample_n(

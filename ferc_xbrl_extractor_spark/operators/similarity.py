@@ -178,17 +178,10 @@ def embedding_neardup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
-    planes: int = 0,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate join: (id_a, id_b, sim) for pairs
-    with cosine ≥ threshold, id_a < id_b.
-
-    With ``planes`` > 0 (requires ``dim``), candidates are restricted to
-    sign-LSH bucket collisions — the keyed-join scale path (high-cosine
-    pairs land in the same bucket with probability (1-θ/π)^planes).
-    planes=0 scores all pairs via a self-join on a constant key split —
-    only for oracle-checkable small inputs.
+    with cosine ≥ threshold, id_a < id_b. Scores all pairs via a cross
+    join, so it is for oracle-checkable small inputs.
     """
     # Norms are per-row constants: compute them BELOW the join so each is
     # evaluated once per document, not once per candidate pair (cosine()
@@ -204,15 +197,7 @@ def embedding_neardup_pairs(
         F.col(vec_col).alias("__vb"),
         norm(F.col(vec_col)).alias("__nb"),
     )
-    if planes > 0:
-        if not dim:
-            raise ValueError("dim is required when planes > 0")
-        sig = lambda col: hyperplane_signature(col, dim, planes)  # noqa: E731
-        a = a.withColumn("__bucket", sig(F.col("__va")))
-        b = b.withColumn("__bucket", sig(F.col("__vb")))
-        joined = a.join(b, "__bucket")
-    else:
-        joined = a.crossJoin(b)
+    joined = a.crossJoin(b)
     sim = dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
     return (
         joined.filter(F.col("id_a") < F.col("id_b"))
@@ -341,12 +326,10 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    nlist: int = 16,
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    seed: int = 7,
     centroids_vectors: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF approximate top-k cosine search: probe the ``nprobe`` inverted
@@ -378,9 +361,7 @@ def ivf_topk(
             list(enumerate(ucents)), "__cluster int, __cvec array<double>"
         )
     else:
-        assigned, centroids = ivf_index(
-            corpus, nlist=nlist, id_col=id_col, vec_col=vec_col, seed=seed
-        )
+        assigned, centroids = ivf_index(corpus, id_col=id_col, vec_col=vec_col)
     c = assigned.select(
         F.col(id_col).alias("neighbor_id"), "__nvec", "__cluster"
     )
@@ -677,11 +658,8 @@ def semantic_decontaminate(
     bench_id_col: str | None = None,
     bench_vec_col: str | None = None,
     max_benchmark: int = 10_000,
-    planes: int = 0,
-    dim: int | None = None,
-    mode: str = "annotate",
 ) -> DataFrame:
-    """Embedding-space decontamination: flag (or drop) corpus documents
+    """Embedding-space decontamination: flag corpus documents
     whose embedding is too close to any benchmark/eval-set embedding —
     the semantic companion to the n-gram shingle probe in
     ``neardup.decontaminate`` (G15), catching paraphrased or re-worded
@@ -690,158 +668,96 @@ def semantic_decontaminate(
     Returns, per corpus row: ``max_bench_sim`` (highest cosine against
     the benchmark, rounded 4dp), ``nearest_bench_id`` (ties to the lowest
     benchmark id), and ``contaminated`` (sim >= threshold; False when the
-    corpus vector has zero norm or — on the LSH path — no bucket
-    collision). ``mode="filter"`` instead returns the surviving corpus
-    rows with their original columns.
+    corpus vector has zero norm).
 
     Scale shape — the corpus is the 100-TB side, the benchmark is an
-    eval suite (10^3-10^5 vectors):
-
-    * ``planes=0`` (default, exact): the benchmark is collected once
-      (bounded by ``max_benchmark``; raises beyond) and compiled into the
-      projection as a literal (vector, norm, id) struct matrix — the
-      ``ivf_assign`` pattern — so scoring is ONE codegen'd map-side
-      expression over the corpus scan: zero shuffle, zero join, zero
-      broadcast variable at any corpus size. Dots fold sequentially and
-      benchmark norms are driver-computed with the same IEEE-double
-      sequential sum, so results are bitwise-reproducible in any engine
-      (the DuckDB oracle replays them exactly).
-    * ``planes>0`` (requires ``dim``; approximate): for benchmarks past
-      the literal-matrix bound, candidates are sign-LSH bucket collisions
-      (``hyperplane_signature``) — a bucket equi-join the optimizer
-      broadcasts while the benchmark fits, then one corpus-id-keyed max
-      aggregate. High-cosine pairs collide with probability
-      (1-theta/pi)^planes; a corpus row with no collision is kept.
+    eval suite (10^3-10^5 vectors): the benchmark is collected once
+    (bounded by ``max_benchmark``; raises beyond) and compiled into the
+    projection as a literal (vector, norm, id) struct matrix — the
+    ``ivf_assign`` pattern — so scoring is ONE codegen'd map-side
+    expression over the corpus scan: zero shuffle, zero join, zero
+    broadcast variable at any corpus size. Dots fold sequentially and
+    benchmark norms are driver-computed with the same IEEE-double
+    sequential sum, so results are bitwise-reproducible in any engine
+    (the DuckDB oracle replays them exactly).
 
     The corpus vector's norm is let-bound once per row (see ``_unit`` —
     the naive form re-evaluates the O(d) norm fold per benchmark entry).
 
-    The literal path is a stateless projection, so it works unchanged on
-    a STREAMING corpus (readStream in, writeStream out — see
-    tests/test_streaming.py); the LSH path's aggregate/join needs
-    batch semantics.
+    The scoring is a stateless projection, so it works unchanged on a
+    STREAMING corpus (readStream in, writeStream out — see
+    tests/test_streaming.py).
     """
     bid_col = bench_id_col or id_col
     bvec_col = bench_vec_col or vec_col
-    if mode not in ("annotate", "filter"):
-        raise ValueError("mode must be 'annotate' or 'filter'")
-    if planes > 0:
-        if not dim:
-            raise ValueError("dim is required when planes > 0")
-        sig = lambda col: hyperplane_signature(col, dim, planes)  # noqa: E731
-        b = benchmark.select(
-            F.col(bid_col).alias("__bid"),
-            F.col(bvec_col).alias("__bv"),
-            norm(F.col(bvec_col)).alias("__bn"),
-        ).withColumn("__bucket", sig(F.col("__bv")))
-        c = corpus.select(
-            F.col(id_col).alias("__cid"),
-            F.col(vec_col).alias("__cv"),
-            norm(F.col(vec_col)).alias("__cn"),
-        ).withColumn("__bucket", sig(F.col("__cv")))
-        sim = F.round(
-            dot(F.col("__cv"), F.col("__bv"))
-            / (F.col("__cn") * F.col("__bn")),
-            4,
+    rows = benchmark.select(bid_col, bvec_col).limit(
+        max_benchmark + 1
+    ).collect()
+    if len(rows) > max_benchmark:
+        raise ValueError(
+            f"benchmark exceeds max_benchmark={max_benchmark} — raise "
+            "the bound (plan-literal cost grows with |benchmark|×dim)"
         )
-        best = (
-            c.join(b, "__bucket")
-            .filter((F.col("__cn") > 0) & (F.col("__bn") > 0))
-            .select(
-                "__cid",
-                F.struct(
-                    sim.alias("sim"), (-F.col("__bid")).alias("negid")
-                ).alias("__sb"),
-            )
-            .groupBy("__cid")
-            .agg(F.max("__sb").alias("__best"))
-        )
-        out = corpus.join(
-            best, corpus[id_col] == best["__cid"], "left"
-        ).select(
-            *corpus.columns,
-            F.col("__best")["sim"].alias("max_bench_sim"),
-            (-F.col("__best")["negid"]).cast("long").alias(
-                "nearest_bench_id"
-            ),
-            F.coalesce(
-                F.col("__best")["sim"] >= F.lit(float(threshold)),
-                F.lit(False),
-            ).alias("contaminated"),
-        )
-    else:
-        rows = benchmark.select(bid_col, bvec_col).limit(
-            max_benchmark + 1
-        ).collect()
-        if len(rows) > max_benchmark:
+    # ONE F.expr for the whole matrix, not |benchmark|×dim F.lit
+    # calls: each Column op is a py4j round-trip (the
+    # hyperplane_signature lesson — literal-by-literal costs ~2ms
+    # per literal of driver time, ~35s at 256×64).
+    entries = []
+    for r in rows:
+        vec = [float(x) for x in r[bvec_col]]
+        acc = 0.0
+        for x in vec:
+            acc += x * x
+        nb = acc ** 0.5
+        if nb == 0.0:
             raise ValueError(
-                f"benchmark exceeds max_benchmark={max_benchmark} — raise "
-                "the bound (plan-literal cost grows with |benchmark|×dim) "
-                "or use the sign-LSH path (planes>0, dim=...)"
+                f"benchmark vector {r[bid_col]!r} has zero norm"
             )
-        # ONE F.expr for the whole matrix, not |benchmark|×dim F.lit
-        # calls: each Column op is a py4j round-trip (the
-        # hyperplane_signature lesson — literal-by-literal costs ~2ms
-        # per literal of driver time, ~35s at 256×64).
-        entries = []
-        for r in rows:
-            vec = [float(x) for x in r[bvec_col]]
-            acc = 0.0
-            for x in vec:
-                acc += x * x
-            nb = acc ** 0.5
-            if nb == 0.0:
-                raise ValueError(
-                    f"benchmark vector {r[bid_col]!r} has zero norm"
-                )
-            arr = ", ".join(f"{x!r}D" for x in vec)
-            entries.append(
-                f"named_struct('v', array({arr}), "
-                f"'nb', {nb!r}D, 'bid', {int(r[bid_col])}L)"
-            )
-        bmat = F.expr("array(" + ", ".join(entries) + ")")
-        vcol = F.col(vec_col)
-
-        def scored(nv: Column) -> Column:
-            sims = F.transform(
-                bmat,
-                lambda e: F.struct(
-                    F.round(
-                        F.aggregate(
-                            F.zip_with(
-                                vcol, e["v"], lambda x, y: x.cast("double") * y
-                            ),
-                            F.lit(0.0),
-                            lambda acc, v: acc + v,
-                        )
-                        / (nv * e["nb"]),
-                        4,
-                    ).alias("sim"),
-                    (-e["bid"]).alias("negid"),
-                ),
-            )
-            return F.when(nv > 0, F.array_max(sims))
-
-        best = F.element_at(
-            F.transform(F.array(norm(vcol)), scored), 1
+        arr = ", ".join(f"{x!r}D" for x in vec)
+        entries.append(
+            f"named_struct('v', array({arr}), "
+            f"'nb', {nb!r}D, 'bid', {int(r[bid_col])}L)"
         )
-        # Three field accesses on __best below stay one evaluation:
-        # top-level Project subexpression elimination (codegen CSE)
-        # covers the collapsed projection.
-        out = corpus.withColumn("__best", best).select(
-            *corpus.columns,
-            F.col("__best")["sim"].alias("max_bench_sim"),
-            (-F.col("__best")["negid"]).cast("long").alias(
-                "nearest_bench_id"
+    bmat = F.expr("array(" + ", ".join(entries) + ")")
+    vcol = F.col(vec_col)
+
+    def scored(nv: Column) -> Column:
+        sims = F.transform(
+            bmat,
+            lambda e: F.struct(
+                F.round(
+                    F.aggregate(
+                        F.zip_with(
+                            vcol, e["v"], lambda x, y: x.cast("double") * y
+                        ),
+                        F.lit(0.0),
+                        lambda acc, v: acc + v,
+                    )
+                    / (nv * e["nb"]),
+                    4,
+                ).alias("sim"),
+                (-e["bid"]).alias("negid"),
             ),
-            F.coalesce(
-                F.col("__best")["sim"] >= F.lit(float(threshold)),
-                F.lit(False),
-            ).alias("contaminated"),
         )
-    if mode == "filter":
-        return out.filter(~F.col("contaminated")).select(*corpus.columns)
-    return out
+        return F.when(nv > 0, F.array_max(sims))
+
+    best = F.element_at(
+        F.transform(F.array(norm(vcol)), scored), 1
+    )
+    # Three field accesses on __best below stay one evaluation:
+    # top-level Project subexpression elimination (codegen CSE)
+    # covers the collapsed projection.
+    return corpus.withColumn("__best", best).select(
+        *corpus.columns,
+        F.col("__best")["sim"].alias("max_bench_sim"),
+        (-F.col("__best")["negid"]).cast("long").alias(
+            "nearest_bench_id"
+        ),
+        F.coalesce(
+            F.col("__best")["sim"] >= F.lit(float(threshold)),
+            F.lit(False),
+        ).alias("contaminated"),
+    )
 
 
 def hard_negative_pairs(
@@ -853,7 +769,6 @@ def hard_negative_pairs(
     vec_col: str = "embedding",
     label_col: str = "label",
     anchor_id_col: str = "anchor_id",
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Contrastive training-pair mining (the DPR/SimCSE data-prep step):
     for each anchor vector, the ``n_pos`` most-similar SAME-label vectors
@@ -870,11 +785,7 @@ def hard_negative_pairs(
     — explicitly broadcast, corpus scanned once, then ONE top-k per
     (anchor, role) via the planner's own map-side WindowGroupLimit (the
     exchange carries ≤ (k·partitions) rows per anchor-role, never the
-    scored cross product). For corpora where even one scan per mining
-    round is too much, pass ``candidates`` (anchor_id, neighbor_id) from
-    the LSH/IVF bucketed joins (`hyperplane_lsh_topk` / `ivf_topk`
-    internals) — scoring then touches only the candidate pairs via a
-    keyed join instead of the broadcast cross product.
+    scored cross product).
     """
     a = anchors.select(
         F.col(id_col).alias(anchor_id_col),
@@ -888,16 +799,7 @@ def hard_negative_pairs(
         norm(F.col(vec_col)).alias("__nc"),
         F.col(label_col).alias("__clbl"),
     )
-    if candidates is None:
-        crossed = c.crossJoin(F.broadcast(a))
-    else:
-        pair = candidates.select(
-            F.col(anchor_id_col), F.col("neighbor_id")
-        )
-        crossed = pair.join(F.broadcast(a), anchor_id_col).join(
-            c, "neighbor_id"
-        )
-    scored = crossed.filter(
+    scored = c.crossJoin(F.broadcast(a)).filter(
         F.col("neighbor_id") != F.col(anchor_id_col)
     ).select(
         anchor_id_col,
@@ -1258,7 +1160,6 @@ def margin_mine(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold_micro: int = 1_000_000,
-    mutual_only: bool = False,
 ) -> DataFrame:
     """G102: margin-based parallel-pair mining between two embedding
     corpora (Artetxe & Schwenk ACL'19, the CCMatrix/LASER reduction):
@@ -1277,8 +1178,7 @@ def margin_mine(
 
     Candidates are the union of forward (each left vector's top-k in
     right) and backward top-k — a pair only needs to surface in ONE
-    direction; ``mutual_only=True`` additionally requires the pair to
-    be rank-1 in BOTH directions (the strict "max" strategy).
+    direction.
 
     Returns ``(id_a, id_b, sim_micro, margin_micro)`` for pairs with
     ``margin_micro ≥ threshold_micro`` (1_000_000 = margin 1.0). Float
@@ -1330,16 +1230,6 @@ def margin_mine(
         .groupBy("id_a", "id_b")
         .agg(F.max("__sm").alias("sim_micro"))
     )
-    if mutual_only:
-        cands = cands.join(
-            fwd.filter(F.col("rank") == 1).select("id_a", "id_b"),
-            ["id_a", "id_b"],
-            "left_semi",
-        ).join(
-            bwd.filter(F.col("rank") == 1).select("id_a", "id_b"),
-            ["id_a", "id_b"],
-            "left_semi",
-        )
     den = F.col("__ma") + F.col("__mb")
     margin = F.when(
         den > 0,

@@ -92,8 +92,6 @@ def probe_hot_gram(
     text_col: str = "text",
     n: int = 8,
     sample_rows: int = 512,
-    sample_fraction: float | None = None,
-    seed: int = 7,
     hot_factor: float = 4.0,
 ) -> bool:
     """G26 form probe: does the corpus have a gram hot enough to straggle
@@ -105,15 +103,14 @@ def probe_hot_gram(
     onto one task, so it is unsafe when the hottest gram's share of all
     gram rows exceeds ``hot_factor`` × a partition's fair share (1/P).
 
-    The default sample is ``limit(sample_rows)`` — a HEAD sample, not a
-    uniform one: ``sample(fraction)`` must scan every row to flip its
-    coin (measured 1.3s at sf0.1 — it would cost more than the choice
-    saves), while a limit terminates the scan after one task's worth of
-    rows. Boilerplate grams are corpus-wide by nature, so any contiguous
-    slice exhibits them; pass ``sample_fraction`` to force the uniform
-    probe when the corpus is known to be ordered adversarially (e.g.
-    sorted so one domain owns the head). Deterministic either way
-    (literal limit / seeded sample, pure-arithmetic decision)."""
+    The sample is ``limit(sample_rows)`` — a HEAD sample, not a uniform
+    one: ``sample(fraction)`` must scan every row to flip its coin
+    (measured 1.3s at sf0.1 — it would cost more than the choice saves),
+    while a limit terminates the scan after one task's worth of rows.
+    Boilerplate grams are corpus-wide by nature, so any contiguous slice
+    exhibits them; a corpus ordered adversarially (e.g. sorted so one
+    domain owns the head) can fool it. Deterministic (literal limit,
+    pure-arithmetic decision)."""
     key = None
     try:
         # the verdict is a property of the INPUT RELATION, not of the
@@ -131,18 +128,13 @@ def probe_hot_gram(
         if "LocalRelation" not in plan_str:
             key = (
                 plan_str, analyzed.semanticHash(),
-                n, id_col, text_col, sample_rows, sample_fraction,
-                hot_factor,
+                n, id_col, text_col, sample_rows, hot_factor,
             )
         if key in _HOT_GRAM_PROBE_CACHE:
             return _HOT_GRAM_PROBE_CACHE[key]
     except Exception:
         key = None
-    if sample_fraction is not None:
-        probe_docs = df.sample(fraction=sample_fraction, seed=seed)
-    else:
-        probe_docs = df.limit(sample_rows)
-    g = positional_grams(probe_docs, id_col, text_col, n)
+    g = positional_grams(df.limit(sample_rows), id_col, text_col, n)
     stats = (
         g.groupBy("g")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -351,7 +343,6 @@ def cdc_chunks(
     text_col: str = "text",
     window: int = 8,
     divisor: int = 64,
-    keep_text: bool = False,
 ) -> DataFrame:
     """G97: content-defined chunking (the rsync/LBFS boundary trick) —
     split each document at positions where the rolling fingerprint of
@@ -378,7 +369,7 @@ def cdc_chunks(
     Python, no per-position explode — the per-doc work is O(len·window)
     md5 input bytes, the row count stays O(chunks).
 
-    Returns (id_col, chunk_idx, chunk_md5, n_chars [, chunk]).
+    Returns (id_col, chunk_idx, chunk_md5, n_chars).
     """
     if window < 1 or divisor < 1:
         raise ValueError("window and divisor must be >= 1")
@@ -435,7 +426,6 @@ def cdc_chunks(
             F.col("__c.chunk_idx").alias("chunk_idx"),
             F.md5(F.col("__c.chunk")).alias("chunk_md5"),
             F.length(F.col("__c.chunk")).cast("long").alias("n_chars"),
-            *([F.col("__c.chunk").alias("chunk")] if keep_text else []),
         )
         .filter(F.col("n_chars") > 0)  # zero-length docs chunk to nothing
     )

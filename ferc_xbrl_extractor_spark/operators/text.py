@@ -399,29 +399,12 @@ def _bigram_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).select(id_col, F.col("__bg.w1").alias("w1"), F.col("__bg.w2").alias("w2"))
 
 
-def bigram_lm(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Count-based bigram language model: ``(w1, w2, n)`` over consecutive
-    token pairs. One explode + one map-side-combinable aggregate — the
-    exchange carries |distinct bigrams| (Zipf-bounded), never the corpus.
-    Persist/write this to reuse a reference-corpus model across scoring
-    runs (the CCNet pattern: train on a clean corpus, score the crawl)."""
-    return (
-        _bigram_pairs(df, text_col, id_col)
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def bigram_surprisal(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     out_col: str = "bigram_surprisal",
     alpha: float = 0.5,
-    model: DataFrame | None = None,
-    vocab_size: int | None = None,
 ) -> DataFrame:
     """Mean per-bigram surprisal −ln p(w₂|w₁) under an add-α-smoothed
     bigram LM — the distributed analog of CCNet/Wikipedia-KenLM perplexity
@@ -429,46 +412,28 @@ def bigram_surprisal(
     that, unlike ``unigram_surprisal``, is sensitive to word ORDER
     (scrambled text keeps its unigram score but blows up here).
 
-    ``p(w₂|w₁) = (c(w₁,w₂) + α) / (c(w₁) + α·V)`` with V the training
-    vocabulary size; unseen bigrams/contexts coalesce to 0, so scoring a
-    corpus against an external ``model`` (train clean → score crawl) is
-    well-defined: a fully-OOV bigram costs −ln(α/(α·V)) = ln V.
+    ``p(w₂|w₁) = (c(w₁,w₂) + α) / (c(w₁) + α·V)`` with the model and V
+    (the vocabulary size) both fitted on ``df`` itself.
 
     Determinism: the same integer micro-nat trick as
     ``unigram_surprisal`` — each bigram's −ln p is fixed to
     ``round(−ln(p)·1e6)`` BEFORE the per-doc sum, so the parallel
     aggregate is order-free and a DuckDB oracle hash-matches exactly.
 
-    Plan: pairs explode → (model build if self-trained: one combinable
-    aggregate) → two keyed joins back (bigram key, then context key) —
-    both AQE-broadcast when the Zipf-small model side fits, shuffle-hash
+    Plan: pairs explode → model build (one combinable aggregate) → two
+    keyed joins back (bigram key, then context key) — both
+    AQE-broadcast when the Zipf-small model side fits, shuffle-hash
     otherwise; context counts derive from the MODEL relation (|distinct
-    bigrams| rows), not from a corpus re-scan; V rides as a 1-row
-    broadcast. Docs with <2 tokens get NULL via the final left join.
-
-    Args:
-        model: pre-trained ``bigram_lm`` output; None trains on ``df``.
-        vocab_size: V for smoothing; required with an external ``model``
-            (the scorer cannot see its training corpus), else counted from
-            ``df``'s tokens in one aggregate.
+    bigrams| rows), not from a corpus re-scan; V is counted from
+    ``df``'s tokens in one aggregate and rides as a 1-row broadcast.
+    Docs with <2 tokens get NULL via the final left join.
     """
     pairs = _bigram_pairs(df, text_col, id_col)
-    if model is None:
-        model = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n"))
-    elif vocab_size is None:
-        raise ValueError(
-            "bigram_surprisal: an external model needs vocab_size (V) — "
-            "the scorer cannot derive it from the scored corpus"
-        )
-    if vocab_size is None:
-        v_df = (
-            df.select(F.explode(tokens(text_col)).alias("__tok"))
-            .agg(F.count_distinct("__tok").alias("__v"))
-        )
-    else:
-        v_df = df.sparkSession.range(1).select(
-            F.lit(int(vocab_size)).cast("long").alias("__v")
-        )
+    model = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n"))
+    v_df = (
+        df.select(F.explode(tokens(text_col)).alias("__tok"))
+        .agg(F.count_distinct("__tok").alias("__v"))
+    )
     ctx = model.groupBy("w1").agg(F.sum("n").alias("__cn"))
     scored = (
         pairs.join(model, ["w1", "w2"], "left")
@@ -508,10 +473,7 @@ def kneser_ney_surprisal(
     text_col: str = "text",
     id_col: str = "doc_id",
     out_col: str = "kn_surprisal",
-    discount: float = 0.75,
     alpha: float = 0.5,
-    model: DataFrame | None = None,
-    vocab_size: int | None = None,
 ) -> DataFrame:
     """G105: mean per-bigram surprisal under an interpolated KNESER-NEY
     bigram LM (Kneser & Ney 1995; Chen & Goodman 1999) — the smoothing
@@ -530,13 +492,13 @@ def kneser_ney_surprisal(
       p_c(w₂)  = (N₁₊(·,w₂) + α) / (B + α·V)      [α-guarded for OOV]
       unseen context w₁ → p(w₂|w₁) = p_c(w₂)
 
-    with B = |distinct bigrams|. All inputs are integer counts derived
-    from the MODEL relation in three combinable aggregates; the α guard
-    on the continuation distribution keeps p > 0 for OOV words so
-    scoring a crawl against a clean reference ``model`` (the CCNet
-    pattern: train clean → score crawl) is total. N₁₊(w₁,·) ≥ 1 for
-    every seen context, so the interpolation term keeps p > 0 even
-    where the discount zeroes the first term.
+    with B = |distinct bigrams| and D = 0.75, the standard Chen-Goodman
+    fixed discount. The model and V (the vocabulary size) are both
+    fitted on ``df`` itself. All inputs are integer counts derived from
+    the MODEL relation in three combinable aggregates; the α guard on
+    the continuation distribution keeps p > 0. N₁₊(w₁,·) ≥ 1 for every
+    seen context, so the interpolation term keeps p > 0 even where the
+    discount zeroes the first term.
 
     Determinism: the same integer micro-nat trick as
     :func:`bigram_surprisal` — each bigram's −ln p is fixed to
@@ -544,9 +506,9 @@ def kneser_ney_surprisal(
     aggregate is order-free and the DuckDB oracle (identical arithmetic
     expression shape, IEEE-double step for step) hash-matches exactly.
 
-    Plan: pairs explode → model (self-trained: one combinable
-    aggregate) → THREE derived relations off the model in one pass
-    each — (c(w₁), N₁₊(w₁,·)) share one groupBy(w₁) aggregate,
+    Plan: pairs explode → model (one combinable aggregate) → THREE
+    derived relations off the model in one pass each — (c(w₁),
+    N₁₊(w₁,·)) share one groupBy(w₁) aggregate,
     N₁₊(·,w₂) is one groupBy(w₂), B is a 1-row total — then three
     keyed joins back onto the pairs (bigram, context, continuation
     keys; all Zipf-small sides, AQE-broadcast when they fit) and two
@@ -554,39 +516,20 @@ def kneser_ney_surprisal(
     explode; docs with <2 tokens get NULL via the final left join.
 
     Args:
-        discount: absolute discount D ∈ (0, 1); 0.75 is the standard
-            Chen-Goodman fixed value.
         alpha: OOV guard on the continuation distribution.
-        model: pre-trained :func:`bigram_lm` output; None trains on
-            ``df``.
-        vocab_size: V for the guard; required with an external
-            ``model`` (the scorer cannot see its training corpus).
     """
-    if not (0.0 < discount < 1.0):
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
     pairs = _bigram_pairs(df, text_col, id_col)
-    if model is None:
-        model = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n"))
-    elif vocab_size is None:
-        raise ValueError(
-            "kneser_ney_surprisal: an external model needs vocab_size (V) — "
-            "the scorer cannot derive it from the scored corpus"
-        )
-    if vocab_size is None:
-        v_df = (
-            df.select(F.explode(tokens(text_col)).alias("__tok"))
-            .agg(F.count_distinct("__tok").alias("__v"))
-        )
-    else:
-        v_df = df.sparkSession.range(1).select(
-            F.lit(int(vocab_size)).cast("long").alias("__v")
-        )
+    model = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n"))
+    v_df = (
+        df.select(F.explode(tokens(text_col)).alias("__tok"))
+        .agg(F.count_distinct("__tok").alias("__v"))
+    )
     ctx = model.groupBy("w1").agg(
         F.sum("n").alias("__cn"), F.count(F.lit(1)).alias("__t1")
     )
     cont = model.groupBy("w2").agg(F.count(F.lit(1)).alias("__nb1"))
     b_df = model.agg(F.count(F.lit(1)).alias("__b"))
-    d = float(discount)
+    d = 0.75
     a = float(alpha)
     pc = (
         (F.coalesce(F.col("__nb1"), F.lit(0)).cast("double") + F.lit(a))
@@ -788,12 +731,11 @@ def strip_common_lines(
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str | None = None,
-    max_ratio: float = 0.5,
     min_docs: int = 2,
     line_sep: str = "\n",
 ) -> DataFrame:
     """CCNet-style boilerplate line removal: a line occurring in more
-    than ``max_ratio`` of a group's documents (and in at least
+    than half of a group's documents (and in at least
     ``min_docs`` of them) is boilerplate — headers, footers, cookie
     banners — and is stripped from every document in the group. Groups
     are ``source_col`` values (per-domain, the CCNet setting) or the
@@ -855,7 +797,7 @@ def strip_common_lines(
         freq.join(docs_per_grp, "__grp")
         .filter(
             (F.col("__df") >= min_docs)
-            & (F.col("__df") / F.col("__grp_docs") > max_ratio)
+            & (F.col("__df") / F.col("__grp_docs") > 0.5)
         )
         .select("__grp", "__line")
     )
@@ -1455,7 +1397,6 @@ def with_registrable_domain(
     out_col: str = "domain",
     suffixes: DataFrame | None = None,
     suffix_col: str = "suffix",
-    max_suffix_labels: int | None = None,
 ) -> DataFrame:
     """G66: attach the registrable domain of ``host_col`` as
     ``out_col`` — by the heuristic expression (:func:`registrable_domain`,
@@ -1475,8 +1416,7 @@ def with_registrable_domain(
     The candidate fan is DERIVED from the rules (one bounded aggregate
     over the broadcast-sized relation), so a 5-label rule like
     ``s3.dualstack.ap-northeast-1.amazonaws.com`` can never be
-    silently out-ranged; pass ``max_suffix_labels`` to assert a
-    ceiling instead (rules longer than it raise). Malformed rules
+    silently out-ranged. Malformed rules
     (``*`` anywhere but as the entire leftmost label, interior ``!``)
     raise with a count — never a silent drop. Hosts are lowercased for
     matching AND in ``out_col`` (PSL rules are lowercase; domains are
@@ -1530,13 +1470,6 @@ def with_registrable_domain(
         (row["__kind"], int(row["__k"]))
         for row in parsed.select("__kind", "__k").distinct().collect()
     }
-    longest = max(k for _, k in meta)
-    if max_suffix_labels is not None and longest > max_suffix_labels:
-        raise ValueError(
-            f"suffix rules reach {longest} labels, beyond "
-            f"max_suffix_labels={max_suffix_labels} — longer rules would "
-            "be silently ignored"
-        )
     labels = F.split(col, r"\.")
     n = F.size(labels)
 
@@ -1596,20 +1529,15 @@ def domain_report(
     url_col: str = "url",
     text_col: str = "text",
     domain_col: str = "domain",
-    suffixes: DataFrame | None = None,
 ) -> DataFrame:
     """G66: per-registrable-domain corpus report — document count,
     distinct canonical-URL count, total text bytes. THE balancing
     dimension crawl curation caps on (a handful of domains otherwise
     monopolize any token budget); feed ``domain_col`` to
     ``cap_per_group``/``group_cap_col`` for the enforcement half.
+    Domains come from the heuristic :func:`registrable_domain`.
 
-    ``suffixes``: optional public-suffix relation for exact domain
-    grouping (:func:`with_registrable_domain`); the heuristic stays the
-    default.
-
-    One map-side projection (host → domain + canonical URL, the
-    suffix-table mode adding only broadcast joins) and ONE hash
+    One map-side projection (host → domain + canonical URL) and ONE hash
     aggregate; the distinct-URL count rides in the same aggregate. At
     100 TB the output is |domains| rows — millions, not billions."""
     base = df.select(
@@ -1617,9 +1545,7 @@ def domain_report(
         normalize_url(url_col).alias("__canon"),
         F.length(F.col(text_col)).cast("long").alias("__chars"),
     )
-    base = with_registrable_domain(
-        base, "__host", domain_col, suffixes=suffixes
-    )
+    base = with_registrable_domain(base, "__host", domain_col)
     return (
         base.groupBy(domain_col)
         .agg(

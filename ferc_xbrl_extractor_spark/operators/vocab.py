@@ -38,7 +38,6 @@ def build_vocab(
     df: DataFrame,
     text_col: str = "text",
     vocab_size: int = 50000,
-    min_count: int = 1,
 ) -> DataFrame:
     """(token, token_id, n): the ``vocab_size`` most frequent corpus
     tokens, id 1..V by (count desc, token asc)."""
@@ -47,7 +46,6 @@ def build_vocab(
         .filter(F.col("token").isNotNull())
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_count)
     )
     topv = counts.orderBy(F.col("n").desc(), F.col("token")).limit(vocab_size)
     w = Window.orderBy(F.col("n").desc(), F.col("token"))

@@ -137,7 +137,6 @@ def extract(
     instance_pattern: str | None = None,
     requested_tables: list[str] | None = None,
     fact_prefix: str = "ferc",
-    typed_dates: bool = False,
 ) -> ExtractResult:
     """Run the full pipeline lazily; returns DataFrames, not materialized
     data — callers write/collect as needed.
@@ -157,7 +156,7 @@ def extract(
     # The name is looked up at call time: perfbench/worker.py wraps this
     # module's construct_table_with_errors in its traced runs.
     built = _pooled(
-        lambda spec: construct_table_with_errors(facts, spec, typed_dates=typed_dates),
+        lambda spec: construct_table_with_errors(facts, spec),
         specs.values(),
     )
     return ExtractResult(facts=facts, built=dict(zip(specs, built)), shredded=shredded)

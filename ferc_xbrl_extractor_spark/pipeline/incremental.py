@@ -140,10 +140,8 @@ def index_init(
 
 @dataclass
 class IncrementResult:
-    fresh: DataFrame               # surviving new docs (with their ``fp``)
-    n_fresh: int | None            # populated when collect_stats
-    n_batch_dups: int | None       # collapsed within the batch
-    n_historical_dups: int | None  # suppressed by the index
+    fresh: DataFrame     # surviving new docs (with their ``fp``)
+    n_fresh: int | None  # populated when update_index
 
 
 # Prefix pruning needs a driver-side collect of the batch's distinct
@@ -161,8 +159,6 @@ def incremental_dedup(
     text_col: str = "text",
     prefix_len: int = 2,
     update_index: bool = True,
-    collect_stats: bool = False,
-    prune: bool | None = None,
 ) -> IncrementResult:
     """Dedup an ingestion batch against itself and the historical index.
 
@@ -173,9 +169,7 @@ def incremental_dedup(
     NOT enough — writing to the index path refreshes Spark's cache over
     that path, silently recomputing ``fresh`` against the just-updated
     index (everything would collide). Lineage truncation makes ``fresh``
-    independent of the index files. With ``collect_stats`` the
-    batch/historical duplicate counts are computed (two extra count jobs —
-    leave off in latency-sensitive paths).
+    independent of the index files.
     """
     fp_docs = fingerprint(batch, text_col)
     payload = [c for c in fp_docs.columns if c != "fp"]
@@ -186,8 +180,8 @@ def incremental_dedup(
             F.count(F.lit(1)).alias("_n"),
         )
         .select("fp", *[F.col(f"_row.{c}").alias(c) for c in payload])
-        # consumed by the prefix collect, the probe, the anti join, and
-        # (optionally) the stats count — persist, don't recompute
+        # consumed by the prefix collect, the probe and the anti join —
+        # persist, don't recompute
         .persist()
     )
 
@@ -197,10 +191,8 @@ def incremental_dedup(
     # tiny indexes (PRUNE_MIN_PARTITIONS), where the collect's job
     # barrier costs more than the partitions it could skip.
     batch_fps = surv.select("fp")
-    if prune is None:
-        prune = 16 ** prefix_len > PRUNE_MIN_PARTITIONS
     index = _read_index(spark, index_dir)
-    if prune:
+    if 16 ** prefix_len > PRUNE_MIN_PARTITIONS:
         touched = [
             r[0]
             for r in _with_prefix(batch_fps, prefix_len)
@@ -212,14 +204,11 @@ def incremental_dedup(
     collided = index.join(F.broadcast(batch_fps), "fp", "left_semi").select("fp")
     fresh = surv.join(F.broadcast(collided), "fp", "left_anti")
 
-    n_fresh = n_batch = n_surv = None
-    if update_index or collect_stats:
+    n_fresh = None
+    if update_index:
         fresh = fresh.localCheckpoint(eager=True)
         n_fresh = fresh.count()
-    if collect_stats:
-        n_batch = fp_docs.count()
-        n_surv = surv.count()
-    if update_index and n_fresh:
+    if n_fresh:
         append = _with_prefix(fresh.select("fp"), prefix_len)
         name = _index_table(index_dir)
         _CLEAN_LAYOUT_DIRS.discard(index_dir)  # files change: re-verify
@@ -242,12 +231,7 @@ def incremental_dedup(
             append.write.mode("append").partitionBy(PREFIX_COL).parquet(
                 index_dir
             )
-    return IncrementResult(
-        fresh=fresh,
-        n_fresh=n_fresh,
-        n_batch_dups=None if n_batch is None else n_batch - n_surv,
-        n_historical_dups=None if n_surv is None else n_surv - n_fresh,
-    )
+    return IncrementResult(fresh=fresh, n_fresh=n_fresh)
 
 
 # ---------------------------------------------------------------------------
@@ -255,6 +239,10 @@ def incremental_dedup(
 # ---------------------------------------------------------------------------
 
 BAND_PFX_COL = "bh_pfx"
+# One hex character of band hash: 16 band partitions, under
+# PRUNE_MIN_PARTITIONS, so probes scan the whole band index instead of
+# paying a prefix collect.
+BAND_PREFIX_LEN = 1
 
 
 def _batch_lsh(batch, id_col, text_col, n, num_hashes, bands):
@@ -282,12 +270,11 @@ def neardup_index_init(
     n: int = 3,
     num_hashes: int = 12,
     bands: int = 6,
-    prefix_len: int = 1,
 ) -> None:
     """Freeze a corpus's MinHash-LSH state for incremental probing:
 
     - ``{index}/bands``: (id, band_idx, band_hash) partitioned by a
-      band-hash prefix — the probe side, pruned per increment.
+      band-hash prefix — the probe side.
     - ``{index}/shingles``: (id, shingle array) — the verification side,
       fetched by id for candidate pairs only.
 
@@ -297,7 +284,7 @@ def neardup_index_init(
     """
     arr, banded = _batch_lsh(docs, id_col, text_col, n, num_hashes, bands)
     (
-        banded.withColumn(BAND_PFX_COL, F.substring("band_hash", 1, prefix_len))
+        banded.withColumn(BAND_PFX_COL, F.substring("band_hash", 1, BAND_PREFIX_LEN))
         .repartition(F.col(BAND_PFX_COL))
         .write.mode("overwrite")
         .partitionBy(BAND_PFX_COL)
@@ -322,14 +309,12 @@ def incremental_neardup(
     n: int = 3,
     num_hashes: int = 12,
     bands: int = 6,
-    prefix_len: int = 1,
     threshold: float = 0.5,
     update_index: bool = True,
-    prune: bool | None = None,
 ) -> NeardupIncrementResult:
     """Near-dedup an ingestion batch against itself and the band index,
-    with O(increment) shuffle work — the index is scanned (pruned +
-    broadcast-probed), never shuffled:
+    with O(increment) shuffle work — the index is scanned (broadcast-
+    probed), never shuffled:
 
     1. batch shingles/signatures/bands: ONE keyed shuffle (the G2 shape).
     2. internal candidates: band self-join; verified pairs drop the
@@ -337,7 +322,7 @@ def incremental_neardup(
        the G2b operator; an increment is small enough to re-cluster
        downstream if needed).
     3. historical candidates: the batch's bands are broadcast against the
-       prefix-pruned band partitions; candidate historical ids are then
+       band index; candidate historical ids are then
        broadcast-semi-fetched from the shingle store and each candidate
        pair is verified with exact Jaccard. History always wins.
     4. survivors' bands + shingles are appended (after an eager
@@ -347,10 +332,10 @@ def incremental_neardup(
     from ferc_xbrl_extractor_spark.operators import neardup
 
     arr, banded = _batch_lsh(batch, id_col, text_col, n, num_hashes, bands)
-    # The batch's shingle/minhash lineage feeds the prefix collect, the
-    # band self-join, the historical probe, the verify joins, and (with
-    # update_index) two appends — persist both relations or the md5-heavy
-    # pipeline re-executes per consumer.
+    # The batch's shingle/minhash lineage feeds the band self-join, the
+    # historical probe, the verify joins, and (with update_index) two
+    # appends — persist both relations or the md5-heavy pipeline
+    # re-executes per consumer.
     arr = arr.persist()
     banded = banded.persist()
 
@@ -370,23 +355,9 @@ def incremental_neardup(
     )
     internal = neardup._verify_candidates(internal_cands, arr, id_col, threshold)
 
-    # 3. historical probe: prune band partitions to the batch's prefixes,
-    # broadcast the batch bands into the join — index side never shuffles.
-    # Pruning auto-skips for tiny band layouts (the collect is a job
-    # barrier; see PRUNE_MIN_PARTITIONS).
-    if prune is None:
-        prune = 16 ** prefix_len > PRUNE_MIN_PARTITIONS
+    # 3. historical probe: broadcast the batch bands into the join — index
+    # side never shuffles.
     hist_bands = spark.read.parquet(f"{index_dir}/bands")
-    if prune:
-        touched = [
-            r[0]
-            for r in banded.select(
-                F.substring("band_hash", 1, prefix_len).alias("p")
-            )
-            .distinct()
-            .collect()
-        ]
-        hist_bands = hist_bands.filter(F.col(BAND_PFX_COL).isin(touched))
     hist_cands = (
         hist_bands.join(
             F.broadcast(
@@ -446,7 +417,7 @@ def incremental_neardup(
         keep = fresh.select(id_col)
         (
             banded.join(F.broadcast(keep), id_col, "left_semi")
-            .withColumn(BAND_PFX_COL, F.substring("band_hash", 1, prefix_len))
+            .withColumn(BAND_PFX_COL, F.substring("band_hash", 1, BAND_PREFIX_LEN))
             .write.mode("append")
             .partitionBy(BAND_PFX_COL)
             .parquet(f"{index_dir}/bands")

@@ -80,22 +80,18 @@ def write_sqlite(
     into ``staging_dir`` (``write_parquet`` output, reused as-is and not
     deleted), then the driver streams it into SQLite one record batch at a
     time via a pyarrow dataset scan. Peak driver memory is one batch
-    (~100k rows), independent of table size."""
+    (~100k rows), independent of table size. Every table must have staged
+    rows (``stage_and_sink`` passes only those): a table with none is not
+    created."""
     import pyarrow.dataset as pads
 
     conn = sqlite3.connect(db_path)
     try:
-        for name, df in tables.items():
-            first = True
+        for name in tables:
             ds = pads.dataset(str(Path(staging_dir) / name), format="parquet")
-            for batch in ds.to_batches(batch_size=100_000):
+            for i, batch in enumerate(ds.to_batches(batch_size=100_000)):
                 batch.to_pandas().to_sql(
-                    name, conn, if_exists="replace" if first else "append", index=False
-                )
-                first = False
-            if first:  # empty table: still create it with the right columns
-                df.limit(0).toPandas().to_sql(
-                    name, conn, if_exists="replace", index=False
+                    name, conn, if_exists="append" if i else "replace", index=False
                 )
         conn.commit()
     finally:

@@ -43,7 +43,6 @@ def _driver_xms() -> str:
 
 def get_spark(
     app_name: str = "ferc-xbrl-extractor-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
@@ -72,10 +71,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Deterministic timestamp semantics == DuckDB naive-UTC reads.
         .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or max(cpus, 2) * 2),
-        )
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 2) * 2))
         # Dimension tables (region/nation/contexts-per-filing) are small;
         # raise the auto-broadcast ceiling so Catalyst picks BHJ for them.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

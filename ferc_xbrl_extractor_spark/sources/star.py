@@ -37,20 +37,6 @@ def _file_meta(path: str) -> tuple[list[str], int, int, int]:
     return nano, pf.metadata.num_rows, pf.num_row_groups, os.path.getsize(path)
 
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def load_table(
     spark: SparkSession,
     sf_dir: str,

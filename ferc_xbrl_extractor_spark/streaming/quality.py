@@ -36,14 +36,13 @@ def stream_check_constraints(
     ts_col: str,
     duration: str,
     checks: list[Check],
-    watermark: str = "10 minutes",
     slide: str | None = None,
 ) -> DataFrame:
     """Evaluate a constraint suite per event-time window over a stream.
 
     Returns ``(window_start, window_end, constraint, metric, passed)``,
-    one row per (window, check); windows emit when the watermark closes
-    them (append mode). ``slide`` turns the tumbling window into a
+    one row per (window, check); windows emit when the 10-minute watermark
+    closes them (append mode). ``slide`` turns the tumbling window into a
     sliding one (overlapping reports). Works identically on a batch
     DataFrame — the plan is the same windowed aggregate — which is what
     the oracle checks.
@@ -56,7 +55,7 @@ def stream_check_constraints(
     )
     src = events
     if src.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
+        src = src.withWatermark(ts_col, "10 minutes")
     wide = src.groupBy(win.alias("w")).agg(
         *[c.metric.cast("double").alias(f"m{i}") for i, c in enumerate(checks)]
     )

@@ -253,7 +253,6 @@ def stream_cap_per_key(
     payload_cols: list[str],
     cap: int,
     window_ms: int | None = None,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """G63: per-key ingest quota — emit at most ``cap`` rows per key (or
     per (key, event-time window) when ``window_ms`` is set), chosen
@@ -270,8 +269,8 @@ def stream_cap_per_key(
     already-full quota — the same at-most-N guarantee either way.
 
     State: ONE long per live (key, window). With ``window_ms`` set,
-    EventTimeTimeout timers evict a window's counter once the watermark
-    passes its end — full quotas don't accumulate forever (the G56
+    EventTimeTimeout timers evict a window's counter once the 10-minute
+    watermark passes its end — full quotas don't accumulate forever (the G56
     eviction pattern); an unwindowed cap keeps one counter per key for
     the stream's life (bounded by |keys|, the quota's own cardinality).
 
@@ -286,7 +285,7 @@ def stream_cap_per_key(
     order = [ts_col, tiebreak_col]
     cols = [f.name for f in out_fields]
     group = list(key_cols)
-    src = events.select(*cols).withWatermark(ts_col, watermark)
+    src = events.select(*cols).withWatermark(ts_col, "10 minutes")
     if window_ms is not None:
         src = src.withColumn(
             "__win",
@@ -334,7 +333,6 @@ def stream_heavy_hitters(
     key_col: str,
     capacity: int = 256,
     num_shards: int = 8,
-    count_col: str | None = None,
 ) -> DataFrame:
     """G74: streaming heavy hitters — a SpaceSaving summary (Metwally et
     al., ICDT'05) of the hottest keys, maintained in bounded state while
@@ -384,13 +382,9 @@ def stream_heavy_hitters(
             T.StructField("errs", T.ArrayType(T.LongType())),
         ]
     )
-    w = (
-        F.col(count_col).cast("long")
-        if count_col
-        else F.lit(1).cast("long")
-    )
     src = events.select(
-        F.col(key_col).cast("string").alias("__k"), w.alias("__w")
+        F.col(key_col).cast("string").alias("__k"),
+        F.lit(1).cast("long").alias("__w"),
     ).filter(F.col("__k").isNotNull())
     src = src.withColumn(
         "__shard", F.pmod(F.xxhash64("__k"), F.lit(num_shards))

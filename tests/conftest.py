@@ -25,7 +25,9 @@ needs_sf0001 = pytest.mark.skipif(
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="tests", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="tests", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     yield spark
 
 

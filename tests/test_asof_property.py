@@ -2,8 +2,7 @@
 
 The engine implements as-of as union + tag + one windowed LOCF pass (no
 range join); pandas merge_asof is the independent reference semantics.
-Hypothesis drives both with random event/reference sets, both directions,
-with and without tolerance.
+Hypothesis drives both with random event/reference sets, both directions.
 """
 
 from __future__ import annotations
@@ -36,11 +35,10 @@ def asof_case(draw):
     )
     right = [(k, t, 100 + i) for i, (k, t) in enumerate(right_times)]
     direction = draw(st.sampled_from(["backward", "forward"]))
-    tolerance = draw(st.sampled_from([None, 5]))
-    return left, right, direction, tolerance
+    return left, right, direction
 
 
-def _expected(left, right, direction, tolerance):
+def _expected(left, right, direction):
     lpdf = pd.DataFrame(left, columns=["k", "t", "eid"]).sort_values("t", kind="mergesort")
     rpdf = pd.DataFrame(right, columns=["k", "t", "v"]).sort_values("t", kind="mergesort")
     merged = pd.merge_asof(
@@ -49,7 +47,6 @@ def _expected(left, right, direction, tolerance):
         on="t",
         by="k",
         direction=direction,
-        tolerance=tolerance,
     )
     return {
         int(r.eid): (None if pd.isna(r.v) else int(r.v))
@@ -65,7 +62,7 @@ def _expected(left, right, direction, tolerance):
 @given(asof_case())
 @pytest.mark.slow
 def test_asof_join_matches_merge_asof(spark, case):
-    left, right, direction, tolerance = case
+    left, right, direction = case
     ldf = spark.createDataFrame(left, "k int, t long, eid int")
     rdf = spark.createDataFrame(right, "k int, t long, v int")
     out = asof_join(
@@ -76,7 +73,6 @@ def test_asof_join_matches_merge_asof(spark, case):
         right_time="t",
         right_values=["v"],
         direction=direction,
-        tolerance=tolerance,
     )
     got = {r["eid"]: r["v"] for r in out.collect()}
-    assert got == _expected(left, right, direction, tolerance)
+    assert got == _expected(left, right, direction)

@@ -81,30 +81,29 @@ def _temp_views(spark) -> list[str]:
 def test_extract_equals_serial_construction(spark, tmp_path, filing_bytes, conflict):
     """Every table and every errors relation of the pooled build equals a
     serial ``construct_table_with_errors`` loop over the same facts, in row
-    multiset and schema, with and without a conflict and for both date
-    surfaces; the strict check names every conflicted table."""
+    multiset and schema, with and without a conflict; the strict check
+    names every conflicted table."""
     path = _filings(tmp_path, filing_bytes, conflict)
-    for typed_dates in (False, True):
-        result = extract(spark, path, SPECS, typed_dates=typed_dates)
-        try:
-            assert list(result.tables) == list(result.errors) == list(SPECS)
-            for name, spec in SPECS.items():
-                serial = construct_table_with_errors(result.facts, spec, typed_dates=typed_dates)
-                for got, want in ((result.tables[name], serial.data), (result.errors[name], serial.errors)):
-                    assert got.schema == want.schema, name
-                    assert _rows(got) == _rows(want), name
-            conflicted = {n for n, e in result.errors.items() if e.count()}
-            want = {"summary_by_region_duration", "report_duration"} if conflict else set()
-            assert conflicted == want
-            if not conflict:
-                result.raise_on_conflicts()
-                continue
+    result = extract(spark, path, SPECS)
+    try:
+        assert list(result.tables) == list(result.errors) == list(SPECS)
+        for name, spec in SPECS.items():
+            serial = construct_table_with_errors(result.facts, spec)
+            for got, want in ((result.tables[name], serial.data), (result.errors[name], serial.errors)):
+                assert got.schema == want.schema, name
+                assert _rows(got) == _rows(want), name
+        conflicted = {n for n, e in result.errors.items() if e.count()}
+        want = {"summary_by_region_duration", "report_duration"} if conflict else set()
+        assert conflicted == want
+        if not conflict:
+            result.raise_on_conflicts()
+        else:
             with pytest.raises(ValueError) as raised:
                 result.raise_on_conflicts()
             for name in want:
                 assert f"table {name}: " in str(raised.value)
-        finally:
-            result.shredded.unpersist()
+    finally:
+        result.shredded.unpersist()
     assert _temp_views(spark) == []
 
 

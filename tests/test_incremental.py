@@ -35,33 +35,23 @@ def test_increment_dedups_within_batch_and_against_history(spark, index_dir):
             (14, "theta"),            # fresh
         ],
     )
-    res = incremental_dedup(
-        spark, index_dir, batch, update_index=True, collect_stats=True
-    )
+    res = incremental_dedup(spark, index_dir, batch, update_index=True)
     got = {r["doc_id"] for r in res.fresh.collect()}
     assert got == {12, 14}
     assert res.n_fresh == 2
-    # 11 collapses into 10 and 13 into 12 WITHIN the batch; only the
-    # surviving alpha-beta row (10) then counts as a historical dup
-    assert res.n_batch_dups == 2
-    assert res.n_historical_dups == 1
     # localCheckpoint-backed; no unpersist needed
 
     # second increment: batch-1 survivors are now historical
     batch2 = _docs(spark, [(20, "zeta eta"), (21, "iota")])
-    res2 = incremental_dedup(
-        spark, index_dir, batch2, update_index=True, collect_stats=True
-    )
+    res2 = incremental_dedup(spark, index_dir, batch2, update_index=True)
     assert {r["doc_id"] for r in res2.fresh.collect()} == {21}
-    assert res2.n_historical_dups == 1
+    assert res2.n_fresh == 1
     # localCheckpoint-backed; no unpersist needed
 
 
 def test_increment_probe_never_shuffles_the_index(spark, index_dir):
     batch = _docs(spark, [(30, "new text"), (31, "alpha beta")])
-    res = incremental_dedup(
-        spark, index_dir, batch, update_index=False, collect_stats=False
-    )
+    res = incremental_dedup(spark, index_dir, batch, update_index=False)
     plan = res.fresh._jdf.queryExecution().executedPlan().toString()
     # both the historical probe and the anti join must be broadcast joins —
     # a sort-merge join would mean the index got shuffled
@@ -87,10 +77,9 @@ def test_index_cross_session_fallback_path(spark, index_dir):
         spark,
         index_dir,
         _docs(spark, [(50, "alpha beta"), (51, "mu nu")]),
-        collect_stats=True,
     )
     assert {r["doc_id"] for r in res.fresh.collect()} == {51}
-    assert res.n_historical_dups == 1
+    assert res.n_fresh == 1
 
     # the fallback append landed
     assert _read_index(spark, index_dir).count() == 4  # 3 initial + "mu nu"
@@ -136,10 +125,8 @@ def test_mixed_layout_degrades_to_plain_read(spark, index_dir):
         index_dir,
         _docs(spark, [(100, "zeta eta"), (101, "fresh words")]),
         update_index=False,
-        collect_stats=True,
     )
     assert {r["doc_id"] for r in res.fresh.collect()} == {101}
-    assert res.n_historical_dups == 1
 
 
 def test_update_index_false_leaves_index_untouched(spark, index_dir):
@@ -204,45 +191,13 @@ def test_incremental_neardup_probe_never_shuffles_the_index(spark, tmp_path):
         spark, d, _docs(spark, [(10, LONG_A_NEAR)]), update_index=False
     )
     plan = res.historical_pairs._jdf.queryExecution().executedPlan().toString()
-    # the index scan is partition-pruned...
-    assert "PartitionFilters" in plan
-    # ...and the band probe itself is never shuffled: no exchange keyed on
+    # the band probe is never shuffled: no exchange keyed on
     # the band join keys (the only exchanges allowed are over the SMALL
     # derived candidate set — hist_id/new_id distinct — and the batch side,
     # both bounded by the increment, not the index).
     assert "hashpartitioning(band_hash" not in plan
     assert "hashpartitioning(band_idx" not in plan
     assert "BroadcastHashJoin" in plan
-
-
-@pytest.mark.slow
-def test_prune_auto_skips_for_tiny_band_layouts(spark, tmp_path):
-    """prefix_len=1 (16 partitions) sits under PRUNE_MIN_PARTITIONS, so
-    the driver-side prefix collect is skipped and results are identical
-    to the explicitly-pruned run."""
-    from ferc_xbrl_extractor_spark.pipeline import incremental
-
-    docs = spark.createDataFrame(
-        [(i, f"some text body number {i} with shared words") for i in range(40)]
-        + [(100 + i, f"some text body number {i} with shared words")
-           for i in range(10)],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "lsh")
-    incremental.neardup_index_init(
-        spark, idx, docs.filter("doc_id < 40"), prefix_len=1
-    )
-    batch = docs.filter("doc_id >= 100")
-    auto = incremental.incremental_neardup(
-        spark, idx, batch, update_index=False
-    )
-    pruned = incremental.incremental_neardup(
-        spark, idx, batch, update_index=False, prune=True
-    )
-    assert (
-        {r["doc_id"] for r in auto.fresh.collect()}
-        == {r["doc_id"] for r in pruned.fresh.collect()}
-    )
 
 
 def test_corpus_diff_statuses(spark):

@@ -172,19 +172,6 @@ def test_string_typed_conflicts_quarantined(spark):
     assert built.data.count() == 0
 
 
-def test_embedding_neardup_bucketed_is_keyed_not_cartesian(spark):
-    corpus = spark.createDataFrame(
-        [(i, [float(i % 5), 1.0, 2.0, float(i % 3)]) for i in range(100)],
-        "vec_id long, embedding array<double>",
-    )
-    pairs = similarity.embedding_neardup_pairs(
-        corpus, threshold=0.9, dim=4, planes=4
-    )
-    plan = _executed_plan(pairs)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_ivf_search_join_is_broadcast_keyed(spark):
     """The IVF search join must be a broadcast hash join of the tiny probe
     side against the cluster-assigned corpus — the corpus is never
@@ -194,7 +181,7 @@ def test_ivf_search_join_is_broadcast_keyed(spark):
         "vec_id long, embedding array<double>",
     )
     queries = corpus.filter(F.col("vec_id") < 3)
-    out = similarity.ivf_topk(corpus, queries, k=2, nlist=4, nprobe=2)
+    out = similarity.ivf_topk(corpus, queries, k=2, nprobe=2)
     plan = _executed_plan(out)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan

@@ -26,12 +26,12 @@ def test_check_constraints_report(spark, people):
     report = Q.check_constraints(
         people,
         [
-            Q.size_between(1, 10),
+            Q.size_between(1),
             Q.completeness("name"),
             Q.uniqueness("id"),
             Q.non_negative("age"),
             Q.in_set("status", ["A", "B"]),
-            Q.matches("name", "^[a-z]+$", at_least=0.5),
+            Q.matches("name", "^[a-z]+$"),
         ],
     ).collect()
     by_name = {r["constraint"]: r for r in report}

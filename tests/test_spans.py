@@ -186,8 +186,8 @@ def test_auto_form_probe_picks_per_corpus_and_is_value_identical(
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        assert sp.probe_hot_gram(flat, n=4, sample_fraction=1.0) is False
-        assert sp.probe_hot_gram(hot, n=4, sample_fraction=1.0) is True
+        assert sp.probe_hot_gram(flat, n=4) is False
+        assert sp.probe_hot_gram(hot, n=4) is True
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     for corpus in (flat, hot):
@@ -227,9 +227,9 @@ def test_probe_cache_never_keys_local_relations(spark):
     try:
         # same schema, same probe params, opposite data: the second call
         # must NOT return the first's cached verdict
-        assert sp.probe_hot_gram(hot, n=4, sample_fraction=1.0) is True
-        assert sp.probe_hot_gram(flat, n=4, sample_fraction=1.0) is False
-        assert sp.probe_hot_gram(hot, n=4, sample_fraction=1.0) is True
+        assert sp.probe_hot_gram(hot, n=4) is True
+        assert sp.probe_hot_gram(flat, n=4) is False
+        assert sp.probe_hot_gram(hot, n=4) is True
         assert len(sp._HOT_GRAM_PROBE_CACHE) == n0  # nothing was cached
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
@@ -257,16 +257,14 @@ def test_probe_cache_keys_file_backed_plans(spark, tmp_path):
         n0 = len(sp._HOT_GRAM_PROBE_CACHE)
         hot = spark.read.parquet(p_hot)
         flat = spark.read.parquet(p_flat)
-        assert sp.probe_hot_gram(hot, n=4, sample_fraction=1.0) is True
+        assert sp.probe_hot_gram(hot, n=4) is True
         assert len(sp._HOT_GRAM_PROBE_CACHE) == n0 + 1
         # fresh DataFrame over the same files: canonicalization makes it
         # the same key — cache hit, no growth
-        assert sp.probe_hot_gram(
-            spark.read.parquet(p_hot), n=4, sample_fraction=1.0
-        ) is True
+        assert sp.probe_hot_gram(spark.read.parquet(p_hot), n=4) is True
         assert len(sp._HOT_GRAM_PROBE_CACHE) == n0 + 1
         # different path, same schema: its own key, its own verdict
-        assert sp.probe_hot_gram(flat, n=4, sample_fraction=1.0) is False
+        assert sp.probe_hot_gram(flat, n=4) is False
         assert len(sp._HOT_GRAM_PROBE_CACHE) == n0 + 2
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
@@ -297,15 +295,20 @@ def test_cdc_chunks_insertion_robustness_and_report(spark):
          (4, ""), (5, None)],
         "doc_id long, text string",
     )
-    ch = cdc_chunks(docs, window=8, divisor=64, keep_text=True).collect()
+    ch = cdc_chunks(docs, window=8, divisor=64).collect()
     by_doc = {}
     for r in ch:
         by_doc.setdefault(r["doc_id"], []).append(r)
-    # exact reconstruction, contiguous idx
-    got = "".join(
-        r["chunk"] for r in sorted(by_doc[1], key=lambda r: r["chunk_idx"])
-    )
-    assert got == base
+    # exact reconstruction: consecutive slices of the text, by length,
+    # hash to the chunk md5s and cover it; contiguous idx
+    import hashlib
+
+    off = 0
+    for r in sorted(by_doc[1], key=lambda r: r["chunk_idx"]):
+        piece = base[off : off + r["n_chars"]]
+        assert hashlib.md5(piece.encode()).hexdigest() == r["chunk_md5"]
+        off += r["n_chars"]
+    assert off == len(base)
     assert sorted(r["chunk_idx"] for r in by_doc[1]) == list(
         range(len(by_doc[1]))
     )

@@ -396,9 +396,7 @@ def test_stream_check_constraints_per_window(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    out = stream_check_constraints(
-        stream, "ts", "1 hour", checks, watermark="5 seconds"
-    )
+    out = stream_check_constraints(stream, "ts", "1 hour", checks)
     got_stream = {
         (str(r["window_start"]), r["constraint"]): (r["metric"], r["passed"])
         for r in _drain(spark, out, "stream_quality", mode="complete").collect()
@@ -470,7 +468,7 @@ def test_stream_cap_per_key_quota_and_windows(spark, tmp_path):
     )
     out2 = stream_cap_per_key(
         stream2, ["event_type"], "ts", "event_id", [],
-        cap=1, window_ms=60_000, watermark="5 seconds",
+        cap=1, window_ms=60_000,
     )
     ids2 = sorted(r["event_id"] for r in _drain(spark, out2, "cap_win").collect())
     assert ids2 == [1, 3]
@@ -535,11 +533,11 @@ def test_stream_heavy_hitters_exact(spark, tmp_path):
 @pytest.mark.slow
 def test_stream_heavy_hitters_eviction_and_crossbatch(spark, tmp_path):
     """G74 slow twin: eviction replays the documented in-memory merge;
-    cross-batch accumulation stays exact and count_col weights."""
-    # cross-batch accumulation stays exact, weighted by count_col
+    cross-batch accumulation stays exact."""
     got = _hh_feed(spark, tmp_path,
-                   [[("a", 7), ("b", 2)], [("a", 3), ("c", 4)]],
-                   capacity=16, num_shards=2, count_col="n")
+                   [[("a", 1)] * 7 + [("b", 1)] * 2,
+                    [("a", 1)] * 3 + [("c", 1)] * 4],
+                   capacity=16, num_shards=2)
     assert got == {"a": (10, 0), "b": (2, 0), "c": (4, 0)}
 
     # eviction: capacity 2, one shard — replay the documented merge

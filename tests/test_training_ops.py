@@ -202,45 +202,10 @@ def test_bigram_surprisal_matches_reference(spark):
     assert got[2] > got[0]
 
 
-def test_bigram_surprisal_external_model(spark):
-    train = spark.createDataFrame(
-        [(0, "a b a b a b"), (1, "a b c")], "doc_id long, text string"
-    )
-    score = spark.createDataFrame(
-        [(0, "a b"), (1, "z z")], "doc_id long, text string"
-    )
-    model = text.bigram_lm(train)
-    got = {
-        r["doc_id"]: r["bigram_surprisal"]
-        for r in text.bigram_surprisal(
-            score, model=model, vocab_size=3
-        ).collect()
-    }
-    # fully-OOV bigram costs exactly ln V = ln 3
-    assert got[1] == round(round(math.log(3) * 1e6) / 1e6, 4)
-    # seen bigram: c(a,b)=4 (3 from doc0 + 1 from doc1), ctx(a)=4,
-    # p = (4+.5)/(4+.5*3)
-    assert got[0] == _round4(
-        round(-math.log(4.5 / 5.5) * 1e6) / 1e6
-    )
-
-
-def test_bigram_surprisal_external_model_requires_vocab(spark):
-    df = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="vocab_size"):
-        text.bigram_surprisal(df, model=text.bigram_lm(df))
-
-
 # ------------------------------------------------- Kneser-Ney bigram LM
 
 
-def _ref_kn_surprisal(
-    train: dict[int, str],
-    score: dict[int, str] | None = None,
-    discount=0.75,
-    alpha=0.5,
-    vocab_size=None,
-):
+def _ref_kn_surprisal(train: dict[int, str], discount=0.75, alpha=0.5):
     """Serial reference for kneser_ney_surprisal — same IEEE op order
     as the operator (pc then (max(n-D,0) + D*t1*pc)/cn)."""
     from collections import Counter
@@ -258,14 +223,9 @@ def _ref_kn_surprisal(
         t1[w1] += 1
         nb1[w2] += 1
     b = len(bg)
-    v = (
-        vocab_size
-        if vocab_size is not None
-        else len({t for w in tr.values() for t in w})
-    )
-    sc = {i: t.split() for i, t in (score or train).items()}
+    v = len({t for w in tr.values() for t in w})
     out = {}
-    for i, w in sc.items():
+    for i, w in tr.items():
         if len(w) < 2:
             out[i] = None
             continue
@@ -307,53 +267,6 @@ def test_kn_surprisal_matches_reference(spark):
     }
     assert got == _ref_kn_surprisal(docs)
     assert got[2] > got[0]
-
-    with pytest.raises(ValueError, match="discount"):
-        text.kneser_ney_surprisal(df, discount=1.5)
-    with pytest.raises(ValueError, match="vocab_size"):
-        text.kneser_ney_surprisal(df, model=text.bigram_lm(df))
-
-
-@pytest.mark.slow
-def test_kn_surprisal_external_model_and_continuation(spark):
-    """G105 external-model paths: unseen context falls back to the
-    continuation distribution; OOV w2 survives via the α guard; and
-    the Kneser-Ney point — a frequent-but-unversatile word (only ever
-    follows one context: 'francisco' after 'san') is a WORSE novel
-    continuation than an equally frequent versatile word, where add-α
-    ties them."""
-    train = {
-        0: "san francisco san francisco san francisco",
-        1: "a dog b dog c dog",
-        2: "q a q b q c",
-    }
-    tdf = spark.createDataFrame(
-        [(i, t) for i, t in train.items()], "doc_id long, text string"
-    )
-    model = text.bigram_lm(tdf)
-    vocab = len({t for s in train.values() for t in s.split()})
-    score = {
-        0: "q francisco",  # seen context, zero-count bigram
-        1: "q dog",
-        2: "zz francisco",  # unseen context -> pure continuation
-        3: "zz qqq",  # OOV continuation -> alpha guard
-    }
-    sdf = spark.createDataFrame(
-        [(i, t) for i, t in score.items()], "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: r["kn_surprisal"]
-        for r in text.kneser_ney_surprisal(
-            sdf, model=model, vocab_size=vocab
-        ).collect()
-    }
-    assert got == _ref_kn_surprisal(train, score, vocab_size=vocab)
-    # c(francisco)=3=c(dog) in the train corpus, but dog completes 3
-    # distinct contexts vs francisco's 1 -> dog is the better novel
-    # continuation under KN (both in a seen and an unseen context)
-    assert got[1] < got[0]
-    # the alpha guard keeps OOV finite and worse than any seen word
-    assert got[3] > got[2]
 
 
 # ------------------------------------------------------- epoch builder
@@ -488,16 +401,20 @@ def test_repeat_by_rate_matches_reference(spark):
 def test_repeat_by_rate_sub_one_equals_sample_by_rate(spark):
     # r < 1 must reproduce sample_by_rate's exact keep-set (same hash,
     # same salt, same threshold) with epoch_copy == 0 everywhere.
-    df = spark.createDataFrame([(i,) for i in range(500)], "doc_id long")
-    rep = sampling.repeat_by_rate(df, rate=0.3, salt="z").collect()
-    kept = {r["doc_id"] for r in sampling.sample_by_rate(df, rate=0.3, salt="z").collect()}
+    df = spark.createDataFrame([(i, "s") for i in range(500)], "doc_id long, source string")
+    rates = {"s": 0.3}
+    rep = sampling.repeat_by_rate(df, key_col="source", rates=rates, salt="z").collect()
+    kept = {
+        r["doc_id"]
+        for r in sampling.sample_by_rate(df, key_col="source", rates=rates, salt="z").collect()
+    }
     assert {r["doc_id"] for r in rep} == kept
     assert all(r["epoch_copy"] == 0 for r in rep)
 
 
 def test_repeat_by_rate_integer_rate_exact(spark):
-    df = spark.createDataFrame([(i,) for i in range(50)], "doc_id long")
-    out = sampling.repeat_by_rate(df, rate=3.0, salt="q")
+    df = spark.createDataFrame([(i, "s") for i in range(50)], "doc_id long, source string")
+    out = sampling.repeat_by_rate(df, key_col="source", rates={"s": 3.0}, salt="q")
     assert out.count() == 150
     assert out.groupBy("doc_id").count().where("count <> 3").count() == 0
 
@@ -514,13 +431,11 @@ def test_repeat_by_rate_is_shuffle_free(spark):
 
 
 def test_repeat_by_rate_validation(spark):
-    df = spark.createDataFrame([(1,)], "doc_id long")
-    with pytest.raises(ValueError, match="exactly one"):
-        sampling.repeat_by_rate(df)
-    with pytest.raises(ValueError, match="key_col"):
-        sampling.repeat_by_rate(df, rates={"a": 1.0})
+    df = spark.createDataFrame([(1, "s")], "doc_id long, source string")
     with pytest.raises(ValueError, match="negative"):
-        sampling.repeat_by_rate(df, rate=-1.0)
+        sampling.repeat_by_rate(df, key_col="source", rates={"s": -1.0})
+    with pytest.raises(ValueError, match="negative"):
+        sampling.repeat_by_rate(df, key_col="source", rates={}, default_rate=-1.0)
 
 
 def test_shuffle_order_no_single_partition_sort(spark):

@@ -3668,8 +3668,8 @@ def q_g23_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pipeline/incremental.py). Historical corpus = doc_id % 3 != 0
     (indexed once), ingestion batch = doc_id % 2 == 0. The batch is
     deduped internally (min-doc_id survivor per fingerprint) and against
-    the index (broadcast probe of the prefix-pruned scan — the index is
-    never shuffled); the oracle reproduces both steps relationally.
+    the index (broadcast probe of the index scan — the index is never
+    shuffled); the oracle reproduces both steps relationally.
 
     The frozen historical index is built ONCE per (kind, sf_dir) per
     process (_frozen_index): the index is persistent state by design, so
@@ -3678,20 +3678,17 @@ def q_g23_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ferc_xbrl_extractor_spark.pipeline import incremental
 
     docs = _t(spark, sf_dir, "documents")
-    # prefix_len=1 (16 index partitions): at oracle scale the 256-way
-    # layout costs more in tiny-file writes than pruning saves.
     index_dir = _frozen_index(
         "fpindex",
         sf_dir,
         lambda d: incremental.index_init(
-            spark, d, docs.filter(F.col("doc_id") % 3 != 0), prefix_len=1
+            spark, d, docs.filter(F.col("doc_id") % 3 != 0)
         ),
     )
     res = incremental.incremental_dedup(
         spark,
         index_dir,
         docs.filter(F.col("doc_id") % 2 == 0),
-        prefix_len=1,
         update_index=False,
     )
     return res.fresh.select("doc_id", "fp")

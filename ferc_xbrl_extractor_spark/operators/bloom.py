@@ -35,7 +35,9 @@ so the probe is a broadcast join on the word index plus a pure
 expression mask test — no driver collect at build, no Python at probe.
 In-regime measurement: ``SCALECHECK_BLOOM_r09.json``, which also
 measured the driver-bitmap form as a join prefilter at 3× WORSE than no
-prefilter at 10⁷ dim keys — the reason the join never uses it.
+prefilter at 10⁷ dim keys — the reason the join never uses it. That
+record file was deleted with the other per-round records;
+``git show 0c838fc:SCALECHECK_BLOOM_r09.json`` retrieves it.
 
 Both filters are sized for a 1% false-positive rate (``FPP``): callers
 re-verify with an exact join, so the rate only prices the prefilter.

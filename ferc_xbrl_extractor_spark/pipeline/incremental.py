@@ -3,25 +3,23 @@
 Re-running corpus-wide dedup per ingestion increment is O(corpus) work
 for O(increment) new data — the same ceiling the reference hits
 rebuilding every table per run (ref:xbrl.py:28-81). This module keeps a
-persistent fingerprint index (hive-partitioned parquet keyed by a
-fingerprint prefix, bucketed+sorted on the fingerprint within each
-partition) and dedups each new batch against it WITHOUT ever shuffling
+persistent fingerprint index (parquet bucketed+sorted on the
+fingerprint) and dedups each new batch against it WITHOUT ever shuffling
 the index:
 
 1. batch-internal dedup: one ``min_by`` survivor aggregate per
    fingerprint (the G1 shape).
 2. historical check: the batch's distinct fingerprints are **broadcast**
-   and the index is pruned to the partitions the batch's prefixes touch,
-   then probed map-side with a broadcast LEFT SEMI join — the index is
-   only scanned (never shuffled), and only its touched slices.
+   and the index is probed map-side with a broadcast LEFT SEMI join — the
+   index is only scanned, never shuffled.
 3. survivors = batch anti-joined against the (small) collided set —
    another broadcast join.
-4. the survivors' fingerprints are appended to the index, partitioned by
-   prefix, keeping future probes pruned.
+4. the survivors' fingerprints are appended to the index in the same
+   bucketed layout.
 
-Cost per increment: O(increment) shuffle + O(touched index partitions)
-scan. At 100 TB of corpus and a daily increment, that is the difference
-between a full-corpus MinHash job and a minute of work.
+Cost per increment: O(increment) shuffle + one index scan. At 100 TB of
+corpus and a daily increment, that is the difference between a
+full-corpus MinHash job and a minute of work.
 """
 
 from __future__ import annotations
@@ -33,17 +31,11 @@ from pyspark.sql import functions as F
 
 from ferc_xbrl_extractor_spark.operators.text import fingerprint
 
-PREFIX_COL = "fp_pfx"
-
-# Buckets per prefix partition for the digest-bucketed index layout
+# Buckets of the digest-bucketed index layout
 # (write_digest_bucketed's trade applied to the fingerprint index): the
 # one-time bucket shuffle at init/append buys every maintenance rebuild
 # an exchange-free groupBy(fp). Raise with corpus size.
 INDEX_BUCKETS = 16
-
-
-def _with_prefix(df: DataFrame, prefix_len: int) -> DataFrame:
-    return df.withColumn(PREFIX_COL, F.substring("fp", 1, prefix_len))
 
 
 def _index_table(index_dir: str) -> str:
@@ -115,22 +107,18 @@ def index_init(
     index_dir: str,
     docs: DataFrame,
     text_col: str = "text",
-    prefix_len: int = 2,
 ) -> None:
     """Create/overwrite the fingerprint index from an existing corpus.
 
-    Layout: hive-partitioned by fingerprint prefix (probe-side partition
-    pruning) AND bucketed+sorted on ``fp`` within each partition (the
-    digest-bucketed trade — see ``operators.dedup.write_digest_bucketed``):
-    the keyed exchange is paid here once, so fp-keyed work over the index
-    runs with ZERO index-side Exchange."""
+    Layout: bucketed+sorted on ``fp`` (the digest-bucketed trade — see
+    ``operators.dedup.write_digest_bucketed``): the keyed exchange is paid
+    here once, so fp-keyed work over the index runs with ZERO index-side
+    Exchange."""
     fps = fingerprint(docs, text_col).select("fp").distinct()
     name = _index_table(index_dir)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
-        _with_prefix(fps, prefix_len)
-        .write.mode("overwrite")
-        .partitionBy(PREFIX_COL)
+        fps.write.mode("overwrite")
         .bucketBy(INDEX_BUCKETS, "fp")
         .sortBy("fp")
         .option("path", index_dir)
@@ -144,20 +132,12 @@ class IncrementResult:
     n_fresh: int | None  # populated when update_index
 
 
-# Prefix pruning needs a driver-side collect of the batch's distinct
-# prefixes — one extra job barrier. Worth it only when it can actually
-# skip partitions: with 16**prefix_len at or below this bound, scanning
-# the whole (tiny) index in the main DAG is cheaper than the round-trip.
-PRUNE_MIN_PARTITIONS = 32
-
-
 def incremental_dedup(
     spark: SparkSession,
     index_dir: str,
     batch: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    prefix_len: int = 2,
     update_index: bool = True,
 ) -> IncrementResult:
     """Dedup an ingestion batch against itself and the historical index.
@@ -180,27 +160,13 @@ def incremental_dedup(
             F.count(F.lit(1)).alias("_n"),
         )
         .select("fp", *[F.col(f"_row.{c}").alias(c) for c in payload])
-        # consumed by the prefix collect, the probe and the anti join —
-        # persist, don't recompute
+        # consumed by the probe and the anti join — persist, don't
+        # recompute
         .persist()
     )
 
-    # Prefix pruning bounds the index scan; the broadcast semi-join probes
-    # it map-side. 16^prefix_len partition values at most — the driver
-    # collect is tiny and independent of batch size. Auto-skipped for
-    # tiny indexes (PRUNE_MIN_PARTITIONS), where the collect's job
-    # barrier costs more than the partitions it could skip.
     batch_fps = surv.select("fp")
     index = _read_index(spark, index_dir)
-    if 16 ** prefix_len > PRUNE_MIN_PARTITIONS:
-        touched = [
-            r[0]
-            for r in _with_prefix(batch_fps, prefix_len)
-            .select(PREFIX_COL)
-            .distinct()
-            .collect()
-        ]
-        index = index.filter(F.col(PREFIX_COL).isin(touched))
     collided = index.join(F.broadcast(batch_fps), "fp", "left_semi").select("fp")
     fresh = surv.join(F.broadcast(collided), "fp", "left_anti")
 
@@ -209,7 +175,7 @@ def incremental_dedup(
         fresh = fresh.localCheckpoint(eager=True)
         n_fresh = fresh.count()
     if n_fresh:
-        append = _with_prefix(fresh.select("fp"), prefix_len)
+        append = fresh.select("fp")
         name = _index_table(index_dir)
         _CLEAN_LAYOUT_DIRS.discard(index_dir)  # files change: re-verify
         if spark.catalog.tableExists(name):
@@ -218,7 +184,6 @@ def incremental_dedup(
             # bucket-suffixed so maintenance stays exchange-free
             (
                 append.write.mode("append")
-                .partitionBy(PREFIX_COL)
                 .bucketBy(INDEX_BUCKETS, "fp")
                 .sortBy("fp")
                 .saveAsTable(name)
@@ -226,24 +191,15 @@ def incremental_dedup(
         else:
             # index created by another session: the catalog entry (and
             # with it the bucket metadata) is gone — append plain
-            # partitioned parquet; rows stay correct, a later
-            # index_init restores the bucketed layout
-            append.write.mode("append").partitionBy(PREFIX_COL).parquet(
-                index_dir
-            )
+            # parquet; rows stay correct, a later index_init restores
+            # the bucketed layout
+            append.write.mode("append").parquet(index_dir)
     return IncrementResult(fresh=fresh, n_fresh=n_fresh)
 
 
 # ---------------------------------------------------------------------------
 # Near-dup increment: a persistent MinHash-LSH band index
 # ---------------------------------------------------------------------------
-
-BAND_PFX_COL = "bh_pfx"
-# One hex character of band hash: 16 band partitions, under
-# PRUNE_MIN_PARTITIONS, so probes scan the whole band index instead of
-# paying a prefix collect.
-BAND_PREFIX_LEN = 1
-
 
 def _batch_lsh(batch, id_col, text_col, n, num_hashes, bands):
     from ferc_xbrl_extractor_spark.operators import neardup
@@ -273,8 +229,8 @@ def neardup_index_init(
 ) -> None:
     """Freeze a corpus's MinHash-LSH state for incremental probing:
 
-    - ``{index}/bands``: (id, band_idx, band_hash) partitioned by a
-      band-hash prefix — the probe side.
+    - ``{index}/bands``: (id, band_idx, band_hash) — the probe side,
+      scanned whole against the batch's broadcast bands.
     - ``{index}/shingles``: (id, shingle array) — the verification side,
       fetched by id for candidate pairs only.
 
@@ -283,13 +239,7 @@ def neardup_index_init(
     monolithic corpus-wide LSH join would have produced.
     """
     arr, banded = _batch_lsh(docs, id_col, text_col, n, num_hashes, bands)
-    (
-        banded.withColumn(BAND_PFX_COL, F.substring("band_hash", 1, BAND_PREFIX_LEN))
-        .repartition(F.col(BAND_PFX_COL))
-        .write.mode("overwrite")
-        .partitionBy(BAND_PFX_COL)
-        .parquet(f"{index_dir}/bands")
-    )
+    banded.write.mode("overwrite").parquet(f"{index_dir}/bands")
     arr.write.mode("overwrite").parquet(f"{index_dir}/shingles")
 
 
@@ -415,13 +365,9 @@ def incremental_neardup(
     if update_index:
         fresh = fresh.localCheckpoint(eager=True)
         keep = fresh.select(id_col)
-        (
-            banded.join(F.broadcast(keep), id_col, "left_semi")
-            .withColumn(BAND_PFX_COL, F.substring("band_hash", 1, BAND_PREFIX_LEN))
-            .write.mode("append")
-            .partitionBy(BAND_PFX_COL)
-            .parquet(f"{index_dir}/bands")
-        )
+        banded.join(F.broadcast(keep), id_col, "left_semi").write.mode(
+            "append"
+        ).parquet(f"{index_dir}/bands")
         arr.join(F.broadcast(keep), id_col, "left_semi").write.mode(
             "append"
         ).parquet(f"{index_dir}/shingles")

@@ -57,8 +57,6 @@ def test_increment_probe_never_shuffles_the_index(spark, index_dir):
     # a sort-merge join would mean the index got shuffled
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 2
-    # and the index scan is partition-pruned to the batch's prefixes
-    assert "PartitionFilters" in plan
 
 
 def test_index_cross_session_fallback_path(spark, index_dir):
@@ -96,7 +94,6 @@ def test_mixed_layout_degrades_to_plain_read(spark, index_dir):
     from ferc_xbrl_extractor_spark.pipeline.incremental import (
         _dir_has_unbucketed_files,
         _read_index,
-        _with_prefix,
     )
     from ferc_xbrl_extractor_spark.operators.text import fingerprint
 
@@ -110,11 +107,9 @@ def test_mixed_layout_degrades_to_plain_read(spark, index_dir):
     ]
     assert names and all("_000" in f for f in names)  # bucket ids present
 
-    # simulate the OTHER session's fallback: plain partitioned append
+    # simulate the OTHER session's fallback: plain (un-bucketed) append
     extra = fingerprint(_docs(spark, [(99, "zeta eta")]), "text").select("fp")
-    _with_prefix(extra, 2).write.mode("append").partitionBy(
-        "fp_pfx"
-    ).parquet(index_dir)
+    extra.write.mode("append").parquet(index_dir)
     assert _dir_has_unbucketed_files(index_dir)
 
     # this session still holds the catalog entry, yet the read works and
